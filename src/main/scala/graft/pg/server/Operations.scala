@@ -54,9 +54,20 @@ final class Operation(val session: PgSession, val statement: String) {
 
   private val timedOut = new java.util.concurrent.atomic.AtomicBoolean(false)
 
-  /** Run `body` under this operation's job group with state tracking. */
+  /** Rows the current [[run]] sent to the client; published to
+    * `rows_streamed` when the body completes.
+    */
+  private[server] var rowsSent: Long = 0L
+
+  /** Run `body` under this operation's job group with state tracking — the
+    * one place statements and streamed rows are counted. A suspended portal
+    * re-enters `run` on every Execute; it still counts as one statement.
+    */
   def run[T](body: => T): T = {
-    state.set(OpState.Running)
+    if (state.getAndSet(OpState.Running) == OpState.Initialized) {
+      ServerStats.statementsRun.incrementAndGet()
+    }
+    rowsSent = 0L
     startedAt = System.currentTimeMillis()
     session.busy = true
     session.currentQuery = statement
@@ -81,6 +92,7 @@ final class Operation(val session: PgSession, val statement: String) {
     } else None
     try {
       val r = body
+      ServerStats.rowsStreamed.addAndGet(rowsSent)
       state.compareAndSet(OpState.Running, OpState.Finished)
       r
     } catch {

@@ -5,14 +5,18 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import scala.collection.mutable
 
+import graft.pg.wire.PgTypes
+
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{StringType, StructType}
 
 /** A named prepared statement ('P' message): unanalyzed plan + the schema
   * captured eagerly so Describe can answer before Bind (reference
-  * protocol.scala:559-582, QueryState protocol.scala:994-1008).
+  * protocol.scala:559-582, QueryState protocol.scala:994-1008). A
+  * simple-Query statement is an unnamed one whose schema stays null: it is
+  * analyzed once, when its portal runs.
   */
 final case class Prepared(
     name: String,
@@ -21,9 +25,9 @@ final case class Prepared(
     paramIds: Seq[Int],
     schema: StructType,
     paramOids: Seq[Int] = Seq.empty,
-    /** PG EXPLAIN ANALYZE prepared over the extended protocol (DBeaver's
-      * explain button, pgjdbc executeQuery): `plan` is the INNER statement,
-      * executed at Execute time with its plan+metrics streamed as the
+    /** PG EXPLAIN ANALYZE (simple Query, or prepared by DBeaver's explain
+      * button / pgjdbc executeQuery): `plan` is the INNER statement,
+      * executed when the portal runs with its plan+metrics streamed as the
       * one-column QUERY PLAN result.
       */
     explainAnalyze: Boolean = false,
@@ -39,18 +43,28 @@ final case class Prepared(
   def takeAnalyzed(): Option[LogicalPlan] = Option(freshAnalyzed.getAndSet(null))
 }
 
-/** A bound portal ('B'): statement + bound plan + result formats + the
-  * cursor position across Execute calls (reference PortalState
-  * protocol.scala:1010-1014, cursor fetch :437-504).
+/** A portal: statement + bound plan + result formats + the cursor position
+  * across Execute calls (reference PortalState protocol.scala:1010-1014,
+  * cursor fetch :437-504). Every flow runs one — a Bind, a DECLAREd cursor
+  * and each simple-Query statement (PG's unnamed portal). `op` is the
+  * statement's lifecycle; every Execute of a suspended portal re-enters it.
   */
 final class Portal(
     val name: String,
     val stmt: Prepared,
     val bound: LogicalPlan,
-    val formats: Seq[Boolean]) {
-  var schema: StructType = stmt.schema
+    /** result columns; null until a simple-Query portal starts */
+    var schema: StructType,
+    wantBinary: Int => Boolean,
+    val op: Operation) {
+  /** Per-column result format: binary where the client asked for it and
+    * RowCodec has a binary encoder (strings always go as text).
+    */
+  lazy val formats: Seq[Boolean] = schema.fields.toSeq.zipWithIndex.map { case (f, i) =>
+    wantBinary(i) && PgTypes.binaryCapable(f.dataType) && f.dataType != StringType
+  }
   /** Dataset built from the Parse-time resolved plan (cacheable path):
-    * Execute runs THIS instance instead of re-analyzing `bound`.
+    * the portal runs THIS instance instead of re-analyzing `bound`.
     */
   var df: org.apache.spark.sql.DataFrame = _
   var rows: Iterator[InternalRow] = _

@@ -20,9 +20,10 @@ import io.netty.handler.ssl.{SslContext, SslContextBuilder}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Literal
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, OneRowRelation}
 import org.apache.spark.sql.graft.Internals
-import org.apache.spark.sql.types.{NullType, StringType, StructType}
+import org.apache.spark.sql.types.{CalendarIntervalType, NullType, StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** PostgreSQL V3 wire-protocol server over Spark SQL: the reference's
   * raison d'être (protocol.scala:59-65), rebuilt on public Spark 4 APIs.
@@ -594,12 +595,15 @@ private class PgConnectionHandler(base: SparkSession, sslCtx: Option[SslContext]
         handleTyped(t, ByteBuffer.wrap(payload), currentOut)
       }
       catch {
+        // the one place a failed message is answered and counted: the
+        // extended flow (and CopyData) skips to Sync, every other message
+        // ends its cycle with ReadyForQuery
         case NonFatal(e) =>
           ServerStats.statementsFailed.incrementAndGet()
           errorResponse(currentOut, Option(e.getMessage).getOrElse(e.toString),
             PgWireServer.sqlStateOf(e), PgWireServer.errorPosition(e))
-          if (t == 'Q') readyForQuery(currentOut)
-          else if (t != 'S' && t != 'X') inError = true
+          if ("PBDECHd".indexOf(t) >= 0) inError = true
+          else readyForQuery(currentOut)
       }
       ctx.writeAndFlush(currentOut)
       currentOut = null
@@ -634,6 +638,9 @@ private class PgConnectionHandler(base: SparkSession, sslCtx: Option[SslContext]
       }
     }
     PgCatalog.register(session.spark)
+    // `$n` placeholders analyze through pg_param; one registration serves
+    // every flow of the connection
+    PgDialect.registerParamFunction(session.spark)
     val out = ctx.alloc().buffer()
     authenticationOk(out)
     Seq(
@@ -691,18 +698,13 @@ private class PgConnectionHandler(base: SparkSession, sslCtx: Option[SslContext]
       case None =>
         throw new UnsupportedOperationException("COPY data outside a COPY operation")
     }
+    // the COPY executes at CopyDone; a failure there, or a CopyFail, is
+    // answered by the error writer with ReadyForQuery
     case 'c' => copyIn match {
       case Some(ci) =>
         copyIn = None
-        try {
-          val n = withOperation("COPY FROM STDIN")(ci.finish())
-          commandComplete(out, s"COPY $n")
-        } catch {
-          case NonFatal(e) =>
-            ServerStats.statementsFailed.incrementAndGet()
-            errorResponse(out, Option(e.getMessage).getOrElse(e.toString),
-              PgWireServer.sqlStateOf(e))
-        }
+        val n = withOperation("COPY FROM STDIN")(ci.finish())
+        commandComplete(out, s"COPY $n")
         readyForQuery(out)
       case None =>
         throw new UnsupportedOperationException("CopyDone outside a COPY operation")
@@ -710,16 +712,12 @@ private class PgConnectionHandler(base: SparkSession, sslCtx: Option[SslContext]
     case 'f' =>
       copyIn = None
       val reason = try readCStr(in) catch { case _: RuntimeException => "" }
-      errorResponse(out, s"COPY aborted by client: $reason", "57014")
-      readyForQuery(out)
+      throw new PgStateException(s"COPY aborted by client: $reason", "57014")
     case 'F' => functionCall(in, out)
     case other =>
-      // a PG ErrorResponse + ReadyForQuery rather than an exception: an
-      // unknown type from a confused or hostile client must not wedge the
-      // connection — it gets a protocol error and can continue
-      ServerStats.statementsFailed.incrementAndGet()
-      errorResponse(out, s"unsupported frontend message type: '$other'", "08P01")
-      readyForQuery(out)
+      // an unknown type from a confused or hostile client must not wedge
+      // the connection: a protocol error, then ReadyForQuery
+      throw new PgStateException(s"unsupported frontend message type: '$other'", "08P01")
   }
 
   /** 'F' fastpath FunctionCall → 'V' FunctionCallResponse + ReadyForQuery
@@ -731,34 +729,29 @@ private class PgConnectionHandler(base: SparkSession, sslCtx: Option[SslContext]
     * survives either way.
     */
   private def functionCall(in: ByteBuffer, out: ByteBuf): Unit = {
-    try {
-      val objId = in.getInt
-      val nFmts = in.getShort.toInt
-      val fmts = Array.fill(nFmts)(in.getShort.toInt)
-      val nParams = in.getShort.toInt
-      val params = Array.fill[Array[Byte]](nParams) {
-        val len = in.getInt
-        if (len < 0) null
-        else { val b = new Array[Byte](len); in.get(b); b }
-      }
-      val resultFormat = in.getShort.toInt
-      val (fname, argOids, _) = PgCatalog.fastpathByOid(objId).getOrElse(
-        throw new IllegalArgumentException(
-          s"fastpath function with OID $objId does not exist"))
-      if (nParams != argOids.length) {
-        throw new IllegalArgumentException(
-          s"fastpath function $fname expects ${argOids.length} arguments, got $nParams")
-      }
-      val lits = params.zip(argOids).zipWithIndex.map { case ((p, oid), i) =>
-        if (p == null) Literal(null, NullType)
-        else ParamCodec.decode(p, oid,
-          // 0 format codes = all text; 1 = that code for all; else per-arg
-          if (nFmts == 0) 0 else if (nFmts == 1) fmts(0) else fmts(i))
-      }
-      ServerStats.statementsRun.incrementAndGet()
-      val df = withOperation(s"fastpath $fname") {
-        session.spark.sql(s"SELECT $fname(${lits.map(_.sql).mkString(", ")})")
-      }
+    val objId = in.getInt
+    val fmts = Seq.fill(in.getShort.toInt)(in.getShort.toInt)
+    val nParams = in.getShort.toInt
+    val params = Array.fill[Array[Byte]](nParams) {
+      val len = in.getInt
+      if (len < 0) null
+      else { val b = new Array[Byte](len); in.get(b); b }
+    }
+    val resultFormat = in.getShort.toInt
+    val (fname, argOids, _) = PgCatalog.fastpathByOid(objId).getOrElse(
+      throw new PgStateException(
+        s"fastpath function with OID $objId does not exist", "42883"))
+    if (nParams != argOids.length) {
+      throw new PgStateException(
+        s"fastpath function $fname expects ${argOids.length} arguments, got $nParams", "42883")
+    }
+    val lits = params.zip(argOids).zipWithIndex.map { case ((p, oid), i) =>
+      if (p == null) Literal(null, NullType)
+      else ParamCodec.decode(p, oid, formatCode(fmts, i))
+    }
+    withOperation(s"fastpath $fname") {
+      val (plan, _) = parseStatement(s"SELECT $fname(${lits.map(_.sql).mkString(", ")})")
+      val df = Internals.ofRows(session.spark, plan)
       val row = Internals.executeCollect(df).head
       if (row.isNullAt(0)) functionCallResponse(out, None)
       else {
@@ -767,23 +760,19 @@ private class PgConnectionHandler(base: SparkSession, sslCtx: Option[SslContext]
         val bb = ByteBuffer.allocate(1 << 16)
         fw(row, bb)
         bb.flip()
-        val len = bb.getInt
-        val bytes = new Array[Byte](len)
+        val bytes = new Array[Byte](bb.getInt)
         bb.get(bytes)
         functionCallResponse(out, Some(bytes))
       }
-      readyForQuery(out)
-    } catch {
-      case NonFatal(e) =>
-        ServerStats.statementsFailed.incrementAndGet()
-        val state = e match {
-          case _: IllegalArgumentException => "42883" // undefined_function
-          case _ => "XX000"
-        }
-        errorResponse(out, Option(e.getMessage).getOrElse(e.toString), state)
-        readyForQuery(out)
     }
+    readyForQuery(out)
   }
+
+  /** The format code for column/parameter `i`: none = all text, one = that
+    * code for all, else one per column (PG §55.7 Bind, FunctionCall).
+    */
+  private def formatCode(codes: Seq[Int], i: Int): Int =
+    if (codes.isEmpty) 0 else if (codes.length == 1) codes.head else codes(i)
 
   private def readCStr(b: ByteBuffer): String = {
     val sb = new ArrayBuffer[Byte]()
@@ -792,21 +781,31 @@ private class PgConnectionHandler(base: SparkSession, sslCtx: Option[SslContext]
     new String(sb.toArray, UTF_8)
   }
 
-  private def parser = new PgParserInterface(Internals.sessionParser(session.spark))
-
-  /** Parse with unused-CTE pruning (graft.queries.CtePrune): a pure
-    * compile-time identity transform that bails out verbatim on any text it
-    * cannot prove safe (comments, quoted identifiers, IDENTIFIER(), shape
-    * surprises). Spark analyzes EVERY definition in a WITH list before the
-    * optimizer discards unused ones, so large shared prefixes — the
-    * official TPC battery through the wire is the concrete case — pay ~1 s
-    * of analysis per statement for CTEs the query never references.
+  /** Statement text → (plan, EXPLAIN ANALYZE?): the one place the session
+    * parser runs. Refreshes the dynamic views the text names, unwraps PG's
+    * EXPLAIN forms (ANALYZE executes the inner statement; an option list
+    * without an enabled ANALYZE is plain EXPLAIN) and prunes unused CTEs
+    * (graft.queries.CtePrune): a pure compile-time identity transform that
+    * bails out verbatim on any text it cannot prove safe (comments, quoted
+    * identifiers, IDENTIFIER(), shape surprises). Spark analyzes EVERY
+    * definition in a WITH list before the optimizer discards unused ones, so
+    * large shared prefixes — the official TPC battery through the wire is
+    * the concrete case — pay ~1 s of analysis per statement for CTEs the
+    * query never references. The empty text parses to a one-row relation.
     */
-  private def parseSql(text: String): LogicalPlan =
-    parser.parsePlan(graft.queries.CtePrune.prune(text))
-
-  private def splitStatements(sql: String): Seq[String] =
-    PgStatementSplitter.split(sql)
+  private def parseStatement(sql: String): (LogicalPlan, Boolean) = {
+    refreshDynamicViews(sql)
+    val (text, analyze) = sql match {
+      case explainAnalyzeRe(inner) => (inner, true)
+      case explainOptionsRe(inner) => ("EXPLAIN " + inner, false)
+      case _ => (sql, false)
+    }
+    val plan =
+      if (text.trim.isEmpty) OneRowRelation()
+      else new PgParserInterface(Internals.sessionParser(session.spark))
+        .parsePlan(graft.queries.CtePrune.prune(text))
+    (plan, analyze)
+  }
 
   /** The row count for a no-result command's tag: INSERT uses the write
     * node's output rows; UPDATE/DELETE/MERGE use operation-specific metrics
@@ -867,16 +866,13 @@ private class PgConnectionHandler(base: SparkSession, sslCtx: Option[SslContext]
             case _ => first
           }
         case "TRUNCATE" => "TRUNCATE TABLE"
+        case "FETCH" | "MOVE" => s"$first $rows"
         case "" => "SELECT 0"
         case other => other
       }
     }
   }
 
-  /** Views whose contents change between statements (unlike the static
-    * pg_catalog snapshot): re-registered immediately before any statement
-    * that references them.
-    */
   /** Statements whose per-phase re-analysis is semantically load-bearing:
     * driver-folded session functions (set_config must fire its effect at
     * the Execute re-analysis, current_setting/version/pg_backend_pid must
@@ -893,6 +889,10 @@ private class PgConnectionHandler(base: SparkSession, sslCtx: Option[SslContext]
   private def isVolatileText(sql: String): Boolean =
     volatileTextRe.matches(sql)
 
+  /** Views whose contents change between statements (unlike the static
+    * pg_catalog snapshot): re-registered immediately before any statement
+    * that references them.
+    */
   private def refreshDynamicViews(sql: String): Unit = {
     val lower = sql.toLowerCase
     if (lower.contains("pg_stat_activity")) {
@@ -906,20 +906,15 @@ private class PgConnectionHandler(base: SparkSession, sslCtx: Option[SslContext]
     }
   }
 
-  /** Simple query flow §3.1: parse -> execute -> RowDescription + DataRows +
-    * CommandComplete, always text format (reference protocol.scala:585-660).
+  /** Simple query flow §3.1: each statement runs as PG's unnamed portal —
+    * RowDescription + DataRows + CommandComplete, always text format
+    * (reference protocol.scala:585-660).
     */
   private def simpleQuery(sql: String): Unit = {
-    val stmts = splitStatements(sql)
-    if (stmts.isEmpty) {
-      PgMessages.emptyQueryResponse(currentOut)
-      readyForQuery(currentOut)
-      return
-    }
+    val stmts = PgStatementSplitter.split(sql)
+    if (stmts.isEmpty) PgMessages.emptyQueryResponse(currentOut)
     var copyInStarted = false
-    stmts.foreach { stmt =>
-      refreshDynamicViews(stmt)
-      PgCopy.parse(stmt) match {
+    stmts.foreach { stmt => PgCopy.parse(stmt) match {
       case Some(ci: PgCopy.CopyIn) =>
         if (stmts.length > 1) throw new IllegalArgumentException(
           "COPY FROM STDIN must be the only statement in a simple query")
@@ -928,13 +923,19 @@ private class PgConnectionHandler(base: SparkSession, sslCtx: Option[SslContext]
         // to the copy subprotocol
         val st = new PgCopy.CopyInSession(session.spark, ci, sessionZone)
         copyIn = Some(st)
-        ServerStats.statementsRun.incrementAndGet()
         PgMessages.copyInResponse(currentOut, st.nCols, ci.opts.binary)
         copyInStarted = true
-      case Some(co: PgCopy.CopyOut) =>
-        ServerStats.statementsRun.incrementAndGet()
-        withOperation(stmt.take(80))(runCopyOut(co))
-      case None => runRegularStatement(stmt)
+      case Some(co: PgCopy.CopyOut) => runCopyOut(co, new Operation(session, stmt.take(80)))
+      case None if runSessionStateStatement(stmt) => // ran in the guard
+      case None if PgCatalog.isFeatureAbsentQuery(stmt) =>
+        // zero rows for feature-absent catalog relations (see PgCatalog)
+        rowDescription(currentOut, StructType(Seq(StructField("v", StringType))), Seq(false))
+        commandComplete(currentOut, "SELECT 0")
+      case None =>
+        val (plan, analyze) = parseStatement(stmt)
+        val portal = new Portal("", Prepared("", stmt, plan, Nil, null, explainAnalyze = analyze),
+          plan, null, _ => false, new Operation(session, stmt.take(80)))
+        runPortal(portal, portal.op)
     }}
     // after CopyInResponse the client streams 'd' frames; ReadyForQuery
     // only follows CopyDone/CopyFail
@@ -985,57 +986,25 @@ private class PgConnectionHandler(base: SparkSession, sslCtx: Option[SslContext]
 
   private def cursorName(token: String): String = PgNotify.foldChannel(token)
 
-  private def declareCursor(name: String, binary: Boolean, query: String): Unit = {
+  private def declareCursor(name: String, binary: Boolean, query: String,
+      stmt: String): Unit = {
     if (session.portals.contains(name)) {
       throw new PgStateException(s"""cursor "$name" already exists""", "42P03")
     }
-    refreshDynamicViews(query)
-    val plan = parseSql(query)
+    val (plan, analyze) = parseStatement(query)
     val schema = Internals.analyzedSchema(session.spark, plan)
-    val formats = schema.fields.map(f =>
-      binary && PgTypes.binaryCapable(f.dataType) && f.dataType != StringType).toSeq
-    val portal = new Portal(name, Prepared(name, query, plan, Seq.empty, schema),
-      plan, formats)
-    portal.schema = schema
-    session.portals(name) = portal
+    val portal = new Portal(name, Prepared(name, query, plan, Nil, schema,
+      explainAnalyze = analyze), plan, schema, _ => binary, new Operation(session, stmt.take(80)))
+    // DECLARE is the portal's own statement; each FETCH/MOVE runs another
+    portal.op.run { session.portals(name) = portal }
     commandComplete(currentOut, "DECLARE CURSOR")
-  }
-
-  /** FETCH streams up to `count` rows (-1 = ALL) with a RowDescription, as
-    * the simple protocol requires; MOVE advances the same iterator silently.
-    * Rows pull through the incremental iterator partition by partition.
-    */
-  private def fetchFromCursor(name: String, count: Long, emit: Boolean): Unit = {
-    val portal = session.portals.getOrElse(name,
-      throw new PgStateException(s"""cursor "$name" does not exist""", "34000"))
-    withOperation(s"FETCH $name") {
-      if (!portal.started) {
-        portal.rows = resultIterator(Internals.ofRows(session.spark, portal.bound))
-      }
-      if (emit) rowDescription(currentOut, portal.schema, portal.formats)
-      val writer = RowCodec.rowWriter(portal.schema, portal.formats, sessionZone)
-      val scratch = new Scratch
-      var n = 0L
-      while (portal.rows.hasNext && (count < 0 || n < count)) {
-        val row = portal.rows.next()
-        if (emit) {
-          writeDataRow(currentOut, portal.schema.length, writer, row, scratch)
-          maybeFlush()
-        }
-        n += 1
-        portal.rowCount += 1
-      }
-      if (emit) ServerStats.rowsStreamed.addAndGet(n)
-      commandComplete(currentOut, s"${if (emit) "FETCH" else "MOVE"} $n")
-    }
   }
 
   /** Session-state statements with real server-side semantics (PG tags,
     * PG SQLSTATEs); returns true when `stmt` was one of them.
     */
   private def runSessionStateStatement(stmt: String): Boolean = stmt match {
-    case deallocRe(what) =>
-      ServerStats.statementsRun.incrementAndGet()
+    case deallocRe(what) => runStatement(stmt) {
       // the ALL keyword only when unquoted — `DEALLOCATE "ALL"` targets a
       // statement literally named ALL, like any quoted PG identifier
       if (!what.startsWith("\"") && what.equalsIgnoreCase("ALL")) {
@@ -1054,9 +1023,8 @@ private class PgConnectionHandler(base: SparkSession, sslCtx: Option[SslContext]
         session.portals.filterInPlace((_, p) => p.stmt.name != name)
         commandComplete(currentOut, "DEALLOCATE")
       }
-      true
-    case discardRe(what) =>
-      ServerStats.statementsRun.incrementAndGet()
+    }
+    case discardRe(what) => runStatement(stmt) {
       val w = what.toUpperCase match { case "TEMPORARY" => "TEMP"; case x => x }
       w match {
         case "ALL" =>
@@ -1070,13 +1038,11 @@ private class PgConnectionHandler(base: SparkSession, sslCtx: Option[SslContext]
         case _ => () // PLANS/SEQUENCES: no cached plans or sequences exist
       }
       commandComplete(currentOut, s"DISCARD $w")
-      true
+    }
     case declareCursorRe(nameTok, binary, query) =>
-      ServerStats.statementsRun.incrementAndGet()
-      declareCursor(cursorName(nameTok), binary != null, query)
+      declareCursor(cursorName(nameTok), binary != null, query, stmt)
       true
     case fetchRe(verb, direction, countTok, nameTok) =>
-      ServerStats.statementsRun.incrementAndGet()
       if (direction != null && !direction.equalsIgnoreCase("FORWARD")) {
         // cursors here are NO SCROLL (a distributed result has no cheap
         // backward walk); PG raises the same state for backward fetches
@@ -1084,13 +1050,16 @@ private class PgConnectionHandler(base: SparkSession, sslCtx: Option[SslContext]
       }
       val count =
         if (countTok == null || countTok.equalsIgnoreCase("NEXT")) 1L
-        else if (countTok.equalsIgnoreCase("ALL")) -1L
+        else if (countTok.equalsIgnoreCase("ALL")) Long.MaxValue
         else countTok.toLong
-      fetchFromCursor(cursorName(nameTok), count,
-        emit = verb.equalsIgnoreCase("FETCH"))
+      val name = cursorName(nameTok)
+      val portal = session.portals.getOrElse(name,
+        throw new PgStateException(s"""cursor "$name" does not exist""", "34000"))
+      // each FETCH/MOVE is a statement of its own over the cursor's rows
+      runPortal(portal, new Operation(session, s"FETCH $name"), count,
+        cursorVerb = Some(verb.toUpperCase))
       true
-    case closeCursorRe(nameTok) =>
-      ServerStats.statementsRun.incrementAndGet()
+    case closeCursorRe(nameTok) => runStatement(stmt) {
       if (!nameTok.startsWith("\"") && nameTok.equalsIgnoreCase("ALL")) {
         session.portals.clear() // PG's CLOSE ALL closes cursors and portals alike
       } else {
@@ -1100,8 +1069,14 @@ private class PgConnectionHandler(base: SparkSession, sslCtx: Option[SslContext]
         }
       }
       commandComplete(currentOut, "CLOSE CURSOR")
-      true
+    }
     case _ => false
+  }
+
+  /** A session-state statement's body under its own [[Operation]]. */
+  private def runStatement(stmt: String)(body: => Unit): Boolean = {
+    withOperation(stmt.take(80))(body)
+    true
   }
 
   /** PG's `EXPLAIN ANALYZE` (and the `EXPLAIN (ANALYZE ...)` option form):
@@ -1129,87 +1104,31 @@ private class PgConnectionHandler(base: SparkSession, sslCtx: Option[SslContext]
   private val explainAnalyzeSchema = StructType(Seq(
     org.apache.spark.sql.types.StructField("QUERY PLAN", StringType)))
 
-  /** Execute `bound` and render the ran plan + metrics as QUERY PLAN lines
-    * (shared by the simple-query and extended-protocol EXPLAIN ANALYZE
-    * paths; callers wrap in withOperation).
+  /** The columns a client sees: EXPLAIN ANALYZE answers its plan text and
+    * SET nothing (PG answers NoData and tags it SET; the reference
+    * short-circuits SET the same way, protocol.scala:451-459,630-638);
+    * anything else its analyzed schema.
     */
-  private def explainAnalyzeLines(bound: LogicalPlan): Seq[String] =
-    runTrackingTimeZone {
-      val df = Internals.ofRows(session.spark, bound)
-      val t0 = System.nanoTime()
-      if (df.schema.nonEmpty) {
-        Internals.executeAndDiscard(df) // this plan instance, on-executor discard
-      } else {
-        df.collect() // commands execute eagerly; nothing to discard
-      }
-      val wallMs = (System.nanoTime() - t0) / 1e6
-      Internals.executedPlanWithMetrics(df) :+ f"Execution Time: $wallMs%.3f ms"
+  private def resultSchema(plan: LogicalPlan, explainAnalyze: Boolean)(
+      analyzed: => StructType): StructType =
+    if (explainAnalyze) explainAnalyzeSchema
+    else if (plan.getClass.getSimpleName == "SetCommand") new StructType()
+    else analyzed
+
+  /** Execute `bound` and answer the plan that ran with its measured
+    * metrics, one QUERY PLAN row per line.
+    */
+  private def explainAnalyzeRows(bound: LogicalPlan): Iterator[InternalRow] = {
+    val df = Internals.ofRows(session.spark, bound)
+    val t0 = System.nanoTime()
+    if (df.schema.nonEmpty) {
+      Internals.executeAndDiscard(df) // this plan instance, on-executor discard
+    } else {
+      df.collect() // commands execute eagerly; nothing to discard
     }
-
-  private def explainAnalyzeRows(lines: Seq[String]): Iterator[InternalRow] =
-    lines.iterator.map(l => org.apache.spark.sql.catalyst.InternalRow(
-      org.apache.spark.unsafe.types.UTF8String.fromString(l)))
-
-  private def runExplainAnalyze(inner: String): Unit = {
-    refreshDynamicViews(inner)
-    val plan = parseSql(inner)
-    ServerStats.statementsRun.incrementAndGet()
-    val lines = withOperation(inner.take(80)) { explainAnalyzeLines(plan) }
-    rowDescription(currentOut, explainAnalyzeSchema, Seq(false))
-    val writer = RowCodec.rowWriter(explainAnalyzeSchema, Seq(false), sessionZone)
-    val scratch = new Scratch
-    explainAnalyzeRows(lines).foreach(r =>
-      writeDataRow(currentOut, 1, writer, r, scratch))
-    commandComplete(currentOut, "EXPLAIN")
-  }
-
-  private def runRegularStatement(stmt: String): Unit = {
-      stmt match {
-        case explainAnalyzeRe(inner) => runExplainAnalyze(inner); return
-        case explainOptionsRe(inner) => runRegularStatement("EXPLAIN " + inner); return
-        case _ =>
-      }
-      if (runSessionStateStatement(stmt)) return
-      if (PgCatalog.isFeatureAbsentQuery(stmt)) {
-        // zero rows for feature-absent catalog relations (see PgCatalog)
-        val schema = StructType(Seq(org.apache.spark.sql.types.StructField(
-          "v", StringType)))
-        rowDescription(currentOut, schema, Seq(false))
-        commandComplete(currentOut, "SELECT 0")
-        return
-      }
-      val plan = parseSql(stmt)
-      ServerStats.statementsRun.incrementAndGet()
-      // Spark's EXPLAIN never executes the explained query, so statement
-      // side effects resolving during its inner analysis (set_config,
-      // pg_notify) must stay inert — PG fires them only under EXPLAIN
-      // ANALYZE, which Spark has no equivalent of
-      val isExplain = plan.getClass.getSimpleName == "ExplainCommand"
-      def guarded[T](body: => T): T =
-        if (isExplain) Internals.analysisOnly(body) else body
-      withOperation(stmt.take(80)) { guarded { runTrackingTimeZone {
-        // commands (incl. SetCommand) execute EAGERLY inside ofRows, so the
-        // time-zone tracking must bracket the Dataset construction too
-        val df = Internals.ofRows(session.spark, plan)
-        val schema = df.schema
-        val isSet = plan.getClass.getSimpleName == "SetCommand"
-        if (isSet) {
-          // reference short-circuits SET: apply but emit no rows, tag SET
-          // (protocol.scala:451-459,630-638)
-          df.collect()
-          commandComplete(currentOut, "SET")
-        } else if (schema.nonEmpty) {
-          val formats = Seq.fill(schema.length)(false) // psql simple mode = text
-          rowDescription(currentOut, schema, formats)
-          val n = streamRows(df, schema, formats, maxRows = 0)
-          commandComplete(currentOut, commandTag(stmt, plan, n))
-        } else {
-          df.collect() // run the command
-          // INSERT's tag carries the real written-row count in PG
-          commandComplete(currentOut,
-            commandTag(stmt, plan, tagRows(stmt, df)))
-        }
-      }}}
+    val wallMs = (System.nanoTime() - t0) / 1e6
+    (Internals.executedPlanWithMetrics(df) :+ f"Execution Time: $wallMs%.3f ms").iterator
+      .map(l => InternalRow(UTF8String.fromString(l)))
   }
 
   /** 'P': parse + eager analysis so Describe can answer (reference
@@ -1220,25 +1139,16 @@ private class PgConnectionHandler(base: SparkSession, sslCtx: Option[SslContext]
     val sql = readCStr(in)
     val nParams = in.getShort.toInt
     val declaredOids = (0 until nParams).map(_ => in.getInt)
-    refreshDynamicViews(sql)
-    PgDialect.registerParamFunction(session.spark)
     // the empty statement is legal in the extended protocol (pgjdbc's
     // isValid() runs it): Parse succeeds, Execute answers EmptyQueryResponse
     // EXPLAIN ANALYZE prepares over the extended protocol too (DBeaver's
     // explain action, pgjdbc executeQuery): prepare the INNER statement,
     // Describe answers the one-column QUERY PLAN schema, Execute runs it
-    val (effectiveSql, isExplainAnalyze) = sql match {
-      case explainAnalyzeRe(inner) => (inner, true)
-      case explainOptionsRe(inner) => ("EXPLAIN " + inner, false)
-      case _ => (sql, false)
-    }
-    val plan =
-      if (sql.trim.isEmpty) org.apache.spark.sql.catalyst.plans.logical.OneRowRelation()
-      else parseSql(effectiveSql)
+    val (plan, isExplainAnalyze) = parseStatement(sql)
     // PgDialect.collectParamIds: also reaches `$n` inside CTE bodies
     // (UnresolvedWith keeps them in innerChildren, invisible to a plain
     // plan.collect) and inside subquery expressions
-    val paramIds = graft.pg.PgDialect.collectParamIds(plan)
+    val paramIds = PgDialect.collectParamIds(plan)
     // One-analysis path for the common case: a pure parameterless query
     // free of session-volatile constructs is analyzed HERE once and the
     // resolved plan handed to the first Bind→Execute lifecycle (PG likewise
@@ -1247,7 +1157,7 @@ private class PgConnectionHandler(base: SparkSession, sslCtx: Option[SslContext]
     // analyze-per-phase flow whose re-analysis timing is load-bearing.
     val cacheablePath = paramIds.isEmpty && !isExplainAnalyze &&
       sql.trim.nonEmpty && !isVolatileText(sql)
-    var cachedAnalyzed: Option[org.apache.spark.sql.catalyst.plans.logical.LogicalPlan] = None
+    var cachedAnalyzed: Option[LogicalPlan] = None
     val innerSchema =
       if (sql.trim.isEmpty) new StructType()
       else if (cacheablePath) {
@@ -1263,14 +1173,12 @@ private class PgConnectionHandler(base: SparkSession, sslCtx: Option[SslContext]
           // at analysis. PG prepares these fine; analyze with NULL stand-ins
           // purely for the Describe schema (Bind substitutes real values and
           // re-analyzes from the ORIGINAL placeholder plan)
-          val nulls: Map[Int, Any] = paramIds.map(id => id ->
-            org.apache.spark.sql.catalyst.expressions.Literal(null,
-              org.apache.spark.sql.types.NullType)).toMap
+          val nulls: Map[Int, Any] = paramIds.map(id => id -> Literal(null, NullType)).toMap
           try Internals.analyzedSchema(session.spark, PgDialect.bind(plan, nulls))
           catch { case NonFatal(_) => throw e }
       }
     // EA validated the inner statement above; its RESULT is the plan text
-    val schema = if (isExplainAnalyze) explainAnalyzeSchema else innerSchema
+    val schema = resultSchema(plan, isExplainAnalyze)(innerSchema)
     session.statements(name) = Prepared(name, sql, plan, paramIds, schema,
       declaredOids, explainAnalyze = isExplainAnalyze,
       cachedAnalyzed = cachedAnalyzed)
@@ -1299,9 +1207,7 @@ private class PgConnectionHandler(base: SparkSession, sslCtx: Option[SslContext]
     // Decode by the oid declared in Parse (falling back to varchar for
     // undeclared/unspecified); NULL params (len -1) bind a SQL NULL.
     val litParams = params.zipWithIndex.map { case (bytes, i) =>
-      val fmt = if (paramFormats.isEmpty) 0
-        else if (paramFormats.length == 1) paramFormats.head
-        else paramFormats(i)
+      val fmt = formatCode(paramFormats, i)
       val oid = stmt.paramOids.lift(i).filter(_ != PgTypes.UNSPECIFIED)
         .getOrElse(PgTypes.VARCHAR)
       // keep the fully-typed Literal (DateType/TimestampType etc. — not just
@@ -1322,17 +1228,10 @@ private class PgConnectionHandler(base: SparkSession, sslCtx: Option[SslContext]
       stmt.takeAnalyzed().map(a => Internals.ofRows(session.spark, a))
     } else None
     val schema = if (stmt.sql.trim.isEmpty) new StructType()
-      else if (stmt.explainAnalyze) explainAnalyzeSchema // result = plan text
-      else cachedDf.map(_.schema)
-        .getOrElse(Internals.analyzedSchema(session.spark, bound))
-    val formats = schema.fields.zipWithIndex.map { case (f, i) =>
-      val want = if (resFormats.isEmpty) 0
-        else if (resFormats.length == 1) resFormats.head
-        else resFormats(i)
-      want == 1 && PgTypes.binaryCapable(f.dataType) && f.dataType != StringType
-    }.toSeq
-    val portal = new Portal(portalName, stmt, bound, formats)
-    portal.schema = schema
+      else resultSchema(stmt.plan, stmt.explainAnalyze)(cachedDf.map(_.schema)
+        .getOrElse(Internals.analyzedSchema(session.spark, bound)))
+    val portal = new Portal(portalName, stmt, bound, schema,
+      i => formatCode(resFormats, i) == 1, new Operation(session, stmt.sql.take(80)))
     cachedDf.foreach(portal.df = _)
     session.portals(portalName) = portal
     bindComplete(out)
@@ -1363,64 +1262,15 @@ private class PgConnectionHandler(base: SparkSession, sslCtx: Option[SslContext]
     }
   }
 
-  /** 'E': run or resume the portal cursor; maxRows==0 drains, otherwise
-    * suspend after maxRows (reference protocol.scala:437-504).
+  /** 'E': run or resume the portal; maxRows==0 drains, otherwise suspend
+    * after maxRows (reference protocol.scala:437-504).
     */
   private def execute(in: ByteBuffer): Unit = {
     val name = readCStr(in)
     val maxRows = in.getInt
     val portal = session.portals.getOrElse(name,
-      throw new PgStateException(
-            s"""portal "$name" does not exist""", "34000"))
-    if (!portal.started) ServerStats.statementsRun.incrementAndGet()
-    if (portal.stmt.sql.trim.isEmpty) {
-      // PG §55.2.3: executing the empty statement yields EmptyQueryResponse
-      // in place of CommandComplete
-      PgMessages.emptyQueryResponse(currentOut)
-      return
-    }
-    if (portal.schema.isEmpty) {
-      val written = withOperation(portal.stmt.sql.take(80)) {
-        runTrackingTimeZone {
-          val df = Internals.ofRows(session.spark, portal.bound)
-          df.collect()
-          tagRows(portal.stmt.sql, df)
-        }
-      }
-      commandComplete(currentOut, commandTag(portal.stmt.sql, portal.bound, written))
-      return
-    }
-    val writer = RowCodec.rowWriter(portal.schema, portal.formats, sessionZone)
-    val scratch = new Scratch
-    var n = 0L
-    var suspended = false
-    withOperation(portal.stmt.sql.take(80)) {
-      if (!portal.started) {
-        portal.rows =
-          if (portal.stmt.explainAnalyze) {
-            explainAnalyzeRows(explainAnalyzeLines(portal.bound))
-          } else if (portal.df != null) {
-            // cacheable path: run the Bind-time Dataset — no re-analysis
-            resultIterator(portal.df)
-          } else {
-            resultIterator(Internals.ofRows(session.spark, portal.bound))
-          }
-      }
-      while (portal.rows.hasNext && !suspended) {
-        writeDataRow(currentOut, portal.schema.length, writer, portal.rows.next(), scratch)
-        maybeFlush()
-        n += 1
-        portal.rowCount += 1
-        if (maxRows > 0 && n >= maxRows && portal.rows.hasNext) suspended = true
-      }
-    }
-    ServerStats.rowsStreamed.addAndGet(n)
-    if (suspended) portalSuspended(currentOut)
-    else if (portal.stmt.sql.trim.toUpperCase.startsWith("FETCH")) {
-      commandComplete(currentOut, s"FETCH ${portal.rowCount}")
-    } else {
-      commandComplete(currentOut, commandTag(portal.stmt.sql, portal.bound, portal.rowCount))
-    }
+      throw new PgStateException(s"""portal "$name" does not exist""", "34000"))
+    runPortal(portal, portal.op, if (maxRows > 0) maxRows else Long.MaxValue, describe = false)
   }
 
   /** 'C': free a statement or portal (reference protocol.scala:381-396). */
@@ -1437,99 +1287,139 @@ private class PgConnectionHandler(base: SparkSession, sslCtx: Option[SslContext]
 
   // ---- execution helpers ----
 
-  /** COPY ... TO STDOUT: CopyOutResponse, then rows in PG copy text/csv
-    * format streamed through the incremental iterator, CopyDone, COPY tag.
+  /** Drain `portal` under `op`: the one place a statement executes and its
+    * result goes out. RowDescription when `describe` (the simple flows —
+    * the extended flow answers Describe on its own), then up to `maxRows`
+    * DataRows, then PortalSuspended while rows remain, else CommandComplete.
+    * A cursor FETCH/MOVE passes its verb: its tag counts this call's rows,
+    * and MOVE advances without sending them.
     */
-  private def runCopyOut(co: PgCopy.CopyOut): Unit = {
-    val spark = session.spark
+  private def runPortal(portal: Portal, op: Operation, maxRows: Long = Long.MaxValue,
+      describe: Boolean = true, cursorVerb: Option[String] = None): Unit = op.run {
+    if (portal.stmt.sql.trim.isEmpty) {
+      // PG §55.2.3: executing the empty statement yields EmptyQueryResponse
+      // in place of CommandComplete
+      PgMessages.emptyQueryResponse(currentOut)
+    } else {
+      if (!portal.started) startPortal(portal)
+      val nCols = portal.schema.length
+      val emit = nCols > 0 && !cursorVerb.contains("MOVE")
+      if (emit && describe) rowDescription(currentOut, portal.schema, portal.formats)
+      val writer = if (emit) RowCodec.rowWriter(portal.schema, portal.formats, sessionZone) else null
+      val scratch = if (emit) new Scratch else null
+      var n = 0L
+      while (n < maxRows && portal.rows.hasNext) {
+        val row = portal.rows.next()
+        if (emit) { writeDataRow(nCols, writer, row, scratch); maybeFlush() }
+        n += 1
+      }
+      portal.rowCount += n
+      if (emit) op.rowsSent = n
+      cursorVerb match {
+        case None if portal.rows.hasNext => portalSuspended(currentOut)
+        case None =>
+          commandComplete(currentOut, commandTag(portal.stmt.sql, portal.bound, portal.rowCount))
+        case Some(verb) => commandComplete(currentOut, commandTag(verb, portal.bound, n))
+      }
+    }
+  }
+
+  /** A portal's first run: build its Dataset and row source. Commands — SET
+    * included — execute here, eagerly inside ofRows, so the time-zone
+    * announcement brackets this step. A plain EXPLAIN stays analysis-only:
+    * Spark's EXPLAIN never executes the explained query, so side effects
+    * resolving during its inner analysis (set_config, pg_notify) must stay
+    * inert — PG fires them only under EXPLAIN ANALYZE.
+    */
+  private def startPortal(p: Portal): Unit = {
+    def start(): Unit = runTrackingTimeZone {
+      if (p.stmt.explainAnalyze) {
+        p.schema = explainAnalyzeSchema
+        p.rows = explainAnalyzeRows(p.bound)
+      } else {
+        // cacheable path: run the Bind-time Dataset — no re-analysis
+        val df = if (p.df != null) p.df else Internals.ofRows(session.spark, p.bound)
+        if (p.schema == null) p.schema = resultSchema(p.bound, explainAnalyze = false)(df.schema)
+        if (p.schema.nonEmpty) p.rows = resultIterator(df)
+        else {
+          df.collect() // run the command
+          // INSERT's tag carries the real written-row count in PG
+          p.rowCount = tagRows(p.stmt.sql, df)
+          p.rows = Iterator.empty
+        }
+      }
+    }
+    if (p.bound.getClass.getSimpleName == "ExplainCommand") Internals.analysisOnly(start())
+    else start()
+  }
+
+  /** COPY ... TO STDOUT: CopyOutResponse, then one CopyData per row streamed
+    * through the incremental iterator, CopyDone, COPY tag. Text and csv rows
+    * render in PG copy format. FORMAT binary frames the tuples between the
+    * PGCOPY signature header and the int16 -1 trailer, each an int16 field
+    * count + the SAME per-field binary encodings the DataRow writer emits
+    * (RowCodec reused verbatim, numerics included) through the
+    * grow-on-overflow scratch buffer, so memory stays bounded at any size.
+    */
+  private def runCopyOut(co: PgCopy.CopyOut, op: Operation): Unit = op.run {
     val base = co.source match {
-      case Left(table) => spark.table(table)
-      case Right(q) => spark.sql(q)
+      case Left(table) => refreshDynamicViews(table); session.spark.table(table)
+      case Right(q) => Internals.ofRows(session.spark, parseStatement(q)._1)
     }
     val df =
       if (co.cols.nonEmpty)
         base.select(co.cols.map(org.apache.spark.sql.functions.col).toIndexedSeq: _*)
       else base
     val schema = df.schema
-    val zone = sessionZone
-    if (co.opts.binary) { runCopyOutBinary(df, schema, zone); return }
-    val fields = schema.fields.zipWithIndex.map { case (f, i) =>
-      PgCopy.fieldText(f.dataType, i, zone)
-    }
-    PgMessages.copyOutResponse(currentOut, schema.length)
-    val delim = co.opts.delimiter
-    val it = resultIterator(df)
-    var n = 0L
-    val sb = new StringBuilder
-    while (it.hasNext) {
-      val row = it.next()
-      sb.clear()
-      var i = 0
-      while (i < fields.length) {
-        if (i > 0) sb.append(delim)
-        if (row.isNullAt(i)) { if (!co.opts.csv) sb.append("\\N") else sb.append(co.opts.nullStr) }
-        else {
-          val v = fields(i)(row)
-          sb.append(if (co.opts.csv) PgCopy.escapeCsv(v, delim) else PgCopy.escapeText(v))
-        }
-        i += 1
+    val opts = co.opts
+    val encode: InternalRow => Array[Byte] = if (opts.binary) {
+      schema.fields.foreach { f =>
+        if (!PgTypes.binaryCapable(f.dataType) ||
+          f.dataType == CalendarIntervalType) // no COPY recv path
+          throw new IllegalArgumentException(
+            s"COPY binary format unsupported for column type ${f.dataType}")
       }
-      sb.append('\n')
-      PgMessages.copyData(currentOut, sb.toString.getBytes(UTF_8))
+      val fields = RowCodec.rowWriter(schema, Seq.fill(schema.length)(true), sessionZone)
+      val tuple = (row: InternalRow, b: ByteBuffer) => {
+        b.putShort(schema.length.toShort); fields(row, b)
+      }
+      val scratch = new Scratch
+      row => {
+        val buf = scratch.encode(tuple, row)
+        val bytes = new Array[Byte](buf.remaining()); buf.get(bytes); bytes
+      }
+    } else {
+      val zone = sessionZone
+      val fields = schema.fields.zipWithIndex.map { case (f, i) =>
+        PgCopy.fieldText(f.dataType, i, zone)
+      }
+      val sb = new StringBuilder
+      row => {
+        sb.clear()
+        var i = 0
+        while (i < fields.length) {
+          if (i > 0) sb.append(opts.delimiter)
+          if (row.isNullAt(i)) sb.append(if (opts.csv) opts.nullStr else "\\N")
+          else {
+            val v = fields(i)(row)
+            sb.append(if (opts.csv) PgCopy.escapeCsv(v, opts.delimiter) else PgCopy.escapeText(v))
+          }
+          i += 1
+        }
+        sb.append('\n')
+        sb.toString.getBytes(UTF_8)
+      }
+    }
+    PgMessages.copyOutResponse(currentOut, schema.length, opts.binary)
+    if (opts.binary) PgMessages.copyData(currentOut, PgCopy.BinaryCopy.header)
+    var n = 0L
+    resultIterator(df).foreach { row =>
+      PgMessages.copyData(currentOut, encode(row))
       maybeFlush()
       n += 1
     }
-    ServerStats.rowsStreamed.addAndGet(n)
-    PgMessages.copyDone(currentOut)
-    commandComplete(currentOut, s"COPY $n")
-  }
-
-  /** COPY ... TO STDOUT (FORMAT binary): the PGCOPY signature header, one
-    * CopyData per tuple (int16 field count + the SAME per-field binary
-    * encodings the DataRow writer emits — RowCodec is reused verbatim,
-    * numerics included), then the int16 -1 trailer. Streams through the
-    * incremental iterator with the grow-on-overflow scratch buffer, so
-    * memory stays bounded at any result size.
-    */
-  private def runCopyOutBinary(df: DataFrame, schema: StructType,
-      zone: java.time.ZoneId): Unit = {
-    schema.fields.foreach { f =>
-      if (!PgTypes.binaryCapable(f.dataType) ||
-        f.dataType == org.apache.spark.sql.types.CalendarIntervalType) // no COPY recv path
-        throw new IllegalArgumentException(
-          s"COPY binary format unsupported for column type ${f.dataType}")
-    }
-    val writer = RowCodec.rowWriter(schema,
-      Seq.fill(schema.length)(true), zone)
-    PgMessages.copyOutResponse(currentOut, schema.length, binary = true)
-    PgMessages.copyData(currentOut, PgCopy.BinaryCopy.header)
-    val scratch = new Scratch
-    val it = resultIterator(df)
-    var n = 0L
-    while (it.hasNext) {
-      val row = it.next()
-      var done = false
-      while (!done) {
-        val buf = scratch.buf
-        buf.clear()
-        try { buf.putShort(schema.length.toShort); writer(row, buf); done = true }
-        catch {
-          case _: java.nio.BufferOverflowException =>
-            if (buf.capacity() >= Scratch.MaxBytes) throw new IllegalStateException(
-              s"row exceeds the ${Scratch.MaxBytes} byte wire limit")
-            scratch.buf = java.nio.ByteBuffer.allocate(buf.capacity() * 2)
-        }
-      }
-      val buf = scratch.buf
-      buf.flip()
-      val tuple = new Array[Byte](buf.remaining())
-      buf.get(tuple)
-      PgMessages.copyData(currentOut, tuple)
-      maybeFlush()
-      n += 1
-    }
-    PgMessages.copyData(currentOut, PgCopy.BinaryCopy.Trailer)
-    ServerStats.rowsStreamed.addAndGet(n)
+    if (opts.binary) PgMessages.copyData(currentOut, PgCopy.BinaryCopy.Trailer)
+    op.rowsSent = n
     PgMessages.copyDone(currentOut)
     commandComplete(currentOut, s"COPY $n")
   }
@@ -1566,24 +1456,6 @@ private class PgConnectionHandler(base: SparkSession, sslCtx: Option[SslContext]
     else Internals.executeCollect(df).iterator
   }
 
-  /** stream rows into currentOut; full chunks are flushed to the socket as
-    * they fill so result memory stays bounded regardless of result size
-    */
-  private def streamRows(df: DataFrame, schema: StructType, formats: Seq[Boolean],
-      maxRows: Int): Long = {
-    val writer = RowCodec.rowWriter(schema, formats, sessionZone)
-    val scratch = new Scratch
-    val it = resultIterator(df)
-    var n = 0L
-    while (it.hasNext && (maxRows == 0 || n < maxRows)) {
-      writeDataRow(currentOut, schema.length, writer, it.next(), scratch)
-      maybeFlush()
-      n += 1
-    }
-    ServerStats.rowsStreamed.addAndGet(n)
-    n
-  }
-
   /** Hand a full chunk to the socket and continue on a fresh buffer —
     * honoring BACKPRESSURE: writeAndFlush is async, so without the
     * writability gate a multi-100MB result to a slow reader queues
@@ -1607,37 +1479,42 @@ private class PgConnectionHandler(base: SparkSession, sslCtx: Option[SslContext]
   private def sessionZone: java.time.ZoneId =
     java.time.ZoneId.of(session.spark.conf.get("spark.sql.session.timeZone", "UTC"))
 
-  /** DataRow 'D': int16 column count then the RowCodec fields. The scratch
-    * buffer doubles on overflow so a single wide row (long text, big arrays)
-    * never fails the query; growth is bounded by PG's 1 GB field ceiling.
+  /** DataRow 'D': int16 column count then the RowCodec fields. */
+  private def writeDataRow(nCols: Int, writer: (InternalRow, ByteBuffer) => Unit,
+      row: InternalRow, scratch: Scratch): Unit = {
+    val buf = scratch.encode(writer, row)
+    currentOut.writeByte('D')
+    currentOut.writeInt(4 + 2 + buf.remaining())
+    currentOut.writeShort(nCols)
+    currentOut.writeBytes(buf)
+  }
+}
+
+/** Grow-on-demand serialization buffer for one row's fields. It doubles on
+  * overflow so a single wide row (long text, big arrays) never fails the
+  * query; growth is bounded by PG's 1 GB field ceiling.
+  */
+private final class Scratch {
+  private var buf: ByteBuffer = ByteBuffer.allocate(1 << 20)
+
+  /** Encode `row` through `write`, growing as needed; returns the buffer
+    * flipped for reading.
     */
-  private def writeDataRow(out: ByteBuf, nCols: Int,
-      writer: (InternalRow, ByteBuffer) => Unit, row: InternalRow,
-      scratch: Scratch): Unit = {
+  def encode(write: (InternalRow, ByteBuffer) => Unit, row: InternalRow): ByteBuffer = {
     var done = false
     while (!done) {
-      val buf = scratch.buf
       buf.clear()
-      try { writer(row, buf); done = true }
+      try { write(row, buf); done = true }
       catch {
         case _: java.nio.BufferOverflowException =>
           if (buf.capacity() >= Scratch.MaxBytes) throw new IllegalStateException(
             s"row exceeds the ${Scratch.MaxBytes} byte wire limit")
-          scratch.buf = ByteBuffer.allocate(buf.capacity() * 2)
+          buf = ByteBuffer.allocate(buf.capacity() * 2)
       }
     }
-    val buf = scratch.buf
     buf.flip()
-    out.writeByte('D')
-    out.writeInt(4 + 2 + buf.remaining())
-    out.writeShort(nCols)
-    out.writeBytes(buf)
+    buf
   }
-}
-
-/** grow-on-demand serialization buffer for DataRow fields */
-private final class Scratch {
-  var buf: ByteBuffer = ByteBuffer.allocate(1 << 20)
 }
 
 private object Scratch {
