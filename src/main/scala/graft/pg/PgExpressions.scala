@@ -2,9 +2,10 @@ package graft.pg
 
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.{Expression, LeafExpression, Unevaluable}
+import org.apache.spark.sql.catalyst.expressions.{LeafExpression, Literal, Unevaluable}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode, JavaCode}
 import org.apache.spark.sql.execution.command.LeafRunnableCommand
-import org.apache.spark.sql.types.{DataType, NullType}
+import org.apache.spark.sql.types._
 
 /** `$n` bind-parameter placeholder: a resolved NullType leaf so that a
   * prepared statement analyzes before parameters arrive (mirrors the
@@ -16,6 +17,28 @@ case class ParameterPlaceHolder(id: Int) extends LeafExpression with Unevaluable
   override def dataType: DataType = NullType
   override def nullable: Boolean = true
   override def toString: String = s"$$$id"
+}
+
+/** A bound `$n` value. To every Catalyst rule and to Parquet filter
+  * pushdown it is an ordinary [[Literal]]; only its generated code differs.
+  * `Literal` writes primitive, date and timestamp values into the Java
+  * source, so each new key of `WHERE k = $1` would be a new class for
+  * Janino to compile and the JIT to warm. This one reads the value from the
+  * `references` array into a field once per instance, so every key yields
+  * the same source and reuses one compiled class from Spark's cache.
+  * Strings, decimals and the other types already go through `references`
+  * in `Literal` itself.
+  */
+final class ParamLiteral(v: Any, t: DataType) extends Literal(v, t) {
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = dataType match {
+    case BooleanType | ByteType | ShortType | IntegerType | LongType | FloatType |
+        DoubleType | DateType | TimestampType | TimestampNTZType if value != null =>
+      val javaType = CodeGenerator.javaType(dataType)
+      val ref = ctx.addReferenceObj("param", value, CodeGenerator.boxedType(dataType))
+      val field = ctx.addMutableState(javaType, "param", f => s"$f = $ref.${javaType}Value();")
+      ExprCode.forNonNullValue(JavaCode.global(field, dataType))
+    case _ => super.doGenCode(ctx, ev)
+  }
 }
 
 /** PG clients (JDBC autocommit-off) send `BEGIN`; Spark has no transactions,

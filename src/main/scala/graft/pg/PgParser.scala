@@ -120,7 +120,9 @@ class PgExtensions extends (SparkSessionExtensions => Unit) {
 object PgDialect {
 
   /** Substitute bound `$n` parameters; unbound ones become analyzable
-    * [[ParameterPlaceHolder]]s (reference ParamBinder.scala:31-47).
+    * [[ParameterPlaceHolder]]s (reference ParamBinder.scala:31-47). A
+    * non-null value binds as a [[ParamLiteral]], so a new value reuses the
+    * code compiled for the last one; NULL binds as a plain `Literal`.
     *
     * CTE bodies need explicit recursion: a parsed WITH keeps its
     * definitions in `UnresolvedWith.cteRelations`, which surface only as
@@ -130,9 +132,9 @@ object PgDialect {
     */
   def bind(plan: LogicalPlan, params: Map[Int, Any]): LogicalPlan = {
     def lit(v: Any): Literal = v match {
-      case l: Literal => l // already typed (e.g. DateType from the wire codec)
-      case null => Literal(null)
-      case other => Literal(other)
+      // already typed (e.g. DateType from the wire codec)
+      case l: Literal => if (l.value == null) l else new ParamLiteral(l.value, l.dataType)
+      case other => lit(Literal(other))
     }
     val withCtes = bindCtes(plan, params)
     // transformAllExpressionsWithSubqueries: `$n` inside IN/EXISTS/scalar

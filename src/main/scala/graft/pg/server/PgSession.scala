@@ -41,6 +41,15 @@ final case class Prepared(
   private val freshAnalyzed =
     new java.util.concurrent.atomic.AtomicReference[LogicalPlan](cachedAnalyzed.orNull)
   def takeAnalyzed(): Option[LogicalPlan] = Option(freshAnalyzed.getAndSet(null))
+
+  /** PG's parameter count: the declared types plus any higher `$n` the
+    * text uses. Describe reports this many and a Bind must supply them.
+    */
+  def paramCount: Int = (paramOids.length +: paramIds).max
+
+  /** The type of parameter `i` (0-based): as declared, else text. */
+  def paramOid(i: Int): Int =
+    paramOids.lift(i).filter(_ != PgTypes.UNSPECIFIED).getOrElse(PgTypes.VARCHAR)
 }
 
 /** A portal: statement + bound plan + result formats + the cursor position

@@ -1203,22 +1203,17 @@ private class PgConnectionHandler(base: SparkSession, sslCtx: Option[SslContext]
     }
     val nRes = in.getShort.toInt
     val resFormats = Seq.fill(nRes)(in.getShort.toInt)
+    if (nParams != stmt.paramCount) {
+      throw new PgStateException(s"bind message supplies $nParams parameters, but " +
+        s"""prepared statement "$stmtName" requires ${stmt.paramCount}""", "08P01")
+    }
 
-    // Decode by the oid declared in Parse (falling back to varchar for
-    // undeclared/unspecified); NULL params (len -1) bind a SQL NULL.
+    // Decode by the oid declared in Parse, keeping the fully-typed Literal
+    // (DateType/TimestampType etc. — not just the raw value); NULL params
+    // (len -1) bind a SQL NULL.
     val litParams = params.zipWithIndex.map { case (bytes, i) =>
-      val fmt = formatCode(paramFormats, i)
-      val oid = stmt.paramOids.lift(i).filter(_ != PgTypes.UNSPECIFIED)
-        .getOrElse(PgTypes.VARCHAR)
-      // keep the fully-typed Literal (DateType/TimestampType etc. — not just
-      // the raw value); unknown declared oids fall back to text decoding
-      val value: Any =
-        if (bytes == null) null
-        else try ParamCodec.decode(bytes, oid, fmt)
-        catch { case _: IllegalArgumentException if fmt == 0 =>
-          ParamCodec.decode(bytes, PgTypes.VARCHAR, fmt)
-        }
-      (i + 1) -> value
+      (i + 1) -> (if (bytes == null) null
+        else ParamCodec.decodeOrText(bytes, stmt.paramOid(i), formatCode(paramFormats, i)))
     }.toMap[Int, Any]
     val bound = PgDialect.bind(stmt.plan, litParams)
     // cacheable path: reuse the Parse-time resolved plan (one-shot) — the
@@ -1246,10 +1241,7 @@ private class PgConnectionHandler(base: SparkSession, sslCtx: Option[SslContext]
         val stmt = session.statements.getOrElse(name,
           throw new PgStateException(
             s"""prepared statement "$name" does not exist""", "26000"))
-        parameterDescription(out,
-          if (stmt.paramOids.nonEmpty)
-            stmt.paramOids.map(o => if (o == PgTypes.UNSPECIFIED) PgTypes.VARCHAR else o)
-          else stmt.paramIds.map(_ => PgTypes.VARCHAR))
+        parameterDescription(out, (0 until stmt.paramCount).map(stmt.paramOid))
         if (stmt.schema.isEmpty) noData(out)
         else rowDescription(out, stmt.schema, Seq.fill(stmt.schema.length)(false))
       case 'P' =>
@@ -1448,13 +1440,15 @@ private class PgConnectionHandler(base: SparkSession, sslCtx: Option[SslContext]
   /** Incremental (partition-at-a-time) vs full-collect result iteration
     * (reference ExecutorImpl.scala:185-215). Incremental is the default:
     * at 100 TB a full driver collect is fatal; cursor clients stream.
+    * A result already in memory skips the Spark job either way.
     */
-  private def resultIterator(df: DataFrame): Iterator[InternalRow] = {
-    val incremental =
-      session.spark.conf.get("spark.graft.incrementalCollect", "true").toBoolean
-    if (incremental) Internals.executeToIterator(df)
-    else Internals.executeCollect(df).iterator
-  }
+  private def resultIterator(df: DataFrame): Iterator[InternalRow] =
+    Internals.localRows(df).getOrElse {
+      val incremental =
+        session.spark.conf.get("spark.graft.incrementalCollect", "true").toBoolean
+      if (incremental) Internals.executeToIterator(df)
+      else Internals.executeCollect(df).iterator
+    }
 
   /** Hand a full chunk to the socket and continue on a fresh buffer —
     * honoring BACKPRESSURE: writeAndFlush is async, so without the

@@ -2,6 +2,8 @@ package graft.pg.server
 
 import java.util.concurrent.atomic.AtomicLong
 
+import org.apache.spark.metrics.source.CodegenMetrics
+
 /** One finished (or failed/canceled) statement execution, kept in the
   * recent-statement ring for the monitoring UI (the reference listener's
   * statement store, SQLServerListener.scala:117-176).
@@ -51,6 +53,9 @@ object ServerStats {
     case "statements_run" => statementsRun.get
     case "statements_failed" => statementsFailed.get
     case "rows_streamed" => rowsStreamed.get
+    // Janino compiles of generated code since the JVM started; process-wide,
+    // so it counts every session and every caller of Spark in the process
+    case "codegen_compiles" => CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     case _ => -1L
   }
 }

@@ -42,6 +42,24 @@ object Internals {
     df.asInstanceOf[org.apache.spark.sql.classic.Dataset[org.apache.spark.sql.Row]]
       .queryExecution.executedPlan.executeToIterator()
 
+  /** The rows of a result that is already in memory, without launching
+    * a Spark job: a local table scan (catalog lookups fold to one), or a
+    * whole-stage Project of foldable expressions over the one-row relation
+    * (`SELECT 1`). None for any other plan; a UDF is never foldable, so
+    * e.g. `pg_sleep` keeps its cancellable job.
+    */
+  def localRows(df: DataFrame): Option[Iterator[org.apache.spark.sql.catalyst.InternalRow]] = {
+    import org.apache.spark.sql.catalyst.expressions.Alias
+    import org.apache.spark.sql.execution._
+    df.asInstanceOf[CDataset[org.apache.spark.sql.Row]].queryExecution.executedPlan match {
+      case scan: LocalTableScanExec => Some(scan.executeCollect().iterator)
+      case WholeStageCodegenExec(ProjectExec(list, _: OneRowRelationExec))
+          if list.forall { case Alias(e, _) => e.foldable; case _ => false } =>
+        Some(Iterator.single(org.apache.spark.sql.catalyst.InternalRow.fromSeq(list.map(_.eval()))))
+      case _ => None
+    }
+  }
+
   /** One-shot collect of InternalRows (cursor-re-entrant mode). */
   def executeCollect(df: DataFrame): Array[org.apache.spark.sql.catalyst.InternalRow] =
     df.asInstanceOf[org.apache.spark.sql.classic.Dataset[org.apache.spark.sql.Row]]

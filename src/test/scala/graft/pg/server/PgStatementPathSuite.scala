@@ -1,25 +1,23 @@
 package graft.pg.server
 
-import java.io.{DataInputStream, DataOutputStream}
-import java.net.Socket
-import java.nio.ByteBuffer
 import java.nio.charset.StandardCharsets.UTF_8
-
-import scala.collection.mutable
 
 import graft.TestSpark
 import graft.pg.PgCatalog
+import graft.pg.wire.PgTypes
 
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Every statement flow of the wire handler, seen from the outside: the
   * `graft_stat` counters each flow moves (statements_run, statements_failed,
-  * rows_streamed), and the extended protocol answering SET and plain EXPLAIN
-  * exactly as the simple protocol does.
+  * rows_streamed), the extended protocol answering SET and plain EXPLAIN
+  * exactly as the simple protocol does, Bind's checks of its parameters,
+  * and results already in memory answering without a Spark job.
   */
 class PgStatementPathSuite extends AnyFunSuite with BeforeAndAfterAll {
   import PgStatementPathSuite.Delta
+  import WireClient._
 
   private var server: PgWireServer = _
   private def port: Int = server.boundPort
@@ -36,92 +34,14 @@ class PgStatementPathSuite extends AnyFunSuite with BeforeAndAfterAll {
     if (server != null) server.stop()
   }
 
-  private type Msgs = Seq[(Char, Array[Byte])]
-
-  private class Client {
-    private val sock = new Socket("127.0.0.1", port)
-    sock.setSoTimeout(60000)
-    private val in = new DataInputStream(sock.getInputStream)
-    private val os = new DataOutputStream(sock.getOutputStream)
-
-    def cstr(s: String): Array[Byte] = s.getBytes(UTF_8) :+ 0.toByte
-    def i16(v: Int): Array[Byte] = ByteBuffer.allocate(2).putShort(v.toShort).array()
-    def i32(v: Int): Array[Byte] = ByteBuffer.allocate(4).putInt(v).array()
-
-    def connect(): Unit = {
-      val body = cstr("user") ++ cstr("graft") ++ cstr("database") ++
-        cstr("default") :+ 0.toByte
-      os.writeInt(8 + body.length); os.writeInt(196608); os.write(body); os.flush()
-      drain()
-    }
-
-    def send(tpe: Char, payload: Array[Byte]): Unit = {
-      os.writeByte(tpe); os.writeInt(4 + payload.length); os.write(payload); os.flush()
-    }
-
-    /** messages up to and including ReadyForQuery, or up to the first
-      * `stopAt` message type (CopyInResponse leaves no ReadyForQuery)
-      */
-    def drain(stopAt: Char = 'Z'): Msgs = {
-      val out = mutable.ArrayBuffer.empty[(Char, Array[Byte])]
-      var done = false
-      while (!done) {
-        val tpe = in.readByte().toChar
-        val payload = new Array[Byte](in.readInt() - 4)
-        in.readFully(payload)
-        out += ((tpe, payload))
-        done = tpe == 'Z' || tpe == stopAt
-      }
-      out.toSeq
-    }
-
-    def simple(sql: String): Msgs = { send('Q', cstr(sql)); drain() }
-
-    /** Parse with an optional declared int8 `$1`, Bind with text params. */
-    def parse(stmt: String, sql: String, int8Params: Int = 0): Unit =
-      send('P', cstr(stmt) ++ cstr(sql) ++ i16(int8Params) ++
-        (0 until int8Params).flatMap(_ => i32(20)))
-    def bind(portal: String, stmt: String, params: Seq[String] = Nil): Unit =
-      send('B', cstr(portal) ++ cstr(stmt) ++ i16(0) ++ i16(params.length) ++
-        params.flatMap { p => val b = p.getBytes(UTF_8); i32(b.length) ++ b } ++ i16(0))
-    def describePortal(portal: String): Unit = send('D', Array('P'.toByte) ++ cstr(portal))
-    def execute(portal: String, maxRows: Int = 0): Unit = send('E', cstr(portal) ++ i32(maxRows))
-    def sync(): Msgs = { send('S', Array.empty); drain() }
-
-    def close(): Unit = { send('X', Array.empty); sock.close() }
-  }
-
-  private def str(b: ByteBuffer): String = {
-    val sb = new StringBuilder
-    var c = b.get()
-    while (c != 0) { sb.append(c.toChar); c = b.get() }
-    sb.toString
-  }
-  private def types(m: Msgs): String = m.map(_._1).mkString
-  private def tags(m: Msgs): Seq[String] =
-    m.filter(_._1 == 'C').map(x => new String(x._2, UTF_8).trim)
-  private def dataRows(m: Msgs): Int = m.count(_._1 == 'D')
-  private def col0(m: Msgs): Seq[String] = m.filter(_._1 == 'D').map { case (_, p) =>
-    val b = ByteBuffer.wrap(p)
-    b.getShort
-    val len = b.getInt
-    if (len < 0) null else { val v = new Array[Byte](len); b.get(v); new String(v, UTF_8) }
-  }
-  private def paramStatuses(m: Msgs): Seq[(String, String)] =
-    m.filter(_._1 == 'S').map { case (_, p) => val b = ByteBuffer.wrap(p); (str(b), str(b)) }
-
-  private def withClient[A](f: Client => A): A = {
-    val c = new Client
-    c.connect()
-    try f(c) finally c.close()
-  }
+  private def withClient[A](f: WireClient => A): A = WireClient.withClient(port)(f)
 
   /** The counter movement `body` causes, read through `graft_stat` on the
     * same connection. The probe is itself a one-row simple statement: the
     * later read sees one more statement run and the earlier probe's row,
     * which is taken off here.
     */
-  private def delta(c: Client)(body: => Unit): Delta = {
+  private def delta(c: WireClient)(body: => Unit): Delta = {
     def read(): Seq[Long] = col0(c.simple(
       "SELECT graft_stat('statements_run') || ',' || graft_stat('statements_failed') || " +
         "',' || graft_stat('rows_streamed')")).head.split(',').map(_.toLong).toSeq
@@ -136,7 +56,7 @@ class PgStatementPathSuite extends AnyFunSuite with BeforeAndAfterAll {
       assert(delta(c)(c.simple("SELECT 1")) === Delta(1, 0, 1))
       assert(delta(c) {
         val r = c.simple("SELECT 1; SELECT id FROM range(3); SET spark.graft.stat_probe=1")
-        assert(tags(r) === Seq("SELECT 1", "SELECT 3", "SET"))
+        assert(commandTags(r) === Seq("SELECT 1", "SELECT 3", "SET"))
       } === Delta(3, 0, 4))
     }
   }
@@ -144,14 +64,14 @@ class PgStatementPathSuite extends AnyFunSuite with BeforeAndAfterAll {
   test("counters: an extended $1 SELECT suspended and resumed twice is one statement") {
     withClient { c =>
       val d = delta(c) {
-        c.parse("s", "SELECT id FROM range(10) WHERE id < $1", int8Params = 1)
+        c.parse("s", "SELECT id FROM range(10) WHERE id < $1", oids = Seq(PgTypes.INT8))
         c.bind("p", "s", Seq("3"))
         c.execute("p", maxRows = 1)
         c.execute("p", maxRows = 1)
         c.execute("p", maxRows = 1)
         val r = c.sync()
         assert(types(r).filter("sCD".contains(_)) === "DsDsDC")
-        assert(tags(r) === Seq("SELECT 3"))
+        assert(commandTags(r) === Seq("SELECT 3"))
       }
       assert(d === Delta(1, 0, 3))
     }
@@ -160,11 +80,11 @@ class PgStatementPathSuite extends AnyFunSuite with BeforeAndAfterAll {
   test("counters: DECLARE / FETCH 2 / MOVE / CLOSE") {
     withClient { c =>
       val d = delta(c) {
-        assert(tags(c.simple("DECLARE cur CURSOR FOR SELECT id FROM range(5)")) ===
+        assert(commandTags(c.simple("DECLARE cur CURSOR FOR SELECT id FROM range(5)")) ===
           Seq("DECLARE CURSOR"))
-        assert(tags(c.simple("FETCH 2 FROM cur")) === Seq("FETCH 2"))
-        assert(tags(c.simple("MOVE 1 IN cur")) === Seq("MOVE 1"))
-        assert(tags(c.simple("CLOSE cur")) === Seq("CLOSE CURSOR"))
+        assert(commandTags(c.simple("FETCH 2 FROM cur")) === Seq("FETCH 2"))
+        assert(commandTags(c.simple("MOVE 1 IN cur")) === Seq("MOVE 1"))
+        assert(commandTags(c.simple("CLOSE cur")) === Seq("CLOSE CURSOR"))
       }
       assert(d === Delta(4, 0, 2))
     }
@@ -177,14 +97,14 @@ class PgStatementPathSuite extends AnyFunSuite with BeforeAndAfterAll {
         assert(c.drain(stopAt = 'G').last._1 === 'G')
         c.send('d', "1\ta\n2\tb\n".getBytes(UTF_8))
         c.send('c', Array.empty)
-        assert(tags(c.drain()) === Seq("COPY 2"))
+        assert(commandTags(c.drain()) === Seq("COPY 2"))
       } === Delta(1, 0, 0))
       assert(delta(c) {
-        assert(tags(c.simple("COPY (SELECT id FROM range(3)) TO STDOUT")) === Seq("COPY 3"))
+        assert(commandTags(c.simple("COPY (SELECT id FROM range(3)) TO STDOUT")) === Seq("COPY 3"))
       } === Delta(1, 0, 3))
       assert(delta(c) {
         val r = c.simple("COPY (SELECT id FROM range(3)) TO STDOUT WITH (FORMAT binary)")
-        assert(tags(r) === Seq("COPY 3"))
+        assert(commandTags(r) === Seq("COPY 3"))
       } === Delta(1, 0, 3))
     }
   }
@@ -205,7 +125,7 @@ class PgStatementPathSuite extends AnyFunSuite with BeforeAndAfterAll {
       val simple = delta(c) {
         val r = c.simple("EXPLAIN ANALYZE SELECT id FROM range(3)")
         lines = dataRows(r)
-        assert(tags(r) === Seq("EXPLAIN"))
+        assert(commandTags(r) === Seq("EXPLAIN"))
       }
       assert(lines > 0 && simple === Delta(1, 0, lines))
       val extended = delta(c) {
@@ -214,7 +134,7 @@ class PgStatementPathSuite extends AnyFunSuite with BeforeAndAfterAll {
         c.execute("")
         val r = c.sync()
         lines = dataRows(r)
-        assert(tags(r) === Seq("EXPLAIN"))
+        assert(commandTags(r) === Seq("EXPLAIN"))
       }
       assert(lines > 0 && extended === Delta(1, 0, lines))
     }
@@ -251,7 +171,7 @@ class PgStatementPathSuite extends AnyFunSuite with BeforeAndAfterAll {
       val set = c.sync()
       assert(!types(set).exists("TD".contains(_)), types(set))
       assert(types(set).contains('n'), "Describe of a SET portal answers NoData")
-      assert(tags(set) === Seq("SET"))
+      assert(commandTags(set) === Seq("SET"))
 
       c.parse("", "SET TIME ZONE 'America/Los_Angeles'")
       c.bind("", "")
@@ -259,7 +179,7 @@ class PgStatementPathSuite extends AnyFunSuite with BeforeAndAfterAll {
       c.execute("")
       val tz = c.sync()
       assert(!types(tz).exists("TD".contains(_)), types(tz))
-      assert(tags(tz) === Seq("SET"))
+      assert(commandTags(tz) === Seq("SET"))
       assert(paramStatuses(tz).contains(("TimeZone", "America/Los_Angeles")))
       assert(col0(c.simple("SHOW TimeZone")) === Seq("America/Los_Angeles"))
     }
@@ -275,6 +195,102 @@ class PgStatementPathSuite extends AnyFunSuite with BeforeAndAfterAll {
       assert(col0(r).mkString.contains("Physical Plan"))
       assert(!col0(c.simple("SHOW graft.ext_explain_probe")).contains("fired"))
     }
+  }
+
+  test("Bind checks the parameter count: 08P01, nothing runs, the connection goes on") {
+    withClient { c =>
+      def bindError(stmt: String, params: Seq[String]): Option[(String, String)] = {
+        c.bind("", stmt, params)
+        c.execute("")
+        val r = c.sync()
+        assert(!types(r).contains('2') && dataRows(r) === 0, types(r))
+        error(r)
+      }
+      def requires(stmt: String, supplied: Int, required: Int) = Some(("08P01",
+        s"bind message supplies $supplied parameters, but prepared statement " +
+          s""""$stmt" requires $required"""))
+      c.parse("one", "SELECT id FROM range(10) WHERE id = $1", Seq(PgTypes.INT8))
+      assert(bindError("one", Nil) === requires("one", 0, 1))
+      assert(bindError("one", Seq("1", "2")) === requires("one", 2, 1))
+      // declared types count even when the text uses fewer
+      c.parse("declared", "SELECT id FROM range(10) WHERE id = $1",
+        Seq(PgTypes.INT8, PgTypes.INT8))
+      assert(bindError("declared", Seq("1")) === requires("declared", 1, 2))
+      // and the highest `$n` counts when fewer types are declared; Describe
+      // reports the same count
+      c.parse("highest", "SELECT id FROM range(10) WHERE id IN ($1, $3) ORDER BY id",
+        Seq(PgTypes.INT8))
+      c.describeStatement("highest")
+      assert(paramTypes(c.sync()) === Seq(PgTypes.INT8, PgTypes.VARCHAR, PgTypes.VARCHAR))
+      assert(bindError("highest", Seq("1", "3")) === requires("highest", 2, 3))
+      c.bind("", "highest", Seq("1", null, "3"))
+      c.execute("")
+      assert(col0(c.sync()) === Seq("1", "3"))
+    }
+  }
+
+  test("malformed text for a bool or numeric parameter fails at Bind with 22P02") {
+    withClient { c =>
+      val lookup = "SELECT id FROM range(50) WHERE id = $1"
+      val bad = c.extended(lookup, Seq("abc"), Seq(PgTypes.INT8))
+      assert(types(bad) === "1EZ", "answered at Bind: no BindComplete, nothing executed")
+      assert(error(bad) === Some(("22P02", """invalid input syntax for type bigint: "abc"""")))
+      // surrounding whitespace is ignored, as in PG's int8in
+      assert(col0(c.extended(lookup, Seq(" 42 "), Seq(PgTypes.INT8))) === Seq("42"))
+      Seq(PgTypes.BOOL -> "boolean", PgTypes.INT2 -> "smallint", PgTypes.INT4 -> "integer",
+        PgTypes.FLOAT4 -> "real", PgTypes.FLOAT8 -> "double precision").foreach {
+        case (oid, name) =>
+          assert(error(c.extended("SELECT $1 IS NULL", Seq("abc"), Seq(oid))) ===
+            Some(("22P02", s"""invalid input syntax for type $name: "abc"""")))
+      }
+      assert(error(c.extended("SELECT $1 IS NULL", Seq("99999"), Seq(PgTypes.INT2))) ===
+        Some(("22003", """value "99999" is out of range for type smallint""")))
+      assert(col0(c.extended("SELECT NOT $1", Seq(" yes "), Seq(PgTypes.BOOL))) === Seq("f"))
+      // date text keeps the fallback to Spark's cast, which reads more forms
+      assert(col0(c.extended("SELECT CAST($1 AS DATE) + 1", Seq("2024-1-5"), Seq(PgTypes.DATE))) ===
+        Seq("2024-01-06"))
+    }
+  }
+
+  test("results already in memory run no Spark job; a UDF keeps its job") {
+    val sc = TestSpark.spark.sparkContext
+    val started = new java.util.concurrent.atomic.AtomicInteger
+    val markers = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        started.incrementAndGet()
+        Option(e.properties).flatMap(p => Option(p.getProperty("graft.test.marker")))
+          .foreach(markers.add)
+      }
+    }
+    // listener events arrive in order but asynchronously: once a marker job
+    // started after `body` has been seen, so has every job `body` launched
+    // (and a marker before it keeps earlier jobs still queued out of the count)
+    def marker(): Unit = {
+      val name = s"marker-${System.nanoTime}"
+      sc.setLocalProperty("graft.test.marker", name)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty("graft.test.marker", null)
+      val deadline = System.nanoTime + 30000000000L
+      while (!markers.contains(name) && System.nanoTime < deadline) Thread.sleep(10)
+      assert(markers.contains(name))
+    }
+    def jobsOf(body: => Unit): Int = {
+      marker()
+      val before = started.get
+      body
+      marker()
+      started.get - before - 1
+    }
+    sc.addSparkListener(listener)
+    try withClient { c =>
+      var r: Msgs = Nil
+      assert(jobsOf { r = c.simple("SELECT 1") } === 0)
+      assert(col0(r) === Seq("1"))
+      assert(jobsOf { r = c.simple("SELECT typname FROM pg_catalog.pg_type WHERE oid = 23") } === 0)
+      assert(col0(r) === Seq("int4"))
+      assert(jobsOf { r = c.simple("SELECT pg_sleep(0)") } >= 1)
+      assert(commandTags(r) === Seq("SELECT 1"))
+    } finally sc.removeSparkListener(listener)
   }
 }
 

@@ -236,6 +236,36 @@ class RowCodecSpec extends AnyFunSuite {
     }
   }
 
+  test("param text decode follows PG's input functions") {
+    def dec(s: String, oid: Int) = ParamCodec.decode(s.getBytes(UTF_8), oid, 0).value
+    assert(dec(" 42 ", PgTypes.INT8) === 42L)
+    assert(dec("-9223372036854775808", PgTypes.INT8) === Long.MinValue)
+    assert(dec("\t-0.0 ", PgTypes.FLOAT8).asInstanceOf[Double].equals(-0.0))
+    assert(dec("-inf", PgTypes.FLOAT4) === Float.NegativeInfinity)
+    assert(dec("nan", PgTypes.FLOAT8).asInstanceOf[Double].isNaN)
+    assert(Seq("yes", " On", "TRUE", "tr", "1").map(dec(_, PgTypes.BOOL)).forall(_ == true))
+    assert(Seq("no", "off", "f", "0").map(dec(_, PgTypes.BOOL)).forall(_ == false))
+    assert(dec(" 2024-01-15 ", PgTypes.DATE) === 19737)
+    def failure(s: String, oid: Int) = {
+      val e = intercept[graft.pg.server.PgStateException](dec(s, oid))
+      (e.state, e.getMessage)
+    }
+    assert(failure("abc", PgTypes.INT8) === ("22P02", """invalid input syntax for type bigint: "abc""""))
+    assert(failure("o", PgTypes.BOOL) === ("22P02", """invalid input syntax for type boolean: "o""""))
+    assert(failure("0x10", PgTypes.FLOAT8)._1 === "22P02")
+    assert(failure("1.5", PgTypes.INT4)._1 === "22P02")
+    assert(failure("40000", PgTypes.INT2) ===
+      ("22003", """value "40000" is out of range for type smallint"""))
+    assert(failure("1,5", PgTypes.NUMERIC) ===
+      ("22P02", """invalid input syntax for type numeric: "1,5""""))
+    // text the codec cannot take binds as VARCHAR only for oids it has no
+    // decoder for and for date/timestamp forms java.time does not read
+    def orText(s: String, oid: Int) = ParamCodec.decodeOrText(s.getBytes(UTF_8), oid, 0)
+    assert(orText("2024-1-5", PgTypes.DATE).dataType === StringType)
+    assert(orText("{1,2}", PgTypes.INT8_ARRAY).dataType === StringType)
+    intercept[graft.pg.server.PgStateException](orText("abc", PgTypes.INT8))
+  }
+
   test("oid mapping covers the bridge table") {
     assert(PgTypes.oidOf(IntegerType) === 23)
     assert(PgTypes.oidOf(StringType) === 1043)
