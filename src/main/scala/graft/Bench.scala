@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Per-round benchmark: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and prints one JSON line. Each query is fully
@@ -26,8 +25,8 @@ object Bench {
     * by the anchored naming convention `qNN_stream[_...]` (a hardcoded set
     * went stale once and silently double-timed the newer entries; a bare
     * substring match would misclassify a future "upstream"-named batch
-    * entry). BenchConventionSuite trips if any entry name contains
-    * "stream" without matching the anchor, forcing explicit classification.
+    * entry). QueriesSmokeSuite trips if any entry name contains "stream"
+    * without matching the anchor, forcing explicit classification.
     */
   private[graft] val StreamingName = "^q\\d+_stream(_.*)?$".r
   private[graft] def isStreaming(name: String): Boolean =
@@ -35,7 +34,6 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // optional comma-separated entry filter for targeted runs (the local
     // sf1 scale-up check times only the heaviest entries)
     val only = sys.env.get("SPARK_GRAFT_ONLY")
@@ -49,20 +47,7 @@ object Bench {
     // emits a complete line — a degraded host window can no longer turn the
     // whole round's perf artifact into rc:124 silence
     val budgetSecs = sys.env.getOrElse("SPARK_GRAFT_BENCH_BUDGET", "420").toDouble
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // 105 queries x several whole-stage-codegen units each blows far past
-      // the default 100-entry generated-class cache; the resulting evict +
-      // recompile storms late in the JVM's life (huge intern/class tables
-      // make Janino compiles 100x slower) randomly added 40-200s to ONE
-      // unlucky query per run. Cache every unit instead: thread dumps
-      // during the stalls showed CodeGenerator.doCompile/String.intern.
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSpark.session()
     val t0 = System.nanoTime()
     def elapsed: Double = (System.nanoTime() - t0) / 1e9
     // one untimed warmup so per-query numbers reflect steady state rather
@@ -76,7 +61,7 @@ object Bench {
     // OPTIMIZATION_r11.md): streaming entries are timed ONCE (pass 1 only),
     // so whichever ran first absorbed the JVM's one-time streaming
     // machinery — ~8-10 s of micro-batch engine/state-store/sink codegen
-    // (ProfStream probe: q93 first = 11.1 s vs ~1.0 s steady) and ~3 s more
+    // (measured per trigger: q93 first = 11.1 s vs ~1.0 s steady) and ~3 s more
     // for the first RocksDB/transformWithState entry — which is why
     // q92/q95 flapped 2.5-6.4 s across otherwise-identical runs. Warm one
     // HDFS-state entry and one RocksDB entry untimed. p22/p27 likewise

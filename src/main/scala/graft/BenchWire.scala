@@ -206,33 +206,10 @@ object BenchWire {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val iters = sys.env.getOrElse("SPARK_GRAFT_WIRE_ITERS", "3").toInt
     val fetchSize = sys.env.getOrElse("SPARK_GRAFT_WIRE_FETCH", "100000").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // temp views for the direct path + main.* catalog views for the CTE
-    // shadow texts; bare-name catalog TABLES (not views) so the server's
-    // per-connection newSession() clones (shared external catalog,
-    // isolated temp views) resolve the same tables a metastore-registered
-    // deployment would. TABLE matters: a catalog VIEW re-expands to
-    // parquet.`path` on every analysis — file re-listing + footer schema
-    // re-inference per referenced table per query, ~0.8s of pure fixed
-    // cost on an 8-table TPC-H text — while a catalog table's resolved
-    // relation lands in the session's relation cache after first use.
-    Tables.all.foreach { n =>
-      spark.sql(s"DROP TABLE IF EXISTS $n")
-      spark.sql(s"CREATE TABLE $n USING parquet LOCATION '$sfDir/$n.parquet'")
-    }
-    // temp views registered AFTER the tables: DROP TABLE resolves (and
-    // would drop) a same-named temp view first
-    Tables.views(spark, sfDir)
+    val spark = LocalSpark.session()
+    Tables.serve(spark, sfDir)
 
     val server = new PgWireServer(spark, port = 0)
     server.start()

@@ -4,8 +4,6 @@ import java.util.concurrent.atomic.AtomicBoolean
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.SparkSession
-
 import graft.pg.server.PgWireServer
 
 /** Wire-path concurrency throughput (round-10 stretch ask): a mixed light
@@ -27,26 +25,9 @@ object BenchWireConc {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val secsPerLevel = sys.env.getOrElse("SPARK_GRAFT_CONC_SECS", "20").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.scheduler.mode", "FAIR")
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // catalog TABLES, not views — see BenchWire: a view re-resolves its
-    // parquet location on every analysis, a table's relation is cached.
-    // Registered BEFORE the temp views (DROP TABLE drops a same-named
-    // temp view first).
-    Tables.all.foreach { n =>
-      spark.sql(s"DROP TABLE IF EXISTS $n")
-      spark.sql(s"CREATE TABLE $n USING parquet LOCATION '$sfDir/$n.parquet'")
-    }
-    Tables.views(spark, sfDir)
+    val spark = LocalSpark.session(fairScheduler = true)
+    Tables.serve(spark, sfDir)
     val server = new PgWireServer(spark, port = 0)
     server.start()
 

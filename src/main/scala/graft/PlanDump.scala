@@ -3,8 +3,6 @@ package graft
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Dump `.explain("formatted")` for selected entries to files — the
   * optimization rounds' plan-evidence artifact (plans/rNN/<name>_before.txt /
   * _after.txt). Streaming entries are skipped: their QE fn EXECUTES the
@@ -19,15 +17,7 @@ object PlanDump {
     val outDir = args(1)
     val suffix = args(2)
     val prefixes = args.drop(3)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSpark.session()
     Files.createDirectories(Paths.get(outDir))
     val selected = SparkEntry.all
       .filterNot(q => Bench.isStreaming(q.name))

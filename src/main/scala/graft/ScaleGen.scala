@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Synthesizes a larger scale factor from the driver's largest shipped one
@@ -30,14 +29,7 @@ object ScaleGen {
     // similarity: dup density per copy matches the base corpus and volume
     // scales linearly — the honest setup for a throughput-linearity probe.
     val saltText = args.lift(4).contains("salt")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSpark.session()
 
     def copyOf(name: String): Unit =
       Tables.df(spark, src, name).write.mode("overwrite")

@@ -157,6 +157,26 @@ object Tables {
       spark.read.parquet(s"$sfDir/events.parquet")
     }
 
+  /** What a wire bench serves: bare-name catalog TABLES, so the server's
+    * per-connection newSession() clones (shared external catalog, isolated
+    * temp views) resolve the same tables a metastore-registered deployment
+    * would, then the temp views (direct path) and main.* tables (CTE
+    * shadow texts) of [[views]]. TABLE, not VIEW: a catalog view re-expands
+    * to parquet.`path` on every analysis — file re-listing + footer schema
+    * re-inference per referenced table per query, ~0.8s of pure fixed cost
+    * on an 8-table TPC-H text — while a catalog table's resolved relation
+    * lands in the session's relation cache after first use. The temp views
+    * come AFTER the tables: DROP TABLE resolves (and would drop) a
+    * same-named temp view first.
+    */
+  def serve(spark: SparkSession, sfDir: String): Unit = {
+    all.foreach { n =>
+      spark.sql(s"DROP TABLE IF EXISTS $n")
+      spark.sql(s"CREATE TABLE $n USING parquet LOCATION '$sfDir/$n.parquet'")
+    }
+    views(spark, sfDir)
+  }
+
   // weak keys: long-lived servers create a session per connection — a
   // strong map would pin every closed session's state in memory forever
   private val registered =

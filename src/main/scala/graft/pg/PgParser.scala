@@ -96,7 +96,7 @@ class PgParserInterface(delegate: ParserInterface) extends ParserInterface {
     delegate.parseRoutineParam(sqlText)
 }
 
-/** Extension builder: `SparkSession.builder.withExtensions(new PgExtensions)`
+/** Extension builder: `SparkSession.Builder.withExtensions(new PgExtensions)`
   * or `spark.sql.extensions=graft.pg.PgExtensions` (mirrors the reference's
   * extension injection, SQLServerEnv.scala:73-97). Installs the WHOLE
   * engine, not just the dialect: the PG delegating parser, the time-band

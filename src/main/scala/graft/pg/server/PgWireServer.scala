@@ -600,7 +600,7 @@ private class PgConnectionHandler(base: SparkSession, sslCtx: Option[SslContext]
         // ends its cycle with ReadyForQuery
         case NonFatal(e) =>
           ServerStats.statementsFailed.incrementAndGet()
-          errorResponse(currentOut, Option(e.getMessage).getOrElse(e.toString),
+          errorResponse(currentOut, PgWireServer.messageOf(e),
             PgWireServer.sqlStateOf(e), PgWireServer.errorPosition(e))
           if ("PBDECHd".indexOf(t) >= 0) inError = true
           else readyForQuery(currentOut)
@@ -734,8 +734,7 @@ private class PgConnectionHandler(base: SparkSession, sslCtx: Option[SslContext]
     val nParams = in.getShort.toInt
     val params = Array.fill[Array[Byte]](nParams) {
       val len = in.getInt
-      if (len < 0) null
-      else { val b = new Array[Byte](len); in.get(b); b }
+      if (len < 0) null else readBytes(in, len)
     }
     val resultFormat = in.getShort.toInt
     val (fname, argOids, _) = PgCatalog.fastpathByOid(objId).getOrElse(
@@ -773,6 +772,15 @@ private class PgConnectionHandler(base: SparkSession, sslCtx: Option[SslContext]
     */
   private def formatCode(codes: Seq[Int], i: Int): Int =
     if (codes.isEmpty) 0 else if (codes.length == 1) codes.head else codes(i)
+
+  /** `len` bytes of a length-prefixed field. A length past the end of the
+    * frame fails before allocating, as a negative one does; the error
+    * writer answers both as a truncated message.
+    */
+  private def readBytes(in: ByteBuffer, len: Int): Array[Byte] = {
+    if (len > in.remaining()) throw new java.nio.BufferUnderflowException
+    val a = new Array[Byte](len); in.get(a); a
+  }
 
   private def readCStr(b: ByteBuffer): String = {
     val sb = new ArrayBuffer[Byte]()
@@ -1199,7 +1207,7 @@ private class PgConnectionHandler(base: SparkSession, sslCtx: Option[SslContext]
     val nParams = in.getShort.toInt
     val params = (0 until nParams).map { _ =>
       val len = in.getInt
-      if (len == -1) null else { val a = new Array[Byte](len); in.get(a); a }
+      if (len == -1) null else readBytes(in, len)
     }
     val nRes = in.getShort.toInt
     val resFormats = Seq.fill(nRes)(in.getShort.toInt)
@@ -1213,7 +1221,7 @@ private class PgConnectionHandler(base: SparkSession, sslCtx: Option[SslContext]
     // (len -1) bind a SQL NULL.
     val litParams = params.zipWithIndex.map { case (bytes, i) =>
       (i + 1) -> (if (bytes == null) null
-        else ParamCodec.decodeOrText(bytes, stmt.paramOid(i), formatCode(paramFormats, i)))
+        else ParamCodec.decodeBindParam(bytes, stmt.paramOid(i), formatCode(paramFormats, i), i + 1))
     }.toMap[Int, Any]
     val bound = PgDialect.bind(stmt.plan, litParams)
     // cacheable path: reuse the Parse-time resolved plan (one-shot) — the
@@ -1572,7 +1580,23 @@ object PgWireServer {
       case _: ArithmeticException => "22012" // division_by_zero
       case _: IllegalArgumentException => "22023" // invalid_parameter_value
       case _: UnsupportedOperationException => "0A000" // feature_not_supported
+      case _ if truncated(e) => "08P01" // protocol_violation
       case _ => "XX000" // internal_error
     }
+  }
+
+  /** The ErrorResponse text for `e`: PG's wording for a field read past
+    * the end of its message, else the exception's own message.
+    */
+  def messageOf(e: Throwable): String =
+    if (truncated(e)) "insufficient data left in message"
+    else Option(e.getMessage).getOrElse(e.toString)
+
+  /** A frontend message decoded past its end (a cstring with no NUL, a
+    * field longer than what is left) or given a length below -1.
+    */
+  private def truncated(e: Throwable): Boolean = e match {
+    case _: java.nio.BufferUnderflowException | _: NegativeArraySizeException => true
+    case _ => false
   }
 }

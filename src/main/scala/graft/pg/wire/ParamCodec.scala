@@ -24,7 +24,7 @@ object ParamCodec {
   /** format: 0 = text, 1 = binary */
   def decode(param: Array[Byte], oid: Int, format: Int): Literal = (oid, format) match {
     case (PgTypes.BOOL, 0) => Literal(bool(text(param)), BooleanType)
-    case (PgTypes.BOOL, 1) => Literal(param(0) == 1, BooleanType)
+    case (PgTypes.BOOL, 1) => Literal(ByteBuffer.wrap(param).get() != 0, BooleanType)
     case (PgTypes.INT2, 0) =>
       Literal(integral(text(param), "smallint", Short.MinValue, Short.MaxValue).toShort, ShortType)
     case (PgTypes.INT2, 1) => Literal(ByteBuffer.wrap(param).getShort, ShortType)
@@ -76,6 +76,20 @@ object ParamCodec {
       case _: IllegalArgumentException | _: java.time.DateTimeException if format == 0 =>
         Literal(UTF8String.fromBytes(param), StringType)
     }
+
+  /** Bind parameter `n` (1-based): [[decodeOrText]], then PG's
+    * exec_bind_message check that a binary value was read to its end — a
+    * fixed-width value with bytes left over answers 22P03. One too short
+    * reads past its end, which the wire error writer answers as 08P01.
+    */
+  def decodeBindParam(param: Array[Byte], oid: Int, format: Int, n: Int): Literal = {
+    val lit = decodeOrText(param, oid, format)
+    val width = PgTypes.typeLenOf(oid)
+    if (format == 1 && width > 0 && param.length > width) {
+      throw new PgStateException(s"incorrect binary data format in bind parameter $n", "22P03")
+    }
+    lit
+  }
 
   private def text(b: Array[Byte]): String = new String(b, UTF_8)
 

@@ -8,6 +8,7 @@ import java.nio.charset.StandardCharsets.UTF_8
 import scala.collection.mutable
 
 import graft.TestSpark
+import graft.pg.wire.PgTypes
 
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -30,6 +31,11 @@ import org.scalatest.funsuite.AnyFunSuite
   *  - Execute on a never-bound portal answers 34000 likewise
   *  - an UNKNOWN message type answers a protocol ErrorResponse (08P01)
   *    without wedging the connection
+  *  - a TRUNCATED field (a cstring with no NUL, a Bind value longer than
+  *    the frame, a Bind length below -1) answers 08P01 "insufficient data
+  *    left in message", as a too-short binary Bind value does
+  *  - a binary Bind value of a fixed-width type with bytes LEFT OVER
+  *    answers 22P03, PG's exec_bind_message check
   */
 class PgErrorPathSuite extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -49,10 +55,10 @@ class PgErrorPathSuite extends AnyFunSuite with BeforeAndAfterAll {
     private val in = new DataInputStream(sock.getInputStream)
     private val os = new DataOutputStream(sock.getOutputStream)
 
-    private def cstr(s: String): Array[Byte] = s.getBytes(UTF_8) :+ 0.toByte
-    private def i16(v: Int): Array[Byte] =
+    def cstr(s: String): Array[Byte] = s.getBytes(UTF_8) :+ 0.toByte
+    def i16(v: Int): Array[Byte] =
       ByteBuffer.allocate(2).putShort(v.toShort).array()
-    private def i32(v: Int): Array[Byte] = ByteBuffer.allocate(4).putInt(v).array()
+    def i32(v: Int): Array[Byte] = ByteBuffer.allocate(4).putInt(v).array()
 
     def connect(): Unit = {
       val body = cstr("user") ++ cstr("graft") ++ cstr("database") ++
@@ -80,8 +86,8 @@ class PgErrorPathSuite extends AnyFunSuite with BeforeAndAfterAll {
       os.flush()
     }
 
-    def parse(stmt: String, sql: String): Unit =
-      send('P', cstr(stmt) ++ cstr(sql) ++ i16(0))
+    def parse(stmt: String, sql: String, oids: Seq[Int] = Nil): Unit =
+      send('P', cstr(stmt) ++ cstr(sql) ++ i16(oids.length) ++ oids.flatMap(i32))
     def bind(portal: String, stmt: String): Unit =
       send('B', cstr(portal) ++ cstr(stmt) ++ i16(0) ++ i16(0) ++ i16(0))
     def describePortal(name: String): Unit =
@@ -127,7 +133,10 @@ class PgErrorPathSuite extends AnyFunSuite with BeforeAndAfterAll {
     }
 
     /** SQLSTATE ('C' field) of an ErrorResponse payload. */
-    def sqlState(payload: Array[Byte]): String = {
+    def sqlState(payload: Array[Byte]): String = errorField(payload, 'C')
+
+    /** One field of an ErrorResponse payload ("" when absent). */
+    def errorField(payload: Array[Byte], field: Char): String = {
       val b = ByteBuffer.wrap(payload)
       var out = ""
       var tag = b.get()
@@ -135,7 +144,7 @@ class PgErrorPathSuite extends AnyFunSuite with BeforeAndAfterAll {
         val sb = new StringBuilder
         var c = b.get()
         while (c != 0) { sb.append(c.toChar); c = b.get() }
-        if (tag == 'C') out = sb.toString
+        if (tag == field) out = sb.toString
         tag = b.get()
       }
       out
@@ -255,6 +264,66 @@ class PgErrorPathSuite extends AnyFunSuite with BeforeAndAfterAll {
         s"protocol violation code expected, got ${c.sqlState(errs.head._2)}")
       val ok = c.simpleQuery("SELECT 9 AS v")
       assert(ok.exists(_._1 == 'D'), "connection must continue after the protocol error")
+    }
+  }
+
+  /** Send one extended-protocol frame, Sync, and return the (SQLSTATE,
+    * message) of the one ErrorResponse; then `SELECT 1` must still answer
+    * on the same connection.
+    */
+  private def errorThenUsable(c: RawClient)(frame: => Unit): (String, String) = {
+    frame
+    val msgs = c.sync()
+    val errs = msgs.filter(_._1 == 'E')
+    assert(errs.size == 1, s"one ErrorResponse: ${c.types(msgs)}")
+    val ok = c.simpleQuery("SELECT 1")
+    assert(ok.exists(_._1 == 'D'), s"connection must continue: ${c.types(ok)}")
+    (c.sqlState(errs.head._2), c.errorField(errs.head._2, 'M'))
+  }
+
+  private val Truncated = ("08P01", "insufficient data left in message")
+
+  test("truncated fields answer 08P01 insufficient data, connection continues") {
+    withClient { c =>
+      // Parse whose query text has no terminating NUL
+      assert(errorThenUsable(c)(
+        c.send('P', c.cstr("") ++ "SELECT 1".getBytes(UTF_8))) === Truncated)
+      // Bind whose parameter length runs past the end of the frame
+      c.parse("S_t", "SELECT $1 AS v")
+      c.sync()
+      assert(errorThenUsable(c)(c.send('B', c.cstr("") ++ c.cstr("S_t") ++ c.i16(0) ++
+        c.i16(1) ++ c.i32(100) ++ "12".getBytes(UTF_8) ++ c.i16(0))) === Truncated)
+      // Bind parameter length below -1
+      assert(errorThenUsable(c)(c.send('B', c.cstr("") ++ c.cstr("S_t") ++ c.i16(0) ++
+        c.i16(1) ++ c.i32(-2) ++ c.i16(0))) === Truncated)
+    }
+  }
+
+  test("binary Bind values of fixed-width types must be exactly their width") {
+    withClient { c =>
+      // Parse `SELECT $1` typed `oid`, Bind `value` in binary, Execute
+      def bindBinary(oid: Int, value: Array[Byte]): Unit = {
+        c.parse("", "SELECT $1 AS v", Seq(oid))
+        c.send('B', c.cstr("") ++ c.cstr("") ++ c.i16(1) ++ c.i16(1) ++
+          c.i16(1) ++ c.i32(value.length) ++ value ++ c.i16(0))
+        c.execute("", 0)
+      }
+      def int8Bytes(v: Long) = ByteBuffer.allocate(8).putLong(v).array()
+      val leftOver = ("22P03", "incorrect binary data format in bind parameter 1")
+      // an 8-byte value for an INT4 parameter bound its first 4 bytes
+      assert(errorThenUsable(c)(bindBinary(PgTypes.INT4, int8Bytes(5))) === leftOver)
+      assert(errorThenUsable(c)(bindBinary(PgTypes.BOOL, Array[Byte](1, 0))) === leftOver)
+      assert(errorThenUsable(c)(bindBinary(PgTypes.FLOAT4, int8Bytes(5))) === leftOver)
+      // a short value reads past its end
+      assert(errorThenUsable(c)(bindBinary(PgTypes.INT4, Array[Byte](0, 5))) === Truncated)
+      assert(errorThenUsable(c)(bindBinary(PgTypes.BOOL, Array.empty)) === Truncated)
+      assert(errorThenUsable(c)(bindBinary(PgTypes.TIMESTAMP, c.i32(7))) === Truncated)
+      // exact widths still bind
+      bindBinary(PgTypes.INT8, int8Bytes(5))
+      val ok = c.sync()
+      assert(!ok.exists(_._1 == 'E'), s"exact width must bind: ${c.types(ok)}")
+      // DataRow: int16 column count, int32 length, the text value
+      assert(ok.filter(_._1 == 'D').map(m => new String(m._2.drop(6), UTF_8)) === Seq("5"))
     }
   }
 }

@@ -236,6 +236,21 @@ class RowCodecSpec extends AnyFunSuite {
     }
   }
 
+  test("binary bind params are read to exactly their type's width") {
+    def int8Bytes(v: Long) = ByteBuffer.allocate(8).putLong(v).array()
+    def bindParam(b: Array[Byte], oid: Int) = ParamCodec.decodeBindParam(b, oid, 1, 2)
+    assert(bindParam(int8Bytes(7), PgTypes.INT8).value === 7L)
+    assert(bindParam(Array[Byte](2), PgTypes.BOOL).value === true) // boolrecv: any non-zero
+    val e = intercept[graft.pg.server.PgStateException](bindParam(int8Bytes(7), PgTypes.INT4))
+    assert((e.state, e.getMessage) === ("22P03", "incorrect binary data format in bind parameter 2"))
+    intercept[graft.pg.server.PgStateException](bindParam(Array[Byte](1, 0), PgTypes.BOOL))
+    // too short: read past the end, answered as a truncated message on the wire
+    intercept[java.nio.BufferUnderflowException](bindParam(Array.empty, PgTypes.BOOL))
+    intercept[java.nio.BufferUnderflowException](bindParam(Array[Byte](0, 1), PgTypes.DATE))
+    // varlena types have no width to check
+    assert(bindParam("abc".getBytes(UTF_8), PgTypes.VARCHAR).value === UTF8String.fromString("abc"))
+  }
+
   test("param text decode follows PG's input functions") {
     def dec(s: String, oid: Int) = ParamCodec.decode(s.getBytes(UTF_8), oid, 0).value
     assert(dec(" 42 ", PgTypes.INT8) === 42L)
