@@ -1,53 +1,25 @@
 package graft.pg
 
+import graft.pg.wire.PgTypes
+
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.parser.CatalystSqlParser
 import org.apache.spark.sql.types._
 
-/** pg_catalog emulation: the 17 system tables + 29-row pg_type seed PG
-  * clients probe for metadata (reference catalog.scala:87-118,280-379).
+/** pg_catalog emulation: the 17 system tables + the 29-row pg_type seed
+  * ([[PgTypes.table]]) PG clients probe for metadata (reference
+  * catalog.scala:87-118,280-379).
   * Registered as session temp views; the wire-server milestone will expose
   * them under a `pg_catalog` database as well.
   */
 object PgCatalog {
-
-  /** (oid, typname, typlen, typelem, typinput) — reference catalog.scala:284-316. */
-  val pgTypes: Seq[(Int, String, Int, Int, String)] = Seq(
-    (16, "bool", 1, 0, "boolin"),
-    (17, "bytea", -1, 0, "byteain"),
-    (18, "char", 1, 0, "charin"),
-    (19, "name", 64, 18, "namein"),
-    (20, "int8", 8, 0, "int8in"),
-    (21, "int2", 2, 0, "int2in"),
-    (23, "int4", 4, 0, "int4in"),
-    (27, "tid", 6, 0, "tidin"),
-    (700, "float4", 4, 0, "float4in"),
-    (701, "float8", 8, 0, "float8in"),
-    (1000, "_bool", -1, 16, "array_in"),
-    (1005, "_int2", -1, 21, "array_in"),
-    (1007, "_int4", -1, 23, "array_in"),
-    (1015, "_varchar", -1, 1043, "array_in"),
-    (1016, "_int8", -1, 20, "array_in"),
-    (1021, "_float4", -1, 700, "array_in"),
-    (1022, "_float8", -1, 701, "array_in"),
-    (1043, "varchar", -1, 0, "varcharin"),
-    (1082, "date", -1, 0, "datein"),
-    (1114, "timestamp", 8, 0, "timestampin"),
-    (1115, "_timestamp", -1, 1114, "array_in"),
-    (1182, "_date", -1, 1082, "array_in"),
-    (1186, "interval", -1, 0, "interval_in"),
-    (1187, "_interval", -1, 1186, "array_in"),
-    (1231, "_numeric", -1, 1700, "array_in"),
-    (1700, "numeric", -1, 0, "numericin"),
-    (6200, "byte", 1, 0, "bytein"),
-    (6201, "map", -1, 0, "mapin"),
-    (6202, "struct", -1, 0, "structin"))
 
   /** Textual type name -> OID for `'name'::regtype` literal resolution
     * (see PgRewrite): the seeded types plus the pseudo-types psql's \df
     * queries compare prorettype against (fixed PG OIDs from pg_type.dat).
     */
   val typeOidByName: Map[String, Int] =
-    pgTypes.map { case (oid, name, _, _, _) => name -> oid }.toMap ++ Map(
+    PgTypes.table.map(t => t.name -> t.oid).toMap ++ Map(
       "text" -> 25, "oid" -> 26, "record" -> 2249, "cstring" -> 2275,
       "any" -> 2276, "anyarray" -> 2277, "void" -> 2278, "trigger" -> 2279,
       "language_handler" -> 2280, "internal" -> 2281, "anyelement" -> 2283,
@@ -81,8 +53,10 @@ object PgCatalog {
   def fastpathByOid(oid: Int): Option[(String, Seq[Int], Int)] =
     fastpathFunctions.find(_._1 == oid).map(f => (f._2, f._3, f._4))
 
-  def typeNameOf(oid: Int): String =
-    pgTypes.find(_._1 == oid).map(_._2).getOrElse("unknown")
+  private val typeNameByOid: Map[Int, String] = typeOidByName.map(_.swap)
+
+  /** format_type/regtype: the name of a seeded or pseudo type. */
+  def typeNameOf(oid: Int): String = typeNameByOid.getOrElse(oid, "unknown")
 
   private final case class AttrSnapshot(key: Seq[String], at: Long, rows: Seq[Row])
   private val attrCache = new java.util.concurrent.atomic.AtomicReference[AttrSnapshot]
@@ -97,8 +71,8 @@ object PgCatalog {
   def register(spark: SparkSession): Unit = {
     import spark.implicits._
 
-    pgTypes.map { case (oid, name, len, elem, input) =>
-      (oid, name, "b", len, false, elem, ",", input, 0, 0, 0, defaultNamespaceOid)
+    PgTypes.table.map { t =>
+      (t.oid, t.name, "b", t.len, false, t.elem, ",", t.input, 0, 0, 0, defaultNamespaceOid)
     }.toDF("oid", "typname", "typtype", "typlen", "typnotnull", "typelem",
       "typdelim", "typinput", "typrelid", "typbasetype", "typcollation", "typnamespace")
       .createOrReplaceTempView("pg_type")
@@ -192,9 +166,12 @@ object PgCatalog {
           scala.util.Try(spark.catalog.listColumns(tbl.name).collect()).toOption
             .getOrElse(Array.empty[org.apache.spark.sql.catalog.Column])
             .zipWithIndex.map { case (c, ci) =>
-              val oid = oidOfTypeName(c.dataType)
+              // the type RowDescription announces; a type string the
+              // parser cannot read back is text
+              val oid = scala.util.Try(CatalystSqlParser.parseDataType(c.dataType))
+                .map(PgTypes.oidOf).getOrElse(PgTypes.VARCHAR)
               Row(0, 10000 + idx, c.name, oid, !c.nullable, false, -1,
-                typeLenOfOid(oid), ci + 1, "", false, 0, "")
+                PgTypes.typeLenOf(oid), ci + 1, "", false, 0, "")
             }
         }
         attrCache.set(AttrSnapshot(attrKey, System.nanoTime(), rows))
@@ -268,45 +245,12 @@ object PgCatalog {
       featureAbsentRe.findFirstIn(sql).isDefined
   }
 
-  /** Spark catalog column dataType string -> PG oid. */
-  def oidOfTypeName(dt: String): Int = {
-    val t = dt.toLowerCase
-    if (t.startsWith("decimal")) 1700
-    else if (t.startsWith("array<string")) 1015
-    else if (t.startsWith("array<float")) 1021
-    else if (t.startsWith("array<double")) 1022
-    else if (t.startsWith("array<interval")) 1187
-    else if (t.startsWith("array<int")) 1007
-    else if (t.startsWith("array<bigint")) 1016
-    else if (t.startsWith("array<smallint")) 1005
-    // nested/other arrays render as text (reference punt, catalog.scala:206)
-    else if (t.startsWith("array")) 1043
-    else if (t.startsWith("map") || t.startsWith("struct")) 6201
-    else t match {
-      case "int" | "integer" => 23
-      case "bigint" | "long" => 20
-      case "smallint" | "short" => 21
-      case "tinyint" | "byte" => 6200
-      case "double" => 701
-      case "float" | "real" => 700
-      case "string" | "varchar" => 1043
-      case "boolean" => 16
-      case "date" => 1082
-      case "timestamp" | "timestamp_ntz" => 1114
-      case "binary" => 17
-      case "interval" => 1186
-      case _ => 1043
-    }
-  }
-
-  private def typeLenOfOid(oid: Int): Int = graft.pg.wire.PgTypes.typeLenOf(oid)
-
   /** DuckDB oracle for the pg_type scan: the same seed rows as inline VALUES
     * (generated from the same Seq, so consistent by construction).
     */
   def pgTypeOracle: String = {
-    val rows = pgTypes.map { case (oid, name, len, elem, input) =>
-      s"($oid, '$name', $len, $elem, '$input')"
+    val rows = PgTypes.table.map { t =>
+      s"(${t.oid}, '${t.name}', ${t.len}, ${t.elem}, '${t.input}')"
     }.mkString(",\n        ")
     s"""SELECT * FROM (VALUES
         $rows) AS t(oid, typname, typlen, typelem, typinput)

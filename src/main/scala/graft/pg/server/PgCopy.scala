@@ -4,7 +4,10 @@ import java.nio.charset.StandardCharsets.UTF_8
 
 import scala.collection.mutable.ArrayBuffer
 
+import graft.pg.wire.{ParamCodec, PgTypes}
+
 import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.types._
 
@@ -208,12 +211,22 @@ object PgCopy {
 
     def nCols: Int = colNames.length
 
-    private val copyTypes: Array[DataType] =
-      colNames.map(n => targetSchema(n).dataType).toArray
-    if (stmt.opts.binary) copyTypes.foreach { dt =>
-      require(BinaryCopy.supported(dt),
-        s"COPY binary format unsupported for column type $dt")
-    }
+    /** binary copy-in: one ParamCodec decoder per column, to the external
+      * value createDataFrame takes. A TIMESTAMP_NTZ column decodes in UTC,
+      * where a wall-clock time is its own instant, so its micros stay exact.
+      */
+    private val decoders: Array[Array[Byte] => Any] =
+      if (!stmt.opts.binary) null
+      else colNames.map { n =>
+        val dt = targetSchema(n).dataType
+        val decode = try ParamCodec.decoder(PgTypes.oidOf(dt), 1,
+            if (dt == TimestampNTZType) java.time.ZoneOffset.UTC else zone)
+          catch { case _: IllegalArgumentException =>
+            throw new IllegalArgumentException(s"COPY binary format unsupported for column type $dt")
+          }
+        val toScala = CatalystTypeConverters.createToScalaConverter(dt)
+        (b: Array[Byte]) => toScala(decode(b).value)
+      }.toArray
 
     private var carry = Array.emptyByteArray
     private var inQuotes = false
@@ -279,8 +292,8 @@ object PgCopy {
           val n = java.nio.ByteBuffer.wrap(buf, pos, 2).getShort.toInt
           pos += 2
           if (n == -1) { sawEndMarker = true; done = true }
-          else if (n != copyTypes.length) throw new IllegalArgumentException(
-            s"COPY binary row has $n columns, expected ${copyTypes.length}")
+          else if (n != nCols) throw new IllegalArgumentException(
+            s"COPY binary row has $n columns, expected $nCols")
           else {
             val vals = new Array[Any](n)
             var i = 0
@@ -292,8 +305,7 @@ object PgCopy {
                 if (len == -1) { pos += 4; vals(i) = null; i += 1 }
                 else if (buf.length - pos < 4 + len) incomplete = true
                 else {
-                  vals(i) = BinaryCopy.decode(copyTypes(i),
-                    java.util.Arrays.copyOfRange(buf, pos + 4, pos + 4 + len), zone)
+                  vals(i) = decoders(i)(java.util.Arrays.copyOfRange(buf, pos + 4, pos + 4 + len))
                   pos += 4 + len
                   i += 1
                 }
@@ -437,26 +449,7 @@ object PgCopy {
     out.toArray
   }
 
-  // ---- copy-out rendering ----
-
-  /** render column `i` of an InternalRow as a PG COPY field value
-    * (pre-escaping); callers handle NULL via `row.isNullAt`
-    */
-  private[server] def fieldText(dt: DataType, i: Int,
-      zone: java.time.ZoneId): org.apache.spark.sql.catalyst.InternalRow => String = {
-    import graft.pg.wire.RowCodec
-    dt match {
-      case BooleanType => r => if (r.getBoolean(i)) "t" else "f"
-      case TimestampType => r => RowCodec.timestampText(r.getLong(i), zone)
-      case TimestampNTZType => r => RowCodec.timestampNtzText(r.getLong(i))
-      case DateType => r => RowCodec.dateText(r.getInt(i))
-      case d: DecimalType => r => r.getDecimal(i, d.precision, d.scale).toString
-      case StringType => r => r.getUTF8String(i).toString
-      case _: DayTimeIntervalType => r => RowCodec.dayTimeIntervalText(r.getLong(i))
-      case _: YearMonthIntervalType => r => RowCodec.yearMonthIntervalText(r.getInt(i))
-      case other => r => String.valueOf(r.get(i, other))
-    }
-  }
+  // ---- copy-out escaping ----
 
   /** escape one PG text-format field */
   private[server] def escapeText(s: String): String = {
@@ -484,13 +477,11 @@ object PgCopy {
     * 11-byte signature + int32 flags + int32 header-extension length, then
     * per tuple an int16 field count and per field an int32 length (-1 NULL)
     * followed by the type's binary send() bytes — the SAME encodings the
-    * DataRow binary writer emits, so copy-out reuses [[graft.pg.wire.RowCodec]]
-    * and copy-in mirrors [[graft.pg.wire.ParamCodec]], with numerics through
-    * the shared [[graft.pg.wire.PgNumeric]] codec. Trailer: int16 -1.
+    * DataRow binary writer emits and Bind reads, so copy-out writes through
+    * [[graft.pg.wire.RowCodec]] and copy-in reads through
+    * [[graft.pg.wire.ParamCodec]]. Trailer: int16 -1.
     */
   private[server] object BinaryCopy {
-    import graft.pg.wire.{PgNumeric, PgTypes}
-
     val Signature: Array[Byte] =
       Array('P', 'G', 'C', 'O', 'P', 'Y', '\n', 0xFF.toByte, '\r', '\n', 0x00)
         .map(_.toByte)
@@ -503,46 +494,5 @@ object PgCopy {
     }
 
     val Trailer: Array[Byte] = Array(0xFF.toByte, 0xFF.toByte)
-
-    def supported(dt: DataType): Boolean = dt match {
-      case BooleanType | ShortType | IntegerType | LongType | FloatType |
-          DoubleType | StringType | BinaryType | DateType | TimestampType |
-          TimestampNTZType => true
-      case _: DecimalType => true
-      case _ => false
-    }
-
-    /** one field's send() bytes -> the external JVM value createDataFrame
-      * expects for the column's Spark type. TimestampType mirrors the
-      * writer's zone shift: the wire carries wall-clock micros in the
-      * session zone (OID 1114), converted back to an instant here.
-      */
-    def decode(dt: DataType, bytes: Array[Byte],
-        zone: java.time.ZoneId): Any = dt match {
-      case BooleanType => bytes(0) == 1.toByte
-      case ShortType => java.nio.ByteBuffer.wrap(bytes).getShort
-      case IntegerType => java.nio.ByteBuffer.wrap(bytes).getInt
-      case LongType => java.nio.ByteBuffer.wrap(bytes).getLong
-      case FloatType => java.nio.ByteBuffer.wrap(bytes).getFloat
-      case DoubleType => java.nio.ByteBuffer.wrap(bytes).getDouble
-      case StringType => new String(bytes, UTF_8)
-      case BinaryType => bytes
-      case DateType =>
-        val days = java.nio.ByteBuffer.wrap(bytes).getInt + PgTypes.PG_EPOCH_DAYS
-        java.sql.Date.valueOf(java.time.LocalDate.ofEpochDay(days.toLong))
-      case TimestampType =>
-        val wall = java.nio.ByteBuffer.wrap(bytes).getLong + PgTypes.PG_EPOCH_MICROS
-        val ldt = wallClock(wall)
-        java.sql.Timestamp.from(ldt.atZone(zone).toInstant)
-      case TimestampNTZType =>
-        wallClock(java.nio.ByteBuffer.wrap(bytes).getLong + PgTypes.PG_EPOCH_MICROS)
-      case _: DecimalType => PgNumeric.fromBytes(bytes)
-      case other =>
-        throw new IllegalArgumentException(s"COPY binary unsupported for $other")
-    }
-
-    private def wallClock(micros: Long): java.time.LocalDateTime =
-      java.time.LocalDateTime.ofEpochSecond(Math.floorDiv(micros, 1000000L),
-        (Math.floorMod(micros, 1000000L) * 1000L).toInt, java.time.ZoneOffset.UTC)
   }
 }

@@ -7,7 +7,7 @@ import scala.collection.mutable.ArrayBuffer
 import scala.util.control.NonFatal
 
 import graft.pg.{PgBeginCommand, PgCatalog, PgDialect, PgParserInterface, ParameterPlaceHolder}
-import graft.pg.wire.{ParamCodec, PgTypes, RowCodec}
+import graft.pg.wire.{ParamCodec, RowCodec}
 
 import io.netty.bootstrap.ServerBootstrap
 import io.netty.buffer.ByteBuf
@@ -22,7 +22,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, OneRowRelation}
 import org.apache.spark.sql.graft.Internals
-import org.apache.spark.sql.types.{CalendarIntervalType, NullType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{NullType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** PostgreSQL V3 wire-protocol server over Spark SQL: the reference's
@@ -746,7 +746,7 @@ private class PgConnectionHandler(base: SparkSession, sslCtx: Option[SslContext]
     }
     val lits = params.zip(argOids).zipWithIndex.map { case ((p, oid), i) =>
       if (p == null) Literal(null, NullType)
-      else ParamCodec.decode(p, oid, formatCode(fmts, i))
+      else ParamCodec.decode(p, oid, formatCode(fmts, i), sessionZone)
     }
     withOperation(s"fastpath $fname") {
       val (plan, _) = parseStatement(s"SELECT $fname(${lits.map(_.sql).mkString(", ")})")
@@ -1217,11 +1217,11 @@ private class PgConnectionHandler(base: SparkSession, sslCtx: Option[SslContext]
     }
 
     // Decode by the oid declared in Parse, keeping the fully-typed Literal
-    // (DateType/TimestampType etc. — not just the raw value); NULL params
-    // (len -1) bind a SQL NULL.
+    // (DateType/TimestampType etc. — not just the raw value), TIMESTAMP in
+    // the session zone; NULL params (len -1) bind a SQL NULL.
     val litParams = params.zipWithIndex.map { case (bytes, i) =>
-      (i + 1) -> (if (bytes == null) null
-        else ParamCodec.decodeBindParam(bytes, stmt.paramOid(i), formatCode(paramFormats, i), i + 1))
+      (i + 1) -> (if (bytes == null) null else ParamCodec.decodeBindParam(
+        bytes, stmt.paramOid(i), formatCode(paramFormats, i), i + 1, sessionZone))
     }.toMap[Int, Any]
     val bound = PgDialect.bind(stmt.plan, litParams)
     // cacheable path: reuse the Parse-time resolved plan (one-shot) — the
@@ -1373,12 +1373,7 @@ private class PgConnectionHandler(base: SparkSession, sslCtx: Option[SslContext]
     val schema = df.schema
     val opts = co.opts
     val encode: InternalRow => Array[Byte] = if (opts.binary) {
-      schema.fields.foreach { f =>
-        if (!PgTypes.binaryCapable(f.dataType) ||
-          f.dataType == CalendarIntervalType) // no COPY recv path
-          throw new IllegalArgumentException(
-            s"COPY binary format unsupported for column type ${f.dataType}")
-      }
+      // throws here, before CopyOutResponse, for a type not binaryCapable
       val fields = RowCodec.rowWriter(schema, Seq.fill(schema.length)(true), sessionZone)
       val tuple = (row: InternalRow, b: ByteBuffer) => {
         b.putShort(schema.length.toShort); fields(row, b)
@@ -1389,9 +1384,8 @@ private class PgConnectionHandler(base: SparkSession, sslCtx: Option[SslContext]
         val bytes = new Array[Byte](buf.remaining()); buf.get(bytes); bytes
       }
     } else {
-      val zone = sessionZone
       val fields = schema.fields.zipWithIndex.map { case (f, i) =>
-        PgCopy.fieldText(f.dataType, i, zone)
+        RowCodec.textOf(f.dataType, i, sessionZone)
       }
       val sb = new StringBuilder
       row => {

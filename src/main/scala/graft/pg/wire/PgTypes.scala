@@ -2,8 +2,10 @@ package graft.pg.wire
 
 import org.apache.spark.sql.types._
 
-/** Catalyst ⇄ PostgreSQL type bridge: oids, array oids, binary eligibility
-  * (reference catalog.scala:122-209, protocol.scala:215-228). Spark 4's
+/** Catalyst ⇄ PostgreSQL type bridge: oids, array oids, the pg_type table,
+  * binary eligibility (reference catalog.scala:122-209,
+  * protocol.scala:215-228). The only place a Catalyst type meets an oid:
+  * RowDescription, pg_catalog and COPY all read it. Spark 4's
   * DayTime/YearMonth intervals (absent in the Spark-3-era reference) map to
   * the PG interval oid.
   */
@@ -63,31 +65,19 @@ object PgTypes {
     case DateType => DATE
     case TimestampType | TimestampNTZType => TIMESTAMP
     case CalendarIntervalType | _: DayTimeIntervalType | _: YearMonthIntervalType => INTERVAL
-    case ArrayType(elem, _) => arrayOidOf(elem)
+    // an element type with no array type in the table (nested arrays
+    // among them) renders as varchar text, the reference's punt
+    // (catalog.scala:206)
+    case ArrayType(elem, _) => arrayOidByElem.getOrElse(oidOf(elem), VARCHAR)
     case _: MapType => MAP
     case _: StructType => STRUCT
     case NullType => VARCHAR
     case _ => VARCHAR // UDTs and anything else render as text
   }
 
-  /** Nested arrays are flattened to varchar text, matching the reference's
-    * punt (catalog.scala:206).
+  /** typlen per oid for RowDescription, pg_attribute and pg_type
+    * (reference catalog.scala:122-153).
     */
-  private def arrayOidOf(elem: DataType): Int = elem match {
-    case BooleanType => BOOL_ARRAY
-    case ShortType => INT2_ARRAY
-    case IntegerType => INT4_ARRAY
-    case LongType => INT8_ARRAY
-    case FloatType => FLOAT4_ARRAY
-    case DoubleType => FLOAT8_ARRAY
-    case StringType => VARCHAR_ARRAY
-    case DateType => DATE_ARRAY
-    case TimestampType => TIMESTAMP_ARRAY
-    case _: DecimalType => NUMERIC_ARRAY
-    case _ => VARCHAR
-  }
-
-  /** typlen per oid for RowDescription (reference catalog.scala:122-153). */
   def typeLenOf(oid: Int): Int = oid match {
     case BOOL | BYTE | CHAR => 1
     case INT2 => 2
@@ -98,8 +88,51 @@ object PgTypes {
     case _ => -1
   }
 
-  /** Types the server may emit in binary format; everything else must be
-    * text (reference protocol.scala:215-217).
+  /** One pg_type row; its typlen is [[typeLenOf]]. */
+  final case class PgType(oid: Int, name: String, elem: Int, input: String) {
+    def len: Int = typeLenOf(oid)
+  }
+
+  /** The pg_type seed (reference catalog.scala:284-316): every oid
+    * [[oidOf]] answers, plus the name/char/tid types clients probe.
+    */
+  val table: Seq[PgType] = Seq(
+    PgType(BOOL, "bool", 0, "boolin"),
+    PgType(BYTEA, "bytea", 0, "byteain"),
+    PgType(CHAR, "char", 0, "charin"),
+    PgType(NAME, "name", CHAR, "namein"),
+    PgType(INT8, "int8", 0, "int8in"),
+    PgType(INT2, "int2", 0, "int2in"),
+    PgType(INT4, "int4", 0, "int4in"),
+    PgType(TID, "tid", 0, "tidin"),
+    PgType(FLOAT4, "float4", 0, "float4in"),
+    PgType(FLOAT8, "float8", 0, "float8in"),
+    PgType(BOOL_ARRAY, "_bool", BOOL, "array_in"),
+    PgType(INT2_ARRAY, "_int2", INT2, "array_in"),
+    PgType(INT4_ARRAY, "_int4", INT4, "array_in"),
+    PgType(VARCHAR_ARRAY, "_varchar", VARCHAR, "array_in"),
+    PgType(INT8_ARRAY, "_int8", INT8, "array_in"),
+    PgType(FLOAT4_ARRAY, "_float4", FLOAT4, "array_in"),
+    PgType(FLOAT8_ARRAY, "_float8", FLOAT8, "array_in"),
+    PgType(VARCHAR, "varchar", 0, "varcharin"),
+    PgType(DATE, "date", 0, "datein"),
+    PgType(TIMESTAMP, "timestamp", 0, "timestampin"),
+    PgType(TIMESTAMP_ARRAY, "_timestamp", TIMESTAMP, "array_in"),
+    PgType(DATE_ARRAY, "_date", DATE, "array_in"),
+    PgType(INTERVAL, "interval", 0, "interval_in"),
+    PgType(INTERVAL_ARRAY, "_interval", INTERVAL, "array_in"),
+    PgType(NUMERIC_ARRAY, "_numeric", NUMERIC, "array_in"),
+    PgType(NUMERIC, "numeric", 0, "numericin"),
+    PgType(BYTE, "byte", 0, "bytein"),
+    PgType(MAP, "map", 0, "mapin"),
+    PgType(STRUCT, "struct", 0, "structin"))
+
+  private val arrayOidByElem: Map[Int, Int] =
+    table.filter(_.input == "array_in").map(t => t.elem -> t.oid).toMap
+
+  /** Types the server may emit in binary format, in DataRows and in
+    * `COPY TO` alike; everything else must be text (reference
+    * protocol.scala:215-217).
     */
   def binaryCapable(dt: DataType): Boolean = dt match {
     case BooleanType | ByteType | ShortType | IntegerType | LongType |

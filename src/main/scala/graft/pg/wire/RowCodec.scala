@@ -167,33 +167,43 @@ object RowCodec {
       if (b.remaining() < 4 + s.numBytes()) throw new java.nio.BufferOverflowException
       b.putInt(s.numBytes()); s.writeTo(b)
     }
-    case (BinaryType, _) => (r, b) => putBytes(b, r.getBinary(i))
+    case (BinaryType, true) => (r, b) => putBytes(b, r.getBinary(i))
 
     // ---- text mode ----
     case (BooleanType, false) => (r, b) => { b.putInt(1); b.put(if (r.getBoolean(i)) 't'.toByte else 'f'.toByte) }
-    case (DateType, false) => (r, b) => putText(b, dateText(r.getInt(i)))
-    case (TimestampType, false) => (r, b) => putText(b, timestampText(r.getLong(i), zone))
-    case (TimestampNTZType, false) => (r, b) => putText(b, timestampNtzText(r.getLong(i)))
-    case (_: DayTimeIntervalType, false) =>
-      (r, b) => putText(b, dayTimeIntervalText(r.getLong(i)))
-    case (_: YearMonthIntervalType, false) =>
-      (r, b) => putText(b, yearMonthIntervalText(r.getInt(i)))
-    case (d: DecimalType, false) => (r, b) => putText(b, r.getDecimal(i, d.precision, d.scale).toString)
-    case (at: ArrayType, false) =>
-      (r, b) => putText(b, pgArrayText(r.getArray(i), at.elementType, zone))
-    case (mt: MapType, false) => (r, b) => putText(b, jsonValue(r.getMap(i), mt))
-    case (st: StructType, false) => (r, b) => putText(b, jsonValue(r.getStruct(i, st.length), st))
-    case (ByteType, false) => (r, b) => putText(b, r.getByte(i).toString)
-    case (ShortType, false) => (r, b) => putText(b, r.getShort(i).toString)
-    case (IntegerType, false) => (r, b) => putText(b, r.getInt(i).toString)
-    case (LongType, false) => (r, b) => putText(b, r.getLong(i).toString)
-    case (FloatType, false) => (r, b) => putText(b, r.getFloat(i).toString)
-    case (DoubleType, false) => (r, b) => putText(b, r.getDouble(i).toString)
-    case (CalendarIntervalType, false) => (r, b) => putText(b, r.getInterval(i).toString)
-    case (other, false) => (r, b) => putText(b, String.valueOf(r.get(i, other)))
+    case (_, false) => val text = textOf(dt, i, zone); (r, b) => putText(b, text(r))
     case (other, true) =>
       throw new IllegalArgumentException(s"binary format unsupported for $other")
   }
+
+  /** PG text output of non-null column `i`: the DataRow text payload and
+    * a `COPY TO` text/csv field before COPY escaping.
+    */
+  def textOf(dt: DataType, i: Int, zone: ZoneId): InternalRow => String = dt match {
+    case BooleanType => r => if (r.getBoolean(i)) "t" else "f"
+    case StringType => r => r.getUTF8String(i).toString
+    case BinaryType => r => byteaText(r.getBinary(i))
+    case DateType => r => dateText(r.getInt(i))
+    case TimestampType => r => timestampText(r.getLong(i), zone)
+    case TimestampNTZType => r => timestampNtzText(r.getLong(i))
+    case _: DayTimeIntervalType => r => dayTimeIntervalText(r.getLong(i))
+    case _: YearMonthIntervalType => r => yearMonthIntervalText(r.getInt(i))
+    case d: DecimalType => r => r.getDecimal(i, d.precision, d.scale).toJavaBigDecimal.toPlainString
+    case at: ArrayType => r => pgArrayText(r.getArray(i), at.elementType, zone)
+    case mt: MapType => r => jsonValue(r.getMap(i), mt, zone)
+    case st: StructType => r => jsonValue(r.getStruct(i, st.length), st, zone)
+    case ByteType => r => r.getByte(i).toString
+    case ShortType => r => r.getShort(i).toString
+    case IntegerType => r => r.getInt(i).toString
+    case LongType => r => r.getLong(i).toString
+    case FloatType => r => r.getFloat(i).toString
+    case DoubleType => r => r.getDouble(i).toString
+    case CalendarIntervalType => r => r.getInterval(i).toString
+    case other => r => String.valueOf(r.get(i, other))
+  }
+
+  /** PG's bytea_output = hex: `\x` then two lowercase digits per byte. */
+  def byteaText(b: Array[Byte]): String = "\\x" + java.util.HexFormat.of.formatHex(b)
 
   /** PG array literal: `{1,2,3}` / `{"a","b"}` (reference renders via JSON
     * then re-braces, converters.scala:370-388 — same output, built directly).
@@ -210,24 +220,19 @@ object RowCodec {
     sb.append('}').toString
   }
 
+  /** An array element: a nested array keeps the PG braces, anything else
+    * renders as in JSON.
+    */
   private def scalarText(v: Any, dt: DataType, zone: ZoneId): String = dt match {
-    case StringType => jsonString(v.asInstanceOf[UTF8String].toString)
-    case TimestampType => jsonString(timestampText(v.asInstanceOf[Long], zone))
-    case TimestampNTZType => jsonString(timestampNtzText(v.asInstanceOf[Long]))
-    case DateType => jsonString(dateText(v.asInstanceOf[Int]))
-    case BooleanType => v.toString
     case at: ArrayType => pgArrayText(v.asInstanceOf[ArrayData], at.elementType, zone)
-    // map/struct elements render as JSON like the top-level writers — the
-    // raw catalyst values have identity-hash toStrings (UnsafeMapData@...)
-    case mt: MapType => jsonValue(v, mt)
-    case st: StructType => jsonValue(v, st)
-    case _ => v.toString
+    case _ => jsonValue(v, dt, zone)
   }
 
   /** Minimal JSON rendering for map/struct text mode (reference uses
-    * catalyst's JacksonGenerator; output shape matches).
+    * catalyst's JacksonGenerator; output shape matches). Datetimes and
+    * bytea are JSON strings of their PG text.
     */
-  def jsonValue(v: Any, dt: DataType): String = (v, dt) match {
+  def jsonValue(v: Any, dt: DataType, zone: ZoneId): String = (v, dt) match {
     case (null, _) => "null"
     case (m: MapData, mt: MapType) =>
       val keys = m.keyArray(); val vals = m.valueArray()
@@ -236,24 +241,30 @@ object RowCodec {
           case s: UTF8String => jsonString(s.toString)
           // JSON keys must be strings: render complex keys (arrays/structs
           // have identity-hash toStrings) through jsonValue, then quote
-          case other => jsonString(jsonValue(other, mt.keyType))
+          case other => jsonString(jsonValue(other, mt.keyType, zone))
         }
-        val value =
-          if (vals.isNullAt(k)) "null" else jsonValue(vals.get(k, mt.valueType), mt.valueType)
+        val value = if (vals.isNullAt(k)) "null"
+          else jsonValue(vals.get(k, mt.valueType), mt.valueType, zone)
         s"$key:$value"
       }.mkString("{", ",", "}")
     case (row: InternalRow, st: StructType) =>
       st.fields.zipWithIndex.map { case (f, k) =>
-        val value = if (row.isNullAt(k)) "null" else jsonValue(row.get(k, f.dataType), f.dataType)
+        val value = if (row.isNullAt(k)) "null"
+          else jsonValue(row.get(k, f.dataType), f.dataType, zone)
         s"${jsonString(f.name)}:$value"
       }.mkString("{", ",", "}")
     case (a: ArrayData, at: ArrayType) =>
       (0 until a.numElements()).map { k =>
-        if (a.isNullAt(k)) "null" else jsonValue(a.get(k, at.elementType), at.elementType)
+        if (a.isNullAt(k)) "null" else jsonValue(a.get(k, at.elementType), at.elementType, zone)
       }.mkString("[", ",", "]")
     case (s: UTF8String, _) => jsonString(s.toString)
-    case (ts: Long, TimestampType) => jsonString(timestampText(ts))
+    case (ts: Long, TimestampType) => jsonString(timestampText(ts, zone))
+    case (ts: Long, TimestampNTZType) => jsonString(timestampNtzText(ts))
     case (d: Int, DateType) => jsonString(dateText(d))
+    case (m: Long, _: DayTimeIntervalType) => jsonString(dayTimeIntervalText(m))
+    case (m: Int, _: YearMonthIntervalType) => jsonString(yearMonthIntervalText(m))
+    case (b: Array[Byte], BinaryType) => jsonString(byteaText(b))
+    case (d: Decimal, _) => d.toJavaBigDecimal.toPlainString
     case (other, _) => other.toString
   }
 

@@ -2,6 +2,7 @@ package graft.pg.server
 
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.Files
+import java.time.ZoneId
 
 import graft.TestSpark
 import graft.pg.{ParamLiteral, PgDialect}
@@ -118,13 +119,19 @@ class PgBoundParamSuite extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("property: a bound value returns the same rows as its text inlined") {
-    ParityCases.foreach { case (column, oid, gen) =>
+    // TIMESTAMP text names a wall-clock time in the session zone; the
+    // other types read the same in every zone
+    val zoned = ParityCases.map(c => ("UTC", c)) ++
+      ParityCases.filter(_._2 == PgTypes.TIMESTAMP).map(c => ("America/New_York", c))
+    zoned.foreach { case (zone, (column, oid, gen)) =>
+      spark.conf.set("spark.sql.session.timeZone", zone)
       val prop = Prop.forAll(gen) { value =>
         val (pgText, sqlText) = value.getOrElse((null, "NULL"))
         def query(v: String) =
           s"SELECT k, $v AS p, $column = $v AS eq, $column < $v AS lt FROM param_parity " +
             s"WHERE $column <=> $v OR k % 2 = 0 ORDER BY k"
-        val param = Option(pgText).map(t => ParamCodec.decode(t.getBytes(UTF_8), oid, 0)).orNull
+        val param = Option(pgText)
+          .map(t => ParamCodec.decode(t.getBytes(UTF_8), oid, 0, ZoneId.of(zone))).orNull
         val sqlType = Option(param).map(_.dataType)
           .getOrElse(spark.table("param_parity").schema(column).dataType).sql
         val bound = PgDialect.sql(spark, query("$1"), Map(1 -> param)).collect().map(_.toString)
@@ -132,9 +139,39 @@ class PgBoundParamSuite extends AnyFunSuite with BeforeAndAfterAll {
         Prop(bound.sameElements(inlined)) :|
           s"$column <- '$pgText': bound ${bound.mkString} inlined ${inlined.mkString}"
       }
-      val result = Test.check(Test.Parameters.default.withMinSuccessfulTests(20)
+      val result = try Test.check(Test.Parameters.default.withMinSuccessfulTests(20)
         .withInitialSeed(Seed(20261017L)), prop)
-      assert(result.passed, s"$column: ${result.status}")
+        finally spark.conf.set("spark.sql.session.timeZone", "UTC")
+      assert(result.passed, s"$column in $zone: ${result.status}")
+    }
+  }
+
+  test("a TIMESTAMP bind reads wall-clock time in the session TimeZone, text and binary") {
+    WireClient.withClient(port) { c =>
+      c.simple("SET TIME ZONE 'America/New_York'")
+      val wall = java.time.LocalDateTime.parse("2024-01-01T07:00:00")
+      val binary = java.nio.ByteBuffer.allocate(8)
+        .putLong(wall.toEpochSecond(java.time.ZoneOffset.UTC) * 1000000L - PgTypes.PG_EPOCH_MICROS)
+        .array()
+      for ((bytes, format) <- Seq(("2024-01-01 07:00:00".getBytes(UTF_8), 0), (binary, 1))) {
+        c.parse("", "SELECT CAST($1 AS STRING)", Seq(PgTypes.TIMESTAMP))
+        c.bindBytes("", "", Seq(bytes), Seq(format))
+        c.execute("")
+        assert(col0(c.sync()) === Seq("2024-01-01 07:00:00"), s"format $format")
+      }
+    }
+  }
+
+  test("a BYTEA bind reads raw bytes in binary and byteain text") {
+    WireClient.withClient(port) { c =>
+      for ((bytes, format) <- Seq((Array[Byte](1, 2), 1), ("\\x0102".getBytes(UTF_8), 0))) {
+        c.parse("", "SELECT length($1), hex($1)", Seq(PgTypes.BYTEA))
+        c.bindBytes("", "", Seq(bytes), Seq(format))
+        c.execute("")
+        val m = c.sync()
+        assert(error(m) === None)
+        assert(rows(m) === Seq(Seq("2", "0102")), s"format $format")
+      }
     }
   }
 

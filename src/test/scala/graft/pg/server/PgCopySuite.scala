@@ -159,6 +159,58 @@ class PgCopySuite extends AnyFunSuite with BeforeAndAfterAll {
     } finally TestSpark.spark.sql("DROP TABLE IF EXISTS copy_bin_chunk")
   }
 
+  /** A binary COPY stream of `tuples`, each field's send() bytes or null. */
+  private def binaryStream(tuples: Seq[Seq[Array[Byte]]]): Array[Byte] = {
+    val bb = java.nio.ByteBuffer.allocate(4096)
+    bb.put(PgCopy.BinaryCopy.header)
+    tuples.foreach { t =>
+      bb.putShort(t.length.toShort)
+      t.foreach(f => if (f == null) bb.putInt(-1) else { bb.putInt(f.length); bb.put(f) })
+    }
+    bb.put(PgCopy.BinaryCopy.Trailer)
+    java.util.Arrays.copyOf(bb.array(), bb.position())
+  }
+
+  test("binary copy-in reads fields as PG's recv functions do") {
+    val spark = TestSpark.spark
+    spark.sql("DROP TABLE IF EXISTS copy_recv")
+    spark.sql("CREATE TABLE copy_recv (k INT, b BOOLEAN, raw BINARY, ntz TIMESTAMP_NTZ) USING parquet")
+    def i4(v: Int) = java.nio.ByteBuffer.allocate(4).putInt(v).array()
+    def i8(v: Long) = java.nio.ByteBuffer.allocate(8).putLong(v).array()
+    def copy(tuples: Seq[Array[Byte]]*): Long = {
+      val st = new PgCopy.CopyInSession(spark, PgCopy.CopyIn("copy_recv", Nil,
+        PgCopy.CopyOptions(binary = true)), java.time.ZoneId.of("America/New_York"))
+      st.feed(binaryStream(tuples))
+      st.finish()
+    }
+    try {
+      // an 8-byte value for an INT column is not an int4
+      val e = intercept[PgStateException](copy(Seq(i8(0x0000000100000005L), null, null, null)))
+      assert((e.state, e.getMessage) === ("22P03", "incorrect binary data format"))
+      // boolrecv: any non-zero byte is true; bytea is its bytes; a
+      // TIMESTAMP_NTZ in a New York DST gap keeps its wall clock
+      val gap = java.time.LocalDateTime.parse("2024-03-10T02:30:00")
+      val wall = gap.toEpochSecond(java.time.ZoneOffset.UTC) * 1000000L
+      assert(copy(Seq(i4(1), Array[Byte](2), Array[Byte](0, -1), i8(wall - 946684800000000L))) === 1L)
+      val got = spark.table("copy_recv").collect().toSeq
+      assert(got.map(r => (r.getInt(0), r.getBoolean(1), r.getAs[Array[Byte]](2).toSeq,
+        r.getAs[java.time.LocalDateTime](3))) === Seq((1, true, Seq[Byte](0, -1), gap)))
+    } finally spark.sql("DROP TABLE IF EXISTS copy_recv")
+  }
+
+  test("COPY TO text and csv fields are the DataRow text, escaped for COPY") {
+    val select = "SELECT array(1, 2) AS a, map('k', 1) AS m, named_struct('x', 1) AS s, " +
+      "X'0102' AS b, CAST(0 AS DECIMAL(38, 18)) AS n, 'tab\there' AS t"
+    assert(psql(select) ===
+      "{1,2}|{\"k\":1}|{\"x\":1}|\\x0102|0.000000000000000000|tab\there")
+    def copyOut(opts: String) = Seq("psql", s"host=127.0.0.1 port=$port dbname=default user=graft",
+      "-c", s"COPY ($select) TO STDOUT $opts").!!
+    assert(copyOut("") ===
+      "{1,2}\t{\"k\":1}\t{\"x\":1}\t\\\\x0102\t0.000000000000000000\ttab\\there\n")
+    assert(copyOut("WITH (FORMAT csv)") ===
+      "\"{1,2}\",\"{\"\"k\"\":1}\",\"{\"\"x\"\":1}\",\\x0102,0.000000000000000000,tab\there\n")
+  }
+
   test("binary format option parsing and conflicts") {
     import PgCopy._
     assert(parse("COPY t FROM STDIN WITH (FORMAT binary)") ===

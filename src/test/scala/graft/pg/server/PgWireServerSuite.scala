@@ -226,6 +226,37 @@ class PgWireServerSuite extends AnyFunSuite with BeforeAndAfterAll {
     } finally TestSpark.spark.sql("DROP VIEW IF EXISTS infoschema_probe")
   }
 
+  test("pg_attribute and pg_type agree with RowDescription for every column type") {
+    TestSpark.spark.sql("""CREATE OR REPLACE VIEW codec_types AS SELECT true AS bo,
+      CAST(1 AS TINYINT) AS i1, CAST(1 AS SMALLINT) AS i2, 1 AS i4, 1L AS i8,
+      CAST(1 AS FLOAT) AS f4, CAST(1 AS DOUBLE) AS f8, CAST(1 AS DECIMAL(10, 2)) AS n,
+      'x' AS s, X'01' AS b, DATE '2024-01-01' AS d, TIMESTAMP '2024-01-01 00:00:00' AS ts,
+      TIMESTAMP_NTZ '2024-01-01 00:00:00' AS ntz, INTERVAL '1' DAY AS dti,
+      INTERVAL '1' YEAR AS ymi, array(true) AS ab, array(CAST(1 AS SMALLINT)) AS ai2,
+      array(1) AS ai4, array(1L) AS ai8, array(CAST(1 AS FLOAT)) AS af4,
+      array(CAST(1 AS DOUBLE)) AS af8, array('x') AS asx, array(DATE '2024-01-01') AS ad,
+      array(TIMESTAMP '2024-01-01 00:00:00') AS ats, array(CAST(1 AS DECIMAL(10, 2))) AS an,
+      array(array(1)) AS nested, map('k', 1) AS m, named_struct('x', 1) AS st""")
+    try {
+      val described = WireClient.withClient(port)(c =>
+        WireClient.columns(c.simple("SELECT * FROM codec_types")))
+      assert(described.length === 28)
+      val catalog = WireClient.withClient(port)(c => WireClient.rows(c.simple(
+        """SELECT a.attname, a.atttypid, a.attlen, t.typlen, t.typname,
+          |  format_type(a.atttypid, NULL), i.data_type
+          |FROM pg_attribute a JOIN pg_class c ON a.attrelid = c.oid
+          |LEFT JOIN pg_type t ON t.oid = a.atttypid
+          |JOIN information_schema.columns i
+          |  ON i.table_name = c.relname AND i.column_name = a.attname
+          |WHERE c.relname = 'codec_types' ORDER BY a.attnum""".stripMargin)))
+      assert(catalog.map(r => (r(0), r(1).toInt, r(2).toInt)) === described)
+      assert(catalog.map(r => (r(0), r(3).toInt)) === described.map(d => (d._1, d._3)),
+        "pg_type.typlen")
+      assert(catalog.forall(r => r(4) == r(5) && r(4) == r(6)), catalog.mkString("\n"))
+      assert(psql("SELECT format_type(25, NULL), format_type(1082, NULL)") === "text|date")
+    } finally TestSpark.spark.sql("DROP VIEW IF EXISTS codec_types")
+  }
+
   test("psql: error surfaces as ERROR not disconnect") {
     val res = Seq("psql", s"host=127.0.0.1 port=$port dbname=default user=graft",
       "-At", "-c", "SELECT no_such_column").!(ProcessLogger(_ => ()))

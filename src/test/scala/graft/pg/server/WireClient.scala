@@ -56,10 +56,12 @@ class WireClient(port: Int) {
     send('P', cstr(stmt) ++ cstr(sql) ++ i16(oids.length) ++ oids.flatMap(i32))
   /** Bind text params; a null param binds SQL NULL. */
   def bind(portal: String, stmt: String, params: Seq[String] = Nil): Unit =
-    send('B', cstr(portal) ++ cstr(stmt) ++ i16(0) ++ i16(params.length) ++
-      params.flatMap { p =>
-        if (p == null) i32(-1).toSeq else { val b = p.getBytes(UTF_8); i32(b.length) ++ b }
-      } ++ i16(0))
+    bindBytes(portal, stmt, params.map(p => if (p == null) null else p.getBytes(UTF_8)), Nil)
+  /** Bind raw param bytes with per-param format codes (none = all text). */
+  def bindBytes(portal: String, stmt: String, params: Seq[Array[Byte]], formats: Seq[Int]): Unit =
+    send('B', cstr(portal) ++ cstr(stmt) ++ i16(formats.length) ++ formats.flatMap(i16) ++
+      i16(params.length) ++
+      params.flatMap(b => if (b == null) i32(-1).toSeq else i32(b.length) ++ b) ++ i16(0))
   def describePortal(portal: String): Unit = send('D', Array('P'.toByte) ++ cstr(portal))
   def describeStatement(stmt: String): Unit = send('D', Array('S'.toByte) ++ cstr(stmt))
   def execute(portal: String, maxRows: Int = 0): Unit = send('E', cstr(portal) ++ i32(maxRows))
@@ -106,6 +108,18 @@ object WireClient {
     }
   }
   def col0(m: Msgs): Seq[String] = rows(m).map(_.head)
+  /** (name, type oid, typlen) per column of the first RowDescription. */
+  def columns(m: Msgs): Seq[(String, Int, Int)] = m.filter(_._1 == 'T').take(1).flatMap {
+    case (_, p) =>
+      val b = ByteBuffer.wrap(p)
+      Seq.fill(b.getShort.toInt) {
+        val name = str(b)
+        b.getInt; b.getShort // table oid, attnum
+        val col = (name, b.getInt, b.getShort.toInt)
+        b.getInt; b.getShort // typmod, format
+        col
+      }
+  }
   /** The parameter type oids of the first ParameterDescription. */
   def paramTypes(m: Msgs): Seq[Int] = m.filter(_._1 == 't').take(1).flatMap { case (_, p) =>
     val b = ByteBuffer.wrap(p)

@@ -2,12 +2,18 @@ package graft.pg.wire
 
 import java.nio.ByteBuffer
 import java.nio.charset.StandardCharsets.UTF_8
+import java.time.{Instant, LocalDateTime, ZoneId, ZoneOffset}
+
+import scala.util.Try
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, ArrayData}
+import org.apache.spark.sql.catalyst.util.DateTimeUtils.{instantToMicros, microsToInstant}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.{CalendarInterval, UTF8String}
+import org.scalacheck.{Arbitrary, Gen, Prop, Test}
+import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Golden-byte tests for the V3 field writers, mirroring the reference's
@@ -197,9 +203,34 @@ class RowCodecSpec extends AnyFunSuite {
       Array[Byte](1, 2, 3))
   }
 
+  test("bytea text is PG's hex format, nested in arrays too") {
+    assert(new String(payload(write(BinaryType, Array[Byte](1, 2, -1), binary = false)), UTF_8) ===
+      "\\x0102ff")
+    assert(new String(payload(write(ArrayType(BinaryType),
+      ArrayData.toArrayData(Array(Array[Byte](10))), binary = false)), UTF_8) === """{"\\x0a"}""")
+  }
+
+  test("bytea text decodes PG's byteain hex and escape formats") {
+    def dec(s: String) = ParamCodec.decode(s.getBytes(UTF_8), PgTypes.BYTEA, 0).value
+      .asInstanceOf[Array[Byte]].toSeq
+    assert(dec("\\x0102ff") === Seq[Byte](1, 2, -1))
+    assert(dec("\\x01 02") === Seq[Byte](1, 2))
+    assert(dec("\\x") === Nil)
+    assert(dec("ab\\\\c\\001") === Seq[Byte]('a', 'b', '\\', 'c', 1))
+    for (bad <- Seq("\\x0", "\\xzz", "a\\9", "\\4000")) {
+      val e = intercept[graft.pg.server.PgStateException](dec(bad))
+      assert(e.state === "22P02", bad)
+    }
+  }
+
   test("decimal text") {
     assert(new String(payload(write(DecimalType(10, 2),
       Decimal(BigDecimal("1234.56"), 10, 2), binary = false)), UTF_8) === "1234.56")
+  }
+
+  test("decimal text is plain, never exponent notation") {
+    assert(new String(payload(write(DecimalType(38, 18),
+      Decimal(BigDecimal(0), 38, 18), binary = false)), UTF_8) === "0.000000000000000000")
   }
 
   test("array text renders the PG literal form") {
@@ -238,11 +269,15 @@ class RowCodecSpec extends AnyFunSuite {
 
   test("binary bind params are read to exactly their type's width") {
     def int8Bytes(v: Long) = ByteBuffer.allocate(8).putLong(v).array()
-    def bindParam(b: Array[Byte], oid: Int) = ParamCodec.decodeBindParam(b, oid, 1, 2)
+    def bindParam(b: Array[Byte], oid: Int) = ParamCodec.decodeBindParam(b, oid, 1, 2, ZoneOffset.UTC)
     assert(bindParam(int8Bytes(7), PgTypes.INT8).value === 7L)
     assert(bindParam(Array[Byte](2), PgTypes.BOOL).value === true) // boolrecv: any non-zero
     val e = intercept[graft.pg.server.PgStateException](bindParam(int8Bytes(7), PgTypes.INT4))
     assert((e.state, e.getMessage) === ("22P03", "incorrect binary data format in bind parameter 2"))
+    // the shared decode answers the same state, naming no parameter
+    val shared = intercept[graft.pg.server.PgStateException](
+      ParamCodec.decode(int8Bytes(7), PgTypes.INT4, 1))
+    assert((shared.state, shared.getMessage) === ("22P03", "incorrect binary data format"))
     intercept[graft.pg.server.PgStateException](bindParam(Array[Byte](1, 0), PgTypes.BOOL))
     // too short: read past the end, answered as a truncated message on the wire
     intercept[java.nio.BufferUnderflowException](bindParam(Array.empty, PgTypes.BOOL))
@@ -275,7 +310,7 @@ class RowCodecSpec extends AnyFunSuite {
       ("22P02", """invalid input syntax for type numeric: "1,5""""))
     // text the codec cannot take binds as VARCHAR only for oids it has no
     // decoder for and for date/timestamp forms java.time does not read
-    def orText(s: String, oid: Int) = ParamCodec.decodeOrText(s.getBytes(UTF_8), oid, 0)
+    def orText(s: String, oid: Int) = ParamCodec.decodeOrText(s.getBytes(UTF_8), oid, 0, ZoneOffset.UTC)
     assert(orText("2024-1-5", PgTypes.DATE).dataType === StringType)
     assert(orText("{1,2}", PgTypes.INT8_ARRAY).dataType === StringType)
     intercept[graft.pg.server.PgStateException](orText("abc", PgTypes.INT8))
@@ -331,5 +366,97 @@ class RowCodecSpec extends AnyFunSuite {
     assert(buf.getShort === 2)
     assert(buf.getShort === 1234)
     assert(buf.getShort === 5600)
+  }
+
+  /** Every type RowCodec writes and ParamCodec reads, with a generator of
+    * its Catalyst values. TIMESTAMP_NTZ travels as 1114 and is read in UTC,
+    * as COPY FROM reads it, so a wall-clock time in a DST gap stays put.
+    */
+  private lazy val CodecCases: Seq[(DataType, Gen[Any])] = {
+    def edgesOr[T](edges: T*)(g: Gen[T]): Gen[Any] = Gen.frequency(1 -> Gen.oneOf(edges), 3 -> g)
+    def micros(s: String) = instantToMicros(Instant.parse(s))
+    def wallMicros(s: String) = LocalDateTime.parse(s).toEpochSecond(ZoneOffset.UTC) * 1000000L
+    val (minDay, maxDay) = (java.time.LocalDate.of(1, 1, 1).toEpochDay.toInt,
+      java.time.LocalDate.of(9999, 12, 31).toEpochDay.toInt)
+    val (minTs, maxTs) = (minDay * 86400000000L, (maxDay + 1) * 86400000000L - 1)
+    val dec = DecimalType(38, 18)
+    def decimal(unscaled: BigInt) = Decimal(BigDecimal(unscaled, dec.scale), dec.precision, dec.scale)
+    Seq(
+      BooleanType -> Gen.oneOf(true, false),
+      ShortType -> edgesOr(Short.MinValue, Short.MaxValue, 0.toShort)(Arbitrary.arbitrary[Short]),
+      IntegerType -> edgesOr(Int.MinValue, Int.MaxValue, 0)(Arbitrary.arbitrary[Int]),
+      LongType -> edgesOr(Long.MinValue, Long.MaxValue, 0L)(Arbitrary.arbitrary[Long]),
+      FloatType -> edgesOr(Float.NaN, Float.PositiveInfinity, Float.NegativeInfinity, -0.0f,
+        Float.MinPositiveValue, Float.MaxValue)(Arbitrary.arbitrary[Float]),
+      DoubleType -> edgesOr(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity, -0.0,
+        Double.MinPositiveValue, Double.MaxValue)(Arbitrary.arbitrary[Double]),
+      dec -> edgesOr(decimal(0), decimal(BigInt(10).pow(38) - 1), decimal(1 - BigInt(10).pow(38)))(
+        Arbitrary.arbitrary[Long].map(l => decimal(BigInt(l) * 1000003L))),
+      StringType -> edgesOr("", "é\u0000\t\\\"")(Arbitrary.arbitrary[String])
+        .map(s => UTF8String.fromString(s.toString)),
+      BinaryType -> edgesOr(Array.emptyByteArray, Array[Byte]('\\'), Array[Byte](0, -1))(
+        Arbitrary.arbitrary[Array[Byte]]),
+      DateType -> edgesOr(minDay, maxDay, 0, PgTypes.PG_EPOCH_DAYS)(Gen.choose(minDay, maxDay)),
+      // 2024-03-10 in New York skips 02:00-03:00 and 2024-11-03 repeats 01:00-02:00
+      TimestampType -> edgesOr(minTs, maxTs, 0L, micros("2024-03-10T06:59:59.999999Z"),
+        micros("2024-03-10T07:00:00Z"), micros("2024-11-03T05:30:00Z"),
+        micros("2024-11-03T06:30:00Z"))(Gen.choose(minTs, maxTs)),
+      TimestampNTZType -> edgesOr(minTs, maxTs, wallMicros("2024-03-10T02:30:00"),
+        wallMicros("2024-11-03T01:30:00"))(Gen.choose(minTs, maxTs)))
+  }
+
+  /** The value `v` encodes as, decoded back; None for SQL NULL. */
+  private def roundTrip(dt: DataType, v: Any, binary: Boolean, zone: ZoneId): Option[Any] = {
+    val buf = ByteBuffer.allocate(1 << 16)
+    RowCodec.rowWriter(StructType(Seq(StructField("a", dt))), Seq(binary), zone)(
+      new GenericInternalRow(Array[Any](v)), buf)
+    buf.flip()
+    val len = buf.getInt
+    if (len < 0) None
+    else {
+      val bytes = new Array[Byte](len); buf.get(bytes)
+      val readZone = if (dt == TimestampNTZType) ZoneOffset.UTC else zone
+      Some(ParamCodec.decode(bytes, PgTypes.oidOf(dt), if (binary) 1 else 0, readZone).value)
+    }
+  }
+
+  test("property: every type both codecs speak decodes back to the value it encoded") {
+    val utc = ZoneOffset.UTC
+    val decodable = Seq(BooleanType, ByteType, ShortType, IntegerType, LongType, FloatType,
+      DoubleType, DecimalType(10, 2), StringType, BinaryType, DateType, TimestampType,
+      TimestampNTZType, CalendarIntervalType, DayTimeIntervalType(), YearMonthIntervalType(),
+      ArrayType(IntegerType), MapType(StringType, IntegerType), new StructType().add("x", "int"))
+      .filter(dt => Seq(0, 1).forall(f => Try(ParamCodec.decoder(PgTypes.oidOf(dt), f, utc)).isSuccess))
+    assert(decodable.map(_.getClass) === CodecCases.map(_._1.getClass),
+      "every decodable type has a round-trip case")
+    def same(a: Any, b: Any): Boolean = (a, b) match {
+      case (x: Array[Byte], y: Array[Byte]) => java.util.Arrays.equals(x, y)
+      case (x: Decimal, y: Decimal) => x.toJavaBigDecimal == y.toJavaBigDecimal // scale too
+      case _ => a.equals(b) // boxed: NaN equals NaN, -0.0 differs from 0.0
+    }
+    for (zone <- Seq(utc, ZoneId.of("America/New_York")); (dt, gen) <- CodecCases;
+        binary <- Seq(false, true)) {
+      val prop = Prop.forAll(Gen.frequency(1 -> Gen.const(null), 9 -> gen)) { v =>
+        // a wall-clock time in a repeated hour names two instants; 1114
+        // reads it as the earlier one, as PG's timestamptz input does
+        val expected = (v, dt) match {
+          case (null, _) => None
+          case (m: Long, TimestampType) => Some(instantToMicros(
+            LocalDateTime.ofInstant(microsToInstant(m), zone).atZone(zone).toInstant))
+          case _ => Some(v)
+        }
+        val got = roundTrip(dt, v, binary, zone)
+        Prop(got.isEmpty == expected.isEmpty && got.forall(same(_, expected.get))) :|
+          s"$dt binary=$binary $zone: $v -> $got"
+      }
+      val result = Test.check(Test.Parameters.default.withMinSuccessfulTests(200)
+        .withInitialSeed(Seed(20261017L)), prop)
+      assert(result.passed, s"$dt binary=$binary $zone: ${result.status}")
+    }
+    // the repeated hour's later instant is the one exception, in both formats
+    val later = instantToMicros(Instant.parse("2024-11-03T06:30:00Z"))
+    val ny = ZoneId.of("America/New_York")
+    assert(Seq(false, true).map(roundTrip(TimestampType, later, _, ny)) ===
+      Seq.fill(2)(Some(later - 3600000000L)))
   }
 }
