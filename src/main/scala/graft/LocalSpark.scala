@@ -5,16 +5,19 @@ import org.apache.spark.sql.SparkSession
 /** The local session every batch main runs on (Bench, BenchWire,
   * BenchWireConc, PlanDump, ScaleGen, Verify) — the one place that reads
   * `SPARK_GRAFT_CPUS`. The long-lived server launcher (`Serve`) keeps its
-  * own builder and Spark's bounded class cache.
+  * own builder and Spark's bounded class cache, on the same [[cpus]].
   */
 object LocalSpark {
-  /** `local[SPARK_GRAFT_CPUS]` (the core count when unset) with as many
-    * shuffle partitions, UTC, no UI, log level WARN. `fairScheduler` pools
-    * jobs FAIR, for BenchWireConc's concurrent connections.
+  /** `SPARK_GRAFT_CPUS`, or the core count when unset. */
+  def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors())
+
+  /** `local[cpus]` with as many shuffle partitions, UTC, no UI, log level
+    * WARN. `fairScheduler` pools jobs FAIR, for BenchWireConc's concurrent
+    * connections.
     */
   def session(fairScheduler: Boolean = false): SparkSession = {
-    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
-      .getOrElse(Runtime.getRuntime.availableProcessors())
+    val cpus = LocalSpark.cpus
     val b = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus.toString)

@@ -1,16 +1,32 @@
 package graft.pg
 
+import java.util.OptionalLong
+
+import graft.pg.server.{ServerStats, SessionRegistry}
 import graft.pg.wire.PgTypes
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.parser.CatalystSqlParser
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
+import org.apache.spark.sql.catalyst.catalog.{CatalogTable, CatalogTableType}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, SubqueryAlias, UnresolvedWith}
+import org.apache.spark.sql.connector.catalog.{SupportsRead, TableCapability}
+import org.apache.spark.sql.connector.read.{LocalScan, ScanBuilder, Statistics,
+  SupportsReportStatistics}
+import org.apache.spark.sql.execution.command.CreateViewCommand
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
+import org.apache.spark.sql.graft.Internals
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-/** pg_catalog emulation: the 17 system tables + the 29-row pg_type seed
-  * ([[PgTypes.table]]) PG clients probe for metadata (reference
-  * catalog.scala:87-118,280-379).
-  * Registered as session temp views; the wire-server milestone will expose
-  * them under a `pg_catalog` database as well.
+/** pg_catalog emulation: the system tables PG clients probe for metadata,
+  * the 29-row pg_type seed ([[PgTypes.table]]) among them (reference
+  * catalog.scala:87-118,280-379). Each name is a relation that
+  * [[PgParserInterface]] puts in place of the table name after parsing
+  * ([[substitute]]); nothing is registered in the session. Static tables
+  * hold rows built once per JVM; live ones (pg_class, pg_attribute,
+  * information_schema, pg_stat_*, pg_settings) compute theirs when a
+  * statement using them is planned, for the session that plans it.
   */
 object PgCatalog {
 
@@ -58,174 +74,224 @@ object PgCatalog {
   /** format_type/regtype: the name of a seeded or pseudo type. */
   def typeNameOf(oid: Int): String = typeNameByOid.getOrElse(oid, "unknown")
 
-  private final case class AttrSnapshot(key: Seq[String], at: Long, rows: Seq[Row])
-  private val attrCache = new java.util.concurrent.atomic.AtomicReference[AttrSnapshot]
-  private val AttrCacheTtlNanos = 10L * 1000 * 1000 * 1000
+  /** One catalog relation: a DSv2 table whose scan is a [[LocalScan]] over
+    * `rowsOf` the planning session. A static table computes its rows once.
+    */
+  private final class CatalogRelation(tableName: String, ddl: String, fixed: Boolean,
+      rowsOf: SparkSession => Seq[Row]) extends SupportsRead {
+    override def name: String = tableName
+    override val schema: StructType = StructType.fromDDL(ddl)
+    override def capabilities: java.util.Set[TableCapability] =
+      java.util.EnumSet.of(TableCapability.BATCH_READ)
 
-  private def emptyView(spark: SparkSession, name: String, ddl: String): Unit =
-    spark.createDataFrame(
-      new java.util.ArrayList[Row](), StructType.fromDDL(ddl))
-      .createOrReplaceTempView(name)
+    private val toCatalyst = CatalystTypeConverters.createToCatalystConverter(schema)
+    private def rows(spark: SparkSession): Array[InternalRow] =
+      rowsOf(spark).map(r => toCatalyst(r).asInstanceOf[InternalRow]).toArray
+    private lazy val constant = rows(null)
 
-  /** Register all pg_catalog views on the session (idempotent). */
-  def register(spark: SparkSession): Unit = {
-    import spark.implicits._
+    override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = () => {
+      val data = if (fixed) constant else rows(SparkSession.active)
+      // the row count lets a join with a catalog relation broadcast it
+      new LocalScan with SupportsReportStatistics {
+        override def readSchema: StructType = schema
+        override def rows: Array[InternalRow] = data
+        override def estimateStatistics: Statistics = new Statistics {
+          override def sizeInBytes = OptionalLong.of(schema.defaultSize.toLong * data.length)
+          override def numRows = OptionalLong.of(data.length)
+        }
+      }
+    }
+  }
 
-    PgTypes.table.map { t =>
-      (t.oid, t.name, "b", t.len, false, t.elem, ",", t.input, 0, 0, 0, defaultNamespaceOid)
-    }.toDF("oid", "typname", "typtype", "typlen", "typnotnull", "typelem",
-      "typdelim", "typinput", "typrelid", "typbasetype", "typcollation", "typnamespace")
-      .createOrReplaceTempView("pg_type")
+  private def static(name: String, ddl: String)(rows: => Seq[Row]): CatalogRelation =
+    new CatalogRelation(name, ddl, fixed = true, _ => rows)
 
-    Seq((defaultNamespaceOid, defaultNamespace))
-      .toDF("oid", "nspname").createOrReplaceTempView("pg_namespace")
-    Seq((userRoleOid, "spark-user")).toDF("oid", "rolname")
-      .createOrReplaceTempView("pg_roles")
-    Seq(("spark-user", userRoleOid)).toDF("usename", "usesysid")
-      .createOrReplaceTempView("pg_user")
-    Seq(("default", userRoleOid, 6, "C", "C", "c"))
-      .toDF("datname", "datdba", "encoding", "datcollate", "datctype",
-        // PG 15's \l also reads the locale-provider columns
-        "datlocprovider")
-      .withColumn("datacl", org.apache.spark.sql.functions.lit(null)
-        .cast("array<string>"))
-      .withColumn("daticulocale", org.apache.spark.sql.functions.lit(null)
-        .cast("string"))
-      .createOrReplaceTempView("pg_database")
+  private def live(name: String, ddl: String)(rows: SparkSession => Seq[Row]): CatalogRelation =
+    new CatalogRelation(name, ddl, fixed = false, rows)
 
+  private def isTable(t: CatalogTable): Boolean =
+    t.tableType == CatalogTableType.MANAGED || t.tableType == CatalogTableType.EXTERNAL
+
+  /** (pg_class oid, table name, attnum, column) of every column of the
+    * visible tables and views. The oid is 10000 + the listing position:
+    * stable while the listing is.
+    */
+  private def columns(spark: SparkSession) =
+    Internals.catalogTables(spark).zipWithIndex.flatMap { case (t, i) =>
+      t.schema.fields.zipWithIndex.map { case (f, c) => (10000 + i, t.identifier.table, c + 1, f) }
+    }
+
+  private val relations: Map[String, CatalogRelation] = Seq(
+    static("pg_type", "oid INT, typname STRING, typtype STRING, typlen INT, " +
+      "typnotnull BOOLEAN, typelem INT, typdelim STRING, typinput STRING, typrelid INT, " +
+      "typbasetype INT, typcollation INT, typnamespace INT") {
+      PgTypes.table.map { t =>
+        Row(t.oid, t.name, "b", t.len, false, t.elem, ",", t.input, 0, 0, 0, defaultNamespaceOid)
+      }
+    },
+    static("pg_namespace", "oid INT, nspname STRING")(
+      Seq(Row(defaultNamespaceOid, defaultNamespace))),
+    static("pg_roles", "oid INT, rolname STRING")(Seq(Row(userRoleOid, "spark-user"))),
+    static("pg_user", "usename STRING, usesysid INT")(Seq(Row("spark-user", userRoleOid))),
+    // PG 15's \l also reads the locale-provider columns
+    static("pg_database", "datname STRING, datdba INT, encoding INT, datcollate STRING, " +
+      "datctype STRING, datlocprovider STRING, datacl ARRAY<STRING>, daticulocale STRING") {
+      Seq(Row("default", userRoleOid, 6, "C", "C", "c", null, null))
+    },
     // Static empties the JDBC drivers probe (reference catalog.scala:87-118).
-    emptyView(spark, "pg_attrdef", "adrelid INT, adnum SHORT, adbin STRING")
-    emptyView(spark, "pg_constraint",
-      "oid INT, confupdtype STRING, confdeltype STRING, conname STRING, " +
-        "condeferrable BOOLEAN, condeferred BOOLEAN, conkey ARRAY<INT>, " +
-        "confkey ARRAY<INT>, confrelid INT, conrelid INT, contype STRING")
-    emptyView(spark, "pg_depend", "objid INT, classid INT, refobjid INT, refclassid INT")
-    emptyView(spark, "pg_description",
-      "objoid INT, classoid INT, objsubid INT, description STRING")
-    emptyView(spark, "pg_index",
-      // indkey is PG's int2vector of indexed column numbers; pgjdbc's
-      // getPrimaryKeys expands it via information_schema._pg_expandarray
-      "oid INT, indrelid INT, indexrelid INT, indisprimary BOOLEAN, " +
-        "indkey ARRAY<SMALLINT>")
-    emptyView(spark, "pg_inherits",
-      "inhrelid INT, inhparent INT, inhseqno INT, inhdetachpending BOOLEAN")
-    emptyView(spark, "pg_policy",
-      "polname STRING, polrelid INT, polcmd STRING, polroles STRING, " +
-        "polqual STRING, polwithcheck STRING")
-    emptyView(spark, "pg_collation", "oid INT, collname STRING")
+    static("pg_attrdef", "adrelid INT, adnum SHORT, adbin STRING")(Nil),
+    static("pg_constraint", "oid INT, confupdtype STRING, confdeltype STRING, conname STRING, " +
+      "condeferrable BOOLEAN, condeferred BOOLEAN, conkey ARRAY<INT>, confkey ARRAY<INT>, " +
+      "confrelid INT, conrelid INT, contype STRING")(Nil),
+    static("pg_depend", "objid INT, classid INT, refobjid INT, refclassid INT")(Nil),
+    static("pg_description", "objoid INT, classoid INT, objsubid INT, description STRING")(Nil),
+    // indkey is PG's int2vector of indexed column numbers; pgjdbc's
+    // getPrimaryKeys expands it via information_schema._pg_expandarray
+    static("pg_index", "oid INT, indrelid INT, indexrelid INT, indisprimary BOOLEAN, " +
+      "indkey ARRAY<SMALLINT>")(Nil),
+    static("pg_inherits",
+      "inhrelid INT, inhparent INT, inhseqno INT, inhdetachpending BOOLEAN")(Nil),
+    static("pg_policy", "polname STRING, polrelid INT, polcmd STRING, polroles STRING, " +
+      "polqual STRING, polwithcheck STRING")(Nil),
+    static("pg_collation", "oid INT, collname STRING")(Nil),
     // access methods: \dt on PG>=12 LEFT JOINs this (rows survive, am null)
-    emptyView(spark, "pg_am", "oid INT, amname STRING")
+    static("pg_am", "oid INT, amname STRING")(Nil),
     // lock monitor: admin tools (DBeaver, pgAdmin) probe it when browsing
     // sessions; there is no lock manager, so zero rows is the truth
-    emptyView(spark, "pg_locks",
-      "locktype STRING, database INT, relation INT, pid INT, mode STRING, " +
-        "granted BOOLEAN, virtualtransaction STRING, virtualxid STRING")
+    static("pg_locks", "locktype STRING, database INT, relation INT, pid INT, mode STRING, " +
+      "granted BOOLEAN, virtualtransaction STRING, virtualxid STRING")(Nil),
     // seeded (not empty) since round 5: the fastpath registry is the source
     // of truth, so FunctionCall clients can resolve OIDs by name and \df
     // shows real rows. prokind replaced proisagg/proiswindow in PG 11; \df
     // on new announced versions reads it.
-    fastpathFunctions.map { case (oid, name, argOids, retOid) =>
-      (oid, name, retOid, argOids, defaultNamespaceOid, false, false, false, "f")
-    }.toDF("oid", "proname", "prorettype", "proargtypes", "pronamespace",
-      "proisagg", "proiswindow", "proretset", "prokind")
-      .createOrReplaceTempView("pg_proc")
-
-    // Runtime tables, populated from the live catalog so psql \d works:
-    // pg_class with the reference's full 21-column schema
-    // (catalog.scala:217-219) and pg_attribute rows per visible column.
-    val tbls = spark.catalog.listTables().collect()
-    val classRows = tbls.zipWithIndex.map { case (tbl, idx) =>
-      Row(10000 + idx, 0, tbl.name, 0, "p",
-        // Catalog.tableType is MANAGED/EXTERNAL/VIEW/TEMPORARY
-        if (tbl.tableType == "MANAGED" || tbl.tableType == "EXTERNAL") "r" else "v",
-        defaultNamespaceOid, userRoleOid, null, 0.toShort, 0,
-        false, false, false, false, false, "d", 0.toShort, false, false, null, 0)
-    }
-    // the per-table listColumns sweep is the expensive part on a large
-    // metastore (one RPC per table); connection storms — pools opening N
-    // connections at once — would repeat it N times, so reuse the sweep
-    // while the visible table list is unchanged (TTL-bounded so ALTERs
-    // surface across connections within seconds)
-    val attrKey = tbls.map(t => t.name + "/" + t.tableType).toSeq
-    val classSchema = StructType.fromDDL(
-      "oid INT, reltablespace INT, relname STRING, reloftype INT, " +
-        "relpersistence STRING, relkind STRING, relnamespace INT, relowner INT, " +
-        "relacl ARRAY<STRING>, relchecks SHORT, reltoastrelid INT, " +
-        "relhasindex BOOLEAN, relhasrules BOOLEAN, relhastriggers BOOLEAN, " +
-        "relrowsecurity BOOLEAN, relforcerowsecurity BOOLEAN, relreplident STRING, " +
-        "reltriggers SHORT, relhasoids BOOLEAN, relispartition BOOLEAN, relpartbound STRING, " +
-        "relam INT") // access-method oid, referenced by \dt on PG>=12
-    spark.createDataFrame(java.util.Arrays.asList(classRows: _*), classSchema)
-      .createOrReplaceTempView("pg_class")
-    val attrRows = {
-      val cached = attrCache.get()
-      if (cached != null && cached.key == attrKey &&
-        System.nanoTime() - cached.at < AttrCacheTtlNanos) cached.rows
-      else {
-        val rows: Seq[Row] = tbls.zipWithIndex.toSeq.flatMap { case (tbl, idx) =>
-          scala.util.Try(spark.catalog.listColumns(tbl.name).collect()).toOption
-            .getOrElse(Array.empty[org.apache.spark.sql.catalog.Column])
-            .zipWithIndex.map { case (c, ci) =>
-              // the type RowDescription announces; a type string the
-              // parser cannot read back is text
-              val oid = scala.util.Try(CatalystSqlParser.parseDataType(c.dataType))
-                .map(PgTypes.oidOf).getOrElse(PgTypes.VARCHAR)
-              Row(0, 10000 + idx, c.name, oid, !c.nullable, false, -1,
-                PgTypes.typeLenOf(oid), ci + 1, "", false, 0, "")
-            }
-        }
-        attrCache.set(AttrSnapshot(attrKey, System.nanoTime(), rows))
-        rows
+    static("pg_proc", "oid INT, proname STRING, prorettype INT, proargtypes ARRAY<INT>, " +
+      "pronamespace INT, proisagg BOOLEAN, proiswindow BOOLEAN, proretset BOOLEAN, " +
+      "prokind STRING") {
+      fastpathFunctions.map { case (oid, name, argOids, retOid) =>
+        Row(oid, name, retOid, argOids, defaultNamespaceOid, false, false, false, "f")
       }
-    }
-    spark.createDataFrame(java.util.Arrays.asList(attrRows: _*),
-      StructType.fromDDL(
-        "oid INT, attrelid INT, attname STRING, atttypid INT, attnotnull BOOLEAN, " +
-          "atthasdef BOOLEAN, atttypmod INT, attlen INT, attnum INT, " +
-          "attidentity STRING, attisdropped BOOLEAN, attcollation INT, " +
-          "attgenerated STRING")) // '' = plain column, referenced by \d on PG>=12
-      .createOrReplaceTempView("pg_attribute")
+    },
+
+    // Live tables over the session catalog, so psql \d works: pg_class
+    // with the reference's full 21-column schema (catalog.scala:217-219)
+    // plus relam (access-method oid, read by \dt on PG>=12), and
+    // pg_attribute rows per visible column.
+    live("pg_class", "oid INT, reltablespace INT, relname STRING, reloftype INT, " +
+      "relpersistence STRING, relkind STRING, relnamespace INT, relowner INT, " +
+      "relacl ARRAY<STRING>, relchecks SHORT, reltoastrelid INT, relhasindex BOOLEAN, " +
+      "relhasrules BOOLEAN, relhastriggers BOOLEAN, relrowsecurity BOOLEAN, " +
+      "relforcerowsecurity BOOLEAN, relreplident STRING, reltriggers SHORT, " +
+      "relhasoids BOOLEAN, relispartition BOOLEAN, relpartbound STRING, relam INT") { spark =>
+      Internals.catalogTables(spark).zipWithIndex.map { case (t, i) =>
+        Row(10000 + i, 0, t.identifier.table, 0, "p", if (isTable(t)) "r" else "v",
+          defaultNamespaceOid, userRoleOid, null, 0.toShort, 0,
+          false, false, false, false, false, "d", 0.toShort, false, false, null, 0)
+      }
+    },
+    // atttypid is the type RowDescription announces; attgenerated '' is a
+    // plain column (read by \d on PG>=12)
+    live("pg_attribute", "oid INT, attrelid INT, attname STRING, atttypid INT, " +
+      "attnotnull BOOLEAN, atthasdef BOOLEAN, atttypmod INT, attlen INT, attnum INT, " +
+      "attidentity STRING, attisdropped BOOLEAN, attcollation INT, attgenerated STRING") {
+      spark => columns(spark).map { case (rel, _, num, f) =>
+        val oid = PgTypes.oidOf(f.dataType)
+        Row(0, rel, f.name, oid, !f.nullable, false, -1, PgTypes.typeLenOf(oid), num,
+          "", false, 0, "")
+      }
+    },
 
     // information_schema emulation (beyond-reference): many BI tools query
-    // information_schema, not pg_catalog. Backed by the SAME live snapshot
-    // as pg_class/pg_attribute; PgRewrite fuses the qualifier, so
+    // information_schema, not pg_catalog. PgRewrite fuses the qualifier, so
     // information_schema.tables resolves to information_schema_tables.
-    Seq(("default", defaultNamespace, "spark-user"))
-      .toDF("catalog_name", "schema_name", "schema_owner")
-      .createOrReplaceTempView("information_schema_schemata")
-    val isTable = (t: org.apache.spark.sql.catalog.Table) =>
-      t.tableType == "MANAGED" || t.tableType == "EXTERNAL"
-    val infoTableRows = tbls.map { t =>
-      Row("default", defaultNamespace, t.name,
-        if (isTable(t)) "BASE TABLE" else "VIEW")
-    }
-    spark.createDataFrame(java.util.Arrays.asList(infoTableRows: _*),
-      StructType.fromDDL("table_catalog STRING, table_schema STRING, " +
-        "table_name STRING, table_type STRING"))
-      .createOrReplaceTempView("information_schema_tables")
-    val infoViewRows = tbls.filterNot(isTable).map { t =>
-      Row("default", defaultNamespace, t.name, null)
-    }
-    spark.createDataFrame(java.util.Arrays.asList(infoViewRows.toSeq: _*),
-      StructType.fromDDL("table_catalog STRING, table_schema STRING, " +
-        "table_name STRING, view_definition STRING"))
-      .createOrReplaceTempView("information_schema_views")
-    // columns re-derive from the cached pg_attribute sweep (attrelid-10000 =
-    // table index) — no second listColumns RPC storm
-    val nameByIdx = tbls.zipWithIndex.map { case (t, i) => i -> t.name }.toMap
-    val infoColRows = attrRows.map { r =>
-      Row("default", defaultNamespace, nameByIdx(r.getInt(1) - 10000),
-        r.getString(2), r.getInt(8), null,
-        if (r.getBoolean(4)) "NO" else "YES", typeNameOf(r.getInt(3)))
-    }
-    spark.createDataFrame(java.util.Arrays.asList(infoColRows: _*),
-      StructType.fromDDL("table_catalog STRING, table_schema STRING, " +
-        "table_name STRING, column_name STRING, ordinal_position INT, " +
-        "column_default STRING, is_nullable STRING, data_type STRING"))
-      .createOrReplaceTempView("information_schema_columns")
+    static("information_schema_schemata",
+      "catalog_name STRING, schema_name STRING, schema_owner STRING") {
+      Seq(Row("default", defaultNamespace, "spark-user"))
+    },
+    live("information_schema_tables",
+      "table_catalog STRING, table_schema STRING, table_name STRING, table_type STRING") {
+      spark => Internals.catalogTables(spark).map { t =>
+        Row("default", defaultNamespace, t.identifier.table,
+          if (isTable(t)) "BASE TABLE" else "VIEW")
+      }
+    },
+    live("information_schema_views",
+      "table_catalog STRING, table_schema STRING, table_name STRING, view_definition STRING") {
+      spark => Internals.catalogTables(spark).filterNot(isTable).map { t =>
+        Row("default", defaultNamespace, t.identifier.table, null)
+      }
+    },
+    live("information_schema_columns", "table_catalog STRING, table_schema STRING, " +
+      "table_name STRING, column_name STRING, ordinal_position INT, column_default STRING, " +
+      "is_nullable STRING, data_type STRING") {
+      spark => columns(spark).map { case (_, table, num, f) =>
+        Row("default", defaultNamespace, table, f.name, num, null,
+          if (f.nullable) "YES" else "NO", typeNameOf(PgTypes.oidOf(f.dataType)))
+      }
+    },
 
-    PgFunctions.register(spark)
+    // Server state: every session, the querying one `active` with its
+    // in-flight statement (PG's behaviour; the others show their last)
+    live("pg_stat_activity", "pid INT, usename STRING, datname STRING, " +
+      "application_name STRING, state STRING, query STRING, backend_start TIMESTAMP") {
+      _ => SessionRegistry.activity.map { case (pid, busy, start, query, appName) =>
+        Row(pid, "spark-user", "default", appName, if (busy) "active" else "idle", query,
+          new java.sql.Timestamp(start))
+      }
+    },
+    // pg_stat_statements over the ServerStats recent-statement ring:
+    // per-statement-text call counts and execution-time statistics, bounded
+    // by the ring's 100-event window (the real extension has its own
+    // bounded hashtable)
+    live("pg_stat_statements", "query STRING, calls BIGINT, total_exec_time DOUBLE, " +
+      "min_exec_time DOUBLE, max_exec_time DOUBLE, mean_exec_time DOUBLE") {
+      _ => ServerStats.recentStatements.groupBy(_.statement).map { case (q, evs) =>
+        val times = evs.map(_.durationMs.toDouble)
+        Row(q, evs.size.toLong, times.sum, times.min, times.max, times.sum / times.size)
+      }.toSeq
+    },
+    live("pg_settings", "name STRING, setting STRING, unit STRING, category STRING, " +
+      "short_desc STRING, context STRING, source STRING")(PgGuc.settingsRows)
+  ).map(t => t.name -> t).toMap
+
+  /** `plan` with each unqualified catalog name replaced by its relation,
+    * except a name some WITH in the statement binds. A temp view over a
+    * catalog relation keeps its analyzed plan instead of its text: Spark
+    * re-parses a stored view text with the session's own parser, which does
+    * not know these names.
+    */
+  def substitute(plan: LogicalPlan): LogicalPlan = {
+    val bound = cteNames(plan)
+    var found = false
+    def sub(p: LogicalPlan): LogicalPlan = p.transformDownWithSubqueries {
+      // CTE bodies are inner children, which the walk does not enter
+      case w: UnresolvedWith =>
+        w.copy(cteRelations = w.cteRelations.map { case (n, rel, maxDepth) =>
+          (n, sub(rel).asInstanceOf[SubqueryAlias], maxDepth)
+        })
+      case u: UnresolvedRelation if u.multipartIdentifier.length == 1 =>
+        val name = u.multipartIdentifier.head
+        relations.get(name.toLowerCase).filterNot(_ => bound(name.toLowerCase)) match {
+          case Some(t) =>
+            found = true
+            SubqueryAlias(name, DataSourceV2Relation.create(t, None, None))
+          case None => u
+        }
+    }
+    sub(plan) match {
+      case v: CreateViewCommand if found => v.copy(originalText = None)
+      case out => out
+    }
   }
+
+  private def cteNames(plan: LogicalPlan): Set[String] =
+    plan.collectWithSubqueries { case w: UnresolvedWith =>
+      w.cteRelations.flatMap { case (n, rel, _) => cteNames(rel) + n.toLowerCase }
+    }.flatten.toSet
+
+  /** Make this session ready for PG clients: the system functions. The
+    * catalog relations need nothing per session.
+    */
+  def register(spark: SparkSession): Unit = PgFunctions.register(spark)
 
   /** Catalog relations whose backing feature (row-level security, logical
     * replication, extended statistics, rules/triggers) has no Spark

@@ -3,10 +3,10 @@ package graft.pg
 import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference}
 import org.apache.spark.sql.execution.command.LeafRunnableCommand
-import org.apache.spark.sql.types.{StringType, StructType}
+import org.apache.spark.sql.types.StringType
 
 /** PG run-time configuration (GUC) surface: `SHOW x` / `SHOW ALL` /
-  * `SET x TO v` / `RESET x` / the `pg_settings` view. The reference passes
+  * `SET x TO v` / `RESET x` / `pg_settings`. The reference passes
   * `SHOW <guc>` straight to Spark's parser, which cannot parse it — yet the
   * surface is load-bearing for real clients: pgjdbc's
   * `getTransactionIsolation()` issues `SHOW TRANSACTION ISOLATION LEVEL`,
@@ -287,25 +287,18 @@ object PgGuc {
     (known ++ custom).sortBy(_._1.toLowerCase)
   }
 
-  /** Register the `pg_settings` view (re-registered before any statement
-    * that references it — values are live session state).
+  /** The `pg_settings` rows: the registry with this session's live values
+    * (columns in [[PgCatalog]]).
     */
-  def registerSettingsView(spark: SparkSession): Unit = {
-    val rows: Seq[Row] = registry.map { g =>
-      val v = value(spark, g.canonical).getOrElse("")
-      // PG stores the bare numeric value in `setting` with the unit in
-      // `unit` (monitoring tools compute setting::int * unit); the display
-      // form ('5s') is SHOW-only
-      Row(g.lower, if (g.unitMs) parseMs(v).toString else v,
-        if (g.unitMs) "ms" else null,
-        g.category, g.description, "user",
-        if (overridden(spark, g)) "session" else "default")
-    }
-    spark.createDataFrame(java.util.Arrays.asList(rows: _*),
-      StructType.fromDDL(
-        "name STRING, setting STRING, unit STRING, category STRING, " +
-          "short_desc STRING, context STRING, source STRING"))
-      .createOrReplaceTempView("pg_settings")
+  def settingsRows(spark: SparkSession): Seq[Row] = registry.map { g =>
+    val v = value(spark, g.canonical).getOrElse("")
+    // PG stores the bare numeric value in `setting` with the unit in
+    // `unit` (monitoring tools compute setting::int * unit); the display
+    // form ('5s') is SHOW-only
+    Row(g.lower, if (g.unitMs) parseMs(v).toString else v,
+      if (g.unitMs) "ms" else null,
+      g.category, g.description, "user",
+      if (overridden(spark, g)) "session" else "default")
   }
 }
 

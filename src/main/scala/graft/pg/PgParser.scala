@@ -11,7 +11,8 @@ import org.apache.spark.sql.types.StructType
 /** Delegating PG-dialect parser: rewrites the dialect surface with
   * [[PgRewrite]] and hands everything else to the session's stock parser —
   * the design the reference's own TODO asks for (PgParser.scala:42-44)
-  * instead of its grammar fork. Installable via
+  * instead of its grammar fork — then puts the pg_catalog relations in
+  * place of their names ([[PgCatalog.substitute]]). Installable via
   * `SparkSessionExtensions.injectParser` ([[PgExtensions]]).
   */
 class PgParserInterface(delegate: ParserInterface) extends ParserInterface {
@@ -75,11 +76,11 @@ class PgParserInterface(delegate: ParserInterface) extends ParserInterface {
     case notifyRe(ch, payload) =>
       PgNotifyCommand(graft.pg.server.PgNotify.foldChannel(ch),
         if (payload == null) "" else payload.replace("''", "'"))
-    case _ => delegate.parsePlan(PgRewrite(sqlText))
+    case _ => PgCatalog.substitute(delegate.parsePlan(PgRewrite(sqlText)))
   }
 
   override def parseQuery(sqlText: String): LogicalPlan =
-    delegate.parseQuery(PgRewrite(sqlText))
+    PgCatalog.substitute(delegate.parseQuery(PgRewrite(sqlText)))
   override def parseExpression(sqlText: String): Expression =
     delegate.parseExpression(PgRewrite(sqlText))
   override def parseTableIdentifier(sqlText: String): TableIdentifier =
@@ -191,12 +192,6 @@ object PgDialect {
     (direct ++ fromCtes).distinct.sorted
   }
 
-  /** Parse PG-dialect SQL without executing (prepared-statement analysis:
-    * unbound `$n` stay as analyzable placeholders). Registers the `pg_param`
-    * expression builder so the analyzer resolves `$n` to a NullType
-    * [[ParameterPlaceHolder]] exactly like the reference's forked grammar
-    * does (predicates.scala:26-34).
-    */
   /** Make `pg_param(n)` analyze to a [[ParameterPlaceHolder]] on this
     * session (idempotent).
     */
@@ -206,6 +201,12 @@ object PgDialect {
       case args => throw new IllegalArgumentException(s"pg_param expects a literal id, got $args")
     })
 
+  /** Parse PG-dialect SQL without executing (prepared-statement analysis:
+    * unbound `$n` stay as analyzable placeholders). Registers the `pg_param`
+    * expression builder so the analyzer resolves `$n` to a NullType
+    * [[ParameterPlaceHolder]] exactly like the reference's forked grammar
+    * does (predicates.scala:26-34).
+    */
   def parse(spark: SparkSession, text: String): LogicalPlan = {
     registerParamFunction(spark)
     new PgParserInterface(Internals.sessionParser(spark)).parsePlan(text)

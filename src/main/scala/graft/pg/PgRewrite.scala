@@ -421,9 +421,9 @@ object PgRewrite {
             i = afterWs
             handleSubstring()
           } else if (word.equalsIgnoreCase("pg_catalog") && j < n && sql.charAt(j) == '.') {
-            // strip the pg_catalog schema qualifier: our catalog tables and
-            // system functions are session-level (reference resolves them via
-            // a real pg_catalog database, catalog.scala:87-118)
+            // strip the pg_catalog schema qualifier: our catalog relations
+            // and system functions resolve unqualified (reference resolves
+            // them via a real pg_catalog database, catalog.scala:87-118)
             i = j + 1
           } else if (word.equalsIgnoreCase("information_schema") && j < n &&
               sql.charAt(j) == '.') {
@@ -432,9 +432,10 @@ object PgRewrite {
               // strip the qualifier; the function rewrite below picks it up
               i = j + 1
             } else {
-              // information_schema.X → the session view information_schema_X
-              // (PgCatalog registers them; a fused name avoids claiming
-              // generic unqualified names like `tables`/`columns`)
+              // information_schema.X → the catalog relation
+              // information_schema_X (PgCatalog.substitute resolves it; a
+              // fused name avoids claiming generic unqualified names like
+              // `tables`/`columns`)
               out.append("information_schema_")
               i = j + 1
               lastWord = ""

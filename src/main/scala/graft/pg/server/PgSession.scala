@@ -234,13 +234,15 @@ object SessionRegistry {
 
   private[server] def activeCount: Int = sessions.size()
 
-  /** (pid, busy, backendStart, lastQuery) per live session — the
-    * pg_stat_activity backing rows.
+  /** (pid, busy, backendStart, lastQuery, application_name) per live
+    * session — the pg_stat_activity rows. A live SET application_name wins
+    * over the startup value, as PG updates the column on SET.
     */
-  private[server] def activity: Seq[(Int, Boolean, Long, String)] = {
+  private[pg] def activity: Seq[(Int, Boolean, Long, String, String)] = {
     import scala.jdk.CollectionConverters._
     sessions.values().asScala.toVector
-      .map(s => (s.pid, s.busy, s.backendStart, s.currentQuery))
+      .map(s => (s.pid, s.busy, s.backendStart, s.currentQuery,
+        s.spark.conf.getOption("application_name").getOrElse(s.appName)))
       .sortBy(_._1)
   }
 
@@ -251,58 +253,5 @@ object SessionRegistry {
     sessions.values().asScala.toVector
       .map(s => (s.pid, s.busy, now - s.lastActivity))
       .sortBy(_._1)
-  }
-}
-
-/** Live `pg_stat_activity` emulation: unlike the static pg_catalog views
-  * (snapshotted per connection at startup), this one must reflect sessions
-  * that appear and disappear at any moment — so the server re-registers it
-  * immediately before executing any statement that references it. The
-  * querying backend reports itself `active` with the in-flight statement,
-  * exactly PG's behavior.
-  */
-private[server] object StatActivity {
-  import org.apache.spark.sql.Row
-  import org.apache.spark.sql.types.StructType
-
-  def register(spark: org.apache.spark.sql.SparkSession,
-      selfPid: Int, selfQuery: String): Unit = {
-    val rows: Seq[Row] = SessionRegistry.activity.map { case (pid, busy, start, q) =>
-      // a live SET application_name wins over the startup value — PG updates
-      // pg_stat_activity.application_name on SET
-      val appName = SessionRegistry.get(pid).map(s =>
-        s.spark.conf.getOption("application_name").getOrElse(s.appName)).getOrElse("")
-      val (state, query) =
-        if (pid == selfPid) ("active", selfQuery)
-        else (if (busy) "active" else "idle", q)
-      Row(pid, "spark-user", "default", appName, state, query,
-        new java.sql.Timestamp(start))
-    }
-    spark.createDataFrame(java.util.Arrays.asList(rows: _*),
-      StructType.fromDDL(
-        "pid INT, usename STRING, datname STRING, application_name STRING, " +
-          "state STRING, query STRING, backend_start TIMESTAMP"))
-      .createOrReplaceTempView("pg_stat_activity")
-  }
-
-  /** `pg_stat_statements` emulation over the ServerStats recent-statement
-    * ring: per-statement-text call counts and execution-time statistics —
-    * the workload-profiling view DBAs reach for first. Bounded by the
-    * ring's 100-event window (the real extension has its own bounded
-    * hashtable; PG semantics of "recent workload profile" are preserved).
-    */
-  def registerStatements(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val rows: Seq[Row] = ServerStats.recentStatements
-      .groupBy(_.statement)
-      .map { case (q, evs) =>
-        val times = evs.map(_.durationMs.toDouble)
-        Row(q, evs.size.toLong, times.sum, times.min, times.max,
-          times.sum / times.size)
-      }.toSeq
-    spark.createDataFrame(java.util.Arrays.asList(rows: _*),
-      StructType.fromDDL(
-        "query STRING, calls BIGINT, total_exec_time DOUBLE, " +
-          "min_exec_time DOUBLE, max_exec_time DOUBLE, mean_exec_time DOUBLE"))
-      .createOrReplaceTempView("pg_stat_statements")
   }
 }

@@ -790,9 +790,9 @@ private class PgConnectionHandler(base: SparkSession, sslCtx: Option[SslContext]
   }
 
   /** Statement text → (plan, EXPLAIN ANALYZE?): the one place the session
-    * parser runs. Refreshes the dynamic views the text names, unwraps PG's
-    * EXPLAIN forms (ANALYZE executes the inner statement; an option list
-    * without an enabled ANALYZE is plain EXPLAIN) and prunes unused CTEs
+    * parser runs. Unwraps PG's EXPLAIN forms (ANALYZE executes the inner
+    * statement; an option list without an enabled ANALYZE is plain
+    * EXPLAIN) and prunes unused CTEs
     * (graft.queries.CtePrune): a pure compile-time identity transform that
     * bails out verbatim on any text it cannot prove safe (comments, quoted
     * identifiers, IDENTIFIER(), shape surprises). Spark analyzes EVERY
@@ -802,7 +802,6 @@ private class PgConnectionHandler(base: SparkSession, sslCtx: Option[SslContext]
     * query never references. The empty text parses to a one-row relation.
     */
   private def parseStatement(sql: String): (LogicalPlan, Boolean) = {
-    refreshDynamicViews(sql)
     val (text, analyze) = sql match {
       case explainAnalyzeRe(inner) => (inner, true)
       case explainOptionsRe(inner) => ("EXPLAIN " + inner, false)
@@ -884,35 +883,18 @@ private class PgConnectionHandler(base: SparkSession, sslCtx: Option[SslContext]
   /** Statements whose per-phase re-analysis is semantically load-bearing:
     * driver-folded session functions (set_config must fire its effect at
     * the Execute re-analysis, current_setting/version/pg_backend_pid must
-    * re-read session state per execution) and the dynamic catalog views
-    * re-registered per statement. Detection is textual and conservative —
-    * any call site must spell the name in the SQL, so false negatives are
-    * impossible and a false positive only costs the analyze-per-phase path.
+    * re-read session state per execution). Detection is textual and
+    * conservative — any call site must spell the name in the SQL, so false
+    * negatives are impossible and a false positive only costs the
+    * analyze-per-phase path.
     */
   private val volatileTextRe =
     ("(?is).*\\b(set_config|pg_notify|pg_cancel_backend|pg_terminate_backend|" +
       "current_setting|pg_backend_pid|pg_postmaster_start_time|version\\s*\\(|" +
-      "pg_param|pg_stat_activity|pg_stat_statements|pg_settings)\\b.*").r
+      "pg_param)\\b.*").r
 
   private def isVolatileText(sql: String): Boolean =
     volatileTextRe.matches(sql)
-
-  /** Views whose contents change between statements (unlike the static
-    * pg_catalog snapshot): re-registered immediately before any statement
-    * that references them.
-    */
-  private def refreshDynamicViews(sql: String): Unit = {
-    val lower = sql.toLowerCase
-    if (lower.contains("pg_stat_activity")) {
-      StatActivity.register(session.spark, session.pid, sql)
-    }
-    if (lower.contains("pg_stat_statements")) {
-      StatActivity.registerStatements(session.spark)
-    }
-    if (lower.contains("pg_settings")) {
-      graft.pg.PgGuc.registerSettingsView(session.spark)
-    }
-  }
 
   /** Simple query flow §3.1: each statement runs as PG's unnamed portal —
     * RowDescription + DataRows + CommandComplete, always text format
@@ -963,16 +945,13 @@ private class PgConnectionHandler(base: SparkSession, sslCtx: Option[SslContext]
   private val discardRe =
     """(?is)\s*DISCARD\s+(ALL|PLANS|SEQUENCES|TEMP|TEMPORARY)\s*;?\s*""".r
 
-  /** DISCARD ALL/TEMP: drop every temp view, then re-register the
-    * pg_catalog / information_schema infrastructure views (idempotent) —
-    * what survives is exactly PG's picture, where DISCARD clears pg_temp
-    * but never the system catalogs.
+  /** DISCARD ALL/TEMP: drop every temp view. The system catalogs are no
+    * temp views, so they survive, as in PG, where DISCARD clears pg_temp.
     */
   private def discardTempState(): Unit = {
     val cat = session.spark.catalog
     cat.listTables().collect().filter(_.isTemporary)
       .foreach(t => cat.dropTempView(t.name))
-    PgCatalog.register(session.spark)
   }
 
   // ---- SQL-level cursors (DECLARE/FETCH/MOVE/CLOSE) ----
@@ -1362,10 +1341,9 @@ private class PgConnectionHandler(base: SparkSession, sslCtx: Option[SslContext]
     * grow-on-overflow scratch buffer, so memory stays bounded at any size.
     */
   private def runCopyOut(co: PgCopy.CopyOut, op: Operation): Unit = op.run {
-    val base = co.source match {
-      case Left(table) => refreshDynamicViews(table); session.spark.table(table)
-      case Right(q) => Internals.ofRows(session.spark, parseStatement(q)._1)
-    }
+    // a table name resolves as in a query, so pg_catalog relations copy out
+    val query = co.source.fold(table => s"SELECT * FROM $table", identity)
+    val base = Internals.ofRows(session.spark, parseStatement(query)._1)
     val df =
       if (co.cols.nonEmpty)
         base.select(co.cols.map(org.apache.spark.sql.functions.col).toIndexedSeq: _*)

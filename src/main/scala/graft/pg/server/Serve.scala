@@ -9,11 +9,11 @@ import org.apache.spark.sql.SparkSession
 object Serve {
   def main(args: Array[String]): Unit = {
     val port = args.headOption.map(_.toInt).getOrElse(5432)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
+    val cpus = graft.LocalSpark.cpus
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .appName("graft-sql-server")
-      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()

@@ -74,12 +74,8 @@ object PgDialectQueries {
 
     // pg_catalog.pg_type scan (oracle = the same seed rows inline).
     QE("q90_pg_type", Some(PgCatalog.pgTypeOracle),
-      (s, d) => {
-        PgCatalog.register(s)
-        s.table("pg_type")
-          .select("oid", "typname", "typlen", "typelem", "typinput")
-          .orderBy("oid")
-      }),
+      (s, d) => PgDialect.sql(s,
+        "SELECT oid, typname, typlen, typelem, typinput FROM pg_catalog.pg_type ORDER BY oid")),
 
     // PG system functions (deterministic subset, oracle = expected literals).
     QE("q91_pg_system_functions", Some("""

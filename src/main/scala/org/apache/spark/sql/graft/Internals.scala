@@ -24,6 +24,16 @@ object Internals {
   def sessionParser(spark: SparkSession): ParserInterface =
     classic(spark).sessionState.sqlParser
 
+  /** The tables and temp views of the current database with their
+    * metadata (type, schema), read from the session catalog without
+    * running a command. A table dropped while listing is skipped.
+    */
+  def catalogTables(spark: SparkSession): Seq[org.apache.spark.sql.catalyst.catalog.CatalogTable] = {
+    val cat = classic(spark).sessionState.catalog
+    cat.listTables(cat.getCurrentDatabase).flatMap(id =>
+      scala.util.Try(cat.getTempViewOrPermanentTableMetadata(id)).toOption)
+  }
+
   /** Register an expression-building function (beyond what udf.register can
     * express, e.g. zero-arg or plan-time expressions).
     */
@@ -43,20 +53,37 @@ object Internals {
       .queryExecution.executedPlan.executeToIterator()
 
   /** The rows of a result that is already in memory, without launching
-    * a Spark job: a local table scan (catalog lookups fold to one), or a
-    * whole-stage Project of foldable expressions over the one-row relation
-    * (`SELECT 1`). None for any other plan; a UDF is never foldable, so
-    * e.g. `pg_sleep` keeps its cancellable job.
+    * a Spark job: a Project/Filter chain over a local table scan (catalog
+    * lookups), evaluated in this JVM as Spark's ConvertToLocalRelation
+    * folds one over a LocalRelation, or a whole-stage Project of foldable
+    * expressions over the one-row relation (`SELECT 1`). None for any other
+    * plan, and for a subquery in the chain; a UDF is never foldable, so
+    * e.g. `SELECT pg_sleep(1)` keeps its cancellable job.
     */
   def localRows(df: DataFrame): Option[Iterator[org.apache.spark.sql.catalyst.InternalRow]] = {
-    import org.apache.spark.sql.catalyst.expressions.Alias
+    import org.apache.spark.sql.catalyst.expressions.{Alias, PlanExpression, Predicate, UnsafeProjection}
     import org.apache.spark.sql.execution._
-    df.asInstanceOf[CDataset[org.apache.spark.sql.Row]].queryExecution.executedPlan match {
+    def local(p: SparkPlan): Option[Iterator[org.apache.spark.sql.catalyst.InternalRow]] = p match {
+      case _ if p.expressions.exists(_.exists(_.isInstanceOf[PlanExpression[_]])) => None
       case scan: LocalTableScanExec => Some(scan.executeCollect().iterator)
+      case FilterExec(cond, child) => local(child).map { rows =>
+        val pred = Predicate.create(cond, child.output)
+        pred.initialize(0)
+        rows.filter(pred.eval)
+      }
+      case ProjectExec(list, child) => local(child).map { rows =>
+        val proj = UnsafeProjection.create(list, child.output)
+        proj.initialize(0)
+        rows.map(proj(_).copy())
+      }
+      case _ => None
+    }
+    df.asInstanceOf[CDataset[org.apache.spark.sql.Row]].queryExecution.executedPlan match {
       case WholeStageCodegenExec(ProjectExec(list, _: OneRowRelationExec))
           if list.forall { case Alias(e, _) => e.foldable; case _ => false } =>
         Some(Iterator.single(org.apache.spark.sql.catalyst.InternalRow.fromSeq(list.map(_.eval()))))
-      case _ => None
+      case WholeStageCodegenExec(p) => local(p)
+      case p => local(p)
     }
   }
 

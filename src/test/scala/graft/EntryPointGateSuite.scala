@@ -42,6 +42,18 @@ class EntryPointGateSuite extends AnyFunSuite {
     assert(hits.isEmpty, s"use an env var or a Spark conf instead: $hits")
   }
 
+  test("no session temp view is created under graft.pg") {
+    val hits = Seq("createOrReplaceTempView", "createTempView").flatMap(n =>
+      sources.collect { case (p, text) if p.startsWith(root.resolve("graft/pg")) &&
+        text.contains(n) => s"${p.getFileName}: $n" })
+    assert(hits.isEmpty, s"the pg_catalog relations are resolved by PgParserInterface: $hits")
+  }
+
+  test("SPARK_GRAFT_CPUS is read only in LocalSpark") {
+    val outside = filesMatching("\"SPARK_GRAFT_CPUS\"") - "LocalSpark.scala"
+    assert(outside.isEmpty, s"use graft.LocalSpark.cpus instead: $outside")
+  }
+
   test("mains are the bench, verify and server entry points only") {
     val allowed = Set("Bench", "BenchWire", "BenchWireConc", "PlanDump", "ScaleGen",
       "Verify", "Serve")

@@ -103,9 +103,8 @@ class PgDialectSuite extends AnyFunSuite {
   }
 
   test("pg_type catalog view has the 29 seed rows") {
-    PgCatalog.register(spark)
-    assert(spark.table("pg_type").count() === 29)
-    assert(spark.table("pg_type").where("typname = 'int8'").select("oid")
+    assert(PgDialect.sql(spark, "SELECT * FROM pg_type").count() === 29)
+    assert(PgDialect.sql(spark, "SELECT oid FROM pg_type WHERE typname = 'int8'")
       .collect().head.getInt(0) === 20)
   }
 }

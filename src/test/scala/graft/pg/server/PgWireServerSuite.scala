@@ -720,6 +720,64 @@ class PgWireServerSuite extends AnyFunSuite with BeforeAndAfterAll {
     c1.close(); c2.close()
   }
 
+  test("pg_class, pg_attribute and information_schema list what a connection creates") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-later-t")
+    WireClient.withClient(port) { c =>
+      try {
+        c.simple(s"CREATE TABLE later_t (k INT, v STRING) USING parquet LOCATION '$dir'")
+        c.simple("CREATE TEMP VIEW later_v AS SELECT 1 AS one")
+        assert(WireClient.rows(c.simple("SELECT relname, relkind FROM pg_class " +
+          "WHERE relname LIKE 'later_%' ORDER BY relname")) ===
+          Seq(Seq("later_t", "r"), Seq("later_v", "v")))
+        assert(WireClient.rows(c.simple("SELECT c.relname, a.attname FROM pg_attribute a " +
+          "JOIN pg_class c ON a.attrelid = c.oid WHERE c.relname LIKE 'later_%' " +
+          "ORDER BY c.relname, a.attnum")) ===
+          Seq(Seq("later_t", "k"), Seq("later_t", "v"), Seq("later_v", "one")))
+        assert(WireClient.rows(c.simple("SELECT table_name, table_type " +
+          "FROM information_schema.tables WHERE table_name LIKE 'later_%' ORDER BY 1")) ===
+          Seq(Seq("later_t", "BASE TABLE"), Seq("later_v", "VIEW")))
+      } finally c.simple("DROP TABLE IF EXISTS later_t")
+    }
+  }
+
+  test("pg_class lists a temp view to its own connection only") {
+    WireClient.withClient(port) { c1 =>
+      c1.simple("CREATE TEMP VIEW mine_only AS SELECT 1 AS one")
+      val q = "SELECT count(*) FROM pg_class WHERE relname = 'mine_only'"
+      assert(WireClient.col0(c1.simple(q)) === Seq("1"))
+      WireClient.withClient(port)(c2 => assert(WireClient.col0(c2.simple(q)) === Seq("0")))
+    }
+  }
+
+  test("a temp view over pg_stat_activity sees a session that connects after it") {
+    WireClient.withClient(port) { c1 =>
+      c1.simple("CREATE TEMP VIEW activity_v AS SELECT * FROM pg_stat_activity")
+      WireClient.withClient(port) { c2 =>
+        val pid2 = WireClient.col0(c2.simple("SELECT pg_backend_pid()")).head
+        assert(WireClient.col0(c1.simple("SELECT pid FROM activity_v")).contains(pid2))
+      }
+    }
+  }
+
+  test("a WITH named like a catalog relation shadows it") {
+    WireClient.withClient(port) { c =>
+      assert(WireClient.col0(c.simple(
+        "WITH pg_class AS (SELECT 'x' AS relname) SELECT relname FROM pg_class")) === Seq("x"))
+    }
+  }
+
+  test("COPY of a catalog relation copies its rows") {
+    WireClient.withClient(port) { c =>
+      val m = c.simple("COPY pg_type TO STDOUT")
+      assert(m.count(_._1 == 'd') === 29)
+      assert(WireClient.commandTags(m) === Seq("COPY 29"))
+      // a live relation copies out as it is at the COPY
+      c.simple("CREATE TEMP VIEW copied_later AS SELECT 1 AS one")
+      val rels = c.simple("COPY pg_class (relname) TO STDOUT")
+      assert(rels.exists(r => r._1 == 'd' && new String(r._2, UTF_8) == "copied_later\n"))
+    }
+  }
+
   test("error responses carry the PG SQLSTATE clients branch on") {
     def sqlState(payload: Array[Byte]): String = {
       // ErrorResponse: repeated (field-type byte, cstring); 'C' = SQLSTATE
