@@ -1,23 +1,28 @@
 package graft.pg.server
 
+import java.nio.{BufferUnderflowException, ByteBuffer}
 import java.nio.charset.StandardCharsets.UTF_8
 
 import scala.collection.mutable.ArrayBuffer
 
 import graft.pg.wire.{ParamCodec, PgTypes}
 
-import org.apache.spark.sql.{Row, SparkSession}
-import org.apache.spark.sql.catalyst.CatalystTypeConverters
-import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.{AttributeReference, BoundReference, Cast, EvalMode, GenericInternalRow}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.graft.Internals
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** `COPY` statement support. The reference decodes the copy-subprotocol
   * messages ('d'/'c'/'f') but throws "Not supported yet"
   * (reference protocol.scala:679-698); since psql's `\copy` is the most
   * common ad-hoc ingestion path, this implements the real thing:
-  * `COPY t FROM STDIN` (text and csv formats) lands as batched DataFrame
-  * inserts into the catalog table, and `COPY t TO STDOUT` /
-  * `COPY (SELECT ...) TO STDOUT` streams PG copy-format rows out.
+  * `COPY t FROM STDIN` (text, csv and binary formats) decodes every field
+  * through [[graft.pg.wire.ParamCodec]], as Bind does, and lands as
+  * batched inserts of Catalyst rows into the catalog table, and
+  * `COPY t TO STDOUT` / `COPY (SELECT ...) TO STDOUT` streams PG
+  * copy-format rows out.
   *
   * Scale posture: copy-in parses rows incrementally off the wire and flushes
   * every [[PgCopy.BatchRows]] rows as one append — memory is bounded by a
@@ -193,47 +198,69 @@ object PgCopy {
     parts.toSeq
   }
 
-  // ---- copy-in: wire bytes -> parsed rows -> batched inserts ----
+  // ---- copy-in: wire bytes -> Catalyst rows -> batched inserts ----
 
-  /** Stateful parser/inserter for one COPY FROM STDIN operation. CopyData
-    * payloads may split rows (and csv quoted fields may contain newlines)
-    * arbitrarily, so the line scanner keeps carry + quote state across
-    * feeds. Failures latch: the remaining stream is drained cheaply and the
-    * error surfaces once at CopyDone, like PG.
+  /** Stateful parser/inserter for one COPY FROM STDIN operation. Every
+    * field decodes once, through the reader Bind uses, into its column's
+    * Catalyst value, and each flush inserts one `LocalRelation` of rows in
+    * table-column order (a column outside the COPY list is NULL, PG's
+    * default-less behavior). CopyData payloads may split rows (and csv
+    * quoted fields may contain newlines) arbitrarily, so the line scanner
+    * keeps carry + quote state across feeds. Failures latch: the remaining
+    * stream is drained cheaply and the error surfaces once at CopyDone,
+    * like PG.
     */
   final class CopyInSession(spark: SparkSession, stmt: CopyIn,
       zone: java.time.ZoneId = java.time.ZoneOffset.UTC) {
     private val targetSchema: StructType = spark.table(stmt.table).schema
     private val colNames: Seq[String] =
       if (stmt.cols.nonEmpty) stmt.cols else targetSchema.fieldNames.toSeq
-    require(colNames.toSet.subsetOf(targetSchema.fieldNames.toSet),
-      s"COPY columns ${colNames.mkString(",")} not all present in ${stmt.table}")
+    colNames.diff(colNames.distinct).headOption.foreach(c =>
+      throw new PgStateException(s"""column "$c" specified more than once""", "42701"))
+    colNames.find(c => !targetSchema.fieldNames.contains(c)).foreach(c =>
+      throw new PgStateException(
+        s"""column "$c" of relation "${stmt.table}" does not exist""", "42703"))
 
     def nCols: Int = colNames.length
 
-    /** binary copy-in: one ParamCodec decoder per column, to the external
-      * value createDataFrame takes. A TIMESTAMP_NTZ column decodes in UTC,
-      * where a wall-clock time is its own instant, so its micros stay exact.
-      */
+    /** the table-column position of each COPY column */
+    private val slots: Array[Int] = colNames.map(targetSchema.fieldIndex).toArray
     private val decoders: Array[Array[Byte] => Any] =
-      if (!stmt.opts.binary) null
-      else colNames.map { n =>
-        val dt = targetSchema(n).dataType
-        val decode = try ParamCodec.decoder(PgTypes.oidOf(dt), 1,
-            if (dt == TimestampNTZType) java.time.ZoneOffset.UTC else zone)
-          catch { case _: IllegalArgumentException =>
-            throw new IllegalArgumentException(s"COPY binary format unsupported for column type $dt")
-          }
-        val toScala = CatalystTypeConverters.createToScalaConverter(dt)
-        (b: Array[Byte]) => toScala(decode(b).value)
-      }.toArray
+      colNames.map(c => fieldDecoder(targetSchema(c).dataType)).toArray
+    private val output = targetSchema.map(f => AttributeReference(f.name, f.dataType)())
+
+    /** One column's decoder: ParamCodec's reader for the column's oid,
+      * text falling back as a Bind parameter does
+      * ([[ParamCodec.inputReader]]). Every value goes through Spark's ANSI
+      * cast, the one an INSERT's store assignment applies, when the
+      * reader's type is not the column's (a decimal of its own precision,
+      * text with no reader); otherwise only a fallback string does. A
+      * TIMESTAMP_NTZ column reads in UTC, where a wall-clock time is its
+      * own instant, so its micros stay exact.
+      */
+    private def fieldDecoder(dt: DataType): Array[Byte] => Any = {
+      def unsupported = new IllegalArgumentException(s"COPY FROM unsupported for column type $dt")
+      val ntz = dt == TimestampNTZType
+      val (readType, read) = try ParamCodec.inputReader(PgTypes.oidOf(dt),
+          if (stmt.opts.binary) 1 else 0, if (ntz) java.time.ZoneOffset.UTC else zone)
+        catch { case _: IllegalArgumentException => throw unsupported }
+      val castAll = readType != dt && !ntz
+      val cast = Cast(BoundReference(0, if (castAll) readType else StringType, nullable = true),
+        dt, Some(zone.getId), EvalMode.ANSI)
+      if (cast.checkInputDataTypes().isFailure) throw unsupported
+      p => read(p) match {
+        case v if castAll || readType != StringType && v.isInstanceOf[UTF8String] =>
+          cast.eval(new GenericInternalRow(Array(v)))
+        case v => v
+      }
+    }
 
     private var carry = Array.emptyByteArray
     private var inQuotes = false
     private var headerPending = stmt.opts.header
     private var binHeaderDone = false
     private var sawEndMarker = false
-    private val rows = ArrayBuffer.empty[Row]
+    private val rows = ArrayBuffer.empty[GenericInternalRow]
     private var inserted = 0L
     @volatile var failure: Option[Throwable] = None
 
@@ -264,78 +291,70 @@ object PgCopy {
     /** Incremental binary-frame parser: CopyData boundaries carry no
       * meaning in binary COPY (a tuple may span frames and a frame may
       * hold many tuples), so parse whatever whole units the carry buffer
-      * holds and keep the remainder.
+      * holds and keep the remainder. A unit the buffer cuts short
+      * underflows and is read again once the next frame arrives.
       */
     private def feedBinary(bytes: Array[Byte]): Unit = {
-      val buf = if (carry.isEmpty) bytes else carry ++ bytes
-      var pos = 0
+      val bb = ByteBuffer.wrap(if (carry.isEmpty) bytes else carry ++ bytes)
+      var whole = true
+      while (whole && !sawEndMarker) {
+        val start = bb.position()
+        val fields = try readUnit(bb) catch {
+          case _: BufferUnderflowException => bb.position(start); whole = false; null
+        }
+        if (fields != null) addRow(fields)
+      }
+      carry = java.util.Arrays.copyOfRange(bb.array, bb.position(), bb.limit())
+    }
+
+    /** The file header or the trailer (null), or one tuple's fields (null
+      * for a NULL field), as PG's copyfromparse.c reads them.
+      */
+    private def readUnit(bb: ByteBuffer): Array[Array[Byte]] = {
+      def bytes(n: Int) = {
+        if (n > bb.remaining) throw new BufferUnderflowException
+        val b = new Array[Byte](n); bb.get(b); b
+      }
       if (!binHeaderDone) {
-        if (buf.length - pos < 19) { carry = sliceFrom(buf, pos); return }
-        if (!java.util.Arrays.equals(
-            java.util.Arrays.copyOfRange(buf, pos, pos + 11), BinaryCopy.Signature))
-          throw new IllegalArgumentException("COPY binary: bad signature header")
-        val bb = java.nio.ByteBuffer.wrap(buf, pos + 11, 8)
+        if (!java.util.Arrays.equals(bytes(11), BinaryCopy.Signature))
+          throw badFormat("COPY file signature not recognized")
         bb.getInt // flags: only bit 16 (OIDs) is defined; we emit none and
                   // accept any, like PG's recv which checks only the bit range
         val extLen = bb.getInt
-        if (extLen < 0) throw new IllegalArgumentException(
-          s"COPY binary: negative header extension length $extLen")
-        if (buf.length - pos < 19 + extLen) { carry = sliceFrom(buf, pos); return }
-        pos += 19 + extLen
+        if (extLen < 0) throw badFormat("invalid COPY file header (wrong length)")
+        bytes(extLen)
         binHeaderDone = true
-      }
-      var done = false
-      while (!done) {
-        if (buf.length - pos < 2) done = true
-        else {
-          val tupleStart = pos
-          val n = java.nio.ByteBuffer.wrap(buf, pos, 2).getShort.toInt
-          pos += 2
-          if (n == -1) { sawEndMarker = true; done = true }
-          else if (n != nCols) throw new IllegalArgumentException(
-            s"COPY binary row has $n columns, expected $nCols")
-          else {
-            val vals = new Array[Any](n)
-            var i = 0
-            var incomplete = false
-            while (i < n && !incomplete) {
-              if (buf.length - pos < 4) incomplete = true
-              else {
-                val len = java.nio.ByteBuffer.wrap(buf, pos, 4).getInt
-                if (len == -1) { pos += 4; vals(i) = null; i += 1 }
-                else if (buf.length - pos < 4 + len) incomplete = true
-                else {
-                  vals(i) = decoders(i)(java.util.Arrays.copyOfRange(buf, pos + 4, pos + 4 + len))
-                  pos += 4 + len
-                  i += 1
-                }
-              }
-            }
-            if (incomplete) { pos = tupleStart; done = true }
-            else rows += Row.fromSeq(vals.toSeq)
-          }
+        null
+      } else {
+        val n = bb.getShort
+        if (n == -1) { sawEndMarker = true; null }
+        else if (n != nCols) throw badFormat(s"row field count is $n, expected $nCols")
+        else Array.fill(n) {
+          val len = bb.getInt
+          if (len < -1) throw badFormat("invalid field size")
+          if (len == -1) null else bytes(len)
         }
       }
-      carry = sliceFrom(buf, pos)
     }
 
-    private def sliceFrom(buf: Array[Byte], pos: Int): Array[Byte] =
-      if (pos == 0) buf else java.util.Arrays.copyOfRange(buf, pos, buf.length)
+    /** one row in table-column order from the COPY's fields */
+    private def addRow(fields: Array[Array[Byte]]): Unit = {
+      val row = new Array[Any](targetSchema.length)
+      var i = 0
+      while (i < nCols) {
+        if (fields(i) != null) row(slots(i)) = decoders(i)(fields(i))
+        i += 1
+      }
+      rows += new GenericInternalRow(row)
+    }
 
     /** drain the final unterminated line, flush, return total rows */
     def finish(): Long = {
       failure.foreach(throw _)
       if (stmt.opts.binary) {
-        if (!sawEndMarker && failure.isEmpty)
-          failure = Some(new IllegalArgumentException(
-            "COPY binary stream ended without the -1 trailer"))
-      } else if (carry.nonEmpty && !sawEndMarker) {
-        val line = new String(carry, UTF_8)
-        carry = Array.emptyByteArray
-        if (line.nonEmpty) handleLine(line)
-      }
+        if (!sawEndMarker) throw badFormat("unexpected EOF in COPY data")
+      } else if (carry.nonEmpty && !sawEndMarker) handleLine(new String(carry, UTF_8))
       flush()
-      failure.foreach(throw _)
       inserted
     }
 
@@ -348,34 +367,22 @@ object PgCopy {
       val fields =
         if (stmt.opts.csv) parseCsvLine(line, stmt.opts.delimiter, stmt.opts.nullStr)
         else parseTextLine(line, stmt.opts.delimiter, stmt.opts.nullStr)
-      if (fields.length != colNames.length)
-        throw new IllegalArgumentException(
-          s"COPY row has ${fields.length} columns, expected ${colNames.length}: $line")
-      rows += Row.fromSeq(fields.toSeq)
+      if (fields.length > nCols) throw badFormat("extra data after last expected column")
+      if (fields.length < nCols)
+        throw badFormat(s"""missing data for column "${colNames(fields.length)}"""")
+      addRow(fields.map(f => if (f == null) null else f.getBytes(UTF_8)))
     }
 
-    private def flush(): Unit = if (rows.nonEmpty && failure.isEmpty) {
-      import scala.jdk.CollectionConverters._
-      // text rows arrive as strings and cast below; binary rows decode to
-      // the target JVM types directly, so their frame already carries the
-      // table's column types
-      val strSchema =
-        if (stmt.opts.binary)
-          StructType(colNames.map(c => targetSchema(c).copy(nullable = true)))
-        else
-          StructType(colNames.map(c => StructField(c, StringType, nullable = true)))
-      val df = spark.createDataFrame(rows.toList.asJava, strSchema)
-      // cast to the table's types in table-column order; columns outside the
-      // COPY list land NULL (PG default-less behavior)
-      val out = df.select(targetSchema.fields.map { f =>
-        if (colNames.contains(f.name)) col(f.name).cast(f.dataType).as(f.name)
-        else lit(null).cast(f.dataType).as(f.name)
-      }.toIndexedSeq: _*)
-      out.write.mode("append").insertInto(stmt.table)
+    private def flush(): Unit = if (rows.nonEmpty) {
+      Internals.ofRows(spark, LocalRelation(output, rows.toIndexedSeq))
+        .write.mode("append").insertInto(stmt.table)
       inserted += rows.size
       rows.clear()
     }
   }
+
+  /** PG's bad_copy_file_format (copyfromparse.c) */
+  private def badFormat(msg: String) = new PgStateException(msg, "22P04")
 
   /** PG text-format field split + unescape. PG compares the RAW field text
     * (escapes intact) against the NULL string — the default `\\N` — before
@@ -488,7 +495,7 @@ object PgCopy {
 
     /** signature + flags(0) + extension length(0) */
     def header: Array[Byte] = {
-      val b = java.nio.ByteBuffer.allocate(19)
+      val b = ByteBuffer.allocate(19)
       b.put(Signature); b.putInt(0); b.putInt(0)
       b.array()
     }

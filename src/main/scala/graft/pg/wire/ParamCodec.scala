@@ -3,6 +3,7 @@ package graft.pg.wire
 import java.nio.ByteBuffer
 import java.nio.charset.StandardCharsets.UTF_8
 import java.time.{LocalDateTime, ZoneId, ZoneOffset}
+import java.util.regex.Pattern
 
 import graft.pg.server.PgStateException
 
@@ -11,8 +12,8 @@ import org.apache.spark.sql.catalyst.util.DateTimeUtils.{instantToMicros, micros
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Decode PG values into Catalyst Literals by (oid, format): `Bind`
-  * parameters and binary `COPY FROM` fields (reference
+/** Decode PG values into Catalyst values by (oid, format): `Bind`
+  * parameters, as Literals, and `COPY FROM` fields of every format (reference
   * converters.scala:39-102). Extends the reference with the date/timestamp
   * binds its TODO left out (converters.scala:95), and with bytea.
   *
@@ -21,87 +22,104 @@ import org.apache.spark.unsafe.types.UTF8String
   * Surrounding whitespace is ignored for every non-string type. A binary
   * value of a fixed-width type with bytes left over fails 22P03; one too
   * short reads past its end. An oid with no decoder here throws an
-  * `IllegalArgumentException`; see [[decodeOrText]].
+  * `IllegalArgumentException`; see [[inputReader]].
   */
 object ParamCodec {
 
-  type Decoder = Array[Byte] => Literal
+  /** bytes to a Catalyst value of the type resolved with the reader */
+  type Reader = Array[Byte] => Any
 
   /** format: 0 = text, 1 = binary. TIMESTAMP (1114) carries wall-clock
     * time, read as an instant in `zone` — the session zone RowCodec
     * renders it in.
     */
   def decode(param: Array[Byte], oid: Int, format: Int,
-      zone: ZoneId = ZoneOffset.UTC): Literal = decoder(oid, format, zone)(param)
+      zone: ZoneId = ZoneOffset.UTC): Literal = literal(reader(oid, format, zone))(param)
 
-  /** The decoder for one (oid, format), resolved once per column or
-    * parameter; throws for a pair with none.
+  /** The Catalyst type and value reader for one (oid, format), resolved
+    * once per column or parameter; throws for a pair with none. A NUMERIC
+    * reads a Decimal of the value's own precision and scale.
     */
-  def decoder(oid: Int, format: Int, zone: ZoneId): Decoder = {
-    val read: Decoder = (oid, format) match {
-      case (PgTypes.BOOL, 0) => p => Literal(bool(text(p)), BooleanType)
-      case (PgTypes.BOOL, 1) => p => Literal(ByteBuffer.wrap(p).get() != 0, BooleanType)
-      case (PgTypes.INT2, 0) => p =>
-        Literal(integral(text(p), "smallint", Short.MinValue, Short.MaxValue).toShort, ShortType)
-      case (PgTypes.INT2, 1) => p => Literal(ByteBuffer.wrap(p).getShort, ShortType)
-      case (PgTypes.INT4, 0) => p =>
-        Literal(integral(text(p), "integer", Int.MinValue, Int.MaxValue).toInt, IntegerType)
-      case (PgTypes.INT4, 1) => p => Literal(ByteBuffer.wrap(p).getInt, IntegerType)
-      case (PgTypes.INT8, 0) => p =>
-        Literal(integral(text(p), "bigint", Long.MinValue, Long.MaxValue), LongType)
-      case (PgTypes.INT8, 1) => p => Literal(ByteBuffer.wrap(p).getLong, LongType)
-      case (PgTypes.FLOAT4, 0) => p => Literal(floatText(text(p), "real").toFloat, FloatType)
-      case (PgTypes.FLOAT4, 1) => p => Literal(ByteBuffer.wrap(p).getFloat, FloatType)
-      case (PgTypes.FLOAT8, 0) => p =>
-        Literal(floatText(text(p), "double precision").toDouble, DoubleType)
-      case (PgTypes.FLOAT8, 1) => p => Literal(ByteBuffer.wrap(p).getDouble, DoubleType)
-      case (PgTypes.NUMERIC, 0) => p =>
+  def reader(oid: Int, format: Int, zone: ZoneId): (DataType, Reader) = {
+    val (dt, read): (DataType, Reader) = (oid, format) match {
+      case (PgTypes.BOOL, 0) => (BooleanType, p => bool(text(p)))
+      case (PgTypes.BOOL, 1) => (BooleanType, p => ByteBuffer.wrap(p).get() != 0)
+      case (PgTypes.INT2, 0) =>
+        (ShortType, p => integral(text(p), "smallint", Short.MinValue, Short.MaxValue).toShort)
+      case (PgTypes.INT2, 1) => (ShortType, p => ByteBuffer.wrap(p).getShort)
+      case (PgTypes.INT4, 0) =>
+        (IntegerType, p => integral(text(p), "integer", Int.MinValue, Int.MaxValue).toInt)
+      case (PgTypes.INT4, 1) => (IntegerType, p => ByteBuffer.wrap(p).getInt)
+      case (PgTypes.INT8, 0) =>
+        (LongType, p => integral(text(p), "bigint", Long.MinValue, Long.MaxValue))
+      case (PgTypes.INT8, 1) => (LongType, p => ByteBuffer.wrap(p).getLong)
+      case (PgTypes.FLOAT4, 0) => (FloatType, p => floatText(text(p), "real").toFloat)
+      case (PgTypes.FLOAT4, 1) => (FloatType, p => ByteBuffer.wrap(p).getFloat)
+      case (PgTypes.FLOAT8, 0) =>
+        (DoubleType, p => floatText(text(p), "double precision").toDouble)
+      case (PgTypes.FLOAT8, 1) => (DoubleType, p => ByteBuffer.wrap(p).getDouble)
+      case (PgTypes.NUMERIC, 0) => (DecimalType.SYSTEM_DEFAULT, p => {
         val s = text(p)
-        numeric(try BigDecimal(s.trim)
+        Decimal(try BigDecimal(s.trim)
           catch { case _: NumberFormatException => throw invalid("numeric", s) })
-      case (PgTypes.NUMERIC, 1) => p => numeric(BigDecimal(PgNumeric.fromBytes(p)))
-      case (PgTypes.VARCHAR | 25 | 705 | 1042, _) => // varchar/text/unknown/bpchar
-        p => Literal(UTF8String.fromBytes(p), StringType)
-      case (PgTypes.BYTEA, 0) => p => Literal(bytea(p), BinaryType)
-      case (PgTypes.BYTEA, 1) => p => Literal(p, BinaryType)
-      case (PgTypes.DATE, 0) => p =>
-        Literal(java.time.LocalDate.parse(text(p).trim).toEpochDay.toInt, DateType)
-      case (PgTypes.DATE, 1) => p =>
-        Literal(ByteBuffer.wrap(p).getInt + PgTypes.PG_EPOCH_DAYS, DateType)
-      case (PgTypes.TIMESTAMP, 0) => p =>
-        timestamp(LocalDateTime.parse(text(p).trim.replace(' ', 'T')), zone)
-      case (PgTypes.TIMESTAMP, 1) => p =>
-        timestamp(microsToLocalDateTime(ByteBuffer.wrap(p).getLong + PgTypes.PG_EPOCH_MICROS), zone)
+      })
+      case (PgTypes.NUMERIC, 1) =>
+        (DecimalType.SYSTEM_DEFAULT, p => Decimal(BigDecimal(PgNumeric.fromBytes(p))))
+      case (PgTypes.VARCHAR | 25 | 705 | 1042, _) => (StringType, asText) // varchar/text/unknown/bpchar
+      case (PgTypes.BYTEA, 0) => (BinaryType, bytea)
+      case (PgTypes.BYTEA, 1) => (BinaryType, p => p)
+      case (PgTypes.DATE, 0) =>
+        (DateType, p => java.time.LocalDate.parse(text(p).trim).toEpochDay.toInt)
+      case (PgTypes.DATE, 1) => (DateType, p => ByteBuffer.wrap(p).getInt + PgTypes.PG_EPOCH_DAYS)
+      case (PgTypes.TIMESTAMP, 0) =>
+        (TimestampType, p => timestamp(LocalDateTime.parse(text(p).trim.replace(' ', 'T')), zone))
+      case (PgTypes.TIMESTAMP, 1) => (TimestampType, p =>
+        timestamp(microsToLocalDateTime(ByteBuffer.wrap(p).getLong + PgTypes.PG_EPOCH_MICROS), zone))
       case (PgTypes.UNSPECIFIED, f) =>
         throw new IllegalArgumentException(s"Unspecified type unsupported: format=$f")
       case (o, f) =>
         throw new IllegalArgumentException(s"Cannot bind param: oid=$o, format=$f")
     }
     val width = PgTypes.typeLenOf(oid)
-    if (format == 1 && width > 0) p => {
+    if (format == 1 && width > 0) (dt, p => {
       if (p.length > width) throw new PgStateException("incorrect binary data format", "22P03")
       read(p)
-    } else read
+    }) else (dt, read)
   }
 
-  /** [[decode]], except that text it cannot take binds as VARCHAR for
-    * Spark's cast to read at execution: text for an oid with no decoder
-    * here, and date/timestamp text in a form `java.time` does not parse
-    * (Spark's cast accepts more, e.g. a zone offset).
+  /** The reader of a Bind parameter or COPY FROM field: [[reader]],
+    * except that text it cannot take reads as its UTF8String, for Spark's
+    * cast to read: text for an oid with no reader here (whose type is then
+    * StringType), and date/timestamp text in a form `java.time` does not
+    * parse (Spark's cast accepts more, e.g. a zone offset).
     */
-  def decodeOrText(param: Array[Byte], oid: Int, format: Int, zone: ZoneId): Literal =
-    try decode(param, oid, format, zone)
-    catch {
-      case _: IllegalArgumentException | _: java.time.DateTimeException if format == 0 =>
-        Literal(UTF8String.fromBytes(param), StringType)
+  def inputReader(oid: Int, format: Int, zone: ZoneId): (DataType, Reader) =
+    if (format != 0) reader(oid, format, zone)
+    else {
+      val (dt, read) =
+        try reader(oid, 0, zone) catch { case _: IllegalArgumentException => (StringType, asText) }
+      (dt, p => try read(p) catch {
+        case _: IllegalArgumentException | _: java.time.DateTimeException => asText(p)
+      })
     }
 
-  /** Bind parameter `n` (1-based): [[decodeOrText]], naming the parameter
+  private val asText: Reader = p => UTF8String.fromBytes(p)
+
+  /** A reader's values as Literals: a UTF8String binds as VARCHAR, a
+    * Decimal with its own precision and scale.
+    */
+  private def literal(r: (DataType, Reader)): Array[Byte] => Literal = p => r._2(p) match {
+    case s: UTF8String => Literal(s, StringType)
+    case d: Decimal => Literal(d, DecimalType(Math.max(d.precision, d.scale), d.scale))
+    case v => Literal(v, r._1)
+  }
+
+  /** Bind parameter `n` (1-based): [[inputReader]], naming the parameter
     * in PG's exec_bind_message wording when a binary value has bytes left
     * over. One too short is answered as 08P01 by the wire error writer.
     */
   def decodeBindParam(param: Array[Byte], oid: Int, format: Int, n: Int, zone: ZoneId): Literal =
-    try decodeOrText(param, oid, format, zone)
+    try literal(inputReader(oid, format, zone))(param)
     catch {
       case e: PgStateException if e.state == "22P03" =>
         throw new PgStateException(s"${e.getMessage} in bind parameter $n", "22P03")
@@ -112,16 +130,11 @@ object ParamCodec {
   private def invalid(pgType: String, s: String) =
     new PgStateException(s"""invalid input syntax for type $pgType: "$s"""", "22P02")
 
-  private def numeric(v: BigDecimal): Literal = {
-    val d = Decimal(v)
-    Literal(d, DecimalType(Math.max(d.precision, d.scale), d.scale))
-  }
-
   /** A wall-clock time as the instant it names in `zone`; a DST-gap time
     * moves forward by the gap, as Spark's cast moves it.
     */
-  private def timestamp(wall: LocalDateTime, zone: ZoneId): Literal =
-    Literal(instantToMicros(wall.atZone(zone).toInstant), TimestampType)
+  private def timestamp(wall: LocalDateTime, zone: ZoneId): Long =
+    instantToMicros(wall.atZone(zone).toInstant)
 
   /** PG's boolin: a prefix of true/false/yes/no, on/off, 1/0, any case. */
   private def bool(s: String): Boolean = {
@@ -156,13 +169,16 @@ object ParamCodec {
     }
   }
 
+  private val IntegerSyntax = Pattern.compile("[+-]?[0-9]+")
+  private val FloatSyntax = Pattern.compile("[+-]?([0-9]+\\.?[0-9]*|\\.[0-9]+)(e[+-]?[0-9]+)?")
+
   private def integral(s: String, pgType: String, min: Long, max: Long): Long = {
     val t = s.trim
     def outOfRange =
       new PgStateException(s"""value "$s" is out of range for type $pgType""", "22003")
     val v = try t.toLong catch {
       case _: NumberFormatException =>
-        throw (if (t.matches("[+-]?[0-9]+")) outOfRange else invalid(pgType, s))
+        throw (if (IntegerSyntax.matcher(t).matches) outOfRange else invalid(pgType, s))
     }
     if (v < min || v > max) throw outOfRange
     v
@@ -175,7 +191,7 @@ object ParamCodec {
     case "nan" => "NaN"
     case "infinity" | "+infinity" | "inf" | "+inf" => "Infinity"
     case "-infinity" | "-inf" => "-Infinity"
-    case t if t.matches("[+-]?([0-9]+\\.?[0-9]*|\\.[0-9]+)(e[+-]?[0-9]+)?") => t
+    case t if FloatSyntax.matcher(t).matches => t
     case _ => throw invalid(pgType, s)
   }
 }

@@ -49,6 +49,13 @@ class EntryPointGateSuite extends AnyFunSuite {
     assert(hits.isEmpty, s"the pg_catalog relations are resolved by PgParserInterface: $hits")
   }
 
+  test("the wire server converts no values through Spark beside ParamCodec") {
+    val hits = Seq("CatalystTypeConverters", "createDataFrame", ".cast(").flatMap(n =>
+      sources.collect { case (p, text) if p.startsWith(root.resolve("graft/pg/server")) &&
+        text.contains(n) => s"${p.getFileName}: $n" })
+    assert(hits.isEmpty, s"decode PG values through graft.pg.wire.ParamCodec: $hits")
+  }
+
   test("SPARK_GRAFT_CPUS is read only in LocalSpark") {
     val outside = filesMatching("\"SPARK_GRAFT_CPUS\"") - "LocalSpark.scala"
     assert(outside.isEmpty, s"use graft.LocalSpark.cpus instead: $outside")

@@ -310,7 +310,8 @@ class RowCodecSpec extends AnyFunSuite {
       ("22P02", """invalid input syntax for type numeric: "1,5""""))
     // text the codec cannot take binds as VARCHAR only for oids it has no
     // decoder for and for date/timestamp forms java.time does not read
-    def orText(s: String, oid: Int) = ParamCodec.decodeOrText(s.getBytes(UTF_8), oid, 0, ZoneOffset.UTC)
+    def orText(s: String, oid: Int) =
+      ParamCodec.decodeBindParam(s.getBytes(UTF_8), oid, 0, 1, ZoneOffset.UTC)
     assert(orText("2024-1-5", PgTypes.DATE).dataType === StringType)
     assert(orText("{1,2}", PgTypes.INT8_ARRAY).dataType === StringType)
     intercept[graft.pg.server.PgStateException](orText("abc", PgTypes.INT8))
@@ -426,7 +427,7 @@ class RowCodecSpec extends AnyFunSuite {
       DoubleType, DecimalType(10, 2), StringType, BinaryType, DateType, TimestampType,
       TimestampNTZType, CalendarIntervalType, DayTimeIntervalType(), YearMonthIntervalType(),
       ArrayType(IntegerType), MapType(StringType, IntegerType), new StructType().add("x", "int"))
-      .filter(dt => Seq(0, 1).forall(f => Try(ParamCodec.decoder(PgTypes.oidOf(dt), f, utc)).isSuccess))
+      .filter(dt => Seq(0, 1).forall(f => Try(ParamCodec.reader(PgTypes.oidOf(dt), f, utc)).isSuccess))
     assert(decodable.map(_.getClass) === CodecCases.map(_._1.getClass),
       "every decodable type has a round-trip case")
     def same(a: Any, b: Any): Boolean = (a, b) match {
