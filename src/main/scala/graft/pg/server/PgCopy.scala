@@ -2,17 +2,17 @@ package graft.pg.server
 
 import java.nio.{BufferUnderflowException, ByteBuffer}
 import java.nio.charset.StandardCharsets.UTF_8
+import java.util.Arrays
 
 import scala.collection.mutable.ArrayBuffer
 
-import graft.pg.wire.{ParamCodec, PgTypes}
+import graft.pg.wire.ParamCodec
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.{AttributeReference, BoundReference, Cast, EvalMode, GenericInternalRow}
+import org.apache.spark.sql.catalyst.expressions.{AttributeReference, GenericInternalRow}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.graft.Internals
-import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.sql.types.StructType
 
 /** `COPY` statement support. The reference decodes the copy-subprotocol
   * messages ('d'/'c'/'f') but throws "Not supported yet"
@@ -175,6 +175,9 @@ object PgCopy {
         "COPY binary format cannot be combined with csv/delimiter/header/null options")
     // PG csv mode defaults to ',' (text mode to tab)
     if (o.csv && !delimSet) o = o.copy(delimiter = ',')
+    // the line parsers split UTF-8 bytes, as PG's do
+    if (o.delimiter > 0x7F)
+      throw new IllegalArgumentException("COPY delimiter must be a single one-byte character")
     o
   }
 
@@ -225,35 +228,11 @@ object PgCopy {
 
     /** the table-column position of each COPY column */
     private val slots: Array[Int] = colNames.map(targetSchema.fieldIndex).toArray
-    private val decoders: Array[Array[Byte] => Any] =
-      colNames.map(c => fieldDecoder(targetSchema(c).dataType)).toArray
+    private val decoders: Array[ParamCodec.Reader] = colNames.map(c => ParamCodec.columnReader(
+      targetSchema(c).dataType, if (stmt.opts.binary) 1 else 0, zone)).toArray
     private val output = targetSchema.map(f => AttributeReference(f.name, f.dataType)())
-
-    /** One column's decoder: ParamCodec's reader for the column's oid,
-      * text falling back as a Bind parameter does
-      * ([[ParamCodec.inputReader]]). Every value goes through Spark's ANSI
-      * cast, the one an INSERT's store assignment applies, when the
-      * reader's type is not the column's (a decimal of its own precision,
-      * text with no reader); otherwise only a fallback string does. A
-      * TIMESTAMP_NTZ column reads in UTC, where a wall-clock time is its
-      * own instant, so its micros stay exact.
-      */
-    private def fieldDecoder(dt: DataType): Array[Byte] => Any = {
-      def unsupported = new IllegalArgumentException(s"COPY FROM unsupported for column type $dt")
-      val ntz = dt == TimestampNTZType
-      val (readType, read) = try ParamCodec.inputReader(PgTypes.oidOf(dt),
-          if (stmt.opts.binary) 1 else 0, if (ntz) java.time.ZoneOffset.UTC else zone)
-        catch { case _: IllegalArgumentException => throw unsupported }
-      val castAll = readType != dt && !ntz
-      val cast = Cast(BoundReference(0, if (castAll) readType else StringType, nullable = true),
-        dt, Some(zone.getId), EvalMode.ANSI)
-      if (cast.checkInputDataTypes().isFailure) throw unsupported
-      p => read(p) match {
-        case v if castAll || readType != StringType && v.isInstanceOf[UTF8String] =>
-          cast.eval(new GenericInternalRow(Array(v)))
-        case v => v
-      }
-    }
+    private val delim = stmt.opts.delimiter.toByte
+    private val nullBytes = stmt.opts.nullStr.getBytes(UTF_8)
 
     private var carry = Array.emptyByteArray
     private var inQuotes = false
@@ -280,12 +259,12 @@ object PgCopy {
         val b = buf(i)
         if (stmt.opts.csv && b == '"') inQuotes = !inQuotes
         if (b == '\n' && !inQuotes) {
-          handleLine(new String(buf, start, i - start, UTF_8))
+          handleLine(buf, start, i)
           start = i + 1
         }
         i += 1
       }
-      carry = java.util.Arrays.copyOfRange(buf, start, buf.length)
+      carry = Arrays.copyOfRange(buf, start, buf.length)
     }
 
     /** Incremental binary-frame parser: CopyData boundaries carry no
@@ -304,7 +283,7 @@ object PgCopy {
         }
         if (fields != null) addRow(fields)
       }
-      carry = java.util.Arrays.copyOfRange(bb.array, bb.position(), bb.limit())
+      carry = Arrays.copyOfRange(bb.array, bb.position(), bb.limit())
     }
 
     /** The file header or the trailer (null), or one tuple's fields (null
@@ -316,7 +295,7 @@ object PgCopy {
         val b = new Array[Byte](n); bb.get(b); b
       }
       if (!binHeaderDone) {
-        if (!java.util.Arrays.equals(bytes(11), BinaryCopy.Signature))
+        if (!Arrays.equals(bytes(11), BinaryCopy.Signature))
           throw badFormat("COPY file signature not recognized")
         bb.getInt // flags: only bit 16 (OIDs) is defined; we emit none and
                   // accept any, like PG's recv which checks only the bit range
@@ -353,24 +332,28 @@ object PgCopy {
       failure.foreach(throw _)
       if (stmt.opts.binary) {
         if (!sawEndMarker) throw badFormat("unexpected EOF in COPY data")
-      } else if (carry.nonEmpty && !sawEndMarker) handleLine(new String(carry, UTF_8))
+      } else if (carry.nonEmpty && !sawEndMarker) handleLine(carry, 0, carry.length)
       flush()
       inserted
     }
 
-    private def handleLine(line0: String): Unit = {
-      val line = if (line0.endsWith("\r")) line0.dropRight(1) else line0
+    /** the line `buf(from until end)`, less a trailing CR */
+    private def handleLine(buf: Array[Byte], from: Int, end: Int): Unit = {
+      val until = if (end > from && buf(end - 1) == '\r') end - 1 else end
       if (sawEndMarker) return
-      if (!stmt.opts.csv && line == "\\.") { sawEndMarker = true; return }
+      if (!stmt.opts.csv && until - from == 2 && buf(from) == '\\' && buf(from + 1) == '.') {
+        sawEndMarker = true; return
+      }
       if (headerPending) { headerPending = false; return }
-      if (line.isEmpty && stmt.opts.csv) return
+      if (until == from && stmt.opts.csv) return
+      val line = Arrays.copyOfRange(buf, from, until)
       val fields =
-        if (stmt.opts.csv) parseCsvLine(line, stmt.opts.delimiter, stmt.opts.nullStr)
-        else parseTextLine(line, stmt.opts.delimiter, stmt.opts.nullStr)
+        if (stmt.opts.csv) parseCsvLine(line, delim, nullBytes)
+        else parseTextLine(line, delim, nullBytes)
       if (fields.length > nCols) throw badFormat("extra data after last expected column")
       if (fields.length < nCols)
         throw badFormat(s"""missing data for column "${colNames(fields.length)}"""")
-      addRow(fields.map(f => if (f == null) null else f.getBytes(UTF_8)))
+      addRow(fields)
     }
 
     private def flush(): Unit = if (rows.nonEmpty) {
@@ -384,76 +367,62 @@ object PgCopy {
   /** PG's bad_copy_file_format (copyfromparse.c) */
   private def badFormat(msg: String) = new PgStateException(msg, "22P04")
 
-  /** PG text-format field split + unescape. PG compares the RAW field text
-    * (escapes intact) against the NULL string — the default `\\N` — before
-    * unescaping, so a literal backslash-N value (`\\\\N` on the wire) is the
-    * two-character string, not NULL.
+  /** PG text-format field split + unescape, on the line's UTF-8 bytes (the
+    * delimiter and escapes are ASCII, which no multi-byte character
+    * contains). PG compares the RAW field (escapes intact) against the NULL
+    * string — the default `\\N` — before unescaping, so a literal
+    * backslash-N value (`\\\\N` on the wire) is the two-character string,
+    * not NULL.
     */
-  private[server] def parseTextLine(line: String, delim: Char, nullStr: String): Array[String] = {
-    val raws = ArrayBuffer.empty[String]
+  private[server] def parseTextLine(line: Array[Byte], delim: Byte,
+      nullStr: Array[Byte]): Array[Array[Byte]] = {
+    val fields = ArrayBuffer.empty[Array[Byte]]
+    val field = new Array[Byte](line.length) // the current field, unescaped
+    var n = 0
     var start = 0
     var i = 0
-    while (i < line.length) {
-      val c = line.charAt(i)
-      if (c == '\\' && i + 1 < line.length) i += 2 // escaped char never splits
-      else if (c == delim) { raws += line.substring(start, i); start = i + 1; i += 1 }
-      else i += 1
+    while (i <= line.length) {
+      if (i == line.length || line(i) == delim) {
+        fields += (if (Arrays.equals(line, start, i, nullStr, 0, nullStr.length)) null
+          else Arrays.copyOf(field, n))
+        n = 0; start = i + 1; i += 1
+      } else if (line(i) == '\\' && i + 1 < line.length) { // an escape never splits
+        val k = "ntrbfv".indexOf(line(i + 1))
+        // "any other backslashed character is its literal self" (PG)
+        field(n) = if (k < 0) line(i + 1) else "\n\t\r\b\f\u000b".charAt(k).toByte
+        n += 1; i += 2
+      } else { field(n) = line(i); n += 1; i += 1 }
     }
-    raws += line.substring(start)
-    raws.map { raw =>
-      if (raw == nullStr) null
-      else if (raw.indexOf('\\') < 0) raw
-      else {
-        val sb = new StringBuilder(raw.length)
-        var j = 0
-        while (j < raw.length) {
-          val c = raw.charAt(j)
-          if (c == '\\' && j + 1 < raw.length) {
-            raw.charAt(j + 1) match {
-              case 'n' => sb.append('\n')
-              case 't' => sb.append('\t')
-              case 'r' => sb.append('\r')
-              case 'b' => sb.append('\b')
-              case 'f' => sb.append('\f')
-              case 'v' => sb.append('\u000b')
-              // "any other backslashed character is its literal self" (PG)
-              case other => sb.append(other)
-            }
-            j += 2
-          } else { sb.append(c); j += 1 }
-        }
-        sb.toString
-      }
-    }.toArray
+    fields.toArray
   }
 
-  /** csv field split honoring quotes and "" escapes; an unquoted field equal
-    * to the NULL string decodes as SQL NULL.
+  /** csv field split honoring quotes and "" escapes, on the line's UTF-8
+    * bytes; an unquoted field equal to the NULL string decodes as SQL NULL.
     */
-  private[server] def parseCsvLine(line: String, delim: Char, nullStr: String): Array[String] = {
-    val out = ArrayBuffer.empty[String]
-    val cur = new StringBuilder
+  private[server] def parseCsvLine(line: Array[Byte], delim: Byte,
+      nullStr: Array[Byte]): Array[Array[Byte]] = {
+    val fields = ArrayBuffer.empty[Array[Byte]]
+    val field = new Array[Byte](line.length)
+    var n = 0
     var quoted = false // current field was quoted (disables null match)
     var inQ = false
-    var i = 0
     def emit(): Unit = {
-      val s = cur.toString
-      out += (if (!quoted && s == nullStr) null else s)
-      cur.clear(); quoted = false
+      fields += (if (!quoted && Arrays.equals(field, 0, n, nullStr, 0, nullStr.length)) null
+        else Arrays.copyOf(field, n))
+      n = 0; quoted = false
     }
+    var i = 0
     while (i < line.length) {
-      val c = line.charAt(i)
-      if (inQ) {
-        if (c == '"') {
-          if (i + 1 < line.length && line.charAt(i + 1) == '"') { cur.append('"'); i += 2 }
-          else { inQ = false; i += 1 }
-        } else { cur.append(c); i += 1 }
-      } else if (c == '"') { inQ = true; quoted = true; i += 1 }
-      else if (c == delim) { emit(); i += 1 }
-      else { cur.append(c); i += 1 }
+      val c = line(i)
+      if (inQ && c == '"' && i + 1 < line.length && line(i + 1) == '"') {
+        field(n) = c; n += 1; i += 1
+      } else if (c == '"') { inQ = !inQ; quoted = true }
+      else if (c == delim && !inQ) emit()
+      else { field(n) = c; n += 1 }
+      i += 1
     }
     emit()
-    out.toArray
+    fields.toArray
   }
 
   // ---- copy-out escaping ----

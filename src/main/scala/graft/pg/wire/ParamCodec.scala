@@ -7,7 +7,7 @@ import java.util.regex.Pattern
 
 import graft.pg.server.PgStateException
 
-import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, EvalMode, GenericInternalRow, Literal}
 import org.apache.spark.sql.catalyst.util.DateTimeUtils.{instantToMicros, microsToLocalDateTime}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -22,7 +22,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * Surrounding whitespace is ignored for every non-string type. A binary
   * value of a fixed-width type with bytes left over fails 22P03; one too
   * short reads past its end. An oid with no decoder here throws an
-  * `IllegalArgumentException`; see [[inputReader]].
+  * `IllegalArgumentException`; see [[inputReader]] and [[columnReader]].
   */
 object ParamCodec {
 
@@ -102,6 +102,39 @@ object ParamCodec {
         case _: IllegalArgumentException | _: java.time.DateTimeException => asText(p)
       })
     }
+
+  /** The reader of a COPY FROM field into a column of type `dt`:
+    * [[inputReader]] for the column's oid, its value fitted to `dt` as an
+    * INSERT's store assignment would. A decimal is rounded to the column's
+    * precision and scale (22003 on overflow); a value of another type (a
+    * tinyint, an interval's text, a collated string) or a fallback string
+    * goes through Spark's ANSI cast, resolved here once. A TIMESTAMP_NTZ
+    * column reads in UTC, where a wall-clock time is its own instant, so
+    * its micros stay exact. Throws for a type with no reader or cast.
+    */
+  def columnReader(dt: DataType, format: Int, zone: ZoneId): Reader = {
+    def unsupported = new IllegalArgumentException(s"COPY FROM unsupported for column type $dt")
+    val ntz = dt == TimestampNTZType
+    val (readType, read) = try inputReader(PgTypes.oidOf(dt), format,
+        if (ntz) ZoneOffset.UTC else zone) catch { case _: IllegalArgumentException => throw unsupported }
+    dt match {
+      case d: DecimalType => p => { // a new Decimal of the value's own precision
+        val v = read(p).asInstanceOf[Decimal]
+        if (v.changePrecision(d.precision, d.scale)) v
+        else throw new PgStateException("numeric field overflow", "22003")
+      }
+      case _ =>
+        val castAll = readType != dt && !ntz
+        val cast = Cast(BoundReference(0, if (castAll) readType else StringType, nullable = true),
+          dt, Some(zone.getId), EvalMode.ANSI)
+        if (cast.checkInputDataTypes().isFailure) throw unsupported
+        p => read(p) match {
+          case v if castAll || readType != StringType && v.isInstanceOf[UTF8String] =>
+            cast.eval(new GenericInternalRow(Array(v)))
+          case v => v
+        }
+    }
+  }
 
   private val asText: Reader = p => UTF8String.fromBytes(p)
 

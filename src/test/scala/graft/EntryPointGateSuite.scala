@@ -50,7 +50,7 @@ class EntryPointGateSuite extends AnyFunSuite {
   }
 
   test("the wire server converts no values through Spark beside ParamCodec") {
-    val hits = Seq("CatalystTypeConverters", "createDataFrame", ".cast(").flatMap(n =>
+    val hits = Seq("CatalystTypeConverters", "createDataFrame", ".cast(", "Cast(").flatMap(n =>
       sources.collect { case (p, text) if p.startsWith(root.resolve("graft/pg/server")) &&
         text.contains(n) => s"${p.getFileName}: $n" })
     assert(hits.isEmpty, s"decode PG values through graft.pg.wire.ParamCodec: $hits")

@@ -175,9 +175,11 @@ class PgCopySuite extends AnyFunSuite with BeforeAndAfterAll {
   test("binary copy-in reads fields as PG's recv functions do") {
     val spark = TestSpark.spark
     spark.sql("DROP TABLE IF EXISTS copy_recv")
-    spark.sql("CREATE TABLE copy_recv (k INT, b BOOLEAN, raw BINARY, ntz TIMESTAMP_NTZ) USING parquet")
+    spark.sql("CREATE TABLE copy_recv (k INT, b BOOLEAN, raw BINARY, ntz TIMESTAMP_NTZ, " +
+      "n DECIMAL(38,18)) USING parquet")
     def i4(v: Int) = java.nio.ByteBuffer.allocate(4).putInt(v).array()
     def i8(v: Long) = java.nio.ByteBuffer.allocate(8).putLong(v).array()
+    def numeric(s: String) = graft.pg.wire.PgNumeric.toBytes(new java.math.BigDecimal(s))
     def copy(tuples: Seq[Array[Byte]]*): Long = {
       val st = new PgCopy.CopyInSession(spark, PgCopy.CopyIn("copy_recv", Nil,
         PgCopy.CopyOptions(binary = true)), java.time.ZoneId.of("America/New_York"))
@@ -186,16 +188,23 @@ class PgCopySuite extends AnyFunSuite with BeforeAndAfterAll {
     }
     try {
       // an 8-byte value for an INT column is not an int4
-      val e = intercept[PgStateException](copy(Seq(i8(0x0000000100000005L), null, null, null)))
+      val e = intercept[PgStateException](copy(Seq(i8(0x0000000100000005L), null, null, null, null)))
       assert((e.state, e.getMessage) === ("22P03", "incorrect binary data format"))
+      // a numeric with more integer digits than DECIMAL(38,18) holds
+      val wide = intercept[PgStateException](copy(Seq(i4(0), null, null, null,
+        numeric("100000000000000000000"))))
+      assert((wide.state, wide.getMessage) === ("22003", "numeric field overflow"))
       // boolrecv: any non-zero byte is true; bytea is its bytes; a
-      // TIMESTAMP_NTZ in a New York DST gap keeps its wall clock
+      // TIMESTAMP_NTZ in a New York DST gap keeps its wall clock; a
+      // numeric rounds half up to the column's scale
       val gap = java.time.LocalDateTime.parse("2024-03-10T02:30:00")
       val wall = gap.toEpochSecond(java.time.ZoneOffset.UTC) * 1000000L
-      assert(copy(Seq(i4(1), Array[Byte](2), Array[Byte](0, -1), i8(wall - 946684800000000L))) === 1L)
+      assert(copy(Seq(i4(1), Array[Byte](2), Array[Byte](0, -1), i8(wall - 946684800000000L),
+        numeric("0.1234567890123456789"))) === 1L)
       val got = spark.table("copy_recv").collect().toSeq
       assert(got.map(r => (r.getInt(0), r.getBoolean(1), r.getAs[Array[Byte]](2).toSeq,
-        r.getAs[java.time.LocalDateTime](3))) === Seq((1, true, Seq[Byte](0, -1), gap)))
+        r.getAs[java.time.LocalDateTime](3), r.getDecimal(4).toPlainString)) ===
+        Seq((1, true, Seq[Byte](0, -1), gap, "0.123456789012345679")))
     } finally spark.sql("DROP TABLE IF EXISTS copy_recv")
   }
 
@@ -225,13 +234,22 @@ class PgCopySuite extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("text/csv line parsers: null-before-unescape semantics") {
-    assert(PgCopy.parseTextLine("a\t\\N\tb", '\t', "\\N").toSeq === Seq("a", null, "b"))
+    /** `parse` over UTF-8 `line` and NULL string, fields decoded back */
+    def split(parse: (Array[Byte], Byte, Array[Byte]) => Array[Array[Byte]], delim: Char,
+        nullStr: String)(line: String): Seq[String] =
+      parse(line.getBytes(UTF_8), delim.toByte, nullStr.getBytes(UTF_8)).toSeq
+        .map(f => if (f == null) null else new String(f, UTF_8))
+    val text = split(PgCopy.parseTextLine, '\t', "\\N") _
+    val csv = split(PgCopy.parseCsvLine, ',', "") _
+    assert(text("a\t\\N\tb") === Seq("a", null, "b"))
     // literal backslash-N survives as the two-char string
-    assert(PgCopy.parseTextLine("\\\\N", '\t', "\\N").toSeq === Seq("\\N"))
-    assert(PgCopy.parseTextLine("x\\ty", '\t', "\\N").toSeq === Seq("x\ty"))
-    assert(PgCopy.parseCsvLine("a,,\"\"", ',', "").toSeq === Seq("a", null, ""))
-    assert(PgCopy.parseCsvLine("\"a,b\",\"c\"\"d\"", ',', "").toSeq ===
-      Seq("a,b", "c\"d"))
+    assert(text("\\\\N") === Seq("\\N"))
+    assert(text("x\\ty") === Seq("x\ty"))
+    assert(csv("a,,\"\"") === Seq("a", null, ""))
+    assert(csv("\"a,b\",\"c\"\"d\"") === Seq("a,b", "c\"d"))
+    // a multi-byte character is split and unescaped whole
+    assert(text("é\\é\t\\N") === Seq("éé", null))
+    assert(csv("\"é,\"\"\",ü") === Seq("é,\"", "ü"))
   }
 
   /** `sql` (a COPY FROM STDIN) over `c` with `data` as one CopyData frame;
@@ -296,6 +314,9 @@ class PgCopySuite extends AnyFunSuite with BeforeAndAfterAll {
       ("DECIMAL(10,2)", Seq("1.005", " 3 ", "-0.004", "12345678.994", null) ++
         some(2)(BigDecimal(rnd.nextLong() % 10000000000L, 3)) ++
         Seq("99999999.995", "123456789", "abc", "NaN"), Nil),
+      ("DECIMAL(38,18)", Seq("1.5", "0.1234567890123456789", "-0.0000000000000000005",
+        "12345678901234567890.123456789012345678", null) ++
+        Seq("1e20", "100000000000000000000", "-99999999999999999999.9999999999999999995"), Nil),
       ("STRING", Seq("plain", "", " padded ", "tab\there", "say \"hi\", ok", "é", "\\N",
         null), Nil),
       ("BINARY", Seq("\\x0102ff", "\\x 01 02", "abc\\\\def", "\\001\\377", "plain", "", null,
