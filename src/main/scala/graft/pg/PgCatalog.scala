@@ -7,13 +7,11 @@ import graft.pg.wire.PgTypes
 
 import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
-import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
 import org.apache.spark.sql.catalyst.catalog.{CatalogTable, CatalogTableType}
-import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, SubqueryAlias, UnresolvedWith}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, SubqueryAlias}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, TableCapability}
 import org.apache.spark.sql.connector.read.{LocalScan, ScanBuilder, Statistics,
   SupportsReportStatistics}
-import org.apache.spark.sql.execution.command.CreateViewCommand
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.graft.Internals
 import org.apache.spark.sql.types.StructType
@@ -23,7 +21,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * the 29-row pg_type seed ([[PgTypes.table]]) among them (reference
   * catalog.scala:87-118,280-379). Each name is a relation that
   * [[PgParserInterface]] puts in place of the table name after parsing
-  * ([[substitute]]); nothing is registered in the session. Static tables
+  * ([[relation]]); nothing is registered in the session. Static tables
   * hold rows built once per JVM; live ones (pg_class, pg_attribute,
   * information_schema, pg_stat_*, pg_settings) compute theirs when a
   * statement using them is planned, for the session that plans it.
@@ -253,40 +251,10 @@ object PgCatalog {
       "short_desc STRING, context STRING, source STRING")(PgGuc.settingsRows)
   ).map(t => t.name -> t).toMap
 
-  /** `plan` with each unqualified catalog name replaced by its relation,
-    * except a name some WITH in the statement binds. A temp view over a
-    * catalog relation keeps its analyzed plan instead of its text: Spark
-    * re-parses a stored view text with the session's own parser, which does
-    * not know these names.
-    */
-  def substitute(plan: LogicalPlan): LogicalPlan = {
-    val bound = cteNames(plan)
-    var found = false
-    def sub(p: LogicalPlan): LogicalPlan = p.transformDownWithSubqueries {
-      // CTE bodies are inner children, which the walk does not enter
-      case w: UnresolvedWith =>
-        w.copy(cteRelations = w.cteRelations.map { case (n, rel, maxDepth) =>
-          (n, sub(rel).asInstanceOf[SubqueryAlias], maxDepth)
-        })
-      case u: UnresolvedRelation if u.multipartIdentifier.length == 1 =>
-        val name = u.multipartIdentifier.head
-        relations.get(name.toLowerCase).filterNot(_ => bound(name.toLowerCase)) match {
-          case Some(t) =>
-            found = true
-            SubqueryAlias(name, DataSourceV2Relation.create(t, None, None))
-          case None => u
-        }
-    }
-    sub(plan) match {
-      case v: CreateViewCommand if found => v.copy(originalText = None)
-      case out => out
-    }
-  }
-
-  private def cteNames(plan: LogicalPlan): Set[String] =
-    plan.collectWithSubqueries { case w: UnresolvedWith =>
-      w.cteRelations.flatMap { case (n, rel, _) => cteNames(rel) + n.toLowerCase }
-    }.flatten.toSet
+  /** The relation of catalog table `name` (any case), under that name. */
+  def relation(name: String): Option[LogicalPlan] =
+    relations.get(name.toLowerCase)
+      .map(t => SubqueryAlias(name, DataSourceV2Relation.create(t, None, None)))
 
   /** Make this session ready for PG clients: the system functions. The
     * catalog relations need nothing per session.

@@ -7,16 +7,19 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, Codegen
 import org.apache.spark.sql.execution.command.LeafRunnableCommand
 import org.apache.spark.sql.types._
 
-/** `$n` bind-parameter placeholder: a resolved NullType leaf so that a
-  * prepared statement analyzes before parameters arrive (mirrors the
-  * reference's ParameterPlaceHolder,
-  * catalyst/expressions/predicates.scala:26-34).
+/** `$n`, from the parser to Bind: a resolved leaf, so a prepared
+  * statement analyzes before its values arrive (the reference's
+  * ParameterPlaceHolder, catalyst/expressions/predicates.scala:26-34).
+  * The wire server types it at Parse with the Catalyst type of its
+  * declared OID; untyped (NullType), it takes the type of the value bound
+  * to it ([[PgDialect.bind]]).
   */
-case class ParameterPlaceHolder(id: Int) extends LeafExpression with Unevaluable {
+case class ParameterPlaceHolder(id: Int, dataType: DataType = NullType)
+    extends LeafExpression with Unevaluable {
   override lazy val resolved: Boolean = true
-  override def dataType: DataType = NullType
   override def nullable: Boolean = true
   override def toString: String = s"$$$id"
+  override def sql: String = toString
 }
 
 /** A bound `$n` value. To every Catalyst rule and to Parquet filter

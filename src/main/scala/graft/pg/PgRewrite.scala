@@ -10,12 +10,15 @@ import scala.collection.mutable
   * stock parser. This is that layer: a quote/comment-aware scan that rewrites
   * only the dialect tokens and leaves everything else to Spark's parser:
   *
-  *   - `$n`                         → `pg_param(n)`   (bind parameter)
+  *   - `$n`                         → `pg_param(n)`   (bind parameter;
+  *                                      [[PgParserInterface]] turns the call
+  *                                      into a `ParameterPlaceHolder`)
   *   - `x ~ 'pat'` / `x !~ 'pat'`   → `x RLIKE 'pat'` / `x NOT RLIKE 'pat'`
   *   - `::text`                     → `::string`      (`::` cast is native)
   *   - `generate_series(a,b[,s]) [AS t[(c)]]`
   *        → `(SELECT id AS c FROM range(a, (b)+1[, s])) AS t` (FROM position)
-  *   - `substring(x from a [for b])`→ `substring(x, a[, b])`
+  *
+  * `substring(x FROM a [FOR b])` needs no rewrite: Spark's grammar has it.
   */
 object PgRewrite {
 
@@ -164,31 +167,6 @@ object PgRewrite {
       parts.toSeq
     }
 
-    /** Find a top-level keyword (surrounded by non-ident chars) in `s`;
-      * returns index or -1.
-      */
-    def findTopLevelWord(s: String, word: String): Int = {
-      var depth = 0; var j = 0; var inStr = false
-      while (j < s.length) {
-        val c = s.charAt(j)
-        if (inStr) { if (c == '\'') inStr = false; j += 1 }
-        else c match {
-          case '\'' => inStr = true; j += 1
-          case '(' => depth += 1; j += 1
-          case ')' => depth -= 1; j += 1
-          case _ =>
-            if (depth == 0 && c.isLetter &&
-              (j == 0 || !isIdentChar(s.charAt(j - 1)))) {
-              var k = j
-              while (k < s.length && isIdentChar(s.charAt(k))) k += 1
-              if (s.substring(j, k).equalsIgnoreCase(word)) return j
-              j = k
-            } else j += 1
-        }
-      }
-      -1
-    }
-
     def skipWs(from: Int): Int = {
       var j = from
       while (j < n && sql.charAt(j).isWhitespace) j += 1
@@ -263,25 +241,6 @@ object PgRewrite {
         }
       out.append(s"($body)")
       alias.foreach(a => out.append(s" AS $a"))
-    }
-
-    def handleSubstring(): Unit = {
-      val inner = scanParens()
-      val fromIdx = findTopLevelWord(inner, "from")
-      if (fromIdx < 0) {
-        out.append("substring(").append(PgRewrite(inner)).append(")")
-      } else {
-        val subject = inner.substring(0, fromIdx)
-        val rest = inner.substring(fromIdx + 4)
-        val forIdx = findTopLevelWord(rest, "for")
-        val (startE, lenE) =
-          if (forIdx < 0) (rest, None)
-          else (rest.substring(0, forIdx), Some(rest.substring(forIdx + 3)))
-        out.append("substring(").append(PgRewrite(subject.trim))
-          .append(", ").append(PgRewrite(startE.trim))
-        lenE.foreach(l => out.append(", ").append(PgRewrite(l.trim)))
-        out.append(")")
-      }
     }
 
     /** Scan a balanced `[...]` starting at `sql(i) == '['`; returns the inner
@@ -417,9 +376,6 @@ object PgRewrite {
           } else if (word.equalsIgnoreCase("generate_series") && isCall) {
             i = afterWs
             handleGenerateSeries()
-          } else if (word.equalsIgnoreCase("substring") && isCall) {
-            i = afterWs
-            handleSubstring()
           } else if (word.equalsIgnoreCase("pg_catalog") && j < n && sql.charAt(j) == '.') {
             // strip the pg_catalog schema qualifier: our catalog relations
             // and system functions resolve unqualified (reference resolves
@@ -433,7 +389,7 @@ object PgRewrite {
               i = j + 1
             } else {
               // information_schema.X → the catalog relation
-              // information_schema_X (PgCatalog.substitute resolves it; a
+              // information_schema_X (PgParserInterface resolves it; a
               // fused name avoids claiming generic unqualified names like
               // `tables`/`columns`)
               out.append("information_schema_")

@@ -369,10 +369,12 @@ object PgCopy {
 
   /** PG text-format field split + unescape, on the line's UTF-8 bytes (the
     * delimiter and escapes are ASCII, which no multi-byte character
-    * contains). PG compares the RAW field (escapes intact) against the NULL
-    * string — the default `\\N` — before unescaping, so a literal
-    * backslash-N value (`\\\\N` on the wire) is the two-character string,
-    * not NULL.
+    * contains), as PG's CopyReadAttributesText: `\n`-style letters, `\`
+    * and one to three octal digits or `\x` and one or two hex digits (one
+    * byte), any other escaped character itself. PG compares the RAW field
+    * (escapes intact) against the NULL string — the default `\\N` —
+    * before unescaping, so a literal backslash-N value (`\\\\N` on the
+    * wire) is the two-character string, not NULL.
     */
   private[server] def parseTextLine(line: Array[Byte], delim: Byte,
       nullStr: Array[Byte]): Array[Array[Byte]] = {
@@ -387,10 +389,27 @@ object PgCopy {
           else Arrays.copyOf(field, n))
         n = 0; start = i + 1; i += 1
       } else if (line(i) == '\\' && i + 1 < line.length) { // an escape never splits
-        val k = "ntrbfv".indexOf(line(i + 1))
-        // "any other backslashed character is its literal self" (PG)
-        field(n) = if (k < 0) line(i + 1) else "\n\t\r\b\f\u000b".charAt(k).toByte
-        n += 1; i += 2
+        val c = line(i + 1)
+        val radix =
+          if (c >= '0' && c <= '7') 8
+          else if (c == 'x' && i + 2 < line.length && Character.digit(line(i + 2), 16) >= 0) 16
+          else 0
+        if (radix == 0) {
+          val k = "ntrbfv".indexOf(c)
+          // "any other backslashed character is its literal self" (PG)
+          field(n) = if (k < 0) c else "\n\t\r\b\f\u000b".charAt(k).toByte
+          i += 2
+        } else { // up to three octal or two hex digits name one byte
+          val from = if (radix == 8) i + 1 else i + 2
+          val end = math.min(line.length, from + (if (radix == 8) 3 else 2))
+          var v = 0
+          i = from
+          while (i < end && Character.digit(line(i), radix) >= 0) {
+            v = v * radix + Character.digit(line(i), radix); i += 1
+          }
+          field(n) = v.toByte
+        }
+        n += 1
       } else { field(n) = line(i); n += 1; i += 1 }
     }
     fields.toArray

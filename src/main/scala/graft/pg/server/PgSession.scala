@@ -12,8 +12,9 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.types.{StringType, StructType}
 
-/** A named prepared statement ('P' message): unanalyzed plan + the schema
-  * captured eagerly so Describe can answer before Bind (reference
+/** A named prepared statement ('P' message): the parsed plan, its `$n`
+  * typed by their declared OIDs, and the schema captured eagerly so
+  * Describe can answer before Bind (reference
   * protocol.scala:559-582, QueryState protocol.scala:994-1008). A
   * simple-Query statement is an unnamed one whose schema stays null: it is
   * analyzed once, when its portal runs.
@@ -31,16 +32,16 @@ final case class Prepared(
       * one-column QUERY PLAN result.
       */
     explainAnalyze: Boolean = false,
-    /** Parse-time resolved plan for the cacheable path (pure query, no
-      * params, no driver-folded session functions): consumed ONCE by the
-      * first Bind so that Parse→Bind→Execute costs a single analysis.
-      * One-shot on purpose — later Binds of a client-cached statement
-      * re-analyze, keeping today's per-execution freshness semantics.
+    /** Parse's analyzed plan when Bind may substitute values into an
+      * analyzed plan: a query, not EXPLAIN ANALYZE, free of
+      * driver-folded session functions and of untyped `$n`. The first Bind
+      * takes it, once; a later Bind analyzes `plan` again, so it sees rows
+      * written since.
       */
-    cachedAnalyzed: Option[LogicalPlan] = None) {
-  private val freshAnalyzed =
-    new java.util.concurrent.atomic.AtomicReference[LogicalPlan](cachedAnalyzed.orNull)
-  def takeAnalyzed(): Option[LogicalPlan] = Option(freshAnalyzed.getAndSet(null))
+    analyzed: Option[LogicalPlan] = None) {
+  private val fresh =
+    new java.util.concurrent.atomic.AtomicReference[LogicalPlan](analyzed.orNull)
+  def takeAnalyzed(): Option[LogicalPlan] = Option(fresh.getAndSet(null))
 
   /** PG's parameter count: the declared types plus any higher `$n` the
     * text uses. Describe reports this many and a Bind must supply them.
@@ -72,8 +73,8 @@ final class Portal(
   lazy val formats: Seq[Boolean] = schema.fields.toSeq.zipWithIndex.map { case (f, i) =>
     wantBinary(i) && PgTypes.binaryCapable(f.dataType) && f.dataType != StringType
   }
-  /** Dataset built from the Parse-time resolved plan (cacheable path):
-    * the portal runs THIS instance instead of re-analyzing `bound`.
+  /** Dataset over `bound` when Bind analyzed it: the portal runs this
+    * instance instead of analyzing `bound` again.
     */
   var df: org.apache.spark.sql.DataFrame = _
   var rows: Iterator[InternalRow] = _

@@ -6,8 +6,8 @@ import java.nio.charset.StandardCharsets.UTF_8
 import scala.collection.mutable.ArrayBuffer
 import scala.util.control.NonFatal
 
-import graft.pg.{PgBeginCommand, PgCatalog, PgDialect, PgParserInterface, ParameterPlaceHolder}
-import graft.pg.wire.{ParamCodec, RowCodec}
+import graft.pg.{PgBeginCommand, PgCatalog, PgDialect, PgParserInterface}
+import graft.pg.wire.{ParamCodec, PgTypes, RowCodec}
 
 import io.netty.bootstrap.ServerBootstrap
 import io.netty.buffer.ByteBuf
@@ -20,9 +20,9 @@ import io.netty.handler.ssl.{SslContext, SslContextBuilder}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Literal
-import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, OneRowRelation}
+import org.apache.spark.sql.catalyst.plans.logical.{Command, LogicalPlan, OneRowRelation}
 import org.apache.spark.sql.graft.Internals
-import org.apache.spark.sql.types.{NullType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{DataType, NullType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** PostgreSQL V3 wire-protocol server over Spark SQL: the reference's
@@ -638,9 +638,6 @@ private class PgConnectionHandler(base: SparkSession, sslCtx: Option[SslContext]
       }
     }
     PgCatalog.register(session.spark)
-    // `$n` placeholders analyze through pg_param; one registration serves
-    // every flow of the connection
-    PgDialect.registerParamFunction(session.spark)
     val out = ctx.alloc().buffer()
     authenticationOk(out)
     Seq(
@@ -890,8 +887,7 @@ private class PgConnectionHandler(base: SparkSession, sslCtx: Option[SslContext]
     */
   private val volatileTextRe =
     ("(?is).*\\b(set_config|pg_notify|pg_cancel_backend|pg_terminate_backend|" +
-      "current_setting|pg_backend_pid|pg_postmaster_start_time|version\\s*\\(|" +
-      "pg_param)\\b.*").r
+      "current_setting|pg_backend_pid|pg_postmaster_start_time|version\\s*\\()\\b.*").r
 
   private def isVolatileText(sql: String): Boolean =
     volatileTextRe.matches(sql)
@@ -1118,8 +1114,8 @@ private class PgConnectionHandler(base: SparkSession, sslCtx: Option[SslContext]
       .map(l => InternalRow(UTF8String.fromString(l)))
   }
 
-  /** 'P': parse + eager analysis so Describe can answer (reference
-    * protocol.scala:559-582).
+  /** 'P': parse, type each `$n` by its declared OID, and analyze once so
+    * Describe can answer (reference protocol.scala:559-582).
     */
   private def parse(in: ByteBuffer, out: ByteBuf): Unit = {
     val name = readCStr(in)
@@ -1131,49 +1127,48 @@ private class PgConnectionHandler(base: SparkSession, sslCtx: Option[SslContext]
     // EXPLAIN ANALYZE prepares over the extended protocol too (DBeaver's
     // explain action, pgjdbc executeQuery): prepare the INNER statement,
     // Describe answers the one-column QUERY PLAN schema, Execute runs it
-    val (plan, isExplainAnalyze) = parseStatement(sql)
-    // PgDialect.collectParamIds: also reaches `$n` inside CTE bodies
-    // (UnresolvedWith keeps them in innerChildren, invisible to a plain
-    // plan.collect) and inside subquery expressions
-    val paramIds = PgDialect.collectParamIds(plan)
-    // One-analysis path for the common case: a pure parameterless query
-    // free of session-volatile constructs is analyzed HERE once and the
-    // resolved plan handed to the first Bind→Execute lifecycle (PG likewise
-    // fixes the plan no later than Bind). Everything else — params, EXPLAIN
-    // ANALYZE, commands, session-volatile texts — keeps the
-    // analyze-per-phase flow whose re-analysis timing is load-bearing.
-    val cacheablePath = paramIds.isEmpty && !isExplainAnalyze &&
-      sql.trim.nonEmpty && !isVolatileText(sql)
-    var cachedAnalyzed: Option[LogicalPlan] = None
-    val innerSchema =
-      if (sql.trim.isEmpty) new StructType()
-      else if (cacheablePath) {
-        val (s, analyzed) = Internals.analyzeForPrepare(session.spark, plan)
-        cachedAnalyzed = analyzed
-        s
-      }
-      else try Internals.analyzedSchema(session.spark, plan)
-      catch {
-        case NonFatal(e) if paramIds.nonEmpty =>
+    val (parsed, isExplainAnalyze) = parseStatement(sql)
+    val stmt = Prepared(name, sql, parsed, PgDialect.collectParamIds(parsed), null,
+      declaredOids, explainAnalyze = isExplainAnalyze)
+    // a `$n` the client declares no type for stays untyped and takes its
+    // value's type at Bind: typed VARCHAR, its NULL would not store into
+    // a column of another type
+    val types = (id: Int) => declaredOids.lift(id - 1).filter(_ != PgTypes.UNSPECIFIED)
+      .fold[DataType](NullType)(ParamCodec.paramType)
+    val plan = PgDialect.typed(parsed, types)
+    // Bind substitutes values into this analysis when the statement is a
+    // query free of session-volatile constructs and untyped `$n` (PG
+    // likewise fixes the plan no later than Bind). Commands, EXPLAIN
+    // ANALYZE and session-volatile texts analyze again at Execute, where
+    // their side effects belong.
+    val reusable = !isExplainAnalyze && !isVolatileText(sql) &&
+      stmt.paramIds.forall(types(_) != NullType)
+    val (innerSchema, analyzed) =
+      if (sql.trim.isEmpty) (new StructType(), None)
+      else try {
+        val a = Internals.analyze(session.spark, plan)
+        (a.schema, Some(a).filter(a => reusable && a.schema.nonEmpty && !a.isInstanceOf[Command]))
+      } catch {
+        case NonFatal(e) if stmt.paramIds.nonEmpty =>
           // a placeholder in an eagerly-evaluated position — pgjdbc's batch
           // INSERT ... VALUES ($1, $2) hits Spark's inline-table evaluation
-          // at analysis. PG prepares these fine; analyze with NULL stand-ins
-          // purely for the Describe schema (Bind substitutes real values and
-          // re-analyzes from the ORIGINAL placeholder plan)
-          val nulls: Map[Int, Any] = paramIds.map(id => id -> Literal(null, NullType)).toMap
-          try Internals.analyzedSchema(session.spark, PgDialect.bind(plan, nulls))
+          // at analysis. PG prepares these fine; bind NULLs of the
+          // placeholders' types purely for the Describe schema
+          val nulls: Map[Int, Any] = stmt.paramIds.map(_ -> null).toMap
+          try (Internals.analyzedSchema(session.spark, PgDialect.bind(plan, nulls)), None)
           catch { case NonFatal(_) => throw e }
       }
     // EA validated the inner statement above; its RESULT is the plan text
     val schema = resultSchema(plan, isExplainAnalyze)(innerSchema)
-    session.statements(name) = Prepared(name, sql, plan, paramIds, schema,
-      declaredOids, explainAnalyze = isExplainAnalyze,
-      cachedAnalyzed = cachedAnalyzed)
+    session.statements(name) = stmt.copy(plan = plan, schema = schema, analyzed = analyzed)
     parseComplete(out)
   }
 
-  /** 'B': decode params by (oid,format), substitute, re-analyze, build the
-    * portal (reference protocol.scala:309-373).
+  /** 'B': decode params by (oid,format), substitute them, build the portal
+    * (reference protocol.scala:309-373). A statement Parse analyzed for
+    * reuse takes that analysis on its first Bind and analyzes once on each
+    * later one; either plan is the one Execute runs. Any other statement
+    * is analyzed here for its schema and again at Execute.
     */
   private def bind(in: ByteBuffer, out: ByteBuf): Unit = {
     val portalName = readCStr(in)
@@ -1198,23 +1193,22 @@ private class PgConnectionHandler(base: SparkSession, sslCtx: Option[SslContext]
     // Decode by the oid declared in Parse, keeping the fully-typed Literal
     // (DateType/TimestampType etc. — not just the raw value), TIMESTAMP in
     // the session zone; NULL params (len -1) bind a SQL NULL.
-    val litParams = params.zipWithIndex.map { case (bytes, i) =>
+    val values = params.zipWithIndex.map { case (bytes, i) =>
       (i + 1) -> (if (bytes == null) null else ParamCodec.decodeBindParam(
         bytes, stmt.paramOid(i), formatCode(paramFormats, i), i + 1, sessionZone))
     }.toMap[Int, Any]
-    val bound = PgDialect.bind(stmt.plan, litParams)
-    // cacheable path: reuse the Parse-time resolved plan (one-shot) — the
-    // Dataset built here is the instance Execute runs, so the whole
-    // lifecycle costs a single analysis
-    val cachedDf = if (litParams.isEmpty && !stmt.explainAnalyze) {
-      stmt.takeAnalyzed().map(a => Internals.ofRows(session.spark, a))
-    } else None
-    val schema = if (stmt.sql.trim.isEmpty) new StructType()
-      else resultSchema(stmt.plan, stmt.explainAnalyze)(cachedDf.map(_.schema)
-        .getOrElse(Internals.analyzedSchema(session.spark, bound)))
+    val (bound, df) = if (stmt.analyzed.isDefined) {
+      val b = PgDialect.bind(
+        stmt.takeAnalyzed().getOrElse(Internals.analyze(session.spark, stmt.plan)), values)
+      (b, Internals.ofAnalyzed(session.spark, b))
+    } else (PgDialect.bind(stmt.plan, values), null)
+    val schema = if (df != null) df.schema
+      else if (stmt.sql.trim.isEmpty) new StructType()
+      else resultSchema(stmt.plan, stmt.explainAnalyze)(
+        Internals.analyzedSchema(session.spark, bound))
     val portal = new Portal(portalName, stmt, bound, schema,
       i => formatCode(resFormats, i) == 1, new Operation(session, stmt.sql.take(80)))
-    cachedDf.foreach(portal.df = _)
+    portal.df = df
     session.portals(portalName) = portal
     bindComplete(out)
   }
@@ -1316,7 +1310,7 @@ private class PgConnectionHandler(base: SparkSession, sslCtx: Option[SslContext]
         p.schema = explainAnalyzeSchema
         p.rows = explainAnalyzeRows(p.bound)
       } else {
-        // cacheable path: run the Bind-time Dataset — no re-analysis
+        // a plan Bind analyzed runs as is
         val df = if (p.df != null) p.df else Internals.ofRows(session.spark, p.bound)
         if (p.schema == null) p.schema = resultSchema(p.bound, explainAnalyze = false)(df.schema)
         if (p.schema.nonEmpty) p.rows = resultIterator(df)

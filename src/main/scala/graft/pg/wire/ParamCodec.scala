@@ -7,6 +7,8 @@ import java.util.regex.Pattern
 
 import graft.pg.server.PgStateException
 
+import org.apache.spark.SparkThrowable
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, EvalMode, GenericInternalRow, Literal}
 import org.apache.spark.sql.catalyst.util.DateTimeUtils.{instantToMicros, microsToLocalDateTime}
 import org.apache.spark.sql.types._
@@ -23,6 +25,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * value of a fixed-width type with bytes left over fails 22P03; one too
   * short reads past its end. An oid with no decoder here throws an
   * `IllegalArgumentException`; see [[inputReader]] and [[columnReader]].
+  * Values the decoders pass on go through one driver-side Spark cast
+  * ([[evalCast]]), for Bind and COPY alike.
   */
 object ParamCodec {
 
@@ -108,9 +112,10 @@ object ParamCodec {
     * INSERT's store assignment would. A decimal is rounded to the column's
     * precision and scale (22003 on overflow); a value of another type (a
     * tinyint, an interval's text, a collated string) or a fallback string
-    * goes through Spark's ANSI cast, resolved here once. A TIMESTAMP_NTZ
-    * column reads in UTC, where a wall-clock time is its own instant, so
-    * its micros stay exact. Throws for a type with no reader or cast.
+    * goes through Spark's ANSI cast, resolved here once ([[evalCast]]). A
+    * TIMESTAMP_NTZ column reads in UTC, where a wall-clock time is its own
+    * instant, so its micros stay exact. Throws for a type with no reader or
+    * cast.
     */
   def columnReader(dt: DataType, format: Int, zone: ZoneId): Reader = {
     def unsupported = new IllegalArgumentException(s"COPY FROM unsupported for column type $dt")
@@ -130,11 +135,48 @@ object ParamCodec {
         if (cast.checkInputDataTypes().isFailure) throw unsupported
         p => read(p) match {
           case v if castAll || readType != StringType && v.isInstanceOf[UTF8String] =>
-            cast.eval(new GenericInternalRow(Array(v)))
+            evalCast(cast, new GenericInternalRow(Array(v)))
           case v => v
         }
     }
   }
+
+  /** The type a Bind parameter declared as `oid` takes at Parse: the type
+    * its text reads as, StringType for an oid with no reader. NUMERIC
+    * stays untyped (NullType): its precision and scale come with each
+    * value.
+    */
+  def paramType(oid: Int): DataType =
+    if (oid == PgTypes.NUMERIC) NullType else inputReader(oid, 0, ZoneOffset.UTC)._1
+
+  /** `v`, a value of `from`, as a value of `to`: Spark's ANSI cast in
+    * `zone`, evaluated here, as [[columnReader]] casts a COPY field.
+    */
+  def cast(v: Any, from: DataType, to: DataType, zone: ZoneId): Any =
+    evalCast(Cast(Literal(v, from), to, Some(zone.getId), EvalMode.ANSI))
+
+  private val IsoDateTime =
+    Pattern.compile("\\s*\\d{4,}-\\d{1,2}-\\d{1,2}" +
+      "([ T]\\d{1,2}:\\d{1,2}(:\\d{1,2}(\\.\\d*)?)?)?\\s*")
+
+  /** `cast` evaluated over `row`. Text it refuses as a date or timestamp
+    * fails as PG's datetime input does: 22008 when the text has the ISO
+    * shape but names no such day or time (`2024-02-30`), else 22007.
+    */
+  def evalCast(cast: Cast, row: InternalRow = null): Any =
+    try cast.eval(row) catch {
+      case e: SparkThrowable if e.getCondition == "CAST_INVALID_INPUT" &&
+          cast.child.dataType == StringType =>
+        val text = String.valueOf(cast.child.eval(row))
+        val pgType = cast.dataType match {
+          case DateType => "date"
+          case TimestampType | TimestampNTZType => "timestamp"
+          case _ => throw e
+        }
+        throw (if (IsoDateTime.matcher(text).matches)
+          new PgStateException(s"""date/time field value out of range: "$text"""", "22008")
+          else new PgStateException(s"""invalid input syntax for type $pgType: "$text"""", "22007"))
+    }
 
   private val asText: Reader = p => UTF8String.fromBytes(p)
 

@@ -113,25 +113,23 @@ object Internals {
   def isAnalysisOnly: Boolean =
     java.lang.Boolean.TRUE == analysisOnlyFlag.get()
 
+  /** The analyzed plan, analyzed under [[analysisOnly]]: Parse, Bind
+    * and Describe analyze ahead of the Execute that applies side effects.
+    */
+  def analyze(spark: SparkSession, plan: LogicalPlan): LogicalPlan =
+    analysisOnly { classic(spark).sessionState.executePlan(plan).analyzed }
+
   /** Schema of the analyzed plan without executing (Describe-before-Bind). */
   def analyzedSchema(spark: SparkSession, plan: LogicalPlan): org.apache.spark.sql.types.StructType =
-    analysisOnly { classic(spark).sessionState.executePlan(plan).analyzed.schema }
+    analyze(spark, plan).schema
 
-  /** One-analysis prepare for the extended protocol's cacheable path: the
-    * caller guarantees the text is free of driver-folded session functions
-    * (no analysisOnly guard needed), so the resolved plan can be reused by
-    * Bind/Execute instead of re-analyzing per phase. Returns the analyzed
-    * plan only when it is a pure query — a Command would EXECUTE eagerly
-    * when a Dataset is later built from it, which must not happen before
-    * the Execute message.
+  /** A DataFrame over an analyzed plan that a transform has rebuilt (Bind
+    * substituting values): marked analyzed, so the analyzer does not
+    * visit it again.
     */
-  def analyzeForPrepare(spark: SparkSession, plan: LogicalPlan)
-      : (org.apache.spark.sql.types.StructType, Option[LogicalPlan]) = {
-    val analyzed = classic(spark).sessionState.executePlan(plan).analyzed
-    val cacheable =
-      !analyzed.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Command] &&
-        analyzed.schema.nonEmpty
-    (analyzed.schema, if (cacheable) Some(analyzed) else None)
+  def ofAnalyzed(spark: SparkSession, plan: LogicalPlan): DataFrame = {
+    plan.setAnalyzed()
+    ofRows(spark, plan)
   }
 
   /** Make this session the thread's active one so SQLConf.get (used by the

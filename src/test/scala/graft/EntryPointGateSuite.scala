@@ -56,6 +56,12 @@ class EntryPointGateSuite extends AnyFunSuite {
     assert(hits.isEmpty, s"decode PG values through graft.pg.wire.ParamCodec: $hits")
   }
 
+  test("one walk enters CTE bodies under graft.pg") {
+    val hits = sources.collect { case (p, text) if p.startsWith(root.resolve("graft/pg")) &&
+      text.contains("cteRelations") => p.getFileName.toString }
+    assert(hits.size === 1, s"walk a statement with PgDialect.transformPlans: $hits")
+  }
+
   test("SPARK_GRAFT_CPUS is read only in LocalSpark") {
     val outside = filesMatching("\"SPARK_GRAFT_CPUS\"") - "LocalSpark.scala"
     assert(outside.isEmpty, s"use graft.LocalSpark.cpus instead: $outside")

@@ -53,17 +53,16 @@ class PgRewriteSpec extends AnyFunSuite {
   }
 
   test("substring from/for forms") {
-    assert(PgRewrite("SELECT substring('hello' from 2 for 3)") ===
-      "SELECT substring('hello', 2, 3)")
-    assert(PgRewrite("SELECT substring(x from 4) FROM t") ===
-      "SELECT substring(x, 4) FROM t")
-    assert(PgRewrite("SELECT substring(x, 1, 2) FROM t") ===
-      "SELECT substring(x, 1, 2) FROM t")
+    // Spark's grammar parses the FROM/FOR form itself
+    for (sql <- Seq("SELECT substring('hello' from 2 for 3)", "SELECT substring(x from 4) FROM t",
+        "SELECT substring(x, 1, 2) FROM t")) {
+      assert(PgRewrite(sql) === sql)
+    }
   }
 
   test("nested dialect constructs rewrite recursively") {
     assert(PgRewrite("SELECT substring(a::text from $1)") ===
-      "SELECT substring(a::string, pg_param(1))")
+      "SELECT substring(a::string from pg_param(1))")
   }
 
   test("comments are preserved verbatim") {

@@ -111,11 +111,49 @@ class PgBoundParamSuite extends AnyFunSuite with BeforeAndAfterAll {
     assert(df.collect().toSeq === Seq(Row(42L, 294L, "42")))
   }
 
-  test("known gap: an INT4 value cast to a bigint column still compiles per value") {
-    // analysis wraps the value in a cast, which constant folding rebuilds as
-    // a plain Literal, so every key is a new class, as before ParamLiteral
+  test("an INT4 value cast to a bigint column reuses compiled code") {
+    // analysis wraps the INT4 placeholder in a cast to bigint; Bind folds
+    // the cast into a bigint ParamLiteral, so constant folding has no cast
+    // to rebuild as a plain Literal
     val keys = (1 to 5).map(i => 600L + 13 * i)
-    assert(compilesForNewKeys(PgTypes.INT4, 433L, keys) >= keys.size)
+    assert(compilesForNewKeys(PgTypes.INT4, 433L, keys) === 0)
+  }
+
+  test("a named statement bound again after an INSERT returns the new row") {
+    // only the first Bind may run on Parse's analysis: an analyzed plan
+    // keeps its file listing
+    spark.sql("DROP TABLE IF EXISTS bind_fresh")
+    spark.sql("CREATE TABLE bind_fresh (k BIGINT, v STRING) USING parquet")
+    try WireClient.withClient(port) { c =>
+      c.parse("fresh", "SELECT v FROM bind_fresh WHERE k = $1 ORDER BY v", Seq(PgTypes.INT8))
+      def lookup(): Msgs = { c.bind("", "fresh", Seq("1")); c.execute(""); c.sync() }
+      assert(rows(lookup()) === Nil)
+      // an INSERT refreshes the file listing of the relation it resolved,
+      // which only the first shares with Parse's analysis
+      for (inserted <- Seq(Seq("a"), Seq("a", "b"))) {
+        assert(error(c.simple(s"INSERT INTO bind_fresh VALUES (1, '${inserted.last}')")) === None)
+        assert(col0(lookup()) === inserted)
+      }
+    } finally spark.sql("DROP TABLE IF EXISTS bind_fresh")
+  }
+
+  test("EXPLAIN of a statement with $1 explains it with the bound value") {
+    WireClient.withClient(port) { c =>
+      val m = c.extended("EXPLAIN " + Lookup, Seq("42"), Seq(PgTypes.INT8))
+      assert(error(m) === None)
+      val plan = col0(m).mkString("\n")
+      assert(plan.contains("EqualTo(o_orderkey,42)"), plan)
+    }
+  }
+
+  test("a NULL bound to a $n of no declared type inserts into a column of any type") {
+    spark.sql("DROP TABLE IF EXISTS bind_nulls")
+    spark.sql("CREATE TABLE bind_nulls (i INT, d DATE) USING parquet")
+    try WireClient.withClient(port) { c =>
+      assert(error(c.extended("INSERT INTO bind_nulls VALUES ($1, $2)", Seq(null, null), Nil)) ===
+        None)
+      assert(rows(c.simple("SELECT i, d FROM bind_nulls")) === Seq(Seq(null, null)))
+    } finally spark.sql("DROP TABLE IF EXISTS bind_nulls")
   }
 
   test("property: a bound value returns the same rows as its text inlined") {

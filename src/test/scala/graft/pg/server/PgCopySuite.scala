@@ -249,6 +249,10 @@ class PgCopySuite extends AnyFunSuite with BeforeAndAfterAll {
     assert(csv("\"a,b\",\"c\"\"d\"") === Seq("a,b", "c\"d"))
     // a multi-byte character is split and unescaped whole
     assert(text("é\\é\t\\N") === Seq("éé", null))
+    // one to three octal digits, or x and one or two hex digits, name a byte
+    assert(text("\\101\\0619\t\\1\\18\t\\x41\\x4g\\xz\\x") ===
+      Seq("A19", "\u0001\u00018", "A\u0004gxzx"))
+    assert(text("\\303\\251\t\\xc3\\xA9") === Seq("é", "é"))
     assert(csv("\"é,\"\"\",ü") === Seq("é,\"", "ü"))
   }
 
@@ -290,6 +294,35 @@ class PgCopySuite extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  test("text COPY reads octal and hex escapes as bytes") {
+    withClient(port) { c =>
+      c.simple("TRUNCATE TABLE copy_t")
+      assert(error(copyIn(c, "COPY copy_t FROM STDIN",
+        "7\t\\157ct\\x61l\\x\\303\\251\t\\x31.5\n".getBytes(UTF_8))) === None)
+      assert(rows(c.simple("SELECT v, d FROM copy_t WHERE k = 7")) === Seq(Seq("octalxé", "1.5")))
+    }
+  }
+
+  test("datetime text Spark's cast refuses answers PG's SQLSTATE in COPY and Bind") {
+    val refused = Seq(
+      ("DATE", "2024-02-30", "22008", "date/time field value out of range: \"2024-02-30\""),
+      ("DATE", "not a date", "22007", "invalid input syntax for type date: \"not a date\""),
+      ("TIMESTAMP", "2024-03-10 25:00:00", "22008",
+        "date/time field value out of range: \"2024-03-10 25:00:00\""),
+      ("TIMESTAMP", "noon", "22007", "invalid input syntax for type timestamp: \"noon\""))
+    withClient(port) { c =>
+      refused.foreach { case (sqlType, v, state, message) =>
+        val oid = graft.pg.wire.PgTypes.oidOf(org.apache.spark.sql.types.DataType.fromDDL(sqlType))
+        assert(error(c.extended(s"SELECT CAST($$1 AS $sqlType)", Seq(v), Seq(oid))) ===
+          Some((state, message)), s"Bind of $v")
+        assert(error(c.simple(s"CREATE TABLE dt_refused (v $sqlType) USING parquet")) === None)
+        try assert(error(copyIn(c, "COPY dt_refused FROM STDIN", s"$v\n".getBytes(UTF_8))) ===
+          Some((state, message)), s"COPY of $v")
+        finally c.simple("DROP TABLE dt_refused")
+      }
+    }
+  }
+
   /** (column type, inputs the decoder reads, date/timestamp text it
     * passes on for Spark's cast): PG input spellings, malformed and
     * out-of-range text, NULL, and seeded values. Accepted text comes first
@@ -322,10 +355,10 @@ class PgCopySuite extends AnyFunSuite with BeforeAndAfterAll {
       ("BINARY", Seq("\\x0102ff", "\\x 01 02", "abc\\\\def", "\\001\\377", "plain", "", null,
         "\\xZZ", "\\9"), Nil),
       ("DATE", Seq("2024-01-15", " 1970-01-01 ", "0001-01-01", null),
-        Seq("2024-1-5", "2024-02-30", "not a date")),
+        Seq("2024-1-5", "2024-02-30", "2024-13-01", "not a date")),
       ("TIMESTAMP", Seq("2024-03-10 02:30:00", "2024-11-03 01:30:00",
         "2024-01-15 10:00:00.123456", " 2000-01-01T00:00:00 ", null),
-        Seq("2024-03-10 02:30:00-05", "2024-01-15", "noon")))
+        Seq("2024-03-10 02:30:00-05", "2024-01-15", "2024-03-10 25:00:00", "noon")))
   }
 
   test("property: a text or csv COPY field reads as the same bytes bound as a parameter") {
@@ -361,20 +394,20 @@ class PgCopySuite extends AnyFunSuite with BeforeAndAfterAll {
           s"CREATE TABLE $t (k INT, v $sqlType) USING parquet")) === None))
         try {
           val inputs = decoded.zipWithIndex
-          val bind = outcomes("par_bind", refusals(inputs) { batch =>
+          def insert(batch: Seq[(String, Int)]): Msgs = {
             c.parse("", batch.zipWithIndex.map { case ((_, k), i) => s"($k, $$${i + 1})" }
               .mkString("INSERT INTO par_bind VALUES ", ", ", ""), batch.map(_ => oid))
             c.bind("", "", batch.map(_._1))
             c.execute("")
             c.sync()
-          })
+          }
+          val bind = outcomes("par_bind", refusals(inputs)(insert))
           assert(bind.size === inputs.size, s"$sqlType: $bind")
           refusedAny ||= bind.values.exists(_.startsWith("SQLSTATE"))
           assert(outcomes("par_text", refusals(inputs)(text)) === bind, s"$sqlType: text COPY")
           assert(outcomes("par_csv", refusals(inputs)(csv)) === bind, s"$sqlType: csv COPY")
-          // text the decoder passes on COPYs as Spark's cast of it reads;
-          // a Bind INSERT refuses it (known gap: ANSI store assignment does
-          // not take a string for a datetime column)
+          // text the decoder passes on reads as Spark's cast of it, the
+          // same in COPY, in a Bind INSERT and in a cast of $1
           passedOn.zipWithIndex.foreach { case (v, i) =>
             val k = decoded.size + i
             val m = c.extended(s"SELECT CAST($$1 AS $sqlType)", Seq(v), Seq(oid))
@@ -383,8 +416,7 @@ class PgCopySuite extends AnyFunSuite with BeforeAndAfterAll {
               outcomes(table, refusals(Seq(v -> k))(run))(k)
             assert(one(text, "par_text") === cast, s"$sqlType text COPY of $v")
             assert(one(csv, "par_csv") === cast, s"$sqlType csv COPY of $v")
-            assert(error(c.extended(s"INSERT INTO par_bind VALUES ($k, $$1)", Seq(v), Seq(oid)))
-              .map(_._1) === Some("KD000"), s"$sqlType Bind INSERT of $v")
+            assert(one(insert, "par_bind") === cast, s"$sqlType Bind INSERT of $v")
           }
         } finally tables.foreach(t => c.simple(s"DROP TABLE $t"))
       }
