@@ -256,7 +256,8 @@ object PgCatalog {
     relations.get(name.toLowerCase)
       .map(t => SubqueryAlias(name, DataSourceV2Relation.create(t, None, None)))
 
-  /** Make this session ready for PG clients: the system functions. The
+  /** Make a session built without [[PgExtensions]] ready for PG clients:
+    * the system functions ([[PgFunctions.all]]) go into its registry. The
     * catalog relations need nothing per session.
     */
   def register(spark: SparkSession): Unit = PgFunctions.register(spark)

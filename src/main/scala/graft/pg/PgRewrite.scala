@@ -15,19 +15,11 @@ import scala.collection.mutable
   *                                      into a `ParameterPlaceHolder`)
   *   - `x ~ 'pat'` / `x !~ 'pat'`   → `x RLIKE 'pat'` / `x NOT RLIKE 'pat'`
   *   - `::text`                     → `::string`      (`::` cast is native)
-  *   - `generate_series(a,b[,s]) [AS t[(c)]]`
-  *        → `(SELECT id AS c FROM range(a, (b)+1[, s])) AS t` (FROM position)
   *
   * `substring(x FROM a [FOR b])` needs no rewrite: Spark's grammar has it.
+  * Nor does `generate_series` in FROM: [[PgParserInterface]] places it.
   */
 object PgRewrite {
-
-  private val aliasStoppers = Set(
-    "where", "group", "order", "on", "join", "inner", "left", "right", "full",
-    "cross", "natural", "union", "intersect", "except", "limit", "having",
-    "window", "qualify", "when", "then", "else", "end", "and", "or", "not",
-    "select", "from", "as", "using", "lateral", "semi", "anti", "sort",
-    "cluster", "distribute", "offset", "fetch")
 
   /** PG type names -> Spark spellings ("" = drop the cast entirely) */
   private val typeAlias = Map(
@@ -147,26 +139,6 @@ object PgRewrite {
       sql.substring(start + 1)
     }
 
-    /** Split argument text on top-level commas (respects quotes + parens). */
-    def splitTopLevel(s: String, sep: Char): Seq[String] = {
-      val parts = mutable.ArrayBuffer.empty[String]
-      var depth = 0; var j = 0; var last = 0; var inStr = false
-      while (j < s.length) {
-        val c = s.charAt(j)
-        if (inStr) { if (c == '\'') inStr = false }
-        else c match {
-          case '\'' => inStr = true
-          case '(' => depth += 1
-          case ')' => depth -= 1
-          case `sep` if depth == 0 => parts += s.substring(last, j); last = j + 1
-          case _ =>
-        }
-        j += 1
-      }
-      parts += s.substring(last)
-      parts.toSeq
-    }
-
     def skipWs(from: Int): Int = {
       var j = from
       while (j < n && sql.charAt(j).isWhitespace) j += 1
@@ -177,70 +149,6 @@ object PgRewrite {
       var j = from
       while (j < n && isIdentChar(sql.charAt(j))) j += 1
       (sql.substring(from, j), j)
-    }
-
-    def handleGenerateSeries(): Unit = {
-      val args = splitTopLevel(scanParens(), ',').map(a => PgRewrite(a.trim))
-      // range() needs foldable bounds (it's a planning-time TVF — and the
-      // scalable choice: a distributed scan, no materialized array). pgjdbc's
-      // TypeInfoCache emits generate_series(1, array_upper(current_schemas
-      // (false), 1)) — UDF-call bounds that range() rejects — so non-literal
-      // bounds fall back to explode(sequence(...)): tiny by construction
-      // (metadata-sized), correct for any expression.
-      val literalArgs = args.forall(_.trim.matches("[+-]?\\d+"))
-      // optional alias: [AS] ident [(col)]
-      var j = skipWs(i)
-      var alias: Option[String] = None
-      var colName: Option[String] = None
-      if (j < n && (sql.charAt(j).isLetter || sql.charAt(j) == '_')) {
-        val (w1, j1) = readIdent(j)
-        if (w1.equalsIgnoreCase("as")) {
-          val j2 = skipWs(j1)
-          val (w2, j3) = readIdent(j2)
-          if (w2.nonEmpty) { alias = Some(w2); j = j3 }
-        } else if (!aliasStoppers.contains(w1.toLowerCase)) {
-          alias = Some(w1); j = j1
-        }
-        if (alias.isDefined) {
-          val j4 = skipWs(j)
-          if (j4 < n && sql.charAt(j4) == '(') {
-            i = j4
-            val cols = splitTopLevel(scanParens(), ',').map(_.trim)
-            if (cols.size == 1) colName = Some(cols.head)
-            j = i
-          }
-          i = j
-        }
-      }
-      val col = colName.getOrElse("generate_series")
-      val body =
-        if (literalArgs) {
-          // range()'s bound is exclusive: +1 for an ascending series, -1 for
-          // a descending one (a negative literal step). Wrong-direction
-          // bounds come out empty from range() itself, matching PG.
-          val range =
-            if (args.size >= 3) {
-              val endAdj = if (args(2).trim.startsWith("-")) "-1" else "+1"
-              s"range(${args(0)}, (${args(1)})$endAdj, ${args(2)})"
-            } else s"range(${args(0)}, (${args(1)})+1)"
-          s"SELECT id AS $col FROM $range"
-        } else {
-          // sequence(a, b) with a > b produces a DESCENDING array (and a
-          // 3-arg sequence throws on a wrong-direction step) where PG
-          // returns zero rows — guard the direction so empty ranges stay
-          // empty. CASE evaluates the sequence only when the guard holds.
-          val seq =
-            if (args.size >= 3)
-              s"CASE WHEN ((${args(2)}) > 0 AND (${args(0)}) <= (${args(1)})) " +
-                s"OR ((${args(2)}) < 0 AND (${args(0)}) >= (${args(1)})) " +
-                s"THEN sequence(${args(0)}, ${args(1)}, ${args(2)}) ELSE array() END"
-            else
-              s"CASE WHEN (${args(0)}) <= (${args(1)}) " +
-                s"THEN sequence(${args(0)}, ${args(1)}) ELSE array() END"
-          s"SELECT explode($seq) AS $col"
-        }
-      out.append(s"($body)")
-      alias.foreach(a => out.append(s" AS $a"))
     }
 
     /** Scan a balanced `[...]` starting at `sql(i) == '['`; returns the inner
@@ -373,9 +281,6 @@ object PgRewrite {
               if (sc == '\\' && i < n) { out.append(sql.charAt(i)); i += 1 }
               else if (sc == '\'') done = true
             }
-          } else if (word.equalsIgnoreCase("generate_series") && isCall) {
-            i = afterWs
-            handleGenerateSeries()
           } else if (word.equalsIgnoreCase("pg_catalog") && j < n && sql.charAt(j) == '.') {
             // strip the pg_catalog schema qualifier: our catalog relations
             // and system functions resolve unqualified (reference resolves

@@ -89,7 +89,7 @@ final class Portal(
 final class PgSession(val pid: Int, val secret: Int, val spark: SparkSession,
     /** true when `spark` is this connection's own newSession() clone —
       * close() then drops its Tables relation memo (in singleSession mode
-      * the shared base session outlives every connection, so its memo stays)
+      * the shared session outlives every connection, so its memo stays)
       */
     val isolated: Boolean = true) {
   val statements = mutable.Map.empty[String, Prepared]
@@ -138,13 +138,13 @@ object SessionRegistry {
   private val pids = new AtomicInteger(1000)
   private val rnd = new java.security.SecureRandom()
 
-  def create(base: SparkSession, singleSession: Boolean = false): PgSession = {
-    // single-session mode shares the base session across connections (temp
+  def create(base: SparkSession, shared: Option[SparkSession] = None): PgSession = {
+    // single-session mode shares one session across connections (temp
     // views/conf visible to all, reference SparkSQLServiceManager.scala:
     // 107-133); multi-session isolates with newSession()
-    val spark = if (singleSession) base else base.newSession()
+    val spark = shared.getOrElse(base.newSession())
     val s = new PgSession(pids.incrementAndGet(), rnd.nextInt(), spark,
-      isolated = !singleSession)
+      isolated = shared.isEmpty)
     // clients scan raw parquet incl. TIMESTAMP(NANOS) columns
     s.spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     s.spark.conf.set("spark.sql.crossJoin.enabled", "true")
@@ -187,8 +187,8 @@ object SessionRegistry {
 
   /** The pid of the session whose wire message this thread is currently
     * processing (set by the server around every typed-message dispatch).
-    * Required for singleSession mode, where every connection shares the
-    * base SparkSession and an identity scan cannot tell connections apart.
+    * Required for singleSession mode, where every connection shares one
+    * SparkSession and an identity scan cannot tell connections apart.
     */
   private val currentPid = new ThreadLocal[Integer]
 

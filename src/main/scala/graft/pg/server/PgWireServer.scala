@@ -6,7 +6,7 @@ import java.nio.charset.StandardCharsets.UTF_8
 import scala.collection.mutable.ArrayBuffer
 import scala.util.control.NonFatal
 
-import graft.pg.{PgBeginCommand, PgCatalog, PgDialect, PgParserInterface}
+import graft.pg.{PgBeginCommand, PgCatalog, PgDialect, PgExtensions}
 import graft.pg.wire.{ParamCodec, PgTypes, RowCodec}
 
 import io.netty.bootstrap.ServerBootstrap
@@ -33,6 +33,9 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 class PgWireServer(base: SparkSession, port: Int = 5432, workerThreads: Int = 4,
     sessionIdleTimeoutMs: Long = 0L, config: PgServerConfig = PgServerConfig()) {
+  // every connection's session is a newSession() of base: it gets the PG layer
+  PgExtensions.install(base)
+  private val shared = if (config.singleSession) Some(base.newSession()) else None
   private val boss = new NioEventLoopGroup(1)
   private val workers = new NioEventLoopGroup(workerThreads)
   // Query execution must NOT run on the I/O event loop: (a) a long Spark
@@ -70,7 +73,6 @@ class PgWireServer(base: SparkSession, port: Int = 5432, workerThreads: Int = 4,
   }
 
   def start(): Unit = {
-    base.conf.set("spark.sql.crossJoin.enabled", "true")
     val sslCtx = buildSslContext()
     val b = new ServerBootstrap()
       .group(boss, workers)
@@ -79,7 +81,7 @@ class PgWireServer(base: SparkSession, port: Int = 5432, workerThreads: Int = 4,
         override def initChannel(ch: SocketChannel): Unit =
           ch.pipeline()
             .addLast(new PgFrameDecoder) // frame reassembly stays on the loop
-            .addLast(handlerGroup, new PgConnectionHandler(base, sslCtx, config))
+            .addLast(handlerGroup, new PgConnectionHandler(base, shared, sslCtx, config))
       })
     channel = b.bind(port).sync().channel()
     boundPort = channel.localAddress().asInstanceOf[java.net.InetSocketAddress].getPort
@@ -125,9 +127,9 @@ final case class PgServerConfig(
       * precedence over [[md5Lookup]] and [[authenticator]].
       */
     scramLookup: Option[String => Option[String]] = None,
-    /** single-session: every connection shares the base SparkSession (temp
-      * views and conf visible across connections); default multi-session
-      * isolates via newSession() per connection
+    /** single-session: every connection shares one session derived from the
+      * base at server start (temp views and conf visible across connections);
+      * default multi-session isolates via newSession() per connection
       */
     singleSession: Boolean = false,
     /** monitoring web UI port (0 = ephemeral); None disables the UI */
@@ -355,8 +357,8 @@ private[server] object PgStatementSplitter {
   }
 }
 
-private class PgConnectionHandler(base: SparkSession, sslCtx: Option[SslContext],
-    config: PgServerConfig)
+private class PgConnectionHandler(base: SparkSession, shared: Option[SparkSession],
+    sslCtx: Option[SslContext], config: PgServerConfig)
     extends SimpleChannelInboundHandler[PgClientMsg] {
 
   import PgMessages._
@@ -587,7 +589,7 @@ private class PgConnectionHandler(base: SparkSession, sslCtx: Option[SslContext]
       // buffer (maybeFlush swaps currentOut); error handling and the final
       // write always target the live buffer
       // pin the executing session's pid for the duration of the message:
-      // in singleSession mode every connection shares the base SparkSession,
+      // in singleSession mode every connection shares one SparkSession,
       // so a SparkSession→pid identity scan is ambiguous — pg_backend_pid /
       // LISTEN / NOTIFY must attribute to THIS connection, not an arbitrary
       // one (the handler runs off the I/O loop, one thread per message)
@@ -612,11 +614,11 @@ private class PgConnectionHandler(base: SparkSession, sslCtx: Option[SslContext]
 
   /** AuthenticationOk + ParameterStatus + BackendKeyData + ReadyForQuery:
     * the post-auth startup sequence; session isolation follows the
-    * configured mode (single = shared base session, multi = newSession).
+    * configured mode (single = the server's shared session, multi = newSession).
     */
   private def finishStartup(ctx: ChannelHandlerContext): Unit = {
     ServerStats.sessionsOpened.incrementAndGet()
-    session = SessionRegistry.create(base, config.singleSession)
+    session = SessionRegistry.create(base, shared)
     session.onReap = () => ctx.close()
     session.appName = startupAppName
     // startup-packet values become the session's GUC defaults (what RESET /
@@ -637,7 +639,6 @@ private class PgConnectionHandler(base: SparkSession, sslCtx: Option[SslContext]
         ch.writeAndFlush(buf)
       }
     }
-    PgCatalog.register(session.spark)
     val out = ctx.alloc().buffer()
     authenticationOk(out)
     Seq(
@@ -806,8 +807,7 @@ private class PgConnectionHandler(base: SparkSession, sslCtx: Option[SslContext]
     }
     val plan =
       if (text.trim.isEmpty) OneRowRelation()
-      else new PgParserInterface(Internals.sessionParser(session.spark))
-        .parsePlan(graft.queries.CtePrune.prune(text))
+      else Internals.sessionParser(session.spark).parsePlan(graft.queries.CtePrune.prune(text))
     (plan, analyze)
   }
 

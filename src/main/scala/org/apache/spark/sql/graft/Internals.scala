@@ -1,10 +1,15 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.{DataFrame, SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.analysis.FunctionRegistry.FunctionBuilder
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.parser.ParserInterface
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.classic.{Dataset => CDataset, SparkSession => CSparkSession}
+import org.apache.spark.sql.classic.{Dataset => CDataset, SparkSession => CSparkSession,
+  UserDefinedFunctionUtils}
+import org.apache.spark.sql.execution.SparkSqlParser
+import org.apache.spark.sql.expressions.{SparkUserDefinedFunction, UserDefinedFunction}
 
 /** Bridge to `private[sql]` Spark internals the engine needs: executing a
   * hand-built LogicalPlan (the reference does this via Dataset.ofRows,
@@ -43,6 +48,33 @@ object Internals {
       builder: Seq[Expression] => Expression): Unit =
     classic(spark).sessionState.functionRegistry
       .createOrReplaceTempFunction(name, builder, "scala_udf")
+
+  /** Register functions given in the form
+    * `SparkSessionExtensions.injectFunction` takes into this session.
+    */
+  def registerFunctions(spark: SparkSession,
+      fns: Seq[(FunctionIdentifier, ExpressionInfo, FunctionBuilder)]): Unit = {
+    val registry = classic(spark).sessionState.functionRegistry
+    fns.foreach { case (id, info, builder) => registry.registerFunction(id, info, builder) }
+  }
+
+  /** The expression `spark.udf.register(name, udf)` registers, over `children`. */
+  def scalaUdf(udf: UserDefinedFunction, children: Seq[Expression]): Expression =
+    UserDefinedFunctionUtils.toScalaUDF(udf.asInstanceOf[SparkUserDefinedFunction], children)
+
+  /** The extensions object `spark` hands to each of its later
+    * `newSession()`s. `spark`'s own session state, built lazily from the
+    * same object, is built first, so what is injected later reaches only
+    * those later sessions.
+    */
+  def extensions(spark: SparkSession): SparkSessionExtensions = {
+    classic(spark).sessionState
+    classic(spark).extensions
+  }
+
+  /** The SQL parser each later `newSession()` of `spark` gets. */
+  def newSessionParser(spark: SparkSession): ParserInterface =
+    extensions(spark).buildParser(spark, new SparkSqlParser())
 
   /** Incremental partition-at-a-time result iterator (the reference's
     * incremental-collect mode, ExecutorImpl.scala:185-215): rows stream to

@@ -62,6 +62,19 @@ class EntryPointGateSuite extends AnyFunSuite {
     assert(hits.size === 1, s"walk a statement with PgDialect.transformPlans: $hits")
   }
 
+  test("the PG layer is installed once, through PgExtensions") {
+    def under(dir: String, needles: Seq[String]): Seq[String] = needles.flatMap(n =>
+      sources.collect { case (p, text) if p.startsWith(root.resolve(dir)) &&
+        text.contains(n) => s"${p.getFileName}: $n" })
+    val registered = under("graft/pg", Seq("udf.register", "registerExprFunction"))
+    assert(registered.isEmpty, s"add PG functions to PgFunctions.all: $registered")
+    val parsers = under("", Seq("new PgParserInterface"))
+      .filterNot(_.startsWith("PgParser.scala:"))
+    assert(parsers.isEmpty, s"parse with the session's own parser: $parsers")
+    val perConnection = under("graft/pg/server", Seq("PgCatalog.register", "PgFunctions.register"))
+    assert(perConnection.isEmpty, s"the server installs PgExtensions once: $perConnection")
+  }
+
   test("SPARK_GRAFT_CPUS is read only in LocalSpark") {
     val outside = filesMatching("\"SPARK_GRAFT_CPUS\"") - "LocalSpark.scala"
     assert(outside.isEmpty, s"use graft.LocalSpark.cpus instead: $outside")

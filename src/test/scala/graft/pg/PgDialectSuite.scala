@@ -36,7 +36,10 @@ class PgDialectSuite extends AnyFunSuite {
   }
 
   test("generate_series is inclusive and aliasable") {
-    assert(rows("SELECT * FROM generate_series(1, 3)").map(_.getLong(0)) === Seq(1L, 2L, 3L))
+    for (sql <- Seq("SELECT * FROM generate_series(1, 3)",
+        "SELECT * FROM generate_series(1, 3) WHERE 1 = 1")) {
+      assert(rows(sql).map(_.getLong(0)) === Seq(1L, 2L, 3L), sql)
+    }
     assert(rows("SELECT i * 2 AS d FROM generate_series(0, 4, 2) AS s(i) ORDER BY i")
       .map(_.getLong(0)) === Seq(0L, 4L, 8L))
   }

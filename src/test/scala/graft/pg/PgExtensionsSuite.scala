@@ -3,9 +3,10 @@ package graft.pg
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The injectParser extension path (reference SQLServerEnv.scala:73-97):
-  * a session built with [[PgExtensions]] parses the PG dialect through
-  * plain `spark.sql`, no PgDialect.sql wrapper needed.
+/** The extension path (reference SQLServerEnv.scala:73-97): a session
+  * built with [[PgExtensions]] parses the PG dialect and resolves the PG
+  * system functions through plain `spark.sql`, with no PgDialect.sql
+  * wrapper and no register call.
   */
 class PgExtensionsSuite extends AnyFunSuite {
 
@@ -33,6 +34,22 @@ class PgExtensionsSuite extends AnyFunSuite {
     assert(extended.sql("SELECT * FROM generate_series(1, 3)").count() === 3)
     assert(extended.sql("SELECT substring('spark sql' from 7) AS s")
       .collect().head.getString(0) === "sql")
+  }
+
+  test("the PG system functions are injected: no register call") {
+    val r = extended.sql("SELECT format_type(23, NULL), pg_encoding_to_char(6)").collect().head
+    assert(r.getString(0) === "int4")
+    assert(r.getString(1) === "UTF8")
+  }
+
+  test("the injected version() takes the place of Spark's own") {
+    val v = extended.sql("SELECT version()").collect().head.getString(0)
+    assert(v.startsWith("PostgreSQL"), v)
+  }
+
+  test("generate_series resolves with a column alias, no registration") {
+    assert(extended.sql("SELECT i FROM generate_series(1, 3) AS s(i)").collect()
+      .map(_.getLong(0)).toSeq === Seq(1L, 2L, 3L))
   }
 
   test("BEGIN parses to the no-op command through the injected parser") {

@@ -35,23 +35,6 @@ class PgRewriteSpec extends AnyFunSuite {
     assert(PgRewrite("SELECT a::int FROM t") === "SELECT a::int FROM t")
   }
 
-  test("generate_series becomes an inclusive range subquery") {
-    assert(PgRewrite("SELECT * FROM generate_series(1, 5)") ===
-      "SELECT * FROM (SELECT id AS generate_series FROM range(1, (5)+1))")
-  }
-
-  test("generate_series with step and table/column alias") {
-    assert(PgRewrite("SELECT i FROM generate_series(0, 10, 2) AS s(i)") ===
-      "SELECT i FROM (SELECT id AS i FROM range(0, (10)+1, 2)) AS s")
-    assert(PgRewrite("SELECT * FROM generate_series(1, 3) t") ===
-      "SELECT * FROM (SELECT id AS generate_series FROM range(1, (3)+1)) AS t")
-  }
-
-  test("generate_series alias is not stolen from a following keyword") {
-    assert(PgRewrite("SELECT * FROM generate_series(1, 3) WHERE 1 = 1") ===
-      "SELECT * FROM (SELECT id AS generate_series FROM range(1, (3)+1)) WHERE 1 = 1")
-  }
-
   test("substring from/for forms") {
     // Spark's grammar parses the FROM/FOR form itself
     for (sql <- Seq("SELECT substring('hello' from 2 for 3)", "SELECT substring(x from 4) FROM t",
@@ -124,25 +107,5 @@ class PgRewriteSpec extends AnyFunSuite {
   test("information_schema views get fused names") {
     assert(PgRewrite("SELECT * FROM information_schema.tables") ===
       "SELECT * FROM information_schema_tables")
-  }
-
-  test("generate_series with non-literal bounds falls back to explode(sequence)") {
-    assert(PgRewrite("SELECT * FROM generate_series(1, array_upper(current_schemas(false), 1)) AS s(r)") ===
-      "SELECT * FROM (SELECT explode(CASE WHEN (1) <= (array_upper(current_schemas(false), 1)) " +
-        "THEN sequence(1, array_upper(current_schemas(false), 1)) ELSE array() END) AS r) AS s")
-    // literal bounds keep the distributed range() form
-    assert(PgRewrite("SELECT * FROM generate_series(1, 5)") ===
-      "SELECT * FROM (SELECT id AS generate_series FROM range(1, (5)+1))")
-  }
-
-  test("generate_series descending and empty ranges match PG") {
-    // literal negative step: range()'s exclusive bound flips to -1
-    assert(PgRewrite("SELECT * FROM generate_series(5, 1, -2)") ===
-      "SELECT * FROM (SELECT id AS generate_series FROM range(5, (1)-1, -2))")
-    // non-literal 3-arg: direction guard, so wrong-direction steps yield
-    // zero rows (PG) instead of a Spark sequence() error
-    assert(PgRewrite("SELECT * FROM generate_series(a, b, c) AS s(i)").contains(
-      "CASE WHEN ((c) > 0 AND (a) <= (b)) OR ((c) < 0 AND (a) >= (b)) " +
-        "THEN sequence(a, b, c) ELSE array() END"))
   }
 }

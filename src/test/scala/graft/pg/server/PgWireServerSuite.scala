@@ -50,6 +50,23 @@ class PgWireServerSuite extends AnyFunSuite with BeforeAndAfterAll {
     assert(psql("SELECT * FROM generate_series(1, 3)") === "1\n2\n3")
   }
 
+  test("a second server on the same base adds no second PG parser layer") {
+    val second = new PgWireServer(TestSpark.spark, port = 0)
+    second.start()
+    val c = new WireClient(second.boundPort)
+    try {
+      val pid = WireClient.backendPid(c.connect())
+      val spark = SessionRegistry.get(pid).get.spark
+      org.apache.spark.sql.graft.Internals.sessionParser(spark) match {
+        case pg: graft.pg.PgParserInterface =>
+          assert(!pg.delegate.isInstanceOf[graft.pg.PgParserInterface],
+            "the PG parser must wrap Spark's own, not another PG parser")
+        case other => fail(s"the connection does not parse with the PG parser: $other")
+      }
+      assert(WireClient.col0(c.simple("SELECT pg_backend_pid()")) === Seq(pid.toString))
+    } finally { c.close(); second.stop() }
+  }
+
   test("psql: PG-style command tags for DDL, CTAS and writes") {
     // psql prints the server's CommandComplete tag for row-less statements —
     // PG's tags carry the object type ("CREATE TABLE", not "CREATE")

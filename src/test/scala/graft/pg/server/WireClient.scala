@@ -22,7 +22,7 @@ class WireClient(port: Int) {
   def i16(v: Int): Array[Byte] = ByteBuffer.allocate(2).putShort(v.toShort).array()
   def i32(v: Int): Array[Byte] = ByteBuffer.allocate(4).putInt(v).array()
 
-  def connect(): Unit = {
+  def connect(): Msgs = {
     val body = cstr("user") ++ cstr("graft") ++ cstr("database") ++
       cstr("default") :+ 0.toByte
     os.writeInt(8 + body.length); os.writeInt(196608); os.write(body); os.flush()
@@ -108,6 +108,8 @@ object WireClient {
     }
   }
   def col0(m: Msgs): Seq[String] = rows(m).map(_.head)
+  /** The backend pid of the BackendKeyData in a startup exchange. */
+  def backendPid(m: Msgs): Int = ByteBuffer.wrap(m.find(_._1 == 'K').get._2).getInt
   /** (name, type oid, typlen) per column of the first RowDescription. */
   def columns(m: Msgs): Seq[(String, Int, Int)] = m.filter(_._1 == 'T').take(1).flatMap {
     case (_, p) =>
