@@ -6,11 +6,11 @@ import java.util.Arrays
 
 import scala.collection.mutable.ArrayBuffer
 
-import graft.pg.wire.ParamCodec
+import graft.pg.wire.{ParamCodec, RowCodec}
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.{AttributeReference, GenericInternalRow}
-import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, UnsafeProjection}
 import org.apache.spark.sql.graft.Internals
 import org.apache.spark.sql.types.StructType
 
@@ -205,11 +205,11 @@ object PgCopy {
 
   /** Stateful parser/inserter for one COPY FROM STDIN operation. Every
     * field decodes once, through the reader Bind uses, into its column's
-    * Catalyst value, and each flush inserts one `LocalRelation` of rows in
-    * table-column order (a column outside the COPY list is NULL, PG's
-    * default-less behavior). CopyData payloads may split rows (and csv
-    * quoted fields may contain newlines) arbitrarily, so the line scanner
-    * keeps carry + quote state across feeds. Failures latch: the remaining
+    * Catalyst value, and each flush inserts its rows in table-column order
+    * (a column outside the COPY list is NULL, PG's default-less behavior)
+    * as one task, which writes one file. CopyData payloads may split rows
+    * (and csv quoted fields may contain newlines) arbitrarily, so the line
+    * scanner keeps carry + quote state across feeds. Failures latch: the remaining
     * stream is drained cheaply and the error surfaces once at CopyDone,
     * like PG.
     */
@@ -230,7 +230,7 @@ object PgCopy {
     private val slots: Array[Int] = colNames.map(targetSchema.fieldIndex).toArray
     private val decoders: Array[ParamCodec.Reader] = colNames.map(c => ParamCodec.columnReader(
       targetSchema(c).dataType, if (stmt.opts.binary) 1 else 0, zone)).toArray
-    private val output = targetSchema.map(f => AttributeReference(f.name, f.dataType)())
+    private val toUnsafe = UnsafeProjection.create(targetSchema)
     private val delim = stmt.opts.delimiter.toByte
     private val nullBytes = stmt.opts.nullStr.getBytes(UTF_8)
 
@@ -239,7 +239,7 @@ object PgCopy {
     private var headerPending = stmt.opts.header
     private var binHeaderDone = false
     private var sawEndMarker = false
-    private val rows = ArrayBuffer.empty[GenericInternalRow]
+    private val rows = ArrayBuffer.empty[InternalRow]
     private var inserted = 0L
     @volatile var failure: Option[Throwable] = None
 
@@ -324,7 +324,7 @@ object PgCopy {
         if (fields(i) != null) row(slots(i)) = decoders(i)(fields(i))
         i += 1
       }
-      rows += new GenericInternalRow(row)
+      rows += toUnsafe(new GenericInternalRow(row)).copy()
     }
 
     /** drain the final unterminated line, flush, return total rows */
@@ -357,7 +357,7 @@ object PgCopy {
     }
 
     private def flush(): Unit = if (rows.nonEmpty) {
-      Internals.ofRows(spark, LocalRelation(output, rows.toIndexedSeq))
+      Internals.oneTaskFrame(spark, rows.toIndexedSeq, targetSchema)
         .write.mode("append").insertInto(stmt.table)
       inserted += rows.size
       rows.clear()
@@ -444,29 +444,131 @@ object PgCopy {
     fields.toArray
   }
 
-  // ---- copy-out escaping ----
+  // ---- copy-out: Catalyst rows -> PG copy-format lines ----
 
-  /** escape one PG text-format field */
-  private[server] def escapeText(s: String): String = {
-    if (s.indexOf('\\') < 0 && s.indexOf('\t') < 0 && s.indexOf('\n') < 0 &&
-      s.indexOf('\r') < 0) return s
-    val sb = new StringBuilder(s.length + 8)
-    s.foreach {
-      case '\\' => sb.append("\\\\")
-      case '\t' => sb.append("\\t")
-      case '\n' => sb.append("\\n")
-      case '\r' => sb.append("\\r")
-      case c => sb.append(c)
+  /** One COPY TO line per row: in text and csv, each field is the DataRow
+    * text ([[RowCodec.textWriter]]) escaped in place, fields joined by the
+    * delimiter, NULL written as the NULL string; in binary, the tuple's
+    * field count and the DataRow binary fields. Every COPY escape is
+    * ASCII, and no byte of a multi-byte UTF-8 character is, so escaping
+    * the bytes escapes the characters. Throws, for binary, on a type that
+    * has no binary form; a full buffer throws `BufferOverflowException`,
+    * and the row can be written again into a larger one.
+    */
+  private[server] def lineWriter(schema: StructType, opts: CopyOptions,
+      zone: java.time.ZoneId): (InternalRow, ByteBuffer) => Unit =
+    if (opts.binary) {
+      val fields = RowCodec.rowWriter(schema, Seq.fill(schema.length)(true), zone)
+      (row, b) => { b.putShort(schema.length.toShort); fields(row, b) }
+    } else {
+      val texts = schema.fields.indices.map(i => RowCodec.textWriter(schema(i).dataType, i, zone))
+      val delim = opts.delimiter.toByte
+      val nullBytes = opts.nullStr.getBytes(UTF_8)
+      val oneColumn = schema.length == 1
+      (row, b) => {
+        var i = 0
+        while (i < texts.length) {
+          if (i > 0) b.put(delim)
+          if (row.isNullAt(i)) b.put(nullBytes)
+          else {
+            val from = b.position()
+            texts(i)(row, b)
+            if (opts.csv) quoteCsv(b, from, delim, nullBytes, oneColumn)
+            else escapeText(b, from, delim)
+          }
+          i += 1
+        }
+        b.put('\n'.toByte)
+      }
     }
-    sb.toString
+
+  /** The letter after `\` that stands for `c` in a text-format field: PG's
+    * CopyAttributeOutText escapes the backslash, the control characters it
+    * has letters for and the delimiter (as itself); 0 for any other byte.
+    */
+  private def textEscape(c: Byte, delim: Byte): Byte = c match {
+    case '\\' => '\\'
+    case '\n' => 'n'
+    case '\r' => 'r'
+    case '\t' => 't'
+    case '\b' => 'b'
+    case '\f' => 'f'
+    case 0x0b => 'v'
+    case _ => if (c == delim) c else 0
   }
 
-  /** quote one csv field if needed */
+  /** PG's CopyAttributeOutText on the field at `from`, in place. */
+  private def escapeText(b: ByteBuffer, from: Int, delim: Byte): Unit = {
+    var extra = 0
+    var p = from
+    while (p < b.position()) { if (textEscape(b.get(p), delim) != 0) extra += 1; p += 1 }
+    if (extra > 0) {
+      val end = b.position()
+      if (b.remaining < extra) throw new java.nio.BufferOverflowException
+      var src = end
+      var dst = end + extra
+      while (src > from) { // backwards, so no byte is overwritten unread
+        src -= 1
+        val c = b.get(src)
+        val e = textEscape(c, delim)
+        if (e == 0) { dst -= 1; b.put(dst, c) }
+        else { dst -= 2; b.put(dst, '\\'.toByte); b.put(dst + 1, e) }
+      }
+      b.position(end + extra)
+    }
+  }
+
+  /** PG's CopyAttributeOutCSV on the field at `from`, in place: quoted
+    * when it holds the delimiter, a quote, CR or LF, when it equals the
+    * NULL string (so an empty string stays apart from the default empty
+    * NULL), or when it is a lone `\.` in a one-column row (which older
+    * readers take for the end of data); a quote inside is doubled.
+    */
+  private def quoteCsv(b: ByteBuffer, from: Int, delim: Byte, nullStr: Array[Byte],
+      oneColumn: Boolean): Unit = {
+    val end = b.position()
+    var quotes = 0
+    var quote = end - from == nullStr.length &&
+      (0 until nullStr.length).forall(k => b.get(from + k) == nullStr(k)) ||
+      oneColumn && end - from == 2 && b.get(from) == '\\' && b.get(from + 1) == '.'
+    var p = from
+    while (p < end) {
+      val c = b.get(p)
+      if (c == '"') quotes += 1
+      else if (c == delim || c == '\n' || c == '\r') quote = true
+      p += 1
+    }
+    if (quote || quotes > 0) {
+      if (b.remaining < quotes + 2) throw new java.nio.BufferOverflowException
+      var src = end
+      var dst = end + quotes + 1
+      b.put(dst, '"'.toByte)
+      while (src > from) { // backwards, so no byte is overwritten unread
+        src -= 1
+        val c = b.get(src)
+        dst -= 1; b.put(dst, c)
+        if (c == '"') { dst -= 1; b.put(dst, c) }
+      }
+      b.put(from, '"'.toByte)
+      b.position(end + quotes + 2)
+    }
+  }
+
+  /** `s` as [[escapeText]] writes it with the tab delimiter. */
+  private[server] def escapeText(s: String): String = escaped(s)(escapeText(_, 0, '\t'))
+
+  /** `s` as [[quoteCsv]] writes it in a row of more than one column, with
+    * the default empty NULL string.
+    */
   private[server] def escapeCsv(s: String, delim: Char): String =
-    if (s.indexOf('"') >= 0 || s.indexOf(delim) >= 0 || s.indexOf('\n') >= 0 ||
-      s.indexOf('\r') >= 0)
-      "\"" + s.replace("\"", "\"\"") + "\""
-    else s
+    escaped(s)(quoteCsv(_, 0, delim.toByte, Array.emptyByteArray, oneColumn = false))
+
+  private def escaped(s: String)(escape: ByteBuffer => Unit): String = {
+    val bytes = s.getBytes(UTF_8)
+    val b = ByteBuffer.allocate(2 * bytes.length + 2).put(bytes)
+    escape(b)
+    new String(b.array, 0, b.position(), UTF_8)
+  }
 
   /** COPY BINARY frame format (PG file_fdw/copy.c `binary` mode): the
     * 11-byte signature + int32 flags + int32 header-extension length, then

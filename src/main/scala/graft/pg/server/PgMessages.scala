@@ -146,7 +146,8 @@ object PgMessages {
       (0 until nCols).foreach(_ => b.writeShort(f))
     }
 
-  def copyData(buf: ByteBuf, bytes: Array[Byte]): Unit =
+  /** CopyData 'd' carrying the buffer's remaining bytes. */
+  def copyData(buf: ByteBuf, bytes: java.nio.ByteBuffer): Unit =
     msg(buf, 'd')(_.writeBytes(bytes))
 
   def copyDone(buf: ByteBuf): Unit = msg(buf, 'c')(_ => ())

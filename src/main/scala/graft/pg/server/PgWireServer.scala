@@ -1327,12 +1327,12 @@ private class PgConnectionHandler(base: SparkSession, shared: Option[SparkSessio
   }
 
   /** COPY ... TO STDOUT: CopyOutResponse, then one CopyData per row streamed
-    * through the incremental iterator, CopyDone, COPY tag. Text and csv rows
-    * render in PG copy format. FORMAT binary frames the tuples between the
-    * PGCOPY signature header and the int16 -1 trailer, each an int16 field
-    * count + the SAME per-field binary encodings the DataRow writer emits
-    * (RowCodec reused verbatim, numerics included) through the
-    * grow-on-overflow scratch buffer, so memory stays bounded at any size.
+    * through the incremental iterator, CopyDone, COPY tag. Each row is one
+    * `PgCopy.lineWriter` line, written through the grow-on-overflow scratch
+    * buffer, so memory stays bounded at any size: text and csv lines of the
+    * DataRow text, escaped for COPY, or, for FORMAT binary, tuples of the
+    * DataRow binary fields between the PGCOPY signature header and the
+    * int16 -1 trailer.
     */
   private def runCopyOut(co: PgCopy.CopyOut, op: Operation): Unit = op.run {
     // a table name resolves as in a query, so pg_catalog relations copy out
@@ -1342,49 +1342,19 @@ private class PgConnectionHandler(base: SparkSession, shared: Option[SparkSessio
       if (co.cols.nonEmpty)
         base.select(co.cols.map(org.apache.spark.sql.functions.col).toIndexedSeq: _*)
       else base
-    val schema = df.schema
     val opts = co.opts
-    val encode: InternalRow => Array[Byte] = if (opts.binary) {
-      // throws here, before CopyOutResponse, for a type not binaryCapable
-      val fields = RowCodec.rowWriter(schema, Seq.fill(schema.length)(true), sessionZone)
-      val tuple = (row: InternalRow, b: ByteBuffer) => {
-        b.putShort(schema.length.toShort); fields(row, b)
-      }
-      val scratch = new Scratch
-      row => {
-        val buf = scratch.encode(tuple, row)
-        val bytes = new Array[Byte](buf.remaining()); buf.get(bytes); bytes
-      }
-    } else {
-      val fields = schema.fields.zipWithIndex.map { case (f, i) =>
-        RowCodec.textOf(f.dataType, i, sessionZone)
-      }
-      val sb = new StringBuilder
-      row => {
-        sb.clear()
-        var i = 0
-        while (i < fields.length) {
-          if (i > 0) sb.append(opts.delimiter)
-          if (row.isNullAt(i)) sb.append(if (opts.csv) opts.nullStr else "\\N")
-          else {
-            val v = fields(i)(row)
-            sb.append(if (opts.csv) PgCopy.escapeCsv(v, opts.delimiter) else PgCopy.escapeText(v))
-          }
-          i += 1
-        }
-        sb.append('\n')
-        sb.toString.getBytes(UTF_8)
-      }
-    }
-    PgMessages.copyOutResponse(currentOut, schema.length, opts.binary)
-    if (opts.binary) PgMessages.copyData(currentOut, PgCopy.BinaryCopy.header)
+    // throws here, before CopyOutResponse, for a type not binaryCapable
+    val line = PgCopy.lineWriter(df.schema, opts, sessionZone)
+    val scratch = new Scratch
+    PgMessages.copyOutResponse(currentOut, df.schema.length, opts.binary)
+    if (opts.binary) PgMessages.copyData(currentOut, ByteBuffer.wrap(PgCopy.BinaryCopy.header))
     var n = 0L
     resultIterator(df).foreach { row =>
-      PgMessages.copyData(currentOut, encode(row))
+      PgMessages.copyData(currentOut, scratch.encode(line, row))
       maybeFlush()
       n += 1
     }
-    if (opts.binary) PgMessages.copyData(currentOut, PgCopy.BinaryCopy.Trailer)
+    if (opts.binary) PgMessages.copyData(currentOut, ByteBuffer.wrap(PgCopy.BinaryCopy.Trailer))
     op.rowsSent = n
     PgMessages.copyDone(currentOut)
     commandComplete(currentOut, s"COPY $n")

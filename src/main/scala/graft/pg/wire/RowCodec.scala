@@ -2,15 +2,12 @@ package graft.pg.wire
 
 import java.nio.ByteBuffer
 import java.nio.charset.StandardCharsets.UTF_8
-import java.time.{Instant, LocalDate, LocalDateTime, ZoneId, ZoneOffset}
-import java.time.format.DateTimeFormatter
-
-import scala.collection.mutable.ArrayBuffer
+import java.time.{Instant, ZoneId, ZoneOffset}
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayData, MapData}
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.unsafe.types.{CalendarInterval, UTF8String}
 
 /** PostgreSQL V3 DataRow field writers: one per (Catalyst type, format).
   * Layout per field: int32 byte-length then the payload, length -1 for NULL
@@ -46,81 +43,75 @@ object RowCodec {
   private def putBytes(buf: ByteBuffer, b: Array[Byte]): Unit = {
     buf.putInt(b.length); buf.put(b)
   }
-  private def putText(buf: ByteBuffer, s: String): Unit = putBytes(buf, s.getBytes(UTF_8))
 
-  private val tsFmt = DateTimeFormatter.ofPattern("uuuu-MM-dd HH:mm:ss")
+  /** `write`'s bytes, at most `max` of them, as a String: the scalar text
+    * nested in arrays and JSON.
+    */
+  private def render(max: Int)(write: ByteBuffer => Unit): String = {
+    val b = ByteBuffer.allocate(max)
+    write(b)
+    new String(b.array, 0, b.position(), UTF_8)
+  }
 
   /** PG-style timestamp text: micros with trailing zeros trimmed, no
     * fractional dot when zero (PG timestamp_out behavior; the reference used
     * java.sql.Timestamp.toString which always emits ".0" — we match PG).
     * Instant micros are rendered as wall-clock time in `zone`.
     */
-  def timestampText(micros: Long, zone: ZoneId = ZoneOffset.UTC): String = {
-    val instant = Instant.ofEpochSecond(
-      Math.floorDiv(micros, 1000000L), Math.floorMod(micros, 1000000L) * 1000L)
-    fracText(tsFmt.format(LocalDateTime.ofInstant(instant, zone)),
-      Math.floorMod(micros, 1000000L))
-  }
+  def timestampText(micros: Long, zone: ZoneId = ZoneOffset.UTC): String =
+    render(64)(PgText.putTimestamp(_, micros, zone.getRules))
 
   /** TimestampNTZ text: the micros already encode a wall-clock local time,
     * so no zone shift is applied (PG timestamp-without-time-zone semantics).
     */
-  def timestampNtzText(micros: Long): String =
-    fracText(tsFmt.format(LocalDateTime.ofEpochSecond(
-      Math.floorDiv(micros, 1000000L), Math.floorMod(micros, 1000000L).toInt * 1000,
-      ZoneOffset.UTC)), Math.floorMod(micros, 1000000L))
+  def timestampNtzText(micros: Long): String = render(64)(PgText.putTimestampNtz(_, micros))
 
-  private def fracText(base: String, frac: Long): String =
-    if (frac == 0) base
-    else base + "." + f"$frac%06d".reverse.dropWhile(_ == '0').reverse
+  def dateText(days: Int): String = render(32)(PgText.putDate(_, days))
 
-  def dateText(days: Int): String = LocalDate.ofEpochDay(days.toLong).toString
-
-  /** PG interval_out text for a day-time interval stored as total micros:
-    * `1 day 02:03:04.5`, negative `-1 days -02:03:04` (PG prints plural
-    * `days` for negative magnitudes).
+  /** PG interval_out (IntervalStyle postgres) of months, days and time
+    * micros: `1 year 2 mons 3 days 04:05:06.5`. Years and months split the
+    * months, hours are not folded into days, and each nonzero part carries
+    * its own sign (`-1 years -2 mons`), with `+` on a positive part that
+    * follows a negative one (`-1 days +02:00:00`); all zero is `00:00:00`.
     */
-  def dayTimeIntervalText(micros: Long): String = {
-    val neg = micros < 0
-    // math.abs(Long.MinValue) == Long.MinValue, which would make every
-    // component negative garbage; the unsigned bit pattern of -MinValue is
-    // the true magnitude 2^63, so divide/mod unsigned (both results fit in
-    // a signed long: max days ~1.07e11, rem < 8.64e10)
-    val mag = if (neg) -micros else micros
-    val days = java.lang.Long.divideUnsigned(mag, 86400000000L)
-    val rem = java.lang.Long.remainderUnsigned(mag, 86400000000L)
-    val h = rem / 3600000000L
-    val m = (rem % 3600000000L) / 60000000L
-    val s = (rem % 60000000L) / 1000000L
-    val frac = rem % 1000000L
+  def intervalText(months: Int, days: Long, micros: Long): String = {
     val sb = new StringBuilder
-    if (days > 0) {
-      if (neg) sb.append('-')
-      sb.append(days).append(if (days == 1 && !neg) " day" else " days")
-    }
-    if (rem > 0 || days == 0) {
+    var afterNegative = false
+    def part(v: Long, unit: String): Unit = if (v != 0) {
       if (sb.nonEmpty) sb.append(' ')
-      if (neg) sb.append('-')
-      sb.append(f"$h%02d:$m%02d:$s%02d")
-      if (frac > 0) sb.append(fracText("", frac))
+      if (afterNegative && v > 0) sb.append('+')
+      sb.append(v).append(' ').append(unit)
+      if (v != 1) sb.append('s')
+      afterNegative = v < 0
+    }
+    part(months / 12, "year")
+    part(months % 12, "mon")
+    part(days, "day")
+    if (sb.isEmpty || micros != 0) {
+      if (sb.nonEmpty) sb.append(' ')
+      if (micros < 0) sb.append('-') else if (afterNegative) sb.append('+')
+      // -Long.MinValue is itself; its unsigned bit pattern is the true
+      // magnitude 2^63, so divide unsigned (the quotient fits a long)
+      val mag = if (micros < 0) -micros else micros
+      val h = java.lang.Long.divideUnsigned(mag, 3600000000L)
+      val rem = java.lang.Long.remainderUnsigned(mag, 3600000000L)
+      def two(v: Long): Unit = { if (v < 10) sb.append('0'); sb.append(v) }
+      two(h); sb.append(':'); two(rem / 60000000L); sb.append(':'); two(rem / 1000000L % 60)
+      sb.append(render(8)(PgText.putFraction(_, rem % 1000000L)))
     }
     sb.toString
   }
 
+  /** PG interval_out text for a day-time interval stored as total micros:
+    * `1 day 02:03:04.5`, negative `-1 days -02:03:04`.
+    */
+  def dayTimeIntervalText(micros: Long): String =
+    intervalText(0, micros / 86400000000L, micros % 86400000000L)
+
   /** PG interval_out text for a year-month interval stored as total months:
     * `1 year 2 mons`; zero renders as PG's `00:00:00`.
     */
-  def yearMonthIntervalText(months: Int): String = {
-    if (months == 0) return "00:00:00"
-    val neg = months < 0
-    val abs = math.abs(months)
-    val y = abs / 12
-    val m = abs % 12
-    val parts = new ArrayBuffer[String](2)
-    if (y > 0) parts += s"${if (neg) "-" else ""}$y ${if (y == 1 && !neg) "year" else "years"}"
-    if (m > 0) parts += s"${if (neg) "-" else ""}$m ${if (m == 1 && !neg) "mon" else "mons"}"
-    parts.mkString(" ")
-  }
+  def yearMonthIntervalText(months: Int): String = intervalText(months, 0, 0)
 
   def fieldWriter(dt: DataType, i: Int, binary: Boolean,
       zone: ZoneId = ZoneOffset.UTC): FieldWriter = (dt, binary) match {
@@ -169,41 +160,80 @@ object RowCodec {
     }
     case (BinaryType, true) => (r, b) => putBytes(b, r.getBinary(i))
 
-    // ---- text mode ----
+    // ---- text mode: the length slot is reserved, then backpatched ----
     case (BooleanType, false) => (r, b) => { b.putInt(1); b.put(if (r.getBoolean(i)) 't'.toByte else 'f'.toByte) }
-    case (_, false) => val text = textOf(dt, i, zone); (r, b) => putText(b, text(r))
+    case (_, false) =>
+      val text = textWriter(dt, i, zone)
+      (r, b) => {
+        val at = b.position()
+        b.putInt(0)
+        text(r, b)
+        b.putInt(at, b.position() - at - 4)
+      }
     case (other, true) =>
       throw new IllegalArgumentException(s"binary format unsupported for $other")
   }
 
-  /** PG text output of non-null column `i`: the DataRow text payload and
-    * a `COPY TO` text/csv field before COPY escaping.
+  /** Writes a non-null field's PG text at the buffer's position, with no
+    * length before it.
     */
-  def textOf(dt: DataType, i: Int, zone: ZoneId): InternalRow => String = dt match {
-    case BooleanType => r => if (r.getBoolean(i)) "t" else "f"
-    case StringType => r => r.getUTF8String(i).toString
-    case BinaryType => r => byteaText(r.getBinary(i))
-    case DateType => r => dateText(r.getInt(i))
-    case TimestampType => r => timestampText(r.getLong(i), zone)
-    case TimestampNTZType => r => timestampNtzText(r.getLong(i))
-    case _: DayTimeIntervalType => r => dayTimeIntervalText(r.getLong(i))
-    case _: YearMonthIntervalType => r => yearMonthIntervalText(r.getInt(i))
-    case d: DecimalType => r => r.getDecimal(i, d.precision, d.scale).toJavaBigDecimal.toPlainString
-    case at: ArrayType => r => pgArrayText(r.getArray(i), at.elementType, zone)
-    case mt: MapType => r => jsonValue(r.getMap(i), mt, zone)
-    case st: StructType => r => jsonValue(r.getStruct(i, st.length), st, zone)
-    case ByteType => r => r.getByte(i).toString
-    case ShortType => r => r.getShort(i).toString
-    case IntegerType => r => r.getInt(i).toString
-    case LongType => r => r.getLong(i).toString
-    case FloatType => r => r.getFloat(i).toString
-    case DoubleType => r => r.getDouble(i).toString
-    case CalendarIntervalType => r => r.getInterval(i).toString
-    case other => r => String.valueOf(r.get(i, other))
+  type TextWriter = (InternalRow, ByteBuffer) => Unit
+
+  /** The one PG text renderer, for column `i`: the DataRow text payload,
+    * and a `COPY TO` text/csv field before COPY escaping. Scalars are
+    * written as bytes; bytea, arrays, maps, structs and intervals build
+    * their text first. A full buffer throws `BufferOverflowException`,
+    * and the row can be written again into a larger one.
+    */
+  def textWriter(dt: DataType, i: Int, zone: ZoneId): TextWriter = dt match {
+    case BooleanType => (r, b) => b.put(if (r.getBoolean(i)) 't'.toByte else 'f'.toByte)
+    case _: StringType => (r, b) => {
+      val s = r.getUTF8String(i)
+      // UTF8String.writeTo copyMemory's into the backing array BEFORE any
+      // bounds check: check first, as the DataRow writer does
+      if (b.remaining() < s.numBytes()) throw new java.nio.BufferOverflowException
+      s.writeTo(b)
+    }
+    case ByteType => (r, b) => PgText.putLong(b, r.getByte(i))
+    case ShortType => (r, b) => PgText.putLong(b, r.getShort(i))
+    case IntegerType => (r, b) => PgText.putLong(b, r.getInt(i))
+    case LongType => (r, b) => PgText.putLong(b, r.getLong(i))
+    case FloatType => (r, b) => PgText.putFloat(b, r.getFloat(i))
+    case DoubleType => (r, b) => PgText.putDouble(b, r.getDouble(i))
+    case d: DecimalType if d.precision <= Decimal.MAX_LONG_DIGITS && d.scale >= 0 => (r, b) => {
+      val v = r.getDecimal(i, d.precision, d.scale)
+      PgText.putDecimal(b, v.toUnscaledLong, v.scale)
+    }
+    case d: DecimalType => (r, b) =>
+      PgText.putAscii(b, r.getDecimal(i, d.precision, d.scale).toJavaBigDecimal.toPlainString)
+    case DateType => (r, b) => PgText.putDate(b, r.getInt(i))
+    case TimestampType =>
+      val rules = zone.getRules
+      (r, b) => PgText.putTimestamp(b, r.getLong(i), rules)
+    case TimestampNTZType => (r, b) => PgText.putTimestampNtz(b, r.getLong(i))
+    case BinaryType => (r, b) => PgText.putBytea(b, r.getBinary(i))
+    case _ =>
+      val text = textOfValue(dt, zone)
+      (r, b) => b.put(text(r.get(i, dt)).getBytes(UTF_8))
+  }
+
+  /** The text of a non-null value of a type [[textWriter]] renders as a
+    * String, nested values included.
+    */
+  private def textOfValue(dt: DataType, zone: ZoneId): Any => String = dt match {
+    case _: DayTimeIntervalType => v => dayTimeIntervalText(v.asInstanceOf[Long])
+    case _: YearMonthIntervalType => v => yearMonthIntervalText(v.asInstanceOf[Int])
+    case CalendarIntervalType => v => {
+      val iv = v.asInstanceOf[CalendarInterval]
+      intervalText(iv.months, iv.days, iv.microseconds)
+    }
+    case at: ArrayType => v => pgArrayText(v.asInstanceOf[ArrayData], at.elementType, zone)
+    case _: MapType | _: StructType => v => jsonValue(v, dt, zone)
+    case _ => v => String.valueOf(v)
   }
 
   /** PG's bytea_output = hex: `\x` then two lowercase digits per byte. */
-  def byteaText(b: Array[Byte]): String = "\\x" + java.util.HexFormat.of.formatHex(b)
+  def byteaText(b: Array[Byte]): String = render(2 + 2 * b.length)(PgText.putBytea(_, b))
 
   /** PG array literal: `{1,2,3}` / `{"a","b"}` (reference renders via JSON
     * then re-braces, converters.scala:370-388 — same output, built directly).
@@ -264,7 +294,10 @@ object RowCodec {
     case (m: Long, _: DayTimeIntervalType) => jsonString(dayTimeIntervalText(m))
     case (m: Int, _: YearMonthIntervalType) => jsonString(yearMonthIntervalText(m))
     case (b: Array[Byte], BinaryType) => jsonString(byteaText(b))
+    case (iv: CalendarInterval, _) => jsonString(intervalText(iv.months, iv.days, iv.microseconds))
     case (d: Decimal, _) => d.toJavaBigDecimal.toPlainString
+    case (f: Float, _) => render(32)(PgText.putFloat(_, f))
+    case (d: Double, _) => render(32)(PgText.putDouble(_, d))
     case (other, _) => other.toString
   }
 

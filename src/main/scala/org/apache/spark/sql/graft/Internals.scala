@@ -119,6 +119,16 @@ object Internals {
     }
   }
 
+  /** A DataFrame over `rows` (UnsafeRows of `schema`) as one RDD
+    * partition, every column nullable: inserting it runs one task, which
+    * writes one file, and its plan holds no rows for the analyzer and
+    * `explainString` to walk, as a `LocalRelation`'s does.
+    */
+  def oneTaskFrame(spark: SparkSession, rows: Seq[org.apache.spark.sql.catalyst.InternalRow],
+      schema: org.apache.spark.sql.types.StructType): DataFrame =
+    classic(spark).internalCreateDataFrame(
+      spark.sparkContext.parallelize(rows, 1), schema.asNullable)
+
   /** One-shot collect of InternalRows (cursor-re-entrant mode). */
   def executeCollect(df: DataFrame): Array[org.apache.spark.sql.catalyst.InternalRow] =
     df.asInstanceOf[org.apache.spark.sql.classic.Dataset[org.apache.spark.sql.Row]]

@@ -423,4 +423,76 @@ class PgCopySuite extends AnyFunSuite with BeforeAndAfterAll {
       assert(refusedAny)
     }
   }
+
+  test("COPY TO writes the NULL string PG's way: quoted csv values equal to it, the text option") {
+    def copyOut(sql: String) = Seq("psql", s"host=127.0.0.1 port=$port dbname=default user=graft",
+      "-c", sql).!!
+    // csv: an empty string is quoted apart from the empty NULL string
+    assert(copyOut("COPY (SELECT '' AS a, CAST(NULL AS STRING) AS b, 'x' AS c) " +
+      "TO STDOUT WITH (FORMAT csv)") === "\"\",,x\n")
+    assert(copyOut("COPY (SELECT 'nil' AS a, CAST(NULL AS STRING) AS b, '' AS c) " +
+      "TO STDOUT WITH (FORMAT csv, NULL 'nil')") === "\"nil\",nil,\n")
+    // a lone \. is quoted in a one-column row only
+    assert(copyOut("COPY (SELECT chr(92) || '.' AS a) TO STDOUT WITH (FORMAT csv)") === "\"\\.\"\n")
+    assert(copyOut("COPY (SELECT chr(92) || '.' AS a, 1 AS b) TO STDOUT WITH (FORMAT csv)") ===
+      "\\.,1\n")
+    // text: the NULL option's string, not \N; the delimiter is escaped
+    assert(copyOut("COPY (SELECT 1 AS a, CAST(NULL AS INT) AS b, 'x|y' AS c) " +
+      "TO STDOUT WITH (NULL 'nil', DELIMITER '|')") === "1|nil|x\\|y\n")
+  }
+
+  test("a COPY FROM of 10 000 rows inserts one file") {
+    val spark = TestSpark.spark
+    spark.sql("DROP TABLE IF EXISTS copy_one")
+    spark.sql("CREATE TABLE copy_one (k INT, v STRING) USING parquet")
+    try {
+      val data = (0 until 10000).map(k => s"$k\tv$k\n").mkString.getBytes(UTF_8)
+      withClient(port) { c =>
+        assert(commandTags(copyIn(c, "COPY copy_one FROM STDIN", data)) === Seq("COPY 10000"))
+      }
+      assert(spark.table("copy_one").inputFiles.length === 1)
+      assert(spark.sql("SELECT count(DISTINCT k), min(v) FROM copy_one").head.toSeq ===
+        Seq(10000L, "v0"))
+    } finally spark.sql("DROP TABLE IF EXISTS copy_one")
+  }
+
+  test("property: COPY TO then COPY FROM gives back the rows, in text and csv") {
+    val formats = Seq("", "(DELIMITER '|')", "(FORMAT csv)", "(FORMAT csv, NULL 'nil')")
+    // besides the parity inputs: the NULL strings, delimiters, quotes and
+    // escapes as string values
+    val strings = Seq("", "\\N", "\\.", "nil", "a|b", "a,b", "\"q\"", "line\nbreak", "cr\rx",
+      "back\\slash", "\u000b\b\f", "é\t|")
+    withClient(port) { c =>
+      c.simple("SET TIME ZONE 'America/New_York'")
+      /** the stored rows as the server renders them */
+      def stored(table: String) = rows(c.simple(s"SELECT k, v FROM $table ORDER BY k"))
+      parityInputs.foreach { case (sqlType, decoded, passedOn) =>
+        val inputs =
+          (decoded ++ passedOn ++ (if (sqlType == "STRING") strings else Nil)).zipWithIndex
+        Seq("rt_src", "rt_dst").foreach(t => assert(error(c.simple(
+          s"CREATE TABLE $t (k INT, v $sqlType) USING parquet")) === None))
+        try {
+          // each input as Spark reads it, NULL where it cannot
+          c.parse("", inputs.map { case (_, k) => s"($k, try_cast($$${k + 1} AS $sqlType))" }
+            .mkString("INSERT INTO rt_src VALUES ", ", ", ""),
+            inputs.map(_ => graft.pg.wire.PgTypes.VARCHAR))
+          c.bind("", "", inputs.map(_._1))
+          c.execute("")
+          assert(error(c.sync()) === None, sqlType)
+          val src = stored("rt_src")
+          assert(src.size === inputs.size)
+          assert(src.exists(_(1) != null), sqlType)
+          formats.foreach { opts =>
+            val out = c.simple(s"COPY (SELECT k, v FROM rt_src) TO STDOUT $opts")
+            assert(error(out) === None, s"$sqlType $opts")
+            val data = out.filter(_._1 == 'd').flatMap(_._2).toArray
+            c.simple("TRUNCATE TABLE rt_dst")
+            val in = copyIn(c, s"COPY rt_dst FROM STDIN $opts", data)
+            assert(error(in) === None, s"$sqlType $opts")
+            assert(stored("rt_dst") === src, s"$sqlType $opts: ${new String(data, UTF_8)}")
+          }
+        } finally Seq("rt_src", "rt_dst").foreach(t => c.simple(s"DROP TABLE $t"))
+      }
+    }
+  }
 }

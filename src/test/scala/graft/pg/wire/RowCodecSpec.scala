@@ -43,8 +43,8 @@ class RowCodecSpec extends AnyFunSuite {
   test("primitive text encodings") {
     assert(new String(payload(write(IntegerType, 813, binary = false)), UTF_8) === "813")
     assert(new String(payload(write(LongType, 18923L, binary = false)), UTF_8) === "18923")
-    assert(new String(payload(write(DoubleType, 8.0, binary = false)), UTF_8) === "8.0")
-    assert(new String(payload(write(FloatType, 1.0f, binary = false)), UTF_8) === "1.0")
+    assert(new String(payload(write(DoubleType, 8.0, binary = false)), UTF_8) === "8")
+    assert(new String(payload(write(FloatType, 1.0f, binary = false)), UTF_8) === "1")
     assert(new String(payload(write(ShortType, 2392.toShort, binary = false)), UTF_8) === "2392")
     assert(new String(payload(write(ByteType, 13.toByte, binary = false)), UTF_8) === "13")
   }
@@ -110,6 +110,83 @@ class RowCodecSpec extends AnyFunSuite {
     assert(new String(payload(write(TimestampType,
       micros("2024-01-15T12:34:56") + 123456L, binary = false)), UTF_8) ===
       "2024-01-15 12:34:56.123456")
+  }
+
+  private def text(dt: DataType, v: Any): String =
+    new String(payload(write(dt, v, binary = false)), UTF_8)
+
+  test("float text is PG's float8out/float4out: shortest digits, plain from 1e-4 to below 1e15") {
+    val doubles = Seq(8.0 -> "8", 1e14 -> "100000000000000", 1e15 -> "1e+15",
+      1.5e-5 -> "1.5e-05", 1e-4 -> "0.0001", 1e-5 -> "1e-05", -0.0 -> "-0", 0.0 -> "0",
+      0.1 + 0.2 -> "0.30000000000000004", 123.456 -> "123.456", -2.5e-10 -> "-2.5e-10",
+      1e100 -> "1e+100", Double.MaxValue -> "1.7976931348623157e+308",
+      Double.MinPositiveValue -> "5e-324", -1.5e-323 -> "-1.5e-323",
+      Double.NaN -> "NaN", Double.PositiveInfinity -> "Infinity",
+      Double.NegativeInfinity -> "-Infinity")
+    doubles.foreach { case (v, t) => assert(text(DoubleType, v) === t, v) }
+    val floats = Seq(1.0f -> "1", 1e6f -> "1e+06", 100000f -> "100000", 123456.79f -> "123456.79",
+      0.1f -> "0.1", -0.0f -> "-0", 3.4028235e38f -> "3.4028235e+38",
+      Float.MinPositiveValue -> "1e-45", 1.0e-4f -> "0.0001", Float.NaN -> "NaN",
+      Float.NegativeInfinity -> "-Infinity")
+    floats.foreach { case (v, t) => assert(text(FloatType, v) === t, v) }
+    // nested in arrays and JSON the same
+    assert(text(ArrayType(DoubleType), ArrayData.toArrayData(Array(1.0, 2.5, 1e15))) ===
+      "{1,2.5,1e+15}")
+  }
+
+  test("property: float text reads back as the value, laid out as PG's") {
+    val layout = "-?(0|[1-9][0-9]*)(\\.[0-9]*[1-9])?|-?[1-9](\\.[0-9]*[1-9])?e[+-][0-9]{2,3}".r
+    def check[T](dt: DataType, gen: Gen[T], oid: Int, maxPlain: Int) = {
+      val prop = Prop.forAll(gen) { v =>
+        val t = text(dt, v)
+        val back = ParamCodec.decode(t.getBytes(UTF_8), oid, 0).value
+        val plainOk = Seq("NaN", "Infinity", "-Infinity", "0", "-0").contains(t) || {
+          val d = new java.math.BigDecimal(t)
+          val exp = d.precision - d.scale - 1 // of the leading digit
+          layout.pattern.matcher(t).matches && t.contains("e") == (exp < -4 || exp > maxPlain)
+        }
+        Prop(back.equals(v) && plainOk) :| s"$v -> $t -> $back"
+      }
+      val result = Test.check(Test.Parameters.default.withMinSuccessfulTests(2000)
+        .withInitialSeed(Seed(20261019L)), prop)
+      assert(result.passed, s"$dt: ${result.status}")
+    }
+    check(DoubleType, Gen.oneOf(Arbitrary.arbitrary[Long].map(java.lang.Double.longBitsToDouble),
+      Arbitrary.arbitrary[Double], Gen.choose(-1e6, 1e6), Gen.choose(0L, 4096L)
+        .map(java.lang.Double.longBitsToDouble)), PgTypes.FLOAT8, 14)
+    // a few decimals below 10^12 (prices, quantities) print as the plain
+    // form of Java's shortest digits
+    val fewDecimals = Gen.zip(Gen.choose(-999999999999999L, 999999999999999L), Gen.choose(0, 4))
+      .map { case (m, k) => m / math.pow(10, k) }
+    val plainProp = Prop.forAll(fewDecimals) { v =>
+      val t = text(DoubleType, v)
+      val expected = if (v == 0) t else new java.math.BigDecimal(
+        com.fasterxml.jackson.core.io.NumberOutput.toString(v, true))
+        .stripTrailingZeros.toPlainString
+      val plain = math.abs(v) >= 1e-3 && math.abs(v) < 1e12
+      Prop(!plain || t == expected) :| s"$v -> $t, expected $expected"
+    }
+    assert(Test.check(Test.Parameters.default.withMinSuccessfulTests(5000)
+      .withInitialSeed(Seed(20261019L)), plainProp).passed)
+    check(DoubleType, fewDecimals, PgTypes.FLOAT8, 14)
+    check(FloatType, Gen.oneOf(Arbitrary.arbitrary[Int].map(java.lang.Float.intBitsToFloat),
+      Arbitrary.arbitrary[Float], Gen.choose(0, 4096).map(java.lang.Float.intBitsToFloat)),
+      PgTypes.FLOAT4, 5)
+  }
+
+  test("interval text is PG's interval_out, each part signed") {
+    def iv(months: Int, days: Int, micros: Long) =
+      text(CalendarIntervalType, new CalendarInterval(months, days, micros))
+    assert(iv(14, 2, 3723000004L) === "1 year 2 mons 2 days 01:02:03.000004")
+    assert(iv(-14, 3, -3600000000L) === "-1 years -2 mons +3 days -01:00:00")
+    assert(iv(0, -1, 7200000000L) === "-1 days +02:00:00")
+    assert(iv(-1, 0, 0) === "-1 mons")
+    assert(iv(1, 1, 0) === "1 mon 1 day")
+    assert(iv(0, 0, 90000000000L) === "25:00:00")
+    assert(iv(0, 0, -1) === "-00:00:00.000001")
+    assert(iv(0, 0, 0) === "00:00:00")
+    assert(iv(0, 0, Long.MinValue) === "-2562047788:00:54.775808")
+    assert(text(YearMonthIntervalType(), Int.MinValue) === "-178956970 years -8 mons")
   }
 
   test("interval binary: PG wire order time(int64), days(int32), months(int32)") {
@@ -459,5 +536,99 @@ class RowCodecSpec extends AnyFunSuite {
     val ny = ZoneId.of("America/New_York")
     assert(Seq(false, true).map(roundTrip(TimestampType, later, _, ny)) ===
       Seq.fill(2)(Some(later - 3600000000L)))
+  }
+
+  /** Every non-float scalar, arrays, maps and structs, with the edges of
+    * the byte writers: the digit and sign cases of integers and decimals,
+    * decimals stored as a long or as a BigDecimal, datetimes at epoch -1
+    * µs, at the ends of years 0 and 9999 and past them (which java.time
+    * renders), and the DST edges of the round-trip property.
+    */
+  private lazy val OracleCases: Seq[(DataType, Gen[Any])] = {
+    def edgesOr[T](edges: T*)(g: Gen[T]): Gen[Any] = Gen.frequency(1 -> Gen.oneOf(edges), 3 -> g)
+    def decimals(p: Int, s: Int): (DataType, Gen[Any]) = {
+      val max = BigInt(10).pow(p) - 1
+      DecimalType(p, s) -> edgesOr(BigInt(0), BigInt(1), BigInt(-1), BigInt(-5),
+        BigInt(10).pow(s).min(max), max, -max)(
+        Arbitrary.arbitrary[Long].map(l => BigInt(l) % (max + 1)))
+        .map { case u: BigInt => Decimal(BigDecimal(u, s), p, s) }
+    }
+    def day(y: Int, m: Int, d: Int) = java.time.LocalDate.of(y, m, d).toEpochDay.toInt
+    val dayEdges = Seq(day(0, 1, 1), day(0, 3, 1), day(9999, 12, 31), day(-1, 12, 31),
+      day(10000, 1, 1), day(1600, 2, 29), day(1900, 3, 1), day(2000, 2, 29), -1, 0)
+    def micros(s: String) = instantToMicros(Instant.parse(s))
+    val tsEdges = dayEdges.flatMap(d => Seq(d * 86400000000L, (d + 1) * 86400000000L - 1)) ++
+      Seq(-1L, 0L, 1L, Long.MinValue, Long.MaxValue, micros("2024-03-10T06:59:59.999999Z"),
+        micros("2024-03-10T07:00:00Z"), micros("2024-11-03T05:30:00Z"),
+        micros("2024-11-03T06:30:00Z"), micros("2024-10-06T15:30:00.5Z"))
+    val anyTs = Gen.oneOf(Gen.choose(day(-2, 1, 1) * 86400000000L, day(10001, 1, 1) * 86400000000L),
+      Arbitrary.arbitrary[Long])
+    val scalars = CodecCases.filterNot { case (dt, _) =>
+      dt == FloatType || dt == DoubleType || dt.isInstanceOf[DecimalType] ||
+        dt == DateType || dt == TimestampType || dt == TimestampNTZType
+    } ++ Seq(
+      ByteType -> Arbitrary.arbitrary[Byte],
+      DateType -> edgesOr(dayEdges: _*)(Gen.oneOf(Gen.choose(day(-2, 1, 1), day(10001, 1, 1)),
+        Arbitrary.arbitrary[Int])),
+      TimestampType -> edgesOr(tsEdges: _*)(anyTs),
+      TimestampNTZType -> edgesOr(tsEdges: _*)(anyTs),
+      DayTimeIntervalType() -> edgesOr(Long.MinValue, Long.MaxValue, 0L, -1L, 86400000000L)(
+        Arbitrary.arbitrary[Long]),
+      // the oracle writes nothing for Int.MinValue months (its math.abs
+      // stays negative); the interval test pins that value's text
+      YearMonthIntervalType() -> edgesOr(Int.MinValue + 1, Int.MaxValue, 0, -1, 12, -13)(
+        Arbitrary.arbitrary[Int].filter(_ != Int.MinValue))) ++
+      Seq((1, 0), (5, 5), (10, 2), (12, 4), (18, 0), (18, 18), (18, 6), (38, 18), (20, 0))
+        .map { case (p, s) => decimals(p, s) }
+    val nested = Seq(
+      ArrayType(LongType) -> Gen.listOf(Arbitrary.arbitrary[Long])
+        .map(l => ArrayData.toArrayData(l.toArray)),
+      ArrayType(DateType) -> Gen.listOf(Gen.choose(day(0, 1, 1), day(9999, 12, 31)))
+        .map(l => ArrayData.toArrayData(l.toArray)),
+      new StructType().add("t", TimestampType).add("d", DecimalType(10, 2)) ->
+        Gen.zip(anyTs, Arbitrary.arbitrary[Int]).map { case (t, d) =>
+          InternalRow(t, Decimal(BigDecimal(d.toLong, 2), 10, 2)) })
+    scalars ++ nested
+  }
+
+  test("property: the text writers write the oracle's bytes for every non-float type") {
+    val zones = Seq(ZoneOffset.UTC, ZoneId.of("America/New_York"), ZoneId.of("Asia/Kolkata"),
+      ZoneId.of("Australia/Lord_Howe"), ZoneOffset.ofHours(-18))
+    for (zone <- zones; (dt, gen) <- OracleCases) {
+      val schema = StructType(Seq(StructField("a", dt)))
+      val writer = RowCodec.rowWriter(schema, Seq(false), zone)
+      val toUnsafe = org.apache.spark.sql.catalyst.expressions.UnsafeProjection.create(schema)
+      val prop = Prop.forAll(gen) { v =>
+        val expected = TextOracle.text(v, dt, zone)
+        // a decimal is a long in an UnsafeRow up to 18 digits, a BigDecimal
+        // in a GenericInternalRow: both forms are written
+        val row = new GenericInternalRow(Array[Any](v))
+        val got = Seq(row, toUnsafe(row)).map { r =>
+          val buf = ByteBuffer.allocate(1 << 12)
+          writer(r, buf)
+          buf.flip()
+          val bytes = new Array[Byte](buf.getInt); buf.get(bytes)
+          new String(bytes, UTF_8)
+        }
+        Prop(got.forall(_ == expected)) :| s"$dt $zone: $v -> $got, expected $expected"
+      }
+      val result = Test.check(Test.Parameters.default.withMinSuccessfulTests(300)
+        .withInitialSeed(Seed(20261019L)), prop)
+      assert(result.passed, s"$dt $zone: ${result.status}")
+    }
+  }
+
+  test("a text field that overflows the buffer throws BufferOverflowException") {
+    val schema = StructType(Seq(LongType, DecimalType(10, 2), TimestampType, DoubleType,
+      BinaryType, ArrayType(IntegerType)).zipWithIndex
+      .map { case (t, i) => StructField(s"c$i", t) })
+    val row = InternalRow(Long.MinValue, Decimal(BigDecimal("-12345678.90"), 10, 2), 1L << 50,
+      -1.2345e-300, Array[Byte](1, 2, 3), ArrayData.toArrayData(Array(1, 2)))
+    val writer = RowCodec.rowWriter(schema, Seq.fill(schema.length)(false))
+    val full = ByteBuffer.allocate(1 << 10)
+    writer(row, full)
+    for (size <- 0 until full.position()) {
+      intercept[java.nio.BufferOverflowException](writer(row, ByteBuffer.allocate(size)))
+    }
   }
 }
