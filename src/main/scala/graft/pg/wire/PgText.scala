@@ -203,29 +203,10 @@ private[wire] object PgText {
     * exponents -4 to 14 and `d.ddde+XX` beyond.
     */
   def putDouble(b: ByteBuffer, v: Double): Unit =
-    if (!putSpecial(b, v) && !putFewDecimals(b, v)) {
+    if (!putSpecial(b, v)) {
       putShortest(b, if (math.abs(v) < java.lang.Double.MIN_NORMAL) subnormal(v, _.doubleValue == v)
         else NumberOutput.toString(v, true), 14)
     }
-
-  private val Pow10D: Array[Double] = Pow10.map(_.toDouble)
-
-  /** Writes `v` as `m / 10^k` for the least `k <= 3` whose decimal reads
-    * back as `v` (a quantity, a price), if `|v| < 10^12`. That is
-    * float8out's text: `m` and `10^k` are exact doubles, so the division
-    * is correctly rounded and the decimal reads back as `v`; below 2^50 the
-    * product `v * 10^k` is off a whole `m` by well under 1/2, so no `k`
-    * passed over had a decimal that reads back; and an ulp of `v` is far
-    * below `10^-k`, so no other decimal of `k` places does, which makes
-    * it the shortest and the closest. The exponent is then -3 to 11, which
-    * float8out prints plain.
-    */
-  private def putFewDecimals(b: ByteBuffer, v: Double): Boolean = math.abs(v) < 1e12 && {
-    var k = 0
-    while (k <= 3 && Math.round(v * Pow10D(k)) / Pow10D(k) != v) k += 1
-    if (k <= 3) putDecimal(b, Math.round(v * Pow10D(k)), k)
-    k <= 3
-  }
 
   /** float4out with extra_float_digits >= 1: as [[putDouble]], plain for
     * decimal exponents -4 to 5.

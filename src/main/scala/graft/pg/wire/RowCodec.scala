@@ -150,18 +150,12 @@ object RowCodec {
       val iv = r.getInterval(i)
       b.putInt(16); b.putLong(iv.microseconds); b.putInt(iv.days); b.putInt(iv.months)
     }
-    case (StringType, _) => (r, b) => {
-      val s = r.getUTF8String(i)
-      // UTF8String.writeTo copyMemory's into the backing array BEFORE any
-      // bounds check — an oversized value corrupts the heap instead of
-      // throwing. Pre-check so callers get the standard overflow signal.
-      if (b.remaining() < 4 + s.numBytes()) throw new java.nio.BufferOverflowException
-      b.putInt(s.numBytes()); s.writeTo(b)
-    }
+    case (StringType, true) =>
+      val text = textWriter(StringType, i, zone)
+      (r, b) => { b.putInt(r.getUTF8String(i).numBytes()); text(r, b) }
     case (BinaryType, true) => (r, b) => putBytes(b, r.getBinary(i))
 
     // ---- text mode: the length slot is reserved, then backpatched ----
-    case (BooleanType, false) => (r, b) => { b.putInt(1); b.put(if (r.getBoolean(i)) 't'.toByte else 'f'.toByte) }
     case (_, false) =>
       val text = textWriter(dt, i, zone)
       (r, b) => {
@@ -190,7 +184,8 @@ object RowCodec {
     case _: StringType => (r, b) => {
       val s = r.getUTF8String(i)
       // UTF8String.writeTo copyMemory's into the backing array BEFORE any
-      // bounds check: check first, as the DataRow writer does
+      // bounds check (an oversized value corrupts the heap instead of
+      // throwing): check first, so callers get the overflow signal
       if (b.remaining() < s.numBytes()) throw new java.nio.BufferOverflowException
       s.writeTo(b)
     }
