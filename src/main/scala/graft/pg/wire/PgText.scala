@@ -203,10 +203,25 @@ private[wire] object PgText {
     * exponents -4 to 14 and `d.ddde+XX` beyond.
     */
   def putDouble(b: ByteBuffer, v: Double): Unit =
-    if (!putSpecial(b, v)) {
+    if (!putSpecial(b, v) && !putFewDecimals(b, v)) {
       putShortest(b, if (math.abs(v) < java.lang.Double.MIN_NORMAL) subnormal(v, _.doubleValue == v)
         else NumberOutput.toString(v, true), 14)
     }
+
+  private val Pow10D: Array[Double] = Pow10.map(_.toDouble)
+
+  /** Writes `v` from `m` if `v` is the double nearest `m / 10^k` for a
+    * `k <= 3` and `|v| < 10^12`; the least such `k` is found. Decimals of
+    * `k` places lie 10^-k apart, far wider than an ulp of `v`, so this one
+    * is the only one that reads back as `v`, and no shorter one does: it is
+    * float8out's text, in its plain range.
+    */
+  private def putFewDecimals(b: ByteBuffer, v: Double): Boolean = math.abs(v) < 1e12 && {
+    var k = 0
+    while (k <= 3 && Math.round(v * Pow10D(k)) / Pow10D(k) != v) k += 1
+    if (k <= 3) putDecimal(b, Math.round(v * Pow10D(k)), k)
+    k <= 3
+  }
 
   /** float4out with extra_float_digits >= 1: as [[putDouble]], plain for
     * decimal exponents -4 to 5.

@@ -154,8 +154,8 @@ class RowCodecSpec extends AnyFunSuite {
     check(DoubleType, Gen.oneOf(Arbitrary.arbitrary[Long].map(java.lang.Double.longBitsToDouble),
       Arbitrary.arbitrary[Double], Gen.choose(-1e6, 1e6), Gen.choose(0L, 4096L)
         .map(java.lang.Double.longBitsToDouble)), PgTypes.FLOAT8, 14)
-    // values with a few decimals print as the plain form of Schubfach's
-    // shortest digits wherever float8out prints plain
+    // values with a few decimals, which putDouble writes from their scaled
+    // long, print as the plain form of Schubfach's shortest digits
     val fewDecimals = Gen.zip(Gen.choose(-999999999999999L, 999999999999999L), Gen.choose(0, 4))
       .map { case (m, k) => m / math.pow(10, k) }
     val plainProp = Prop.forAll(fewDecimals) { v =>
