@@ -120,7 +120,7 @@ object PgCopy {
     */
   private def parseOptions(tail0: String): CopyOptions = {
     var o = CopyOptions()
-    var delimSet = false
+    var delimiter: Option[String] = None
     var tail = tail0.trim
     if (tail.isEmpty) return o
     if (tail.regionMatches(true, 0, "with", 0, 4)) tail = tail.substring(4).trim
@@ -158,9 +158,7 @@ object PgCopy {
       case ("header", v) =>
         explicit += "header"
         o = o.copy(header = v.forall(x => x.equalsIgnoreCase("true") || x.equalsIgnoreCase("on")))
-      case ("delimiter", Some(v)) =>
-        delimSet = true
-        o = o.copy(delimiter = unquote(v).headOption.getOrElse('\t'))
+      case ("delimiter", Some(v)) => delimiter = Some(unquote(v))
       case ("null", Some(v)) =>
         explicit += "null"
         o = o.copy(nullStr = unquote(v))
@@ -169,15 +167,24 @@ object PgCopy {
     }
     // binary is a self-describing frame format — the text-mode knobs make
     // no sense with it (PG rejects these combinations the same way)
-    if (o.binary && (o.csv || delimSet || (o.header && explicit("header")) ||
+    if (o.binary && (o.csv || delimiter.isDefined || (o.header && explicit("header")) ||
         explicit("null")))
       throw new IllegalArgumentException(
         "COPY binary format cannot be combined with csv/delimiter/header/null options")
-    // PG csv mode defaults to ',' (text mode to tab)
-    if (o.csv && !delimSet) o = o.copy(delimiter = ',')
-    // the line parsers split UTF-8 bytes, as PG's do
-    if (o.delimiter > 0x7F)
-      throw new IllegalArgumentException("COPY delimiter must be a single one-byte character")
+    // PG's ProcessCopyOptions checks; the line parsers split UTF-8 bytes, as PG's do
+    delimiter match {
+      case Some(d) if d.length != 1 || d.charAt(0) > 0x7F =>
+        throw new UnsupportedOperationException(
+          "COPY delimiter must be a single one-byte character")
+      case Some(d) => o = o.copy(delimiter = d.charAt(0))
+      case None => if (o.csv) o = o.copy(delimiter = ',') // text mode keeps tab
+    }
+    if (o.delimiter == '\n' || o.delimiter == '\r')
+      throw new IllegalArgumentException("COPY delimiter cannot be newline or carriage return")
+    // text format writes a value's delimiter backslashed, and COPY FROM reads
+    // a backslash before `.`, a letter or a digit as an escape
+    if (!o.csv && "\\.abcdefghijklmnopqrstuvwxyz0123456789".indexOf(o.delimiter) >= 0)
+      throw new IllegalArgumentException(s"""COPY delimiter cannot be "${o.delimiter}"""")
     o
   }
 

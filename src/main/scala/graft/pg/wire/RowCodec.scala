@@ -245,11 +245,14 @@ object RowCodec {
     sb.append('}').toString
   }
 
-  /** An array element: a nested array keeps the PG braces, anything else
-    * renders as in JSON.
+  /** An array element: a nested array keeps the PG braces and a float its
+    * bare text (`{NaN,Infinity}`, as PG's array_out), anything else renders
+    * as in JSON.
     */
-  private def scalarText(v: Any, dt: DataType, zone: ZoneId): String = dt match {
-    case at: ArrayType => pgArrayText(v.asInstanceOf[ArrayData], at.elementType, zone)
+  private def scalarText(v: Any, dt: DataType, zone: ZoneId): String = (v, dt) match {
+    case (a: ArrayData, at: ArrayType) => pgArrayText(a, at.elementType, zone)
+    case (f: Float, _) => render(32)(PgText.putFloat(_, f))
+    case (d: Double, _) => render(32)(PgText.putDouble(_, d))
     case _ => jsonValue(v, dt, zone)
   }
 
@@ -291,8 +294,10 @@ object RowCodec {
     case (b: Array[Byte], BinaryType) => jsonString(byteaText(b))
     case (iv: CalendarInterval, _) => jsonString(intervalText(iv.months, iv.days, iv.microseconds))
     case (d: Decimal, _) => d.toJavaBigDecimal.toPlainString
-    case (f: Float, _) => render(32)(PgText.putFloat(_, f))
-    case (d: Double, _) => render(32)(PgText.putDouble(_, d))
+    // JSON has no NaN or Infinity: PG's to_json quotes them
+    case (f: Float, _) if f.isNaN || f.isInfinite => jsonString(scalarText(f, dt, zone))
+    case (d: Double, _) if d.isNaN || d.isInfinite => jsonString(scalarText(d, dt, zone))
+    case (_: Float | _: Double, _) => scalarText(v, dt, zone)
     case (other, _) => other.toString
   }
 

@@ -8,16 +8,19 @@ import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Source gate on the local entry points: one session factory, a fixed
-  * set of mains, and no JVM system properties in `src/main/scala`. A new
-  * builder, probe main or property hook has to change this list in the
-  * open rather than slip in beside the ones that were folded away.
+  * set of mains, and no JVM system properties in `src/main/scala`, and one
+  * PG wire client for the server suites. A new builder, probe main,
+  * property hook or private client has to change this list in the open
+  * rather than slip in beside the ones that were folded away.
   */
 class EntryPointGateSuite extends AnyFunSuite {
 
   private val root = Paths.get("src/main/scala")
 
-  private lazy val sources: Seq[(Path, String)] = {
-    val s = Files.walk(root)
+  private lazy val sources: Seq[(Path, String)] = scalaFiles(root)
+
+  private def scalaFiles(dir: Path): Seq[(Path, String)] = {
+    val s = Files.walk(dir)
     try s.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
       .map(p => p -> new String(Files.readAllBytes(p), UTF_8))
     finally s.close()
@@ -95,5 +98,15 @@ class EntryPointGateSuite extends AnyFunSuite {
     assert(mains.nonEmpty, "no main found at all: the scan is broken")
     val extra = mains.filterNot(m => allowed(m.split(": ").last))
     assert(extra.isEmpty, s"mains outside $allowed: $extra")
+  }
+
+  test("only WireClient opens a socket or writes a V3 startup in the server suites") {
+    val suites = scalaFiles(Paths.get("src/test/scala/graft/pg/server"))
+    assert(suites.exists(_._1.getFileName.toString == "WireClient.scala"),
+      "no WireClient.scala: the scan is broken")
+    val hits = Seq("new Socket(", "new java.net.Socket(", "196608").flatMap(n =>
+      suites.collect { case (p, text) if p.getFileName.toString != "WireClient.scala" &&
+        text.contains(n) => s"${p.getFileName}: $n" })
+    assert(hits.isEmpty, s"talk to the server through WireClient: $hits")
   }
 }

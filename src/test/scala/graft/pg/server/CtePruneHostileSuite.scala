@@ -1,12 +1,5 @@
 package graft.pg.server
 
-import java.io.{DataInputStream, DataOutputStream}
-import java.net.Socket
-import java.nio.ByteBuffer
-import java.nio.charset.StandardCharsets.UTF_8
-
-import scala.collection.mutable
-
 import graft.TestSpark
 import graft.queries.CtePrune
 
@@ -32,6 +25,7 @@ import org.scalatest.funsuite.AnyFunSuite
   *      result-identical under spark.sql.
   */
 class CtePruneHostileSuite extends AnyFunSuite with BeforeAndAfterAll {
+  import WireClient._
 
   private var server: PgWireServer = _
   private def port: Int = server.boundPort
@@ -42,83 +36,6 @@ class CtePruneHostileSuite extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   override def afterAll(): Unit = if (server != null) server.stop()
-
-  // ---- minimal raw V3 client (pattern from PgJdbcFlowSuite) ----
-  private class Client {
-    private val sock = new Socket("127.0.0.1", port)
-    private val in = new DataInputStream(sock.getInputStream)
-    private val os = new DataOutputStream(sock.getOutputStream)
-
-    private def cstr(s: String): Array[Byte] = s.getBytes(UTF_8) :+ 0.toByte
-    private def i16(v: Int): Array[Byte] =
-      ByteBuffer.allocate(2).putShort(v.toShort).array()
-    private def i32(v: Int): Array[Byte] = ByteBuffer.allocate(4).putInt(v).array()
-
-    def connect(): Unit = {
-      val body = cstr("user") ++ cstr("graft") ++ cstr("database") ++
-        cstr("default") :+ 0.toByte
-      os.writeInt(8 + body.length)
-      os.writeInt(196608)
-      os.write(body)
-      os.flush()
-      drainUntilReady()
-    }
-
-    private def send(tpe: Char, payload: Array[Byte]): Unit = {
-      os.writeByte(tpe)
-      os.writeInt(4 + payload.length)
-      os.write(payload)
-      os.flush()
-    }
-
-    def parse(stmt: String, sql: String): Unit =
-      send('P', cstr(stmt) ++ cstr(sql) ++ i16(0))
-    def describeStatement(name: String): Unit =
-      send('D', Array[Byte]('S'.toByte) ++ cstr(name))
-    def bind(portal: String, stmt: String, params: Seq[String]): Unit = {
-      val paramBytes = params.flatMap { p =>
-        val b = p.getBytes(UTF_8); i32(b.length) ++ b
-      }.toArray
-      send('B', cstr(portal) ++ cstr(stmt) ++ i16(0) ++
-        i16(params.length) ++ paramBytes ++ i16(0))
-    }
-    def execute(portal: String): Unit = send('E', cstr(portal) ++ i32(0))
-    def sync(): Seq[(Char, Array[Byte])] = {
-      send('S', Array.empty); drainUntilReady()
-    }
-    def simple(sql: String): Seq[(Char, Array[Byte])] = {
-      send('Q', cstr(sql)); drainUntilReady()
-    }
-
-    def drainUntilReady(): Seq[(Char, Array[Byte])] = {
-      val msgs = mutable.ArrayBuffer.empty[(Char, Array[Byte])]
-      var done = false
-      while (!done) {
-        val tpe = in.readByte().toChar
-        val len = in.readInt()
-        val payload = new Array[Byte](len - 4)
-        in.readFully(payload)
-        msgs += ((tpe, payload))
-        if (tpe == 'Z') done = true
-      }
-      msgs.toSeq
-    }
-
-    def close(): Unit = sock.close()
-  }
-
-  private def dataRows(msgs: Seq[(Char, Array[Byte])]): Seq[Seq[String]] =
-    msgs.filter(_._1 == 'D').map { case (_, payload) =>
-      val bb = ByteBuffer.wrap(payload)
-      val n = bb.getShort.toInt
-      (0 until n).map { _ =>
-        val len = bb.getInt
-        if (len < 0) null
-        else {
-          val b = new Array[Byte](len); bb.get(b); new String(b, UTF_8)
-        }
-      }
-    }
 
   test("unit: every bail-out trigger returns the input object unchanged") {
     val hostile = Seq(
@@ -139,25 +56,21 @@ class CtePruneHostileSuite extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("live server: backslash-escape and dollar texts run unpruned and correct") {
-    val c = new Client
-    try {
-      c.connect()
+    WireClient.withClient(port) { c =>
       // a backslash string literal that a naive quote scanner desyncs on;
       // the unused CTE must NOT be pruned (bail-out) and results must match
-      val r1 = dataRows(c.simple(
+      val r1 = rows(c.simple(
         """WITH unused AS (SELECT 'a\\b(' AS s) SELECT 7 AS v"""))
       assert(r1 == Seq(Seq("7")))
       // a literal containing what looks like a dollar-quote tag
-      val r2 = dataRows(c.simple(
+      val r2 = rows(c.simple(
         "WITH unused AS (SELECT 1 AS x) SELECT '$tag$' AS v"))
       assert(r2 == Seq(Seq("$tag$")))
-    } finally c.close()
+    }
   }
 
   test("extended protocol: $1 only inside an unused CTE keeps its ParameterDescription") {
-    val c = new Client
-    try {
-      c.connect()
+    WireClient.withClient(port) { c =>
       c.parse("s_cte", "WITH unused AS (SELECT $1 AS v) SELECT 3 AS k")
       c.describeStatement("s_cte")
       c.bind("", "s_cte", Seq("42"))
@@ -166,17 +79,15 @@ class CtePruneHostileSuite extends AnyFunSuite with BeforeAndAfterAll {
       // 't' = ParameterDescription: int16 count, then per-param OIDs
       val pd = msgs.find(_._1 == 't')
       assert(pd.nonEmpty, "no ParameterDescription")
-      val nParams = ByteBuffer.wrap(pd.get._2).getShort.toInt
+      val nParams = paramTypes(msgs).length
       assert(nParams == 1,
         s"ParameterDescription must keep the unused-CTE param, got $nParams")
-      assert(dataRows(msgs) == Seq(Seq("3")))
-    } finally c.close()
+      assert(rows(msgs) == Seq(Seq("3")))
+    }
   }
 
   test("extended protocol: $1 inside a USED CTE body binds and executes") {
-    val c = new Client
-    try {
-      c.connect()
+    WireClient.withClient(port) { c =>
       c.parse("s_used", "WITH u AS (SELECT $1::int AS v) SELECT v + 1 AS k FROM u")
       c.describeStatement("s_used")
       c.bind("", "s_used", Seq("41"))
@@ -184,10 +95,10 @@ class CtePruneHostileSuite extends AnyFunSuite with BeforeAndAfterAll {
       val msgs = c.sync()
       val pd = msgs.find(_._1 == 't')
       assert(pd.nonEmpty, "no ParameterDescription")
-      assert(ByteBuffer.wrap(pd.get._2).getShort.toInt == 1)
-      assert(dataRows(msgs) == Seq(Seq("42")),
+      assert(paramTypes(msgs).length == 1)
+      assert(rows(msgs) == Seq(Seq("42")),
         "a $n inside a CTE body must bind (UnresolvedWith.cteRelations)")
-    } finally c.close()
+    }
   }
 
   test("property: seeded random CTE texts are verbatim or result-identical") {

@@ -1,9 +1,10 @@
 package graft.pg.server
 
-import java.io.{BufferedReader, DataInputStream, DataOutputStream, InputStreamReader}
-import java.net.Socket
+import java.io.{BufferedReader, InputStreamReader}
 import java.nio.charset.StandardCharsets.UTF_8
 import java.util.concurrent.TimeUnit
+
+import scala.collection.mutable
 
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -25,6 +26,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * small.
   */
 class PgBoundedHeapSuite extends AnyFunSuite {
+  import WireClient._
 
   // must match build.sbt's jdk17AddOpens (Spark 4 on JDK 17 outside
   // spark-submit)
@@ -40,7 +42,7 @@ class PgBoundedHeapSuite extends AnyFunSuite {
 
   /** Fork a -Xmx512m server JVM, wait for its bound port, run `f`, kill it. */
   private def withForkedServer(tag: String, extraProps: Seq[String] = Nil)(
-      f: (DataInputStream, DataOutputStream) => Unit): Unit = {
+      f: WireClient => Unit): Unit = {
     val java = sys.props("java.home") + "/bin/java"
     val cmd = (Seq(java, "-Xmx512m") ++ addOpens ++ Seq(
       "-Dspark.ui.enabled=false",
@@ -71,72 +73,44 @@ class PgBoundedHeapSuite extends AnyFunSuite {
       drainer.setDaemon(true)
       drainer.start()
 
-      val sock = new Socket("127.0.0.1", port)
-      sock.setSoTimeout(300000)
-      val in = new DataInputStream(sock.getInputStream)
-      val os = new DataOutputStream(sock.getOutputStream)
-      val startup = cstr("user") ++ cstr("graft") ++ cstr("database") ++
-        cstr("default") :+ 0.toByte
-      os.writeInt(8 + startup.length); os.writeInt(196608); os.write(startup); os.flush()
-      var t = in.readByte().toChar
-      while (t != 'Z') { in.skipBytes(in.readInt() - 4); t = in.readByte().toChar }
-      in.skipBytes(in.readInt() - 4)
-      try f(in, os) finally sock.close()
+      val c = connected(port, 300000)
+      try f(c) finally c.close()
     } finally {
       proc.destroyForcibly()
       proc.waitFor(30, TimeUnit.SECONDS)
     }
   }
 
-  private def cstr(s: String) = s.getBytes(UTF_8) :+ 0.toByte
-
-  private def sendQuery(os: DataOutputStream, sql: String): Unit = {
-    os.writeByte('Q'); os.writeInt(4 + sql.length + 1)
-    os.write(sql.getBytes(UTF_8)); os.writeByte(0); os.flush()
+  private def query(c: WireClient, sql: String): (Long, Long, String, String) = {
+    c.send('Q', c.cstr(sql))
+    result(c)
   }
 
-  /** Drain to ReadyForQuery, returning (rows, dataBytes, tag, error). */
-  private def drainResult(in: DataInputStream): (Long, Long, String, String) = {
+  /** Drain to ReadyForQuery, returning (rows, dataBytes, tag, error):
+    * DataRows are counted, never stored.
+    */
+  private def result(c: WireClient): (Long, Long, String, String) = {
     var rows = 0L
     var bytes = 0L
-    var tag: String = null
-    var err: String = null
-    var done = false
-    while (!done) {
-      val tpe = in.readByte().toChar
-      val len = in.readInt() - 4
-      tpe match {
-        case 'D' =>
-          rows += 1; bytes += len
-          in.skipBytes(len) // stream, never store
-        case 'C' =>
-          val p = new Array[Byte](len); in.readFully(p)
-          tag = new String(p, UTF_8).trim.stripSuffix(" ")
-        case 'E' =>
-          val p = new Array[Byte](len); in.readFully(p)
-          err = new String(p, UTF_8)
-        case 'Z' => in.skipBytes(len); done = true
-        case _ => in.skipBytes(len)
-      }
-    }
-    (rows, bytes, tag, err)
+    val rest = mutable.ArrayBuffer.empty[(Char, Array[Byte])]
+    c.drain(m => if (m._1 == 'D') { rows += 1; bytes += m._2.length } else rest += m, 'Z')
+    val m = rest.toSeq
+    (rows, bytes, commandTags(m).lastOption.orNull, error(m).map(_.toString).orNull)
   }
 
   test("480MB result streams through a server JVM pinned to -Xmx512m") {
-    withForkedServer("boundedheap") { (in, os) =>
+    withForkedServer("boundedheap") { c =>
       // 4M rows x (id + 100-char pad) ~ 480 MB of DataRow payload; 32 input
       // partitions so the incremental iterator holds ~15 MB at a time
-      sendQuery(os,
+      val (rows, bytes, tag, err) = query(c,
         "SELECT id, repeat('x', 100) AS pad FROM range(0, 4000000, 1, 32)")
-      val (rows, bytes, tag, err) = drainResult(in)
       assert(err == null, s"server errored mid-stream (OOM?): $err")
       assert(rows === 4000000L, s"row count $rows")
       assert(bytes > 400L * 1024 * 1024,
         s"result payload was only $bytes bytes — not a large-result proof")
       assert(tag != null && tag.contains("SELECT 4000000"), s"tag was $tag")
       // connection still healthy after the large stream
-      sendQuery(os, "SELECT 7")
-      val (probeRows, _, _, probeErr) = drainResult(in)
+      val (probeRows, _, _, probeErr) = query(c, "SELECT 7")
       assert(probeErr == null && probeRows == 1,
         "server must stay healthy after the 480MB stream")
     }
@@ -146,15 +120,14 @@ class PgBoundedHeapSuite extends AnyFunSuite {
     val wh = "/tmp/graft_copyheap_wh"
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(wh))
     withForkedServer("copyheap",
-        Seq(s"-Dspark.sql.warehouse.dir=$wh")) { (in, os) =>
-      sendQuery(os, "CREATE TABLE copy_heap_t (id BIGINT, pad STRING) USING parquet")
-      val (_, _, _, createErr) = drainResult(in)
+        Seq(s"-Dspark.sql.warehouse.dir=$wh")) { c =>
+      val (_, _, _, createErr) =
+        query(c, "CREATE TABLE copy_heap_t (id BIGINT, pad STRING) USING parquet")
       assert(createErr == null, s"create failed: $createErr")
 
-      sendQuery(os, "COPY copy_heap_t FROM STDIN")
+      c.send('Q', c.cstr("COPY copy_heap_t FROM STDIN"))
       // expect CopyInResponse ('G')
-      val tpe = in.readByte().toChar
-      in.skipBytes(in.readInt() - 4)
+      val tpe = c.read()._1
       assert(tpe === 'G', s"expected CopyInResponse, got '$tpe'")
 
       // 1.5M rows x ~320 B ≈ 460 MB of CopyData payload, sent full-speed
@@ -175,27 +148,25 @@ class PgBoundedHeapSuite extends AnyFunSuite {
           i += 1
         }
         val chunk = sb.toString.getBytes(UTF_8)
-        os.writeByte('d'); os.writeInt(4 + chunk.length); os.write(chunk)
+        c.send('d', chunk)
         sent += chunk.length
       }
-      os.flush()
-      os.writeByte('c'); os.writeInt(4); os.flush() // CopyDone
+      c.send('c', Array.empty) // CopyDone
       assert(sent > 450L * 1024 * 1024,
         s"only sent $sent bytes — not a large-ingest proof")
 
-      val (_, _, tag, err) = drainResult(in)
+      val (_, _, tag, err) = result(c)
       assert(err == null, s"server errored mid-ingest (OOM?): $err")
       assert(tag === s"COPY $rowsTotal", s"tag was $tag")
 
       // the rows actually landed (first / middle / last) and the
       // connection stays healthy
-      sendQuery(os,
+      val (spotRows, _, _, selErr) = query(c,
         s"SELECT id FROM copy_heap_t WHERE id IN (0, 750000, ${rowsTotal - 1})")
-      val (spotRows, _, _, selErr) = drainResult(in)
       assert(selErr == null, s"post-ingest select failed: $selErr")
       assert(spotRows === 3L, s"spot-check rows: $spotRows")
-      sendQuery(os, s"SELECT 1 WHERE (SELECT count(*) FROM copy_heap_t) = $rowsTotal")
-      val (countOk, _, _, _) = drainResult(in)
+      val (countOk, _, _, _) =
+        query(c, s"SELECT 1 WHERE (SELECT count(*) FROM copy_heap_t) = $rowsTotal")
       assert(countOk === 1L, "full count must equal the COPY tag")
     }
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(wh))

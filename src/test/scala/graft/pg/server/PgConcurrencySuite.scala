@@ -1,9 +1,5 @@
 package graft.pg.server
 
-import java.io.{DataInputStream, DataOutputStream}
-import java.net.Socket
-import java.nio.ByteBuffer
-import java.nio.charset.StandardCharsets.UTF_8
 import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
 import java.util.concurrent.atomic.AtomicReference
 
@@ -26,6 +22,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * this suite is strictly harsher on the session registry and wire layer.
   */
 class PgConcurrencySuite extends AnyFunSuite with BeforeAndAfterAll {
+  import WireClient._
 
   private var server: PgWireServer = _
   private def port: Int = server.boundPort
@@ -37,107 +34,35 @@ class PgConcurrencySuite extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = if (server != null) server.stop()
 
-  /** Minimal raw V3 client: simple 'Q' + the extended flow, thread-confined. */
-  private class SoakClient {
-    private val sock = new Socket("127.0.0.1", port)
-    sock.setSoTimeout(120000) // a wedged server surfaces as a test failure, not a hang
-    private val in = new DataInputStream(sock.getInputStream)
-    private val os = new DataOutputStream(sock.getOutputStream)
+  /** A soak session; a wedged server surfaces as a test failure, not a
+    * hang.
+    */
+  private def soakClient(appName: String = ""): WireClient =
+    connected(port, 120000, Seq("application_name" -> appName))
 
-    private def cstr(s: String): Array[Byte] = s.getBytes(UTF_8) :+ 0.toByte
-    private def i16(v: Int): Array[Byte] =
-      ByteBuffer.allocate(2).putShort(v.toShort).array()
-    private def i32(v: Int): Array[Byte] = ByteBuffer.allocate(4).putInt(v).array()
-
-    var pid: Int = -1
-    var secret: Int = -1
-
-    def connect(appName: String = ""): Unit = {
-      val body = cstr("user") ++ cstr("graft") ++ cstr("database") ++
-        cstr("default") ++ cstr("application_name") ++ cstr(appName) :+ 0.toByte
-      os.writeInt(8 + body.length); os.writeInt(196608); os.write(body); os.flush()
-      val msgs = drain()
-      msgs.find(_._1 == 'K').foreach { case (_, p) =>
-        val b = ByteBuffer.wrap(p); pid = b.getInt; secret = b.getInt
-      }
-    }
-
-    def send(tpe: Char, payload: Array[Byte]): Unit = {
-      os.writeByte(tpe); os.writeInt(4 + payload.length); os.write(payload); os.flush()
-    }
-
-    def drain(): Seq[(Char, Array[Byte])] = {
-      val msgs = mutable.ArrayBuffer.empty[(Char, Array[Byte])]
-      var done = false
-      while (!done) {
-        val tpe = in.readByte().toChar
-        val len = in.readInt()
-        val payload = new Array[Byte](len - 4)
-        in.readFully(payload)
-        msgs += ((tpe, payload))
-        if (tpe == 'Z') done = true
-      }
-      msgs.toSeq
-    }
-
-    def query(sql: String): Seq[(Char, Array[Byte])] = {
-      send('Q', cstr(sql)); drain()
-    }
-
-    /** first text cell of each DataRow */
-    def col0(msgs: Seq[(Char, Array[Byte])]): Seq[String] =
-      msgs.filter(_._1 == 'D').map { case (_, p) =>
-        val b = ByteBuffer.wrap(p)
-        b.getShort
-        val len = b.getInt
-        if (len == -1) null
-        else { val v = new Array[Byte](len); b.get(v); new String(v, UTF_8) }
-      }
-
-    /** extended-protocol cursor read with fetchSize, Sync between rounds */
-    def cursorRead(sql: String, fetchSize: Int): Seq[String] = {
-      send('P', cstr("") ++ cstr(sql) ++ i16(0))
-      send('B', cstr("cur") ++ cstr("") ++ i16(0) ++ i16(0) ++ i16(0))
-      send('E', cstr("cur") ++ i32(fetchSize))
-      val out = mutable.ArrayBuffer.empty[String]
-      var msgs = { send('S', Array.empty); drain() }
+  /** extended-protocol cursor read with fetchSize, Sync between rounds */
+  private def cursorRead(c: WireClient, sql: String, fetchSize: Int): Seq[String] = {
+    c.parse("", sql)
+    c.bind("cur", "")
+    c.execute("cur", fetchSize)
+    val out = mutable.ArrayBuffer.empty[String]
+    var msgs = c.sync()
+    out ++= col0(msgs)
+    while (msgs.exists(_._1 == 's')) {
+      c.execute("cur", fetchSize)
+      msgs = c.sync()
       out ++= col0(msgs)
-      while (msgs.exists(_._1 == 's')) {
-        send('E', cstr("cur") ++ i32(fetchSize))
-        msgs = { send('S', Array.empty); drain() }
-        out ++= col0(msgs)
-      }
-      send('C', Array[Byte]('P'.toByte) ++ cstr("cur"))
-      send('S', Array.empty); drain()
-      out.toSeq
     }
+    c.closePortal("cur")
+    c.sync()
+    out.toSeq
+  }
 
-    /** extended-protocol one-shot with one text param */
-    def withParam(sql: String, param: String): Seq[String] = {
-      send('P', cstr("") ++ cstr(sql) ++ i16(1) ++ i32(23))
-      val pb = param.getBytes(UTF_8)
-      send('B', cstr("") ++ cstr("") ++ i16(0) ++ i16(1) ++ i32(pb.length) ++ pb ++ i16(0))
-      send('E', cstr("") ++ i32(0))
-      send('S', Array.empty)
-      col0(drain())
-    }
-
-    /** Parse a named statement (no params), Sync */
-    def parseNamed(name: String, sql: String): Seq[(Char, Array[Byte])] = {
-      send('P', cstr(name) ++ cstr(sql) ++ i16(0))
-      send('S', Array.empty)
-      drain()
-    }
-
-    /** Bind the unnamed portal from a named statement, Execute, Sync */
-    def bindExec(stmt: String): Seq[(Char, Array[Byte])] = {
-      send('B', cstr("") ++ cstr(stmt) ++ i16(0) ++ i16(0) ++ i16(0))
-      send('E', cstr("") ++ i32(0))
-      send('S', Array.empty)
-      drain()
-    }
-
-    def close(): Unit = { send('X', Array.empty); sock.close() }
+  /** Bind the unnamed portal from a named statement, Execute, Sync */
+  private def bindExec(c: WireClient, stmt: String): Msgs = {
+    c.bind("", stmt)
+    c.execute("")
+    c.sync()
   }
 
   test("32 concurrent sessions: isolation and recovery under a mixed soak") {
@@ -154,51 +79,51 @@ class PgConcurrencySuite extends AnyFunSuite with BeforeAndAfterAll {
         pool.submit(new Runnable {
           override def run(): Unit = {
             try {
-              val c = new SoakClient
-              c.connect()
+              val c = soakClient()
               // session variables live in the SparkSession — every session
               // declares the SAME variable name; values must never bleed
-              c.query("DECLARE OR REPLACE VARIABLE soak_tag STRING DEFAULT 'unset'")
+              c.simple("DECLARE OR REPLACE VARIABLE soak_tag STRING DEFAULT 'unset'")
               // SET conf short-circuits rows PG-style (tag only), so also
               // exercise it for crash-safety even though reads go via the var
-              c.query(s"SET spark.graft.soak.owner=$id")
+              c.simple(s"SET spark.graft.soak.owner=$id")
               start.await(60, TimeUnit.SECONDS)
               (1 to 5).foreach { iter =>
                 val tag = s"s${id}_r${round}_i$iter"
-                val setR = c.query(s"SET VAR soak_tag = '$tag'")
+                val setR = c.simple(s"SET VAR soak_tag = '$tag'")
                 if (setR.exists(_._1 == 'E')) {
                   throw new AssertionError(s"session $id SET VAR failed")
                 }
-                val v = c.col0(c.query("SELECT soak_tag AS t"))
+                val v = col0(c.simple("SELECT soak_tag AS t"))
                 if (v != Seq(tag)) {
                   throw new AssertionError(
                     s"session $id read foreign session-variable value $v, wanted $tag")
                 }
                 // same-NAMED temp view per session, different value
-                c.query(s"CREATE OR REPLACE TEMPORARY VIEW soak_view AS SELECT ${id * 1000 + iter} AS v")
-                val vv = c.col0(c.query("SELECT v FROM soak_view"))
+                c.simple(
+                  s"CREATE OR REPLACE TEMPORARY VIEW soak_view AS SELECT ${id * 1000 + iter} AS v")
+                val vv = col0(c.simple("SELECT v FROM soak_view"))
                 if (vv != Seq((id * 1000 + iter).toString)) {
                   throw new AssertionError(
                     s"session $id saw foreign temp view: $vv (iter $iter)")
                 }
                 // extended-protocol param + cursor loop, interleaved with the
                 // other sessions' traffic
-                val p = c.withParam("SELECT $1 * 2 AS v", (id + iter).toString)
+                val p = col0(c.extended("SELECT $1 * 2 AS v", Seq((id + iter).toString), Seq(23)))
                 if (p != Seq(((id + iter) * 2).toString)) {
                   throw new AssertionError(s"session $id param echo wrong: $p")
                 }
-                val cur = c.cursorRead(
+                val cur = cursorRead(c,
                   s"SELECT id + $id AS x FROM range(6) ORDER BY x", 2)
                 val want = (0 until 6).map(k => (k + id).toString)
                 if (cur != want) {
                   throw new AssertionError(s"session $id cursor read $cur, want $want")
                 }
                 // deliberate error: the session must recover at the next query
-                val err = c.query("SELECT definitely_missing_col")
+                val err = c.simple("SELECT definitely_missing_col")
                 if (!err.exists(_._1 == 'E')) {
                   throw new AssertionError(s"session $id error did not surface")
                 }
-                val ok = c.col0(c.query(s"SELECT ${id + 100}"))
+                val ok = col0(c.simple(s"SELECT ${id + 100}"))
                 if (ok != Seq((id + 100).toString)) {
                   throw new AssertionError(s"session $id did not recover after error")
                 }
@@ -231,44 +156,44 @@ class PgConcurrencySuite extends AnyFunSuite with BeforeAndAfterAll {
       pool.submit(new Runnable {
         override def run(): Unit = {
           try {
-            val c = new SoakClient
-            c.connect(appName = s"boot_$id")
+            val c = soakClient(appName = s"boot_$id")
             start.await(60, TimeUnit.SECONDS)
             (1 to 4).foreach { iter =>
               // checkout: client-specific GUC overrides
-              c.query(s"SET application_name TO 'pool_${id}_$iter'")
-              c.query(s"SET statement_timeout = ${(id + 1) * 1000}")
-              val app = c.col0(c.query("SHOW application_name"))
+              c.simple(s"SET application_name TO 'pool_${id}_$iter'")
+              c.simple(s"SET statement_timeout = ${(id + 1) * 1000}")
+              val app = col0(c.simple("SHOW application_name"))
               if (app != Seq(s"pool_${id}_$iter")) {
                 throw new AssertionError(s"session $id read foreign application_name: $app")
               }
-              val timeout = c.col0(c.query("SHOW statement_timeout"))
+              val timeout = col0(c.simple("SHOW statement_timeout"))
               if (timeout != Seq(s"${id + 1}s")) {
                 throw new AssertionError(s"session $id read foreign statement_timeout: $timeout")
               }
               // a driver-cached prepared statement for this checkout
-              c.parseNamed(s"ps_$id", s"SELECT ${id * 10 + iter} AS v")
-              val got = c.col0(c.bindExec(s"ps_$id"))
+              c.parse(s"ps_$id", s"SELECT ${id * 10 + iter} AS v")
+              c.sync()
+              val got = col0(bindExec(c, s"ps_$id"))
               if (got != Seq((id * 10 + iter).toString)) {
                 throw new AssertionError(s"session $id prepared read $got")
               }
               // check-in: the pool's reset
-              val reset = c.query("DISCARD ALL")
+              val reset = c.simple("DISCARD ALL")
               if (reset.exists(_._1 == 'E')) {
                 throw new AssertionError(s"session $id DISCARD ALL failed")
               }
               // back to the startup default of THIS session, not blank, not
               // another session's value
-              val appAfter = c.col0(c.query("SHOW application_name"))
+              val appAfter = col0(c.simple("SHOW application_name"))
               if (appAfter != Seq(s"boot_$id")) {
                 throw new AssertionError(
                   s"session $id application_name after DISCARD: $appAfter, want boot_$id")
               }
-              if (c.col0(c.query("SHOW statement_timeout")) != Seq("0")) {
+              if (col0(c.simple("SHOW statement_timeout")) != Seq("0")) {
                 throw new AssertionError(s"session $id timeout survived DISCARD ALL")
               }
               // the prepared statement died with the checkout
-              if (!c.bindExec(s"ps_$id").exists(_._1 == 'E')) {
+              if (!bindExec(c, s"ps_$id").exists(_._1 == 'E')) {
                 throw new AssertionError(s"session $id statement survived DISCARD ALL")
               }
             }
@@ -286,72 +211,67 @@ class PgConcurrencySuite extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("idle reaper kills only the idle victim while live sessions continue") {
-    val live = new SoakClient; live.connect()
-    val victim = new SoakClient; victim.connect()
+    val live = soakClient()
+    val victim = soakClient()
     // both sessions healthy first
-    assert(live.col0(live.query("SELECT 1")) === Seq("1"))
-    assert(victim.col0(victim.query("SELECT 2")) === Seq("2"))
+    assert(col0(live.simple("SELECT 1")) === Seq("1"))
+    assert(col0(victim.simple("SELECT 2")) === Seq("2"))
     // backdate the victim's activity clock and reap
     val vs = SessionRegistry.get(victim.pid).getOrElse(fail("victim not registered"))
     vs.lastActivity = System.currentTimeMillis() - 600000
     SessionRegistry.reapIdle(60000)
     // the live session is untouched
-    assert(live.col0(live.query("SELECT 3")) === Seq("3"))
+    assert(col0(live.simple("SELECT 3")) === Seq("3"))
     // the victim's channel was closed by onReap: its next read hits EOF
     val dead =
-      try { victim.query("SELECT 4"); false }
+      try { victim.simple("SELECT 4"); false }
       catch { case _: java.io.IOException => true }
     assert(dead, "reaped session's connection must be closed")
     live.close()
   }
 
   test("pg_cancel_backend and pg_terminate_backend signal across sessions") {
-    val worker = new SoakClient; worker.connect()
-    val admin = new SoakClient; admin.connect()
+    val worker = soakClient()
+    val admin = soakClient()
     // worker starts a long query; admin cancels it BY PID through SQL (the
     // pg_stat_activity -> pg_cancel_backend admin loop, no secret needed)
-    worker.send('Q', "SELECT max(id * 3 + 1) FROM range(100000000000)"
-      .getBytes(UTF_8) :+ 0.toByte)
+    worker.send('Q', worker.cstr("SELECT max(id * 3 + 1) FROM range(100000000000)"))
     Thread.sleep(1000)
-    assert(admin.col0(admin.query(
+    assert(col0(admin.simple(
       s"SELECT pg_cancel_backend(${worker.pid}) AS ok")) === Seq("t"))
     val msgs = worker.drain()
     assert(msgs.exists(_._1 == 'E'), "admin-canceled query surfaces an error")
-    assert(worker.col0(worker.query("SELECT 11")) === Seq("11"),
+    assert(col0(worker.simple("SELECT 11")) === Seq("11"),
       "canceled session stays usable")
     // unknown pid reports false, like PG
-    assert(admin.col0(admin.query(
+    assert(col0(admin.simple(
       "SELECT pg_cancel_backend(999999) AS ok")) === Seq("f"))
     // terminate: the victim's connection is closed server-side
-    val victim = new SoakClient; victim.connect()
-    assert(admin.col0(admin.query(
+    val victim = soakClient()
+    assert(col0(admin.simple(
       s"SELECT pg_terminate_backend(${victim.pid}) AS ok")) === Seq("t"))
     val dead =
-      try { victim.query("SELECT 12"); false }
+      try { victim.simple("SELECT 12"); false }
       catch { case _: java.io.IOException => true }
     assert(dead, "terminated session's connection must be closed")
     worker.close(); admin.close()
   }
 
   test("cancel interrupts one session's query without disturbing another mid-flight") {
-    val worker = new SoakClient; worker.connect()
-    val bystander = new SoakClient; bystander.connect()
+    val worker = soakClient()
+    val bystander = soakClient()
     // worker starts a long-running query
-    worker.send('Q', "SELECT max(id * 2 + 1) FROM range(100000000000)"
-      .getBytes(UTF_8) :+ 0.toByte)
+    worker.send('Q', worker.cstr("SELECT max(id * 2 + 1) FROM range(100000000000)"))
     Thread.sleep(1000)
     // bystander keeps working while the worker's query runs
-    assert(bystander.col0(bystander.query("SELECT 21")) === Seq("21"))
+    assert(col0(bystander.simple("SELECT 21")) === Seq("21"))
     // cancel the worker via its BackendKeyData
-    val cs = new Socket("127.0.0.1", port)
-    val os = new DataOutputStream(cs.getOutputStream)
-    os.writeInt(16); os.writeInt(80877102); os.writeInt(worker.pid); os.writeInt(worker.secret)
-    os.flush(); cs.close()
+    worker.cancel()
     val msgs = worker.drain()
     assert(msgs.exists(_._1 == 'E'), "canceled query surfaces an error")
     // both sessions remain usable
-    assert(worker.col0(worker.query("SELECT 5")) === Seq("5"))
-    assert(bystander.col0(bystander.query("SELECT 6")) === Seq("6"))
+    assert(col0(worker.simple("SELECT 5")) === Seq("5"))
+    assert(col0(bystander.simple("SELECT 6")) === Seq("6"))
     worker.close(); bystander.close()
   }
 }

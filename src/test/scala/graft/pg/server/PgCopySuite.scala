@@ -95,6 +95,21 @@ class PgCopySuite extends AnyFunSuite with BeforeAndAfterAll {
     assert(parse("COPY (SELECT a FROM t WHERE x > 1) TO STDOUT") ===
       Some(CopyOut(Right("SELECT a FROM t WHERE x > 1"), Nil, CopyOptions())))
     intercept[IllegalArgumentException](parse("COPY t FROM 'file.csv'"))
+    // the delimiter checks of PG's ProcessCopyOptions: 0A000 for the
+    // length, 22023 for the rest
+    for (d <- Seq("", "ab", "\u00e9"); opts <- Seq(s"(DELIMITER '$d')", s"DELIMITER '$d'"))
+      assert(intercept[UnsupportedOperationException](parse(s"COPY t FROM STDIN $opts"))
+        .getMessage === "COPY delimiter must be a single one-byte character", opts)
+    for (d <- Seq("\n", "\r"); format <- Seq("text", "csv"))
+      assert(intercept[IllegalArgumentException](
+        parse(s"COPY t TO STDOUT (FORMAT $format, DELIMITER '$d')"))
+        .getMessage === "COPY delimiter cannot be newline or carriage return", format)
+    // text format escapes a delimiter with a backslash, so none of these
+    for (d <- Seq("\\", ".", "a", "n", "z", "0", "9"))
+      assert(intercept[IllegalArgumentException](parse(s"COPY t FROM STDIN (DELIMITER '$d')"))
+        .getMessage === s"""COPY delimiter cannot be "$d"""")
+    assert(parse("COPY t TO STDOUT (FORMAT csv, DELIMITER '.')") ===
+      Some(CopyOut(Left("t"), Nil, CopyOptions(csv = true, delimiter = '.', nullStr = ""))))
   }
 
   test("COPY binary round-trips typed rows incl. numeric, timestamp, NULLs") {

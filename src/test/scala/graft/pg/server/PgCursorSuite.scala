@@ -1,10 +1,5 @@
 package graft.pg.server
 
-import java.io.{DataInputStream, DataOutputStream}
-import java.net.Socket
-import java.nio.ByteBuffer
-import java.nio.charset.StandardCharsets.UTF_8
-
 import scala.sys.process._
 
 import graft.TestSpark
@@ -20,6 +15,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * results stream partition-at-a-time — no driver materialization.
   */
 class PgCursorSuite extends AnyFunSuite with BeforeAndAfterAll {
+  import WireClient._
 
   private var server: PgWireServer = _
   private def port: Int = server.boundPort
@@ -31,96 +27,26 @@ class PgCursorSuite extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = if (server != null) server.stop()
 
-  private class Client {
-    private val sock = new Socket("127.0.0.1", port)
-    sock.setSoTimeout(60000)
-    private val in = new DataInputStream(sock.getInputStream)
-    private val os = new DataOutputStream(sock.getOutputStream)
-
-    private def cstr(s: String): Array[Byte] = s.getBytes(UTF_8) :+ 0.toByte
-
-    def connect(): Unit = {
-      val body = cstr("user") ++ cstr("graft") ++
-        cstr("database") ++ cstr("default") :+ 0.toByte
-      os.writeInt(8 + body.length); os.writeInt(196608); os.write(body); os.flush()
-      drain()
-    }
-
-    def simple(sql: String): Seq[(Char, Array[Byte])] = {
-      os.writeByte('Q')
-      val p = cstr(sql)
-      os.writeInt(4 + p.length); os.write(p); os.flush()
-      drain()
-    }
-
-    def drain(): Seq[(Char, Array[Byte])] = {
-      val out = Seq.newBuilder[(Char, Array[Byte])]
-      var done = false
-      while (!done) {
-        val tpe = in.readByte().toChar
-        val len = in.readInt() - 4
-        val payload = new Array[Byte](len)
-        in.readFully(payload)
-        out += ((tpe, payload))
-        if (tpe == 'Z') done = true
-      }
-      out.result()
-    }
-
-    def tags(msgs: Seq[(Char, Array[Byte])]): Seq[String] =
-      msgs.filter(_._1 == 'C').map(m => new String(m._2, UTF_8).trim)
-
-    def errorCode(msgs: Seq[(Char, Array[Byte])]): Option[String] =
-      msgs.find(_._1 == 'E').map { case (_, p) =>
-        val b = ByteBuffer.wrap(p)
-        var code: String = null
-        var t = b.get()
-        while (t != 0 && code == null) {
-          val sb = new StringBuilder
-          var c = b.get()
-          while (c != 0) { sb.append(c.toChar); c = b.get() }
-          if (t == 'C') code = sb.toString
-          t = if (b.hasRemaining) b.get() else 0
-        }
-        code
-      }
-
-    def col0(msgs: Seq[(Char, Array[Byte])]): Seq[String] =
-      msgs.filter(_._1 == 'D').map { case (_, p) =>
-        val b = ByteBuffer.wrap(p)
-        b.getShort
-        val len = b.getInt
-        if (len == -1) null
-        else { val v = new Array[Byte](len); b.get(v); new String(v, UTF_8) }
-      }
-
-    def close(): Unit = { os.writeByte('X'); os.writeInt(4); os.flush(); sock.close() }
-  }
-
-  private def withClient[A](f: Client => A): A = {
-    val c = new Client
-    c.connect()
-    try f(c) finally c.close()
-  }
+  private def withClient[A](f: WireClient => A): A = WireClient.withClient(port)(f)
 
   test("DECLARE/FETCH pages a result in order; FETCH past the end returns 0") {
     withClient { c =>
-      assert(c.tags(c.simple(
+      assert(commandTags(c.simple(
         "DECLARE pages NO SCROLL CURSOR FOR SELECT id FROM range(7) ORDER BY id"))
         === Seq("DECLARE CURSOR"))
       val first = c.simple("FETCH FORWARD 3 FROM pages")
       assert(first.exists(_._1 == 'T'), "FETCH must carry a RowDescription")
-      assert(c.col0(first) === Seq("0", "1", "2"))
-      assert(c.tags(first) === Seq("FETCH 3"))
-      assert(c.col0(c.simple("FETCH 3 FROM pages")) === Seq("3", "4", "5"))
+      assert(col0(first) === Seq("0", "1", "2"))
+      assert(commandTags(first) === Seq("FETCH 3"))
+      assert(col0(c.simple("FETCH 3 FROM pages")) === Seq("3", "4", "5"))
       // a short final page, then an empty one
       val last = c.simple("FETCH FORWARD 3 FROM pages")
-      assert(c.col0(last) === Seq("6"))
-      assert(c.tags(last) === Seq("FETCH 1"))
+      assert(col0(last) === Seq("6"))
+      assert(commandTags(last) === Seq("FETCH 1"))
       val empty = c.simple("FETCH FORWARD 3 FROM pages")
-      assert(c.col0(empty) === Seq.empty)
-      assert(c.tags(empty) === Seq("FETCH 0"))
-      assert(c.tags(c.simple("CLOSE pages")) === Seq("CLOSE CURSOR"))
+      assert(col0(empty) === Seq.empty)
+      assert(commandTags(empty) === Seq("FETCH 0"))
+      assert(commandTags(c.simple("CLOSE pages")) === Seq("CLOSE CURSOR"))
     }
   }
 
@@ -128,16 +54,16 @@ class PgCursorSuite extends AnyFunSuite with BeforeAndAfterAll {
     withClient { c =>
       c.simple("DECLARE f CURSOR FOR SELECT id * 10 AS v FROM range(6) ORDER BY v")
       // bare FETCH = NEXT = one row
-      assert(c.col0(c.simple("FETCH f")) === Seq("0"))
-      assert(c.col0(c.simple("FETCH NEXT FROM f")) === Seq("10"))
+      assert(col0(c.simple("FETCH f")) === Seq("0"))
+      assert(col0(c.simple("FETCH NEXT FROM f")) === Seq("10"))
       // MOVE skips two rows silently
       val mv = c.simple("MOVE FORWARD 2 IN f")
-      assert(c.tags(mv) === Seq("MOVE 2"))
-      assert(c.col0(mv) === Seq.empty)
+      assert(commandTags(mv) === Seq("MOVE 2"))
+      assert(col0(mv) === Seq.empty)
       // ALL drains what remains
       val rest = c.simple("FETCH ALL IN f")
-      assert(c.col0(rest) === Seq("40", "50"))
-      assert(c.tags(rest) === Seq("FETCH 2"))
+      assert(col0(rest) === Seq("40", "50"))
+      assert(commandTags(rest) === Seq("FETCH 2"))
       c.simple("CLOSE f")
     }
   }
@@ -145,17 +71,17 @@ class PgCursorSuite extends AnyFunSuite with BeforeAndAfterAll {
   test("cursor errors carry PG SQLSTATEs") {
     withClient { c =>
       // unknown cursor
-      assert(c.errorCode(c.simple("FETCH 1 FROM no_such_cursor")) === Some("34000"))
-      assert(c.errorCode(c.simple("CLOSE no_such_cursor")) === Some("34000"))
+      assert(error(c.simple("FETCH 1 FROM no_such_cursor")).map(_._1) === Some("34000"))
+      assert(error(c.simple("CLOSE no_such_cursor")).map(_._1) === Some("34000"))
       // duplicate name
       c.simple("DECLARE dup CURSOR FOR SELECT 1")
-      assert(c.errorCode(c.simple("DECLARE dup CURSOR FOR SELECT 2")) === Some("42P03"))
+      assert(error(c.simple("DECLARE dup CURSOR FOR SELECT 2")).map(_._1) === Some("42P03"))
       // backward motion on a forward-only cursor
-      assert(c.errorCode(c.simple("FETCH BACKWARD 1 FROM dup")) === Some("55000"))
-      assert(c.errorCode(c.simple("FETCH PRIOR FROM dup")) === Some("55000"))
+      assert(error(c.simple("FETCH BACKWARD 1 FROM dup")).map(_._1) === Some("55000"))
+      assert(error(c.simple("FETCH PRIOR FROM dup")).map(_._1) === Some("55000"))
       // CLOSE ALL sweeps everything
-      assert(c.tags(c.simple("CLOSE ALL")) === Seq("CLOSE CURSOR"))
-      assert(c.errorCode(c.simple("FETCH 1 FROM dup")) === Some("34000"))
+      assert(commandTags(c.simple("CLOSE ALL")) === Seq("CLOSE CURSOR"))
+      assert(error(c.simple("FETCH 1 FROM dup")).map(_._1) === Some("34000"))
     }
   }
 
@@ -163,10 +89,10 @@ class PgCursorSuite extends AnyFunSuite with BeforeAndAfterAll {
     withClient { c =>
       c.simple("DECLARE MixedCur CURSOR FOR SELECT 1 AS v")
       // unquoted reference folds to the same cursor
-      assert(c.col0(c.simple("FETCH ALL FROM mixedcur")) === Seq("1"))
+      assert(col0(c.simple("FETCH ALL FROM mixedcur")) === Seq("1"))
       // a quoted different-case name is a different cursor
       c.simple("""DECLARE "MixedCur" CURSOR FOR SELECT 2 AS v""")
-      assert(c.col0(c.simple("""FETCH ALL FROM "MixedCur"""")) === Seq("2"))
+      assert(col0(c.simple("""FETCH ALL FROM "MixedCur"""")) === Seq("2"))
       c.simple("CLOSE ALL")
     }
   }
@@ -175,7 +101,7 @@ class PgCursorSuite extends AnyFunSuite with BeforeAndAfterAll {
     withClient { c =>
       c.simple("DECLARE d CURSOR FOR SELECT 1")
       c.simple("DISCARD ALL")
-      assert(c.errorCode(c.simple("FETCH 1 FROM d")) === Some("34000"))
+      assert(error(c.simple("FETCH 1 FROM d")).map(_._1) === Some("34000"))
     }
   }
 

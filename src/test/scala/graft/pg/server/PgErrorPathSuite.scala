@@ -1,11 +1,7 @@
 package graft.pg.server
 
-import java.io.{DataInputStream, DataOutputStream, EOFException}
-import java.net.Socket
 import java.nio.ByteBuffer
 import java.nio.charset.StandardCharsets.UTF_8
-
-import scala.collection.mutable
 
 import graft.TestSpark
 import graft.pg.wire.PgTypes
@@ -38,6 +34,7 @@ import org.scalatest.funsuite.AnyFunSuite
   *    answers 22P03, PG's exec_bind_message check
   */
 class PgErrorPathSuite extends AnyFunSuite with BeforeAndAfterAll {
+  import WireClient._
 
   private var server: PgWireServer = _
   private def port: Int = server.boundPort
@@ -49,131 +46,21 @@ class PgErrorPathSuite extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = if (server != null) server.stop()
 
-  private class RawClient {
-    private val sock = new Socket("127.0.0.1", port)
-    sock.setSoTimeout(30000)
-    private val in = new DataInputStream(sock.getInputStream)
-    private val os = new DataOutputStream(sock.getOutputStream)
-
-    def cstr(s: String): Array[Byte] = s.getBytes(UTF_8) :+ 0.toByte
-    def i16(v: Int): Array[Byte] =
-      ByteBuffer.allocate(2).putShort(v.toShort).array()
-    def i32(v: Int): Array[Byte] = ByteBuffer.allocate(4).putInt(v).array()
-
-    def connect(): Unit = {
-      val body = cstr("user") ++ cstr("graft") ++ cstr("database") ++
-        cstr("default") :+ 0.toByte
-      os.writeInt(8 + body.length)
-      os.writeInt(196608)
-      os.write(body)
-      os.flush()
-      drainUntilReady()
-    }
-
-    def send(tpe: Char, payload: Array[Byte]): Unit = {
-      os.writeByte(tpe)
-      os.writeInt(4 + payload.length)
-      os.write(payload)
-      os.flush()
-    }
-
-    /** A frame whose length FIELD claims `claimedLen` without sending the
-      * body — enough for the decoder to judge the length.
-      */
-    def sendHeaderOnly(tpe: Char, claimedLen: Int): Unit = {
-      os.writeByte(tpe)
-      os.writeInt(claimedLen)
-      os.flush()
-    }
-
-    def parse(stmt: String, sql: String, oids: Seq[Int] = Nil): Unit =
-      send('P', cstr(stmt) ++ cstr(sql) ++ i16(oids.length) ++ oids.flatMap(i32))
-    def bind(portal: String, stmt: String): Unit =
-      send('B', cstr(portal) ++ cstr(stmt) ++ i16(0) ++ i16(0) ++ i16(0))
-    def describePortal(name: String): Unit =
-      send('D', Array[Byte]('P'.toByte) ++ cstr(name))
-    def execute(portal: String, maxRows: Int): Unit =
-      send('E', cstr(portal) ++ i32(maxRows))
-    def closePortal(name: String): Unit =
-      send('C', Array[Byte]('P'.toByte) ++ cstr(name))
-    def closeStatement(name: String): Unit =
-      send('C', Array[Byte]('S'.toByte) ++ cstr(name))
-    def sync(): Seq[(Char, Array[Byte])] = { send('S', Array.empty); drainUntilReady() }
-    def simpleQuery(sql: String): Seq[(Char, Array[Byte])] = {
-      send('Q', cstr(sql)); drainUntilReady()
-    }
-
-    def drainUntilReady(): Seq[(Char, Array[Byte])] = {
-      val msgs = mutable.ArrayBuffer.empty[(Char, Array[Byte])]
-      var done = false
-      while (!done) {
-        val tpe = in.readByte().toChar
-        val len = in.readInt()
-        val payload = new Array[Byte](len - 4)
-        in.readFully(payload)
-        msgs += ((tpe, payload))
-        if (tpe == 'Z') done = true
-      }
-      msgs.toSeq
-    }
-
-    /** Messages until the peer closes the stream (for fatal paths). */
-    def drainUntilClose(): Seq[(Char, Array[Byte])] = {
-      val msgs = mutable.ArrayBuffer.empty[(Char, Array[Byte])]
-      try {
-        while (true) {
-          val tpe = in.readByte().toChar
-          val len = in.readInt()
-          val payload = new Array[Byte](len - 4)
-          in.readFully(payload)
-          msgs += ((tpe, payload))
-        }
-      } catch { case _: EOFException => }
-      msgs.toSeq
-    }
-
-    /** SQLSTATE ('C' field) of an ErrorResponse payload. */
-    def sqlState(payload: Array[Byte]): String = errorField(payload, 'C')
-
-    /** One field of an ErrorResponse payload ("" when absent). */
-    def errorField(payload: Array[Byte], field: Char): String = {
-      val b = ByteBuffer.wrap(payload)
-      var out = ""
-      var tag = b.get()
-      while (tag != 0) {
-        val sb = new StringBuilder
-        var c = b.get()
-        while (c != 0) { sb.append(c.toChar); c = b.get() }
-        if (tag == field) out = sb.toString
-        tag = b.get()
-      }
-      out
-    }
-
-    def types(msgs: Seq[(Char, Array[Byte])]): String = msgs.map(_._1).mkString
-
-    def close(): Unit = { try send('X', Array.empty) catch { case _: Throwable => }; sock.close() }
-  }
-
-  private def withClient[A](f: RawClient => A): A = {
-    val c = new RawClient
-    c.connect()
-    try f(c) finally c.close()
-  }
+  private def withClient[A](f: WireClient => A): A = WireClient.withClient(port, 30000)(f)
 
   test("oversized frame: one ErrorResponse, connection closed, server survives") {
-    val c = new RawClient
+    val c = new WireClient(port, 30000)
     c.connect()
     // claims 80 MB — past the 64 MB frame cap; no body follows
-    c.sendHeaderOnly('Q', 80 << 20)
-    val msgs = c.drainUntilClose()
+    c.write(Array('Q'.toByte) ++ c.i32(80 << 20))
+    val msgs = c.drainToClose()
     assert(msgs.exists(_._1 == 'E'),
-      s"oversized frame must answer ErrorResponse, got: ${c.types(msgs)}")
+      s"oversized frame must answer ErrorResponse, got: ${types(msgs)}")
     assert(!msgs.exists(_._1 == 'Z'),
       "a fatal frame error must not hand the connection back (no ReadyForQuery)")
     // the server itself is unharmed: a fresh connection executes normally
     withClient { c2 =>
-      val reply = c2.simpleQuery("SELECT 1")
+      val reply = c2.simple("SELECT 1")
       assert(reply.exists(_._1 == 'D'), "fresh connection must still serve queries")
     }
   }
@@ -190,13 +77,13 @@ class PgErrorPathSuite extends AnyFunSuite with BeforeAndAfterAll {
       c.execute("", 0)
       val msgs = c.sync()
       val errs = msgs.filter(_._1 == 'E')
-      assert(errs.size == 1, s"exactly one ErrorResponse, got: ${c.types(msgs)}")
-      assert(c.sqlState(errs.head._2) == "26000",
-        s"dropped statement must answer invalid_sql_statement_name, got ${c.sqlState(errs.head._2)}")
+      assert(errs.size == 1, s"exactly one ErrorResponse, got: ${types(msgs)}")
+      assert(error(msgs).map(_._1) === Some("26000"),
+        "dropped statement must answer invalid_sql_statement_name")
       assert(!msgs.exists(m => m._1 == 'D' || m._1 == 'C'),
-        s"no data/complete after the error: ${c.types(msgs)}")
+        s"no data/complete after the error: ${types(msgs)}")
       // connection still usable
-      val ok = c.simpleQuery("SELECT 7 AS v")
+      val ok = c.simple("SELECT 7 AS v")
       assert(ok.exists(_._1 == 'D'), "connection must continue after Sync")
     }
   }
@@ -210,10 +97,10 @@ class PgErrorPathSuite extends AnyFunSuite with BeforeAndAfterAll {
       c.execute("", 0) // a second Execute in the same dead batch
       val msgs = c.sync()
       assert(msgs.count(_._1 == 'E') == 1,
-        s"exactly one ErrorResponse for the whole dead batch: ${c.types(msgs)}")
+        s"exactly one ErrorResponse for the whole dead batch: ${types(msgs)}")
       assert(msgs.count(_._1 == 'Z') == 1, "one ReadyForQuery at Sync")
       assert(!msgs.exists(m => m._1 == 'D' || m._1 == 'C' || m._1 == 'T'),
-        s"no rows, tags, or row descriptions from a dead batch: ${c.types(msgs)}")
+        s"no rows, tags, or row descriptions from a dead batch: ${types(msgs)}")
       // and the very next batch on the same connection is clean
       c.parse("", "SELECT 3 AS v")
       c.bind("", "")
@@ -221,7 +108,7 @@ class PgErrorPathSuite extends AnyFunSuite with BeforeAndAfterAll {
       c.execute("", 0)
       val ok = c.sync()
       assert(ok.exists(_._1 == 'D') && ok.exists(_._1 == 'C'),
-        s"post-error batch must run cleanly: ${c.types(ok)}")
+        s"post-error batch must run cleanly: ${types(ok)}")
     }
   }
 
@@ -235,10 +122,10 @@ class PgErrorPathSuite extends AnyFunSuite with BeforeAndAfterAll {
       c.describePortal("port1")
       val msgs = c.sync()
       val errs = msgs.filter(_._1 == 'E')
-      assert(errs.size == 1, s"one ErrorResponse: ${c.types(msgs)}")
-      assert(c.sqlState(errs.head._2) == "34000",
-        s"closed portal must answer invalid_cursor_name, got ${c.sqlState(errs.head._2)}")
-      val ok = c.simpleQuery("SELECT 5 AS v")
+      assert(errs.size == 1, s"one ErrorResponse: ${types(msgs)}")
+      assert(error(msgs).map(_._1) === Some("34000"),
+        "closed portal must answer invalid_cursor_name")
+      val ok = c.simple("SELECT 5 AS v")
       assert(ok.exists(_._1 == 'D'), "connection must continue")
     }
   }
@@ -248,21 +135,21 @@ class PgErrorPathSuite extends AnyFunSuite with BeforeAndAfterAll {
       c.execute("no_such_portal", 0)
       val msgs = c.sync()
       val errs = msgs.filter(_._1 == 'E')
-      assert(errs.size == 1, s"one ErrorResponse: ${c.types(msgs)}")
-      assert(c.sqlState(errs.head._2) == "34000",
-        s"unknown portal must answer invalid_cursor_name, got ${c.sqlState(errs.head._2)}")
+      assert(errs.size == 1, s"one ErrorResponse: ${types(msgs)}")
+      assert(error(msgs).map(_._1) === Some("34000"),
+        "unknown portal must answer invalid_cursor_name")
     }
   }
 
   test("unknown frontend message type: protocol error, connection not wedged") {
     withClient { c =>
       c.send('z', Array.empty)
-      val msgs = c.drainUntilReady()
+      val msgs = c.drain()
       val errs = msgs.filter(_._1 == 'E')
-      assert(errs.nonEmpty, s"unknown type must answer ErrorResponse: ${c.types(msgs)}")
-      assert(c.sqlState(errs.head._2) == "08P01",
-        s"protocol violation code expected, got ${c.sqlState(errs.head._2)}")
-      val ok = c.simpleQuery("SELECT 9 AS v")
+      assert(errs.nonEmpty, s"unknown type must answer ErrorResponse: ${types(msgs)}")
+      assert(error(msgs).map(_._1) === Some("08P01"),
+        "protocol violation code expected")
+      val ok = c.simple("SELECT 9 AS v")
       assert(ok.exists(_._1 == 'D'), "connection must continue after the protocol error")
     }
   }
@@ -271,14 +158,14 @@ class PgErrorPathSuite extends AnyFunSuite with BeforeAndAfterAll {
     * message) of the one ErrorResponse; then `SELECT 1` must still answer
     * on the same connection.
     */
-  private def errorThenUsable(c: RawClient)(frame: => Unit): (String, String) = {
+  private def errorThenUsable(c: WireClient)(frame: => Unit): (String, String) = {
     frame
     val msgs = c.sync()
     val errs = msgs.filter(_._1 == 'E')
-    assert(errs.size == 1, s"one ErrorResponse: ${c.types(msgs)}")
-    val ok = c.simpleQuery("SELECT 1")
-    assert(ok.exists(_._1 == 'D'), s"connection must continue: ${c.types(ok)}")
-    (c.sqlState(errs.head._2), c.errorField(errs.head._2, 'M'))
+    assert(errs.size == 1, s"one ErrorResponse: ${types(msgs)}")
+    val ok = c.simple("SELECT 1")
+    assert(ok.exists(_._1 == 'D'), s"connection must continue: ${types(ok)}")
+    error(msgs).get
   }
 
   private val Truncated = ("08P01", "insufficient data left in message")
@@ -304,8 +191,7 @@ class PgErrorPathSuite extends AnyFunSuite with BeforeAndAfterAll {
       // Parse `SELECT $1` typed `oid`, Bind `value` in binary, Execute
       def bindBinary(oid: Int, value: Array[Byte]): Unit = {
         c.parse("", "SELECT $1 AS v", Seq(oid))
-        c.send('B', c.cstr("") ++ c.cstr("") ++ c.i16(1) ++ c.i16(1) ++
-          c.i16(1) ++ c.i32(value.length) ++ value ++ c.i16(0))
+        c.bindBytes("", "", Seq(value), Seq(1))
         c.execute("", 0)
       }
       def int8Bytes(v: Long) = ByteBuffer.allocate(8).putLong(v).array()
@@ -321,9 +207,8 @@ class PgErrorPathSuite extends AnyFunSuite with BeforeAndAfterAll {
       // exact widths still bind
       bindBinary(PgTypes.INT8, int8Bytes(5))
       val ok = c.sync()
-      assert(!ok.exists(_._1 == 'E'), s"exact width must bind: ${c.types(ok)}")
-      // DataRow: int16 column count, int32 length, the text value
-      assert(ok.filter(_._1 == 'D').map(m => new String(m._2.drop(6), UTF_8)) === Seq("5"))
+      assert(!ok.exists(_._1 == 'E'), s"exact width must bind: ${types(ok)}")
+      assert(col0(ok) === Seq("5"))
     }
   }
 }

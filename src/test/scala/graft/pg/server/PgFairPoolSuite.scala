@@ -1,7 +1,6 @@
 package graft.pg.server
 
-import java.io.{BufferedReader, DataInputStream, DataOutputStream, InputStreamReader}
-import java.net.Socket
+import java.io.{BufferedReader, InputStreamReader}
 import java.nio.charset.StandardCharsets.UTF_8
 import java.util.concurrent.TimeUnit
 
@@ -18,6 +17,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * assignment exists for.
   */
 class PgFairPoolSuite extends AnyFunSuite {
+  import WireClient.{connected, error}
 
   private val addOpens = Seq(
     "java.base/java.lang", "java.base/java.lang.invoke",
@@ -28,45 +28,6 @@ class PgFairPoolSuite extends AnyFunSuite {
     "java.base/sun.nio.ch", "java.base/sun.nio.cs",
     "java.base/sun.security.action", "java.base/sun.util.calendar"
   ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
-
-  private def cstr(s: String) = s.getBytes(UTF_8) :+ 0.toByte
-
-  private class Conn(port: Int) {
-    private val sock = new Socket("127.0.0.1", port)
-    sock.setSoTimeout(300000)
-    private val in = new DataInputStream(sock.getInputStream)
-    private val os = new DataOutputStream(sock.getOutputStream)
-    val startup = cstr("user") ++ cstr("graft") ++ cstr("database") ++
-      cstr("default") :+ 0.toByte
-    os.writeInt(8 + startup.length); os.writeInt(196608); os.write(startup); os.flush()
-    drain()
-
-    /** run a simple query to ReadyForQuery; returns an error payload or null */
-    def query(sql: String): String = {
-      os.writeByte('Q'); os.writeInt(4 + sql.length + 1)
-      os.write(sql.getBytes(UTF_8)); os.writeByte(0); os.flush()
-      drain()
-    }
-
-    private def drain(): String = {
-      var err: String = null
-      var done = false
-      while (!done) {
-        val tpe = in.readByte().toChar
-        val len = in.readInt() - 4
-        if (tpe == 'E') {
-          val p = new Array[Byte](len); in.readFully(p)
-          err = new String(p, UTF_8)
-        } else {
-          in.skipBytes(len)
-          if (tpe == 'Z') done = true
-        }
-      }
-      err
-    }
-
-    def close(): Unit = { os.writeByte('X'); os.writeInt(4); os.flush(); sock.close() }
-  }
 
   test("FAIR pools: a light statement is not starved by a heavy one") {
     val java = sys.props("java.home") + "/bin/java"
@@ -97,35 +58,36 @@ class PgFairPoolSuite extends AnyFunSuite {
       })
       drainer.setDaemon(true); drainer.start()
 
-      val heavyConn = new Conn(port)
-      val lightConn = new Conn(port)
+      val heavyConn = connected(port, 300000)
+      val lightConn = connected(port, 300000)
       try {
         // warm both sessions so codegen/session setup is out of the timings
-        assert(heavyConn.query("SELECT max(id * 2 + 1) FROM range(0, 1000, 1, 2)") == null)
-        assert(lightConn.query("SELECT count(*) FROM range(0, 1000, 1, 2)") == null)
+        assert(error(heavyConn.simple(
+          "SELECT max(id * 2 + 1) FROM range(0, 1000, 1, 2)")).isEmpty)
+        assert(error(lightConn.simple("SELECT count(*) FROM range(0, 1000, 1, 2)")).isEmpty)
 
         // heavy: 256 short tasks over ~16B ids — ~7s of work on 4 cores
         // (codegen range scan ~0.5B ids/s/core), with task boundaries every
         // ~100ms where the fair scheduler can slot the other pool's tasks in
         @volatile var heavyMs = -1L
-        @volatile var heavyErr: String = "did not run"
+        @volatile var heavyErr: Option[(String, String)] = Some(("", "did not run"))
         val t0 = System.currentTimeMillis()
         val heavy = new Thread(() => {
-          heavyErr = heavyConn.query(
-            "SELECT max(id * 2 + 1) FROM range(0, 16000000000, 1, 256)")
+          heavyErr = error(heavyConn.simple(
+            "SELECT max(id * 2 + 1) FROM range(0, 16000000000, 1, 256)"))
           heavyMs = System.currentTimeMillis() - t0
         })
         heavy.start()
         Thread.sleep(1500) // let the heavy job occupy all cores
 
         val t1 = System.currentTimeMillis()
-        val lightErr = lightConn.query("SELECT count(*) FROM range(0, 1000000, 1, 2)")
+        val lightErr = error(lightConn.simple("SELECT count(*) FROM range(0, 1000000, 1, 2)"))
         val lightMs = System.currentTimeMillis() - t1
         val lightDoneAt = System.currentTimeMillis() - t0
 
         heavy.join(TimeUnit.MINUTES.toMillis(3))
-        assert(heavyErr == null, s"heavy statement failed: $heavyErr")
-        assert(lightErr == null, s"light statement failed: $lightErr")
+        assert(heavyErr.isEmpty, s"heavy statement failed: $heavyErr")
+        assert(lightErr.isEmpty, s"light statement failed: $lightErr")
         assert(heavyMs > 0, "heavy statement did not finish")
         // the property FIFO cannot give: the light statement finished while
         // the heavy one was still running, in a small fraction of its time

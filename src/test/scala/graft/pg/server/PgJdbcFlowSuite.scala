@@ -1,11 +1,7 @@
 package graft.pg.server
 
-import java.io.{DataInputStream, DataOutputStream}
-import java.net.Socket
 import java.nio.ByteBuffer
 import java.nio.charset.StandardCharsets.UTF_8
-
-import scala.collection.mutable
 
 import graft.TestSpark
 
@@ -35,6 +31,7 @@ import org.scalatest.funsuite.AnyFunSuite
   *     parameterized type-lookup query, verbatim as pgjdbc emits them
   */
 class PgJdbcFlowSuite extends AnyFunSuite with BeforeAndAfterAll {
+  import WireClient._
 
   private var server: PgWireServer = _
   private def port: Int = server.boundPort
@@ -46,189 +43,60 @@ class PgJdbcFlowSuite extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = if (server != null) server.stop()
 
-  // ---- a raw V3 client shaped like pgjdbc's QueryExecutorImpl ----
+  // ---- pgjdbc's QueryExecutorImpl choreography over WireClient ----
 
-  private class Jdbc42Client {
-    private val sock = new Socket("127.0.0.1", port)
-    private val in = new DataInputStream(sock.getInputStream)
-    private val os = new DataOutputStream(sock.getOutputStream)
+  /** pgjdbc's startup parameters beside user and database: the list
+    * ConnectionFactoryImpl sends for a 9.0+ server.
+    */
+  private def jdbcStartup(extraFloatDigits: String = "2"): Seq[(String, String)] = Seq(
+    "client_encoding" -> "UTF8", "DateStyle" -> "ISO", "TimeZone" -> "America/New_York",
+    // 42.2 sends 2; 42.7 raised its 9.0+ default to 3
+    "extra_float_digits" -> extraFloatDigits,
+    "application_name" -> "PostgreSQL JDBC Driver")
 
-    def cstr(s: String): Array[Byte] = s.getBytes(UTF_8) :+ 0.toByte
-    private def i16(v: Int): Array[Byte] =
-      ByteBuffer.allocate(2).putShort(v.toShort).array()
-    private def i32(v: Int): Array[Byte] = ByteBuffer.allocate(4).putInt(v).array()
+  private def withClient[A](f: WireClient => A): A =
+    WireClient.withClient(port, params = jdbcStartup())(f)
 
-    val parameterStatus = mutable.Map.empty[String, String]
-    var txStatus: Char = ' '
-
-    /** pgjdbc's startup packet: the parameter list ConnectionFactoryImpl
-      * sends for a 9.0+ server (user, database, client_encoding, DateStyle,
-      * TimeZone, extra_float_digits, application_name).
-      */
-    def connect(extraFloatDigits: String = "2"): Seq[(Char, Array[Byte])] = {
-      val body =
-        cstr("user") ++ cstr("graft") ++
-          cstr("database") ++ cstr("default") ++
-          cstr("client_encoding") ++ cstr("UTF8") ++
-          cstr("DateStyle") ++ cstr("ISO") ++
-          cstr("TimeZone") ++ cstr("America/New_York") ++
-          // 42.2 sends 2; 42.7 raised its 9.0+ default to 3
-          cstr("extra_float_digits") ++ cstr(extraFloatDigits) ++
-          cstr("application_name") ++ cstr("PostgreSQL JDBC Driver") :+ 0.toByte
-      os.writeInt(8 + body.length)
-      os.writeInt(196608)
-      os.write(body)
-      os.flush()
-      drainUntilReady()
-    }
-
-    def send(tpe: Char, payload: Array[Byte]): Unit = {
-      os.writeByte(tpe)
-      os.writeInt(4 + payload.length)
-      os.write(payload)
-      os.flush()
-    }
-
-    def parse(stmt: String, sql: String, paramOids: Seq[Int] = Nil): Unit =
-      send('P', cstr(stmt) ++ cstr(sql) ++ i16(paramOids.length) ++
-        paramOids.flatMap(i32).toArray)
-
-    /** Bind with text params and per-column result format codes (pgjdbc
-      * sends one code per column once it knows the row description).
-      */
-    def bind(portal: String, stmt: String, params: Seq[String] = Nil,
-        resultFormats: Seq[Int] = Nil): Unit = {
-      val paramBytes = params.flatMap { p =>
-        val b = p.getBytes(UTF_8); i32(b.length) ++ b
-      }.toArray
-      send('B', cstr(portal) ++ cstr(stmt) ++
-        i16(0) ++ // all params text
-        i16(params.length) ++ paramBytes ++
-        i16(resultFormats.length) ++ resultFormats.flatMap(i16).toArray)
-    }
-
-    def describeStatement(name: String): Unit =
-      send('D', Array[Byte]('S'.toByte) ++ cstr(name))
-    def describePortal(name: String): Unit =
-      send('D', Array[Byte]('P'.toByte) ++ cstr(name))
-    def execute(portal: String, maxRows: Int): Unit =
-      send('E', cstr(portal) ++ i32(maxRows))
-    def closePortal(name: String): Unit =
-      send('C', Array[Byte]('P'.toByte) ++ cstr(name))
-    def closeStatement(name: String): Unit =
-      send('C', Array[Byte]('S'.toByte) ++ cstr(name))
-    def sync(): Seq[(Char, Array[Byte])] = { send('S', Array.empty); drainUntilReady() }
-
-    def drainUntilReady(): Seq[(Char, Array[Byte])] = {
-      val msgs = mutable.ArrayBuffer.empty[(Char, Array[Byte])]
-      var done = false
-      while (!done) {
-        val tpe = in.readByte().toChar
-        val len = in.readInt()
-        val payload = new Array[Byte](len - 4)
-        in.readFully(payload)
-        if (tpe == 'S' && payload.nonEmpty) {
-          val parts = new String(payload, UTF_8).split('\u0000')
-          if (parts.length >= 2) parameterStatus(parts(0)) = parts(1)
-        }
-        msgs += ((tpe, payload))
-        if (tpe == 'Z') { txStatus = payload(0).toChar; done = true }
-      }
-      msgs.toSeq
-    }
-
-    /** pgjdbc's Statement.executeQuery over the unnamed statement: one batch
-      * of Parse/Bind/Describe(portal)/Execute/Sync. Returns the full reply.
-      */
-    def oneShot(sql: String, params: Seq[String] = Nil,
-        paramOids: Seq[Int] = Nil): Seq[(Char, Array[Byte])] = {
-      parse("", sql, paramOids)
-      bind("", "", params)
-      describePortal("")
-      execute("", 0)
-      sync()
-    }
-
-    /** Text cells of every DataRow in a reply. */
-    def rows(msgs: Seq[(Char, Array[Byte])]): Seq[Seq[String]] =
-      msgs.filter(_._1 == 'D').map { case (_, p) =>
-        val b = ByteBuffer.wrap(p)
-        val ncols = b.getShort.toInt
-        (0 until ncols).map { _ =>
-          val len = b.getInt
-          if (len == -1) null
-          else { val v = new Array[Byte](len); b.get(v); new String(v, UTF_8) }
-        }
-      }
-
-    /** (name, typeOid, formatCode) per field of the reply's RowDescription. */
-    def fields(msgs: Seq[(Char, Array[Byte])]): Seq[(String, Int, Int)] = {
-      val p = msgs.find(_._1 == 'T').getOrElse(fail("no RowDescription"))._2
-      val b = ByteBuffer.wrap(p)
-      val nf = b.getShort.toInt
-      (0 until nf).map { _ =>
-        val name = new StringBuilder
-        var c = b.get()
-        while (c != 0) { name.append(c.toChar); c = b.get() }
-        b.getInt // table oid
-        b.getShort // attnum
-        val oid = b.getInt
-        b.getShort // typlen
-        b.getInt // typmod
-        val fmt = b.getShort.toInt
-        (name.toString, oid, fmt)
-      }
-    }
-
-    /** Declared param type oids from a ParameterDescription. */
-    def paramOids(msgs: Seq[(Char, Array[Byte])]): Seq[Int] = {
-      val p = msgs.find(_._1 == 't').getOrElse(fail("no ParameterDescription"))._2
-      val b = ByteBuffer.wrap(p)
-      val np = b.getShort.toInt
-      (0 until np).map(_ => b.getInt)
-    }
-
-    def commandTags(msgs: Seq[(Char, Array[Byte])]): Seq[String] =
-      msgs.filter(_._1 == 'C').map(m => new String(m._2, UTF_8).trim.stripSuffix("\u0000"))
-
-    def types(msgs: Seq[(Char, Array[Byte])]): String = msgs.map(_._1).mkString
-
-    def close(): Unit = { send('X', Array.empty); sock.close() }
-  }
-
-  private def withClient[A](f: Jdbc42Client => A): A = {
-    val c = new Jdbc42Client
-    c.connect()
-    try f(c) finally c.close()
+  /** pgjdbc's Statement.executeQuery over the unnamed statement: one batch
+    * of Parse/Bind/Describe(portal)/Execute/Sync. Returns the full reply.
+    */
+  private def oneShot(c: WireClient, sql: String, params: Seq[String] = Nil,
+      paramOids: Seq[Int] = Nil): Msgs = {
+    c.parse("", sql, paramOids)
+    c.bind("", "", params)
+    c.describePortal("")
+    c.execute("")
+    c.sync()
   }
 
   // ---- connection lifecycle ----
 
   test("startup: pgjdbc parameter set is accepted and answered") {
-    val c = new Jdbc42Client
-    val msgs = c.connect()
+    val c = new WireClient(port)
+    val msgs = c.connect(jdbcStartup(): _*)
     try {
-      val ts = c.types(msgs)
+      val ts = types(msgs)
       assert(ts.startsWith("R"), s"AuthenticationOk first, got $ts")
       assert(msgs.exists(_._1 == 'K'), "BackendKeyData required (pgjdbc stores it for cancel)")
-      assert(c.txStatus === 'I', "ReadyForQuery must report idle")
+      assert(msgs.last._2(0).toChar === 'I', "ReadyForQuery must report idle")
       // pgjdbc reads these ParameterStatus values at connect
-      assert(c.parameterStatus.contains("server_version"))
-      assert(c.parameterStatus("client_encoding") === "UTF8")
-      assert(c.parameterStatus.get("integer_datetimes").contains("on"),
+      val parameterStatus = paramStatuses(msgs).toMap
+      assert(parameterStatus.contains("server_version"))
+      assert(parameterStatus("client_encoding") === "UTF8")
+      assert(parameterStatus.get("integer_datetimes").contains("on"),
         "pgjdbc's binary timestamp codec requires integer_datetimes=on")
-      assert(c.parameterStatus.get("standard_conforming_strings").contains("on"))
+      assert(parameterStatus.get("standard_conforming_strings").contains("on"))
 
       // the driver's first statement on a 9.0+ server
-      val r = c.oneShot("SET extra_float_digits = 3")
-      assert(c.commandTags(r) === Seq("SET"), s"got ${c.commandTags(r)}")
+      val r = oneShot(c, "SET extra_float_digits = 3")
+      assert(commandTags(r) === Seq("SET"), s"got ${commandTags(r)}")
       assert(!r.exists(_._1 == 'E'))
     } finally c.close()
   }
 
   test("isValid(): empty extended query completes without error") {
     withClient { c =>
-      val r = c.oneShot("")
+      val r = oneShot(c, "")
       assert(!r.exists(_._1 == 'E'), "empty query must not error")
       assert(r.last._1 === 'Z')
     }
@@ -238,17 +106,17 @@ class PgJdbcFlowSuite extends AnyFunSuite with BeforeAndAfterAll {
 
   test("executeQuery: unnamed one-shot batch replies in pgjdbc's expected order") {
     withClient { c =>
-      val r = c.oneShot(
+      val r = oneShot(c, 
         "SELECT l_returnflag, count(*) AS n " +
           s"FROM parquet.`${TestSpark.sfDir}/lineitem.parquet` " +
           "GROUP BY l_returnflag ORDER BY l_returnflag")
-      val ts = c.types(r)
+      val ts = types(r)
       // ParseComplete, BindComplete, RowDescription, rows, CommandComplete, Ready
       assert(ts.matches("12TD+CZ"), s"reply sequence was $ts")
-      assert(c.fields(r).map(_._1) === Seq("l_returnflag", "n"))
-      val got = c.rows(r)
+      assert(columns(r).map(_._1) === Seq("l_returnflag", "n"))
+      val got = rows(r)
       assert(got.length === 3 && got.head.head === "A")
-      assert(c.commandTags(r).head === s"SELECT 3")
+      assert(commandTags(r).head === s"SELECT 3")
     }
   }
 
@@ -257,8 +125,8 @@ class PgJdbcFlowSuite extends AnyFunSuite with BeforeAndAfterAll {
       val sql = "SELECT $1 + 10 AS v"
       // executions 1-4: unnamed statement each time
       (1 to 4).foreach { k =>
-        val r = c.oneShot(sql, params = Seq(k.toString), paramOids = Seq(23))
-        assert(c.rows(r) === Seq(Seq((k + 10).toString)))
+        val r = oneShot(c, sql, params = Seq(k.toString), paramOids = Seq(23))
+        assert(rows(r) === Seq(Seq((k + 10).toString)))
       }
       // execution 5: pgjdbc promotes to a named server-side statement —
       // Parse(S_1) + Describe(S_1) consumed for ParameterDescription +
@@ -268,19 +136,19 @@ class PgJdbcFlowSuite extends AnyFunSuite with BeforeAndAfterAll {
       c.bind("", "S_1", Seq("5"))
       c.execute("", 0)
       val r5 = c.sync()
-      assert(c.types(r5).matches("1tT2D+CZ"),
-        s"named-prepare reply was ${c.types(r5)}")
-      assert(c.paramOids(r5) === Seq(23), "declared int4 param must describe as oid 23")
-      assert(c.rows(r5) === Seq(Seq("15")))
+      assert(types(r5).matches("1tT2D+CZ"),
+        s"named-prepare reply was ${types(r5)}")
+      assert(paramTypes(r5) === Seq(23), "declared int4 param must describe as oid 23")
+      assert(rows(r5) === Seq(Seq("15")))
       // executions 6-8: Bind/Execute ONLY — the named statement is reused
       // across Syncs with no re-Parse (the server must keep S_1 alive)
       (6 to 8).foreach { k =>
         c.bind("", "S_1", Seq(k.toString))
         c.execute("", 0)
         val r = c.sync()
-        val ts = c.types(r)
+        val ts = types(r)
         assert(!ts.contains('1'), s"reuse round must not re-Parse, got $ts")
-        assert(c.rows(r) === Seq(Seq((k + 10).toString)))
+        assert(rows(r) === Seq(Seq((k + 10).toString)))
       }
       // Statement.close(): Close(S) frees the named statement
       c.closeStatement("S_1")
@@ -307,7 +175,7 @@ class PgJdbcFlowSuite extends AnyFunSuite with BeforeAndAfterAll {
       c.describePortal("")
       c.execute("", 0)
       val r = c.sync()
-      assert(c.fields(r).map(_._3) === Seq(1, 0),
+      assert(columns(r).map(_._4) === Seq(1, 0),
         "RowDescription format codes must echo the Bind request")
       val data = r.find(_._1 == 'D').get._2
       val b = ByteBuffer.wrap(data)
@@ -324,32 +192,32 @@ class PgJdbcFlowSuite extends AnyFunSuite with BeforeAndAfterAll {
   test("fetchSize cursor loop: Execute/Sync per round, portal survives Sync") {
     withClient { c =>
       // pgjdbc requires autocommit off for cursor mode and emits BEGIN first
-      val rb = c.oneShot("BEGIN")
-      assert(c.commandTags(rb) === Seq("BEGIN"))
+      val rb = oneShot(c, "BEGIN")
+      assert(commandTags(rb) === Seq("BEGIN"))
       // ResultSet round 1: the full batch with Execute(maxRows=fetchSize)
       c.parse("", "SELECT id FROM range(7) ORDER BY id")
       c.bind("C_1", "")
       c.describePortal("C_1")
       c.execute("C_1", 2)
       val r1 = c.sync()
-      assert(c.types(r1).matches("12TDDsZ"), s"round 1 was ${c.types(r1)}")
-      assert(c.rows(r1).map(_.head) === Seq("0", "1"))
+      assert(types(r1).matches("12TDDsZ"), s"round 1 was ${types(r1)}")
+      assert(rows(r1).map(_.head) === Seq("0", "1"))
       // rounds 2..n: pgjdbc sends ONLY Execute + Sync — the portal must
       // survive the Sync boundary (this is the exact sequence from
       // QueryExecutorImpl.fetch; reference PgJdbcSuite.scala:1144-1190
       // proves the same loop via the real driver)
       c.execute("C_1", 2)
       val r2 = c.sync()
-      assert(c.types(r2).matches("DDsZ"), s"round 2 was ${c.types(r2)}")
-      assert(c.rows(r2).map(_.head) === Seq("2", "3"))
+      assert(types(r2).matches("DDsZ"), s"round 2 was ${types(r2)}")
+      assert(rows(r2).map(_.head) === Seq("2", "3"))
       c.execute("C_1", 2)
       val r3 = c.sync()
-      assert(c.rows(r3).map(_.head) === Seq("4", "5"))
+      assert(rows(r3).map(_.head) === Seq("4", "5"))
       c.execute("C_1", 2)
       val r4 = c.sync()
-      assert(c.types(r4).matches("DCZ"), s"final round was ${c.types(r4)}")
-      assert(c.rows(r4).map(_.head) === Seq("6"))
-      assert(c.commandTags(r4).head === "SELECT 7",
+      assert(types(r4).matches("DCZ"), s"final round was ${types(r4)}")
+      assert(rows(r4).map(_.head) === Seq("6"))
+      assert(commandTags(r4).head === "SELECT 7",
         "CommandComplete carries the TOTAL row count")
       // ResultSet.close(): Close(portal)
       c.closePortal("C_1")
@@ -359,7 +227,7 @@ class PgJdbcFlowSuite extends AnyFunSuite with BeforeAndAfterAll {
       c.execute("C_1", 2)
       val re = c.sync()
       assert(re.exists(_._1 == 'E') && re.last._1 === 'Z')
-      c.oneShot("COMMIT")
+      oneShot(c, "COMMIT")
     }
   }
 
@@ -369,14 +237,14 @@ class PgJdbcFlowSuite extends AnyFunSuite with BeforeAndAfterAll {
       c.bind("", "")
       c.execute("", 1)
       val r = c.sync()
-      assert(c.rows(r).map(_.head) === Seq("0"), "exactly maxRows rows")
+      assert(rows(r).map(_.head) === Seq("0"), "exactly maxRows rows")
       assert(r.exists(_._1 == 's'), "suspended, not complete")
       c.closePortal("")
       val rc = c.sync()
       assert(rc.exists(_._1 == '3'))
       // the statement stays usable for the next executeQuery
-      val r2 = c.oneShot("SELECT 1 AS one")
-      assert(c.rows(r2) === Seq(Seq("1")))
+      val r2 = oneShot(c, "SELECT 1 AS one")
+      assert(rows(r2) === Seq(Seq("1")))
     }
   }
 
@@ -384,12 +252,12 @@ class PgJdbcFlowSuite extends AnyFunSuite with BeforeAndAfterAll {
 
   test("DatabaseMetaData.getTypeInfo corpus query") {
     withClient { c =>
-      val r = c.oneShot(
+      val r = oneShot(c, 
         "SELECT t.typname,t.oid FROM pg_catalog.pg_type t " +
           "JOIN pg_catalog.pg_namespace n ON (t.typnamespace = n.oid) " +
           "WHERE n.nspname != 'pg_toast'")
       assert(!r.exists(_._1 == 'E'), "getTypeInfo query must run")
-      val byName = c.rows(r).map(x => x.head -> x(1)).toMap
+      val byName = rows(r).map(x => x.head -> x(1)).toMap
       assert(byName("int4") === "23" && byName("int8") === "20" &&
         byName("varchar") === "1043" && byName("numeric") === "1700")
     }
@@ -397,21 +265,21 @@ class PgJdbcFlowSuite extends AnyFunSuite with BeforeAndAfterAll {
 
   test("DatabaseMetaData.getSchemas corpus query") {
     withClient { c =>
-      val r = c.oneShot(
+      val r = oneShot(c, 
         "SELECT nspname AS TABLE_SCHEM, NULL AS TABLE_CATALOG FROM pg_catalog.pg_namespace " +
           "WHERE nspname <> 'pg_toast' AND (nspname !~ '^pg_temp_' " +
           "OR nspname = (pg_catalog.current_schemas(true))[1]) AND (nspname !~ '^pg_toast_temp_' " +
           "OR nspname = replace((pg_catalog.current_schemas(true))[1], 'pg_temp_', 'pg_toast_temp_')) " +
           "ORDER BY TABLE_SCHEM")
       assert(!r.exists(_._1 == 'E'), "getSchemas query must run")
-      assert(c.rows(r).map(_.head).contains("spark"))
+      assert(rows(r).map(_.head).contains("spark"))
     }
   }
 
   test("DatabaseMetaData.getTables corpus query finds a catalog view") {
     TestSpark.spark.sql("CREATE OR REPLACE VIEW jdbcflow_v AS SELECT 1 AS a, 'x' AS b")
     try withClient { c =>
-      val r = c.oneShot(
+      val r = oneShot(c, 
         """SELECT NULL AS TABLE_CAT, n.nspname AS TABLE_SCHEM, c.relname AS TABLE_NAME,
           | CASE n.nspname ~ '^pg_' OR n.nspname = 'information_schema'
           | WHEN true THEN CASE
@@ -437,8 +305,8 @@ class PgJdbcFlowSuite extends AnyFunSuite with BeforeAndAfterAll {
           |  AND c.relname LIKE E'jdbcflow_v'
           | ORDER BY TABLE_TYPE,TABLE_SCHEM,TABLE_NAME""".stripMargin)
       assert(!r.exists(_._1 == 'E'),
-        s"getTables query must run: ${new String(r.find(_._1 == 'E').map(_._2).getOrElse(Array.empty), UTF_8)}")
-      val got = c.rows(r)
+        s"getTables query must run: ${error(r)}")
+      val got = rows(r)
       assert(got.length === 1, s"exactly the created view, got $got")
       assert(got.head(1) === "spark" && got.head(2) === "jdbcflow_v" && got.head(3) === "VIEW")
     } finally TestSpark.spark.sql("DROP VIEW IF EXISTS jdbcflow_v")
@@ -447,7 +315,7 @@ class PgJdbcFlowSuite extends AnyFunSuite with BeforeAndAfterAll {
   test("DatabaseMetaData.getColumns corpus query lists the view's columns") {
     TestSpark.spark.sql("CREATE OR REPLACE VIEW jdbcflow_c AS SELECT 1 AS id, 'x' AS txt")
     try withClient { c =>
-      val r = c.oneShot(
+      val r = oneShot(c, 
         """SELECT * FROM (SELECT n.nspname,c.relname,a.attname,a.atttypid,
           | a.attnotnull OR (t.typtype = 'd' AND t.typnotnull) AS attnotnull,
           | a.atttypmod,a.attlen,
@@ -466,8 +334,8 @@ class PgJdbcFlowSuite extends AnyFunSuite with BeforeAndAfterAll {
           | WHERE c.relkind in ('r','p','v','f','m') and a.attnum > 0 AND NOT a.attisdropped ) c
           | WHERE true AND c.relname LIKE E'jdbcflow_c' ORDER BY nspname,c.relname,attnum""".stripMargin)
       assert(!r.exists(_._1 == 'E'),
-        s"getColumns query must run: ${new String(r.find(_._1 == 'E').map(_._2).getOrElse(Array.empty), UTF_8)}")
-      val got = c.rows(r)
+        s"getColumns query must run: ${error(r)}")
+      val got = rows(r)
       assert(got.map(_(2)) === Seq("id", "txt"), s"column names, got $got")
       assert(got.map(_(3)) === Seq("23", "1043"), "atttypid int4 + varchar")
       assert(got.map(_(7)) === Seq("1", "2"), "1-based attnum ordinals")
@@ -476,7 +344,7 @@ class PgJdbcFlowSuite extends AnyFunSuite with BeforeAndAfterAll {
 
   test("DatabaseMetaData.getPrimaryKeys corpus query (expandarray) runs empty") {
     withClient { c =>
-      val r = c.oneShot(
+      val r = oneShot(c, 
         """SELECT NULL AS TABLE_CAT, n.nspname AS TABLE_SCHEM, ct.relname AS TABLE_NAME,
           | a.attname AS COLUMN_NAME, (i.keys).n AS KEY_SEQ, ci.relname AS PK_NAME
           | FROM pg_catalog.pg_class ct
@@ -490,11 +358,11 @@ class PgJdbcFlowSuite extends AnyFunSuite with BeforeAndAfterAll {
           | WHERE true AND ct.relname = E'lineitem' AND i.indisprimary
           | ORDER BY table_name, pk_name, key_seq""".stripMargin)
       assert(!r.exists(_._1 == 'E'),
-        s"getPrimaryKeys query must run: ${new String(r.find(_._1 == 'E').map(_._2).getOrElse(Array.empty), UTF_8)}")
+        s"getPrimaryKeys query must run: ${error(r)}")
       // Spark tables declare no PKs — truthfully zero rows, but the query
       // itself (SRF expansion + composite access) must execute
-      assert(c.rows(r).isEmpty)
-      assert(c.commandTags(r).head === "SELECT 0")
+      assert(rows(r).isEmpty)
+      assert(commandTags(r).head === "SELECT 0")
     }
   }
 
@@ -506,12 +374,11 @@ class PgJdbcFlowSuite extends AnyFunSuite with BeforeAndAfterAll {
     // one ReadyForQuery at the end, and an error in round k must skip the
     // remaining rounds until Sync (pgjdbc surfaces BatchUpdateException).
     withClient { c =>
-      c.send('Q', c.cstr("DROP TABLE IF EXISTS jdbc_batch_t"))
-      c.drainUntilReady()
-      val created = c.oneShot(
+      c.simple("DROP TABLE IF EXISTS jdbc_batch_t")
+      val created = oneShot(c, 
         "CREATE TABLE jdbc_batch_t (id INT, name STRING) USING parquet")
       assert(!created.exists(_._1 == 'E'),
-        new String(created.find(_._1 == 'E').map(_._2).getOrElse(Array.empty), UTF_8))
+        error(created))
       try {
         c.parse("S_ins", "INSERT INTO jdbc_batch_t VALUES ($1, $2)", Seq(23, 1043))
         c.describeStatement("S_ins")
@@ -522,19 +389,19 @@ class PgJdbcFlowSuite extends AnyFunSuite with BeforeAndAfterAll {
         }
         val r = c.sync()
         assert(!r.exists(_._1 == 'E'),
-          s"batch must succeed: ${new String(r.find(_._1 == 'E').map(_._2).getOrElse(Array.empty), UTF_8)}")
+          s"batch must succeed: ${error(r)}")
         // 1 ParseComplete, ParameterDescription + NoData for the Describe,
         // then per round BindComplete + CommandComplete, one ReadyForQuery
-        assert(c.types(r) === "1tn" + "2C" * batch.size + "Z")
-        assert(c.paramOids(r) === Seq(23, 1043))
-        val tags = c.commandTags(r)
+        assert(types(r) === "1tn" + "2C" * batch.size + "Z")
+        assert(paramTypes(r) === Seq(23, 1043))
+        val tags = commandTags(r)
         assert(tags.size === batch.size)
         // real written-row counts in the tag — pgjdbc's executeBatch builds
         // its update-count array from these
         assert(tags === Seq.fill(batch.size)("INSERT 0 1"), tags.toString)
         // the rows actually landed, in executable order
-        val check = c.oneShot("SELECT id, name FROM jdbc_batch_t ORDER BY id")
-        assert(c.rows(check) ===
+        val check = oneShot(c, "SELECT id, name FROM jdbc_batch_t ORDER BY id")
+        assert(rows(check) ===
           Seq(Seq("1", "alpha"), Seq("2", "beta"), Seq("3", "gamma"), Seq("4", "delta")))
         // error mid-batch: pipelined frames after the failure are skipped
         // until Sync — exactly one ErrorResponse, no partial execution after
@@ -545,14 +412,13 @@ class PgJdbcFlowSuite extends AnyFunSuite with BeforeAndAfterAll {
         c.bind("", "S_ins", Seq("7", "eta"))
         c.execute("", 1)
         val e = c.sync()
-        assert(e.count(_._1 == 'E') === 1, c.types(e))
+        assert(e.count(_._1 == 'E') === 1, types(e))
         // round 5 completed before the failure; round 7 was skipped
-        val after = c.oneShot("SELECT count(*) AS n FROM jdbc_batch_t WHERE id >= 5")
-        assert(c.rows(after) === Seq(Seq("1")))
+        val after = oneShot(c, "SELECT count(*) AS n FROM jdbc_batch_t WHERE id >= 5")
+        assert(rows(after) === Seq(Seq("1")))
         c.closeStatement("S_ins"); c.sync()
       } finally {
-        c.send('Q', c.cstr("DROP TABLE IF EXISTS jdbc_batch_t"))
-        c.drainUntilReady()
+        c.simple("DROP TABLE IF EXISTS jdbc_batch_t")
       }
     }
   }
@@ -569,13 +435,13 @@ class PgJdbcFlowSuite extends AnyFunSuite with BeforeAndAfterAll {
       c.execute("", 0)
       val r = c.sync()
       assert(!r.exists(_._1 == 'E'),
-        s"EA must prepare+run: ${new String(r.find(_._1 == 'E').map(_._2).getOrElse(Array.empty), UTF_8)}")
-      assert(c.fields(r).map(_._1) === Seq("QUERY PLAN"))
-      val lines = c.rows(r).map(_.head)
+        s"EA must prepare+run: ${error(r)}")
+      assert(columns(r).map(_._1) === Seq("QUERY PLAN"))
+      val lines = rows(r).map(_.head)
       assert(lines.exists(_.contains("HashAggregate")), lines.toString)
       assert(lines.exists(_.contains("numOutputRows=")), lines.toString)
       assert(lines.last.startsWith("Execution Time:"), lines.toString)
-      assert(c.commandTags(r) === Seq("EXPLAIN"))
+      assert(commandTags(r) === Seq("EXPLAIN"))
       c.closeStatement("S_ea"); c.sync()
     }
   }
@@ -598,13 +464,13 @@ class PgJdbcFlowSuite extends AnyFunSuite with BeforeAndAfterAll {
       c.execute("", 0)
       val r = c.sync()
       assert(!r.exists(_._1 == 'E'),
-        s"TypeInfoCache query must run: ${new String(r.find(_._1 == 'E').map(_._2).getOrElse(Array.empty), UTF_8)}")
-      assert(c.rows(r) === Seq(Seq("f", "b", "int4")))
+        s"TypeInfoCache query must run: ${error(r)}")
+      assert(rows(r) === Seq(Seq("f", "b", "int4")))
       // the named statement is reused for every type lookup
       c.bind("", "S_t", Seq("_int4"))
       c.execute("", 0)
       val r2 = c.sync()
-      assert(c.rows(r2) === Seq(Seq("t", "b", "_int4")), "array types report is_array")
+      assert(rows(r2) === Seq(Seq("t", "b", "_int4")), "array types report is_array")
       c.closeStatement("S_t"); c.sync()
     }
   }
@@ -631,7 +497,7 @@ class PgJdbcFlowSuite extends AnyFunSuite with BeforeAndAfterAll {
       c.bind("", "S_d7")
       c.execute("", 0)
       val r2 = c.sync()
-      assert(c.rows(r2) === Seq(Seq("2021-02-03", "2021-02-03 04:05:06", "42")))
+      assert(rows(r2) === Seq(Seq("2021-02-03", "2021-02-03 04:05:06", "42")))
       c.closeStatement("S_d7"); c.sync()
     }
   }
@@ -647,7 +513,7 @@ class PgJdbcFlowSuite extends AnyFunSuite with BeforeAndAfterAll {
       // the row description)
       c.bind("", "S_b7")
       c.execute("", 0)
-      val text = c.rows(c.sync()).head
+      val text = rows(c.sync()).head
       assert(text === Seq("1999-12-31", "2004-10-19 10:23:54"))
       // second execution: 42.7 marks date/timestamp oids binary-capable
       // and sends per-column result format 1
@@ -677,15 +543,15 @@ class PgJdbcFlowSuite extends AnyFunSuite with BeforeAndAfterAll {
     // 42.7 raised its default extra_float_digits from 2 to 3 for 9.0+
     // servers; the startup GUC must seed without error and the session
     // must answer queries normally afterwards
-    val c = new Jdbc42Client
-    val msgs = c.connect(extraFloatDigits = "3")
+    val c = new WireClient(port)
+    val msgs = c.connect(jdbcStartup(extraFloatDigits = "3"): _*)
     try {
       assert(msgs.exists(_._1 == 'Z'), "startup must reach ReadyForQuery")
       assert(!msgs.exists(_._1 == 'E'), "startup must not error")
       c.parse("", "SELECT 1 AS one")
       c.bind("", "")
       c.execute("", 0)
-      assert(c.rows(c.sync()) === Seq(Seq("1")))
+      assert(rows(c.sync()) === Seq(Seq("1")))
     } finally c.close()
   }
 }

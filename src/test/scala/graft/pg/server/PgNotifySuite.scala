@@ -1,9 +1,6 @@
 package graft.pg.server
 
-import java.io.{DataInputStream, DataOutputStream}
-import java.net.Socket
 import java.nio.ByteBuffer
-import java.nio.charset.StandardCharsets.UTF_8
 
 import graft.TestSpark
 
@@ -18,6 +15,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * check-in), so the surface carries real semantics here.
   */
 class PgNotifySuite extends AnyFunSuite with BeforeAndAfterAll {
+  import WireClient._
 
   private var server: PgWireServer = _
   private def port: Int = server.boundPort
@@ -29,67 +27,7 @@ class PgNotifySuite extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = if (server != null) server.stop()
 
-  private class Client(connectPort: Int = port) {
-    private val sock = new Socket("127.0.0.1", connectPort)
-    sock.setSoTimeout(30000)
-    private val in = new DataInputStream(sock.getInputStream)
-    private val os = new DataOutputStream(sock.getOutputStream)
-
-    private def cstr(s: String): Array[Byte] = s.getBytes(UTF_8) :+ 0.toByte
-
-    var pid: Int = -1
-
-    def connect(): Unit = {
-      val body = cstr("user") ++ cstr("graft") ++
-        cstr("database") ++ cstr("default") :+ 0.toByte
-      os.writeInt(8 + body.length)
-      os.writeInt(196608)
-      os.write(body)
-      os.flush()
-      drainUntilReady().find(_._1 == 'K').foreach { case (_, p) =>
-        pid = ByteBuffer.wrap(p).getInt
-      }
-    }
-
-    def simple(sql: String): Seq[(Char, Array[Byte])] = {
-      os.writeByte('Q')
-      val p = cstr(sql)
-      os.writeInt(4 + p.length)
-      os.write(p)
-      os.flush()
-      drainUntilReady()
-    }
-
-    def drainUntilReady(): Seq[(Char, Array[Byte])] = {
-      val out = Seq.newBuilder[(Char, Array[Byte])]
-      var done = false
-      while (!done) {
-        val tpe = in.readByte().toChar
-        val len = in.readInt() - 4
-        val payload = new Array[Byte](len)
-        in.readFully(payload)
-        out += ((tpe, payload))
-        if (tpe == 'Z') done = true
-      }
-      out.result()
-    }
-
-    /** Block until one pending async message arrives (socket-timeout-bounded). */
-    def readOne(): (Char, Array[Byte]) = {
-      val tpe = in.readByte().toChar
-      val len = in.readInt() - 4
-      val payload = new Array[Byte](len)
-      in.readFully(payload)
-      (tpe, payload)
-    }
-
-    def tags(msgs: Seq[(Char, Array[Byte])]): Seq[String] =
-      msgs.filter(_._1 == 'C').map(m => new String(m._2, UTF_8).trim)
-
-    def close(): Unit = {
-      os.writeByte('X'); os.writeInt(4); os.flush(); sock.close()
-    }
-  }
+  private def client(p: Int = port): WireClient = connected(p, 30000)
 
   private def decodeNotification(msg: (Char, Array[Byte])): (Int, String, String) = {
     assert(msg._1 === 'A', s"expected NotificationResponse, got '${msg._1}'")
@@ -105,12 +43,12 @@ class PgNotifySuite extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("NOTIFY reaches a listener on another connection with sender pid and payload") {
-    val a = new Client; a.connect()
-    val b = new Client; b.connect()
+    val a = client()
+    val b = client()
     try {
-      assert(a.tags(a.simple("LISTEN jobs")) === Seq("LISTEN"))
-      assert(b.tags(b.simple("NOTIFY jobs, 'job-42 ready'")) === Seq("NOTIFY"))
-      val (senderPid, channel, payload) = decodeNotification(a.readOne())
+      assert(commandTags(a.simple("LISTEN jobs")) === Seq("LISTEN"))
+      assert(commandTags(b.simple("NOTIFY jobs, 'job-42 ready'")) === Seq("NOTIFY"))
+      val (senderPid, channel, payload) = decodeNotification(a.read())
       assert(senderPid === b.pid)
       assert(channel === "jobs")
       assert(payload === "job-42 ready")
@@ -128,24 +66,18 @@ class PgNotifySuite extends AnyFunSuite with BeforeAndAfterAll {
     val single = new PgWireServer(TestSpark.spark, port = 0,
       config = PgServerConfig(singleSession = true))
     single.start()
-    val a = new Client(single.boundPort); a.connect()
-    val b = new Client(single.boundPort); b.connect()
+    val a = client(single.boundPort)
+    val b = client(single.boundPort)
     try {
-      def backendPid(c: Client): Int = {
-        val d = c.simple("SELECT pg_backend_pid() AS pid").find(_._1 == 'D').get._2
-        val buf = ByteBuffer.wrap(d)
-        buf.getShort // column count
-        val len = buf.getInt
-        val bytes = new Array[Byte](len); buf.get(bytes)
-        new String(bytes, UTF_8).toInt
-      }
+      def backendPid(c: WireClient): Int =
+        col0(c.simple("SELECT pg_backend_pid() AS pid")).head.toInt
       assert(backendPid(a) === a.pid)
       assert(backendPid(b) === b.pid)
       // LISTEN registers the LISTENING connection; NOTIFY attributes the
       // SENDING one — a must get the frame with b's pid as sender
-      assert(a.tags(a.simple("LISTEN singlechan")) === Seq("LISTEN"))
-      assert(b.tags(b.simple("NOTIFY singlechan, 'hi'")) === Seq("NOTIFY"))
-      val (senderPid, channel, payload) = decodeNotification(a.readOne())
+      assert(commandTags(a.simple("LISTEN singlechan")) === Seq("LISTEN"))
+      assert(commandTags(b.simple("NOTIFY singlechan, 'hi'")) === Seq("NOTIFY"))
+      val (senderPid, channel, payload) = decodeNotification(a.read())
       assert(senderPid === b.pid)
       assert(channel === "singlechan")
       assert(payload === "hi")
@@ -153,7 +85,7 @@ class PgNotifySuite extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("a session receives its own notifications; payload defaults empty") {
-    val c = new Client; c.connect()
+    val c = client()
     try {
       c.simple("LISTEN selfchan")
       val r = c.simple("NOTIFY selfchan")
@@ -162,7 +94,7 @@ class PgNotifySuite extends AnyFunSuite with BeforeAndAfterAll {
       // after — accept both orderings
       val inline = r.find(_._1 == 'A')
       val (senderPid, channel, payload) =
-        decodeNotification(inline.getOrElse(c.readOne()))
+        decodeNotification(inline.getOrElse(c.read()))
       assert(senderPid === c.pid)
       assert(channel === "selfchan")
       assert(payload === "")
@@ -170,34 +102,34 @@ class PgNotifySuite extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("channel names fold like identifiers (unquoted lowercases, quoted exact)") {
-    val a = new Client; a.connect()
-    val b = new Client; b.connect()
+    val a = client()
+    val b = client()
     try {
       a.simple("LISTEN MixedCase") // folds to mixedcase
       b.simple("NOTIFY mixedcase, 'folded'")
-      assert(decodeNotification(a.readOne())._3 === "folded")
+      assert(decodeNotification(a.read())._3 === "folded")
       // quoted channel is a DIFFERENT channel from the folded one
       a.simple("""LISTEN "Exact"""")
       b.simple("NOTIFY exact, 'wrong channel'") // nobody listens on lowercase
       b.simple("""NOTIFY "Exact", 'right channel'""")
-      val (_, channel, payload) = decodeNotification(a.readOne())
+      val (_, channel, payload) = decodeNotification(a.read())
       assert(channel === "Exact")
       assert(payload === "right channel")
     } finally { a.close(); b.close() }
   }
 
   test("UNLISTEN stops delivery; DISCARD ALL unlistens everything") {
-    val a = new Client; a.connect()
-    val b = new Client; b.connect()
+    val a = client()
+    val b = client()
     try {
       a.simple("LISTEN c1")
       a.simple("LISTEN c2")
-      assert(a.tags(a.simple("UNLISTEN c1")) === Seq("UNLISTEN"))
+      assert(commandTags(a.simple("UNLISTEN c1")) === Seq("UNLISTEN"))
       assert(PgNotify.listenerPids("c1") === Set.empty)
       assert(PgNotify.listenerPids("c2") === Set(a.pid))
       b.simple("NOTIFY c1, 'dropped'")
       b.simple("NOTIFY c2, 'still here'")
-      assert(decodeNotification(a.readOne())._3 === "still here")
+      assert(decodeNotification(a.read())._3 === "still here")
       // pool check-in clears the rest
       a.simple("DISCARD ALL")
       assert(PgNotify.listenerPids("c2") === Set.empty)
@@ -208,13 +140,13 @@ class PgNotifySuite extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("pg_notify() function form delivers like the statement") {
-    val a = new Client; a.connect()
-    val b = new Client; b.connect()
+    val a = client()
+    val b = client()
     try {
       a.simple("LISTEN fnchan")
       assert(b.simple("SELECT pg_notify('fnchan', 'via function') AS r")
         .exists(_._1 == 'D'))
-      val (senderPid, channel, payload) = decodeNotification(a.readOne())
+      val (senderPid, channel, payload) = decodeNotification(a.read())
       assert(senderPid === b.pid)
       assert(channel === "fnchan")
       assert(payload === "via function")
@@ -222,8 +154,8 @@ class PgNotifySuite extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("EXPLAIN of pg_notify() does not deliver (execution-time side effect)") {
-    val a = new Client; a.connect()
-    val b = new Client; b.connect()
+    val a = client()
+    val b = client()
     try {
       a.simple("LISTEN explchan")
       // EXPLAIN analyzes (where pg_notify resolves) but never executes:
@@ -233,7 +165,7 @@ class PgNotifySuite extends AnyFunSuite with BeforeAndAfterAll {
       // a real execution afterwards delivers exactly one frame with the
       // real payload — nothing queued from the EXPLAIN
       b.simple("SELECT pg_notify('explchan', 'real') AS r")
-      val (senderPid, channel, payload) = decodeNotification(a.readOne())
+      val (senderPid, channel, payload) = decodeNotification(a.read())
       assert(senderPid === b.pid)
       assert(channel === "explchan")
       assert(payload === "real")
@@ -243,8 +175,8 @@ class PgNotifySuite extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("session close drops registrations (no delivery to dead pids)") {
-    val a = new Client; a.connect()
-    val b = new Client; b.connect()
+    val a = client()
+    val b = client()
     a.simple("LISTEN ephemeral")
     val apid = a.pid
     a.close()
@@ -256,20 +188,15 @@ class PgNotifySuite extends AnyFunSuite with BeforeAndAfterAll {
     assert(PgNotify.listenerPids("ephemeral") === Set.empty)
     try {
       // notifying the now-empty channel is a no-op, not an error
-      assert(b.tags(b.simple("NOTIFY ephemeral, 'anyone?'")) === Seq("NOTIFY"))
+      assert(commandTags(b.simple("NOTIFY ephemeral, 'anyone?'")) === Seq("NOTIFY"))
     } finally b.close()
   }
 
   test("pg_backend_pid() reports the wire pid") {
-    val c = new Client; c.connect()
+    val c = client()
     try {
       val r = c.simple("SELECT pg_backend_pid() AS pid")
-      val data = r.find(_._1 == 'D').get._2
-      val b = ByteBuffer.wrap(data)
-      b.getShort
-      val len = b.getInt
-      val v = new Array[Byte](len); b.get(v)
-      assert(new String(v, UTF_8) === c.pid.toString)
+      assert(col0(r).head === c.pid.toString)
     } finally c.close()
   }
 }

@@ -82,27 +82,16 @@ class PgTlsAuthSuite extends AnyFunSuite with BeforeAndAfterAll {
     // libpq sends this probe FIRST whenever the client machine has a
     // Kerberos ticket (gssencmode=prefer default); a GSS-less PG answers
     // 'N' and the client falls back (docs/adr/0001-gssapi-descope.md)
-    val sock = new java.net.Socket("127.0.0.1", authServer.boundPort)
-    sock.setSoTimeout(15000)
+    val c = new WireClient(authServer.boundPort, 15000)
     try {
-      val os = new java.io.DataOutputStream(sock.getOutputStream)
-      val in = new java.io.DataInputStream(sock.getInputStream)
-      os.writeInt(8)
-      os.writeInt(80877104) // GSSENCRequest
-      os.flush()
-      assert(in.readByte().toChar === 'N', "GSS-less server must answer 'N'")
+      c.write(c.i32(8) ++ c.i32(80877104)) // GSSENCRequest
+      assert(c.readByte() === 'N', "GSS-less server must answer 'N'")
       // client falls back to a clear startup packet on the SAME socket
-      val body = Seq("user", "graft", "database", "default")
-        .flatMap(_.getBytes(java.nio.charset.StandardCharsets.UTF_8) :+ 0.toByte)
-        .toArray :+ 0.toByte
-      os.writeInt(8 + body.length)
-      os.writeInt(196608)
-      os.write(body)
-      os.flush()
+      c.startup(Seq("user" -> "graft", "database" -> "default"))
       // cleartext-auth server: first reply must be AuthenticationCleartextPassword
-      val tpe = in.readByte().toChar
+      val tpe = c.read()._1
       assert(tpe === 'R', s"startup must proceed to the auth exchange, got '$tpe'")
-    } finally sock.close()
+    } finally c.close()
   }
 
   test("psql with sslmode=require connects and queries over TLS") {

@@ -1,10 +1,7 @@
 package graft.pg.server
 
-import java.io.{DataInputStream, DataOutputStream}
-import java.net.Socket
 import java.nio.charset.StandardCharsets.UTF_8
 
-import scala.collection.mutable
 import scala.sys.process._
 
 import graft.TestSpark
@@ -18,6 +15,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * PgV3ProtocolScenarioSuite.scala:22-68).
   */
 class PgWireServerSuite extends AnyFunSuite with BeforeAndAfterAll {
+  import WireClient._
 
   private var server: PgWireServer = _
   private def port: Int = server.boundPort
@@ -55,7 +53,8 @@ class PgWireServerSuite extends AnyFunSuite with BeforeAndAfterAll {
     second.start()
     val c = new WireClient(second.boundPort)
     try {
-      val pid = WireClient.backendPid(c.connect())
+      c.connect()
+      val pid = c.pid
       val spark = SessionRegistry.get(pid).get.spark
       org.apache.spark.sql.graft.Internals.sessionParser(spark) match {
         case pg: graft.pg.PgParserInterface =>
@@ -63,7 +62,7 @@ class PgWireServerSuite extends AnyFunSuite with BeforeAndAfterAll {
             "the PG parser must wrap Spark's own, not another PG parser")
         case other => fail(s"the connection does not parse with the PG parser: $other")
       }
-      assert(WireClient.col0(c.simple("SELECT pg_backend_pid()")) === Seq(pid.toString))
+      assert(col0(c.simple("SELECT pg_backend_pid()")) === Seq(pid.toString))
     } finally { c.close(); second.stop() }
   }
 
@@ -255,10 +254,10 @@ class PgWireServerSuite extends AnyFunSuite with BeforeAndAfterAll {
       array(TIMESTAMP '2024-01-01 00:00:00') AS ats, array(CAST(1 AS DECIMAL(10, 2))) AS an,
       array(array(1)) AS nested, map('k', 1) AS m, named_struct('x', 1) AS st""")
     try {
-      val described = WireClient.withClient(port)(c =>
-        WireClient.columns(c.simple("SELECT * FROM codec_types")))
+      val described = withClient(port)(c =>
+        columns(c.simple("SELECT * FROM codec_types")))
       assert(described.length === 28)
-      val catalog = WireClient.withClient(port)(c => WireClient.rows(c.simple(
+      val catalog = withClient(port)(c => rows(c.simple(
         """SELECT a.attname, a.atttypid, a.attlen, t.typlen, t.typname,
           |  format_type(a.atttypid, NULL), i.data_type
           |FROM pg_attribute a JOIN pg_class c ON a.attrelid = c.oid
@@ -266,7 +265,8 @@ class PgWireServerSuite extends AnyFunSuite with BeforeAndAfterAll {
           |JOIN information_schema.columns i
           |  ON i.table_name = c.relname AND i.column_name = a.attname
           |WHERE c.relname = 'codec_types' ORDER BY a.attnum""".stripMargin)))
-      assert(catalog.map(r => (r(0), r(1).toInt, r(2).toInt)) === described)
+      assert(catalog.map(r => (r(0), r(1).toInt, r(2).toInt)) ===
+        described.map(d => (d._1, d._2, d._3)))
       assert(catalog.map(r => (r(0), r(3).toInt)) === described.map(d => (d._1, d._3)),
         "pg_type.typlen")
       assert(catalog.forall(r => r(4) == r(5) && r(4) == r(6)), catalog.mkString("\n"))
@@ -292,25 +292,13 @@ class PgWireServerSuite extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("extended flow: binary int4 parameter decodes via the declared oid") {
-    val c = new RawClient
-    c.startup()
+    val c = connected(port)
     // Parse declares one int4 (oid 23) parameter
-    c.send('P', c.cstr("sbin") ++ c.cstr("SELECT $1 + 1 AS v") ++
-      Array[Byte](0, 1, 0, 0, 0, 23))
+    c.parse("sbin", "SELECT $1 + 1 AS v", Seq(23))
     // Bind sends the param in binary format: int4 41
-    c.send('B', c.cstr("") ++ c.cstr("sbin") ++
-      Array[Byte](0, 1, 0, 1) ++ // one param format code: binary
-      Array[Byte](0, 1) ++ // 1 param
-      Array[Byte](0, 0, 0, 4, 0, 0, 0, 41) ++ // len=4, int4 41
-      Array[Byte](0, 0))
-    c.send('E', c.cstr("") ++ Array[Byte](0, 0, 0, 0))
-    val msgs = c.sync()
-    val data = msgs.find(_._1 == 'D').get._2
-    val buf = java.nio.ByteBuffer.wrap(data)
-    buf.getShort
-    val len = buf.getInt
-    val v = new Array[Byte](len); buf.get(v)
-    assert(new String(v, UTF_8) === "42")
+    c.bindBytes("", "sbin", Seq(c.i32(41)), Seq(1))
+    c.execute("")
+    assert(col0(c.sync()).head === "42")
     c.close()
   }
 
@@ -330,202 +318,97 @@ class PgWireServerSuite extends AnyFunSuite with BeforeAndAfterAll {
     assert(psql("SELECT 9") === "9") // connection pool still healthy
   }
 
-  private def dataCells(p: Array[Byte]): Seq[String] = {
-    val b = java.nio.ByteBuffer.wrap(p)
-    val n = b.getShort.toInt
-    (0 until n).map { _ =>
-      val len = b.getInt
-      if (len == -1) null
-      else { val v = new Array[Byte](len); b.get(v); new String(v, UTF_8) }
-    }
-  }
-
-  private def sqlStateOf(payload: Array[Byte]): String = {
-    var i = 0
-    while (i < payload.length && payload(i) != 0) {
-      val tpe = payload(i).toChar
-      val end = payload.indexOf(0.toByte, i + 1)
-      if (tpe == 'C') return new String(payload, i + 1, end - i - 1, UTF_8)
-      i = end + 1
-    }
-    "?"
-  }
-
   test("statement_timeout cancels the statement with SQLSTATE 57014") {
-    val c = new RawClient
-    c.startup()
-    c.send('Q', c.cstr("SET statement_timeout=1200"))
-    c.drainUntilReady()
+    val c = connected(port)
+    c.simple("SET statement_timeout=1200")
     val t0 = System.currentTimeMillis()
     // >>1.2s uncancelled
-    c.send('Q', c.cstr("SELECT max(id * 2 + 1) FROM range(200000000000)"))
-    val msgs = c.drainUntilReady()
+    val msgs = c.simple("SELECT max(id * 2 + 1) FROM range(200000000000)")
     val elapsed = System.currentTimeMillis() - t0
     val err = msgs.find(_._1 == 'E')
     assert(err.isDefined, "timed-out statement must surface an ErrorResponse")
-    assert(sqlStateOf(err.get._2) === "57014", "PG query_canceled SQLSTATE")
+    assert(error(msgs).map(_._1) === Some("57014"), "PG query_canceled SQLSTATE")
     assert(new String(err.get._2, UTF_8).contains("statement timeout"))
     assert(elapsed < 30000, s"timeout fired too late: ${elapsed}ms")
     // 0 disables; the session is healthy
-    c.send('Q', c.cstr("SET statement_timeout=0"))
-    c.drainUntilReady()
-    c.send('Q', c.cstr("SELECT 3"))
-    assert(c.drainUntilReady().exists(_._1 == 'D'))
+    c.simple("SET statement_timeout=0")
+    assert(c.simple("SELECT 3").exists(_._1 == 'D'))
     c.close()
   }
 
   test("pg_stat_activity lists live sessions with state and last query") {
-    val c1 = new RawClient
-    c1.startup()
-    val c2 = new RawClient
-    c2.startup()
-    c2.send('Q', c2.cstr("SELECT 42 AS stat_marker"))
-    c2.drainUntilReady()
-    c1.send('Q', c1.cstr(
+    val c1 = connected(port)
+    val c2 = connected(port)
+    c2.simple("SELECT 42 AS stat_marker")
+    val acts = rows(c1.simple(
       "SELECT state, query FROM pg_stat_activity ORDER BY backend_start"))
-    val rows = c1.drainUntilReady().filter(_._1 == 'D').map(m => dataCells(m._2))
-    assert(rows.length >= 2, s"both sessions must be listed, got $rows")
+    assert(acts.length >= 2, s"both sessions must be listed, got $acts")
     // the querying backend reports itself active with the in-flight query
-    assert(rows.exists(r => r(0) == "active" && r(1).contains("pg_stat_activity")))
+    assert(acts.exists(r => r(0) == "active" && r(1).contains("pg_stat_activity")))
     // the idle session shows its LAST statement (PG semantics)
-    assert(rows.exists(r => r(0) == "idle" && r(1).contains("stat_marker")),
-      s"idle session with its last query expected in $rows")
+    assert(acts.exists(r => r(0) == "idle" && r(1).contains("stat_marker")),
+      s"idle session with its last query expected in $acts")
     c1.close(); c2.close()
   }
 
   test("cancel actually interrupts a running query") {
-    val c = new RawClient
-    val (pid, secret) = c.startupKeyData()
+    val c = connected(port)
     val t0 = System.currentTimeMillis()
     // a query that takes >>10s uncancelled
     c.send('Q', c.cstr("SELECT max(id * 2 + 1) FROM range(200000000000)"))
     Thread.sleep(1500)
-    val cs = new Socket("127.0.0.1", port)
-    val os = new DataOutputStream(cs.getOutputStream)
-    os.writeInt(16); os.writeInt(80877102); os.writeInt(pid); os.writeInt(secret)
-    os.flush(); cs.close()
-    val msgs = c.drainUntilReady() // error response then ReadyForQuery
+    c.cancel()
+    val msgs = c.drain() // error response then ReadyForQuery
     val elapsed = System.currentTimeMillis() - t0
     assert(msgs.exists(_._1 == 'E'), "canceled query must surface an error")
     assert(elapsed < 30000, s"cancellation took too long: ${elapsed}ms")
     c.close()
   }
 
-  // ---- raw V3 client for the extended flow ----
-
-  private class RawClient {
-    private val sock = new Socket("127.0.0.1", port)
-    private val in = new DataInputStream(sock.getInputStream)
-    private val os = new DataOutputStream(sock.getOutputStream)
-
-    def startup(): Unit = { startupKeyData(); () }
-
-    /** run the startup flow, returning (pid, secret) from BackendKeyData */
-    def startupKeyData(): (Int, Int) = {
-      val msgs = startupRaw(196608,
-        cstr("user") ++ cstr("graft") ++ cstr("database") ++ cstr("default") :+ 0.toByte)
-      msgs.find(_._1 == 'K').map { case (_, p) =>
-        val b = java.nio.ByteBuffer.wrap(p)
-        (b.getInt, b.getInt)
-      }.getOrElse((-1, -1))
-    }
-
-    /** send an arbitrary startup packet and drain to ReadyForQuery */
-    def startupRaw(code: Int, body: Array[Byte]): Seq[(Char, Array[Byte])] = {
-      os.writeInt(8 + body.length)
-      os.writeInt(code)
-      os.write(body)
-      os.flush()
-      drainUntilReady()
-    }
-
-    def send(tpe: Char, payload: Array[Byte]): Unit = {
-      os.writeByte(tpe)
-      os.writeInt(4 + payload.length)
-      os.write(payload)
-      os.flush()
-    }
-
-    def cstr(s: String): Array[Byte] = s.getBytes(UTF_8) :+ 0.toByte
-
-    /** read messages until ReadyForQuery; returns seq of (type, payload) */
-    def drainUntilReady(): Seq[(Char, Array[Byte])] = {
-      val msgs = mutable.ArrayBuffer.empty[(Char, Array[Byte])]
-      var done = false
-      while (!done) {
-        val tpe = in.readByte().toChar
-        val len = in.readInt()
-        val payload = new Array[Byte](len - 4)
-        in.readFully(payload)
-        msgs += ((tpe, payload))
-        if (tpe == 'Z') done = true
-      }
-      msgs.toSeq
-    }
-
-    def sync(): Seq[(Char, Array[Byte])] = { send('S', Array.empty); drainUntilReady() }
-    def close(): Unit = { send('X', Array.empty); sock.close() }
-  }
-
   test("extended flow: Parse/Bind/Describe/Execute with $1 parameter") {
-    val c = new RawClient
-    c.startup()
+    val c = connected(port)
     // Parse: named statement with a $1 parameter
-    c.send('P', c.cstr("s1") ++ c.cstr("SELECT 10 + $1 AS v") ++ Array[Byte](0, 0))
+    c.parse("s1", "SELECT 10 + $1 AS v")
     // Bind: text param "32"
-    c.send('B', c.cstr("") ++ c.cstr("s1") ++
-      Array[Byte](0, 0) ++ // no param format codes (default text)
-      Array[Byte](0, 1) ++ // 1 param
-      { val b = "32".getBytes(UTF_8); java.nio.ByteBuffer.allocate(4).putInt(b.length).array() ++ b } ++
-      Array[Byte](0, 0)) // no result format codes
-    c.send('D', Array[Byte]('P'.toByte) ++ c.cstr(""))
-    c.send('E', c.cstr("") ++ Array[Byte](0, 0, 0, 0))
+    c.bind("", "s1", Seq("32"))
+    c.describePortal("")
+    c.execute("")
     val msgs = c.sync()
-    val types = msgs.map(_._1).mkString
-    assert(types.contains("1")) // ParseComplete
-    assert(types.contains("2")) // BindComplete
-    assert(types.contains("T")) // RowDescription
-    assert(types.contains("D")) // DataRow
-    assert(types.contains("C")) // CommandComplete
-    val data = msgs.find(_._1 == 'D').get._2
-    // DataRow: int16 ncols, int32 len, payload
-    val buf = java.nio.ByteBuffer.wrap(data)
-    assert(buf.getShort === 1)
-    val n = buf.getInt
-    val v = new Array[Byte](n); buf.get(v)
-    assert(new String(v, UTF_8) === "42")
+    val ts = types(msgs)
+    assert(ts.contains("1")) // ParseComplete
+    assert(ts.contains("2")) // BindComplete
+    assert(ts.contains("T")) // RowDescription
+    assert(ts.contains("D")) // DataRow
+    assert(ts.contains("C")) // CommandComplete
+    val row = rows(msgs).head
+    assert(row.length === 1)
+    assert(row.head === "42")
     c.close()
   }
 
   test("extended flow: portal suspension with maxRows") {
-    val c = new RawClient
-    c.startup()
-    c.send('P', c.cstr("s2") ++ c.cstr("SELECT id FROM range(0, 5) ORDER BY id") ++ Array[Byte](0, 0))
-    c.send('B', c.cstr("p2") ++ c.cstr("s2") ++
-      Array[Byte](0, 0, 0, 0, 0, 0))
-    c.send('E', c.cstr("p2") ++ Array[Byte](0, 0, 0, 2)) // maxRows=2
-    c.send('H', Array.empty)
+    val c = connected(port)
+    c.parse("s2", "SELECT id FROM range(0, 5) ORDER BY id")
+    c.bind("p2", "s2")
+    c.execute("p2", 2)
+    c.send('H', Array.empty) // Flush
     // Execute again to resume, then drain
-    c.send('E', c.cstr("p2") ++ Array[Byte](0, 0, 0, 0))
+    c.execute("p2")
     val msgs = c.sync()
-    val types = msgs.map(_._1).mkString
+    val ts = types(msgs)
     // 2 rows then PortalSuspended('s'), then remaining 3 rows + CommandComplete
-    assert(types.count(_ == 'D') === 5)
-    assert(types.contains("s"))
-    val tag = msgs.filter(_._1 == 'C').map(m => new String(m._2, UTF_8).trim).last
+    assert(ts.count(_ == 'D') === 5)
+    assert(ts.contains("s"))
+    val tag = commandTags(msgs).last
     assert(tag.contains("SELECT 5"), s"tag was $tag")
     c.close()
   }
 
   test("extended flow: binary result format round-trips int8") {
-    val c = new RawClient
-    c.startup()
-    c.send('P', c.cstr("sb") ++ c.cstr("SELECT CAST(4242 AS BIGINT) AS v") ++ Array[Byte](0, 0))
-    c.send('B', c.cstr("") ++ c.cstr("sb") ++
-      Array[Byte](0, 0) ++ // no param formats
-      Array[Byte](0, 0) ++ // no params
-      Array[Byte](0, 1, 0, 1)) // one result format code: binary
-    c.send('E', c.cstr("") ++ Array[Byte](0, 0, 0, 0))
+    val c = connected(port)
+    c.parse("sb", "SELECT CAST(4242 AS BIGINT) AS v")
+    c.bind("", "sb", resultFormats = Seq(1))
+    c.execute("")
     val msgs = c.sync()
     val data = msgs.find(_._1 == 'D').get._2
     val buf = java.nio.ByteBuffer.wrap(data)
@@ -536,59 +419,37 @@ class PgWireServerSuite extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("syntax errors carry the 'P' position field psql needs for its caret") {
-    val c = new RawClient
-    c.startup()
+    val c = connected(port)
     val sql = "SELECT broken syntax here FROM FROM lineitem"
-    c.send('Q', c.cstr(sql))
-    val msgs = c.drainUntilReady()
-    val err = msgs.find(_._1 == 'E').getOrElse(fail("no ErrorResponse"))._2
     // 'C' must be the parse SQLSTATE, 'P' a 1-based offset in the statement
-    val fields = fieldsOf(err)
+    val fields = errorFields(c.simple(sql)).getOrElse(fail("no ErrorResponse"))
     assert(fields.get('C') === Some("42601"), s"fields: $fields")
     val pos = fields.getOrElse('P', fail(s"no position field in $fields")).toInt
     assert(pos >= 1 && pos <= sql.length, s"position $pos out of range")
     // a runtime (non-parse) error carries no position field
-    c.send('Q', c.cstr("SELECT 1/0"))
-    val msgs2 = c.drainUntilReady()
-    val err2 = msgs2.find(_._1 == 'E').getOrElse(fail("no ErrorResponse"))._2
-    assert(!fieldsOf(err2).contains('P'))
+    val fields2 = errorFields(c.simple("SELECT 1/0")).getOrElse(fail("no ErrorResponse"))
+    assert(!fields2.contains('P'))
     c.close()
-  }
-
-  private def fieldsOf(err: Array[Byte]): Map[Char, String] = {
-    val b = java.nio.ByteBuffer.wrap(err)
-    var fields = Map.empty[Char, String]
-    var t = b.get()
-    while (t != 0) {
-      val sb = new StringBuilder
-      var ch = b.get()
-      while (ch != 0) { sb.append(ch.toChar); ch = b.get() }
-      fields += (t.toChar -> sb.toString)
-      t = if (b.hasRemaining) b.get() else 0
-    }
-    fields
   }
 
   test("fastpath FunctionCall 'F' executes and unknown types get a protocol error") {
     import graft.pg.PgCatalog
-    def i32(v: Int): Array[Byte] = java.nio.ByteBuffer.allocate(4).putInt(v).array()
-    def i16(v: Int): Array[Byte] = java.nio.ByteBuffer.allocate(2).putShort(v.toShort).array()
     def oidOf(name: String): Int = PgCatalog.fastpathFunctions.find(_._2 == name).get._1
-    val c = new RawClient
-    val (pid, _) = c.startupKeyData()
+    val c = connected(port)
+    import c.{i16, i32}
 
     // no-arg text call: pg_backend_pid() -> the session's wire pid, text
     c.send('F', i32(oidOf("pg_backend_pid")) ++ i16(0) ++ i16(0) ++ i16(0))
-    val r1 = c.drainUntilReady()
+    val r1 = c.drain()
     val v1 = r1.find(_._1 == 'V').getOrElse(fail(s"no FunctionCallResponse: ${r1.map(_._1)}"))._2
     val b1 = java.nio.ByteBuffer.wrap(v1)
     val n1 = b1.getInt; val s1 = new Array[Byte](n1); b1.get(s1)
-    assert(new String(s1, UTF_8) === pid.toString)
+    assert(new String(s1, UTF_8) === c.pid.toString)
 
     // one text arg, BINARY result: length('hello') -> int4 binary 5
     val arg = "hello".getBytes(UTF_8)
     c.send('F', i32(oidOf("length")) ++ i16(0) ++ i16(1) ++ i32(arg.length) ++ arg ++ i16(1))
-    val r2 = c.drainUntilReady()
+    val r2 = c.drain()
     val v2 = r2.find(_._1 == 'V').get._2
     val b2 = java.nio.ByteBuffer.wrap(v2)
     assert(b2.getInt === 4)
@@ -596,80 +457,59 @@ class PgWireServerSuite extends AnyFunSuite with BeforeAndAfterAll {
 
     // unknown OID: ErrorResponse then ReadyForQuery, connection survives
     c.send('F', i32(999999) ++ i16(0) ++ i16(0) ++ i16(0))
-    val r3 = c.drainUntilReady()
+    val r3 = c.drain()
     assert(r3.exists(_._1 == 'E') && r3.last._1 == 'Z')
 
     // junk message type: protocol error, connection survives
     c.send('z', Array.empty)
-    val r4 = c.drainUntilReady()
+    val r4 = c.drain()
     assert(r4.exists(_._1 == 'E') && r4.last._1 == 'Z')
-    c.send('Q', c.cstr("SELECT 7"))
-    assert(c.drainUntilReady().exists(_._1 == 'D'), "connection must stay usable")
+    assert(c.simple("SELECT 7").exists(_._1 == 'D'), "connection must stay usable")
     c.close()
   }
 
   test("extended flow: error skips pipelined frames until Sync") {
-    val c = new RawClient
-    c.startup()
+    val c = connected(port)
     // pgjdbc-style single batch: a failing Parse followed by B/D/E, then Sync
-    c.send('P', c.cstr("bad") ++ c.cstr("SELECT definitely_not_a_column") ++ Array[Byte](0, 0))
-    c.send('B', c.cstr("") ++ c.cstr("bad") ++ Array[Byte](0, 0, 0, 0, 0, 0))
-    c.send('D', Array[Byte]('P'.toByte) ++ c.cstr(""))
-    c.send('E', c.cstr("") ++ Array[Byte](0, 0, 0, 0))
-    val msgs = c.sync()
-    val types = msgs.map(_._1).mkString
-    assert(types.count(_ == 'E') === 1,
-      s"exactly one ErrorResponse for the whole failed batch, got: $types")
-    assert(types.endsWith("Z"), s"batch must close with ReadyForQuery, got: $types")
+    c.parse("bad", "SELECT definitely_not_a_column")
+    c.bind("", "bad")
+    c.describePortal("")
+    c.execute("")
+    val ts = types(c.sync())
+    assert(ts.count(_ == 'E') === 1,
+      s"exactly one ErrorResponse for the whole failed batch, got: $ts")
+    assert(ts.endsWith("Z"), s"batch must close with ReadyForQuery, got: $ts")
     // next batch on the same connection works normally
-    c.send('P', c.cstr("ok") ++ c.cstr("SELECT 11 AS v") ++ Array[Byte](0, 0))
-    c.send('B', c.cstr("") ++ c.cstr("ok") ++ Array[Byte](0, 0, 0, 0, 0, 0))
-    c.send('E', c.cstr("") ++ Array[Byte](0, 0, 0, 0))
+    c.parse("ok", "SELECT 11 AS v")
+    c.bind("", "ok")
+    c.execute("")
     val ok = c.sync()
     assert(ok.exists(_._1 == 'D'), "connection must recover after Sync")
     c.close()
   }
 
   test("hostile frame length is rejected, not allocated") {
-    val sock = new Socket("127.0.0.1", port)
-    val os = new DataOutputStream(sock.getOutputStream)
-    val in = new DataInputStream(sock.getInputStream)
-    val body = "user".getBytes(UTF_8) ++ Array(0.toByte) ++
-      "graft".getBytes(UTF_8) ++ Array(0.toByte, 0.toByte)
-    os.writeInt(8 + body.length); os.writeInt(196608); os.write(body); os.flush()
+    val c = new WireClient(port)
+    c.startup(Seq("user" -> "graft"))
     // drain startup response until ReadyForQuery
-    var done = false
-    while (!done) {
-      val t = in.readByte().toChar
-      val len = in.readInt()
-      in.skipBytes(len - 4)
-      if (t == 'Z') done = true
-    }
+    c.drain()
     // a typed frame claiming a ~1.9GB payload
-    os.writeByte('Q'); os.writeInt(0x70000000); os.write("SELECT 1".getBytes(UTF_8)); os.flush()
+    c.write(Array('Q'.toByte) ++ c.i32(0x70000000) ++ "SELECT 1".getBytes(UTF_8))
     // server answers with an ErrorResponse then closes; reading eventually EOFs
-    val t = in.readByte().toChar
-    assert(t === 'E', "oversized frame must produce an ErrorResponse")
-    sock.close()
+    assert(c.readByte() === 'E', "oversized frame must produce an ErrorResponse")
+    c.close()
   }
 
   test("cancel request routes by pid/secret without crashing the server") {
-    val c = new RawClient
-    c.startup()
+    val c = connected(port)
     // harvest pid+secret from BackendKeyData of a fresh connection
-    val c2 = new RawClient
-    val (pid, secret) = c2.startupKeyData()
+    val c2 = connected(port)
     // wrong secret: no-op; right secret: cancels (no active op -> no-op)
-    val cancelSock = new Socket("127.0.0.1", port)
-    val os = new DataOutputStream(cancelSock.getOutputStream)
-    os.writeInt(16); os.writeInt(80877102); os.writeInt(pid); os.writeInt(secret)
-    os.flush(); cancelSock.close()
+    c2.cancel()
     Thread.sleep(200)
     // both sessions still usable
-    c.send('Q', c.cstr("SELECT 5"))
-    assert(c.drainUntilReady().exists(_._1 == 'D'))
-    c2.send('Q', c2.cstr("SELECT 6"))
-    assert(c2.drainUntilReady().exists(_._1 == 'D'))
+    assert(c.simple("SELECT 5").exists(_._1 == 'D'))
+    assert(c2.simple("SELECT 6").exists(_._1 == 'D'))
     c.close(); c2.close()
   }
 
@@ -704,53 +544,41 @@ class PgWireServerSuite extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("SET of the session time zone announces a TimeZone ParameterStatus") {
-    val c = new RawClient
-    c.startup()
-    c.send('Q', c.cstr("SET spark.sql.session.timeZone=Asia/Tokyo"))
-    val msgs = c.drainUntilReady()
-    val params = msgs.filter(_._1 == 'S').map { case (_, p) =>
-      // ParameterStatus payload is name NUL value NUL
-      val parts = new String(p, UTF_8).split('\u0000'); (parts(0), parts(1))
-    }
+    val c = connected(port)
+    val params = paramStatuses(c.simple("SET spark.sql.session.timeZone=Asia/Tokyo"))
     assert(params.contains(("TimeZone", "Asia/Tokyo")),
       s"SET timeZone must emit ParameterStatus, got: $params")
     // a SET that does not touch the zone announces nothing
-    c.send('Q', c.cstr("SET spark.sql.shuffle.partitions=8"))
-    assert(!c.drainUntilReady().exists(_._1 == 'S'))
+    assert(!c.simple("SET spark.sql.shuffle.partitions=8").exists(_._1 == 'S'))
     // restore for other tests (single spark session is shared via newSession,
     // but this connection's session is isolated — still, be tidy)
-    c.send('Q', c.cstr("SET spark.sql.session.timeZone=UTC"))
-    c.drainUntilReady()
+    c.simple("SET spark.sql.session.timeZone=UTC")
     c.close()
   }
 
   test("session isolation: temp views do not leak across connections") {
-    val c1 = new RawClient
-    c1.startup()
-    c1.send('Q', c1.cstr("CREATE TEMPORARY VIEW t_iso AS SELECT 1 AS a"))
-    c1.drainUntilReady()
-    val c2 = new RawClient
-    c2.startup()
-    c2.send('Q', c2.cstr("SELECT * FROM t_iso"))
-    val msgs = c2.drainUntilReady()
+    val c1 = connected(port)
+    c1.simple("CREATE TEMPORARY VIEW t_iso AS SELECT 1 AS a")
+    val c2 = connected(port)
+    val msgs = c2.simple("SELECT * FROM t_iso")
     assert(msgs.exists(_._1 == 'E'), "second session must not see the first's temp view")
     c1.close(); c2.close()
   }
 
   test("pg_class, pg_attribute and information_schema list what a connection creates") {
     val dir = java.nio.file.Files.createTempDirectory("graft-later-t")
-    WireClient.withClient(port) { c =>
+    withClient(port) { c =>
       try {
         c.simple(s"CREATE TABLE later_t (k INT, v STRING) USING parquet LOCATION '$dir'")
         c.simple("CREATE TEMP VIEW later_v AS SELECT 1 AS one")
-        assert(WireClient.rows(c.simple("SELECT relname, relkind FROM pg_class " +
+        assert(rows(c.simple("SELECT relname, relkind FROM pg_class " +
           "WHERE relname LIKE 'later_%' ORDER BY relname")) ===
           Seq(Seq("later_t", "r"), Seq("later_v", "v")))
-        assert(WireClient.rows(c.simple("SELECT c.relname, a.attname FROM pg_attribute a " +
+        assert(rows(c.simple("SELECT c.relname, a.attname FROM pg_attribute a " +
           "JOIN pg_class c ON a.attrelid = c.oid WHERE c.relname LIKE 'later_%' " +
           "ORDER BY c.relname, a.attnum")) ===
           Seq(Seq("later_t", "k"), Seq("later_t", "v"), Seq("later_v", "one")))
-        assert(WireClient.rows(c.simple("SELECT table_name, table_type " +
+        assert(rows(c.simple("SELECT table_name, table_type " +
           "FROM information_schema.tables WHERE table_name LIKE 'later_%' ORDER BY 1")) ===
           Seq(Seq("later_t", "BASE TABLE"), Seq("later_v", "VIEW")))
       } finally c.simple("DROP TABLE IF EXISTS later_t")
@@ -758,36 +586,36 @@ class PgWireServerSuite extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("pg_class lists a temp view to its own connection only") {
-    WireClient.withClient(port) { c1 =>
+    withClient(port) { c1 =>
       c1.simple("CREATE TEMP VIEW mine_only AS SELECT 1 AS one")
       val q = "SELECT count(*) FROM pg_class WHERE relname = 'mine_only'"
-      assert(WireClient.col0(c1.simple(q)) === Seq("1"))
-      WireClient.withClient(port)(c2 => assert(WireClient.col0(c2.simple(q)) === Seq("0")))
+      assert(col0(c1.simple(q)) === Seq("1"))
+      withClient(port)(c2 => assert(col0(c2.simple(q)) === Seq("0")))
     }
   }
 
   test("a temp view over pg_stat_activity sees a session that connects after it") {
-    WireClient.withClient(port) { c1 =>
+    withClient(port) { c1 =>
       c1.simple("CREATE TEMP VIEW activity_v AS SELECT * FROM pg_stat_activity")
-      WireClient.withClient(port) { c2 =>
-        val pid2 = WireClient.col0(c2.simple("SELECT pg_backend_pid()")).head
-        assert(WireClient.col0(c1.simple("SELECT pid FROM activity_v")).contains(pid2))
+      withClient(port) { c2 =>
+        val pid2 = col0(c2.simple("SELECT pg_backend_pid()")).head
+        assert(col0(c1.simple("SELECT pid FROM activity_v")).contains(pid2))
       }
     }
   }
 
   test("a WITH named like a catalog relation shadows it") {
-    WireClient.withClient(port) { c =>
-      assert(WireClient.col0(c.simple(
+    withClient(port) { c =>
+      assert(col0(c.simple(
         "WITH pg_class AS (SELECT 'x' AS relname) SELECT relname FROM pg_class")) === Seq("x"))
     }
   }
 
   test("COPY of a catalog relation copies its rows") {
-    WireClient.withClient(port) { c =>
+    withClient(port) { c =>
       val m = c.simple("COPY pg_type TO STDOUT")
       assert(m.count(_._1 == 'd') === 29)
-      assert(WireClient.commandTags(m) === Seq("COPY 29"))
+      assert(commandTags(m) === Seq("COPY 29"))
       // a live relation copies out as it is at the COPY
       c.simple("CREATE TEMP VIEW copied_later AS SELECT 1 AS one")
       val rels = c.simple("COPY pg_class (relname) TO STDOUT")
@@ -796,42 +624,27 @@ class PgWireServerSuite extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("error responses carry the PG SQLSTATE clients branch on") {
-    def sqlState(payload: Array[Byte]): String = {
-      // ErrorResponse: repeated (field-type byte, cstring); 'C' = SQLSTATE
-      var i = 0
-      while (i < payload.length && payload(i) != 0) {
-        val tpe = payload(i).toChar
-        val end = payload.indexOf(0.toByte, i + 1)
-        if (tpe == 'C') return new String(payload, i + 1, end - i - 1, UTF_8)
-        i = end + 1
-      }
-      "?"
-    }
-    val c = new RawClient
-    c.startup()
+    val c = connected(port)
     def errFor(sql: String): String = {
-      c.send('Q', c.cstr(sql))
-      val msgs = c.drainUntilReady()
-      val err = msgs.find(_._1 == 'E')
+      val err = error(c.simple(sql))
       assert(err.isDefined, s"expected an ErrorResponse for: $sql")
-      sqlState(err.get._2)
+      err.get._1
     }
     assert(errFor("SELECT * FROM table_that_is_not_there") === "42P01") // undefined_table
     assert(errFor("SELECT nope_col FROM (VALUES (1)) t(a)") === "42703") // undefined_column
     assert(errFor("SELECT 1 +") === "42601") // syntax_error
     // connection stays healthy across classified errors
-    c.send('Q', c.cstr("SELECT 1 AS ok"))
-    assert(c.drainUntilReady().exists(_._1 == 'D'))
+    assert(c.simple("SELECT 1 AS ok").exists(_._1 == 'D'))
     c.close()
   }
 
   test("protocol 3.2 startup gets NegotiateProtocolVersion, then works normally") {
-    val c = new RawClient
+    val c = new WireClient(port)
     // minor 2 + an unknown _pq_ protocol option: the server must answer
     // 'v' (newest minor = 0, option listed) and continue at 3.0
-    val msgs = c.startupRaw((3 << 16) | 2,
-      c.cstr("user") ++ c.cstr("graft") ++ c.cstr("database") ++ c.cstr("default") ++
-        c.cstr("_pq_.fancy_feature") ++ c.cstr("on") :+ 0.toByte)
+    c.startup(Seq("user" -> "graft", "database" -> "default", "_pq_.fancy_feature" -> "on"),
+      (3 << 16) | 2)
+    val msgs = c.drain()
     val nego = msgs.find(_._1 == 'v')
     assert(nego.isDefined, s"expected NegotiateProtocolVersion, got ${msgs.map(_._1)}")
     val b = java.nio.ByteBuffer.wrap(nego.get._2)
@@ -840,8 +653,7 @@ class PgWireServerSuite extends AnyFunSuite with BeforeAndAfterAll {
     assert(msgs.exists(_._1 == 'R') && msgs.exists(_._1 == 'Z'),
       "startup must complete after negotiation")
     // and the downgraded connection executes queries
-    c.send('Q', c.cstr("SELECT 41 + 1 AS v"))
-    assert(c.drainUntilReady().exists(_._1 == 'D'))
+    assert(c.simple("SELECT 41 + 1 AS v").exists(_._1 == 'D'))
     c.close()
   }
 }

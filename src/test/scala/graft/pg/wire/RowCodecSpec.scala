@@ -326,6 +326,24 @@ class RowCodecSpec extends AnyFunSuite {
     val st = StructType(Seq(StructField("x", IntegerType), StructField("y", StringType)))
     val inner: InternalRow = InternalRow(5, UTF8String.fromString("z"))
     assert(new String(payload(write(st, inner, binary = false)), UTF_8) === """{"x":5,"y":"z"}""")
+    // JSON has no NaN or Infinity: inside a map or struct, and in a JSON
+    // array nested there, they are strings, as PG's to_json writes them
+    val keys: Array[Any] = Array("a", "b", "c", "d").map(UTF8String.fromString)
+    assert(text(MapType(StringType, DoubleType), ArrayBasedMapData(keys,
+      Array[Any](Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity, 1.5))) ===
+      """{"a":"NaN","b":"Infinity","c":"-Infinity","d":1.5}""")
+    val floats = new StructType().add("f", FloatType).add("a", ArrayType(DoubleType))
+    assert(text(floats, InternalRow(Float.NaN, ArrayData.toArrayData(Array(1.5, Double.NaN)))) ===
+      """{"f":"NaN","a":[1.5,"NaN"]}""")
+    // a top-level array stays PG's array_out text, bare, and quotes only
+    // inside a JSON element
+    assert(text(ArrayType(DoubleType), ArrayData.toArrayData(
+      Array(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity))) ===
+      "{NaN,Infinity,-Infinity}")
+    assert(text(ArrayType(ArrayType(FloatType)), ArrayData.toArrayData(
+      Array(ArrayData.toArrayData(Array(Float.NaN))))) === "{{NaN}}")
+    assert(text(ArrayType(floats), ArrayData.toArrayData(Array(
+      InternalRow(Float.PositiveInfinity, null)))) === """{{"f":"Infinity","a":null}}""")
   }
 
   test("param decode round-trips against the writers") {
