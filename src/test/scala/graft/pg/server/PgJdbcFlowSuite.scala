@@ -106,7 +106,7 @@ class PgJdbcFlowSuite extends AnyFunSuite with BeforeAndAfterAll {
 
   test("executeQuery: unnamed one-shot batch replies in pgjdbc's expected order") {
     withClient { c =>
-      val r = oneShot(c, 
+      val r = oneShot(c,
         "SELECT l_returnflag, count(*) AS n " +
           s"FROM parquet.`${TestSpark.sfDir}/lineitem.parquet` " +
           "GROUP BY l_returnflag ORDER BY l_returnflag")
@@ -252,7 +252,7 @@ class PgJdbcFlowSuite extends AnyFunSuite with BeforeAndAfterAll {
 
   test("DatabaseMetaData.getTypeInfo corpus query") {
     withClient { c =>
-      val r = oneShot(c, 
+      val r = oneShot(c,
         "SELECT t.typname,t.oid FROM pg_catalog.pg_type t " +
           "JOIN pg_catalog.pg_namespace n ON (t.typnamespace = n.oid) " +
           "WHERE n.nspname != 'pg_toast'")
@@ -265,7 +265,7 @@ class PgJdbcFlowSuite extends AnyFunSuite with BeforeAndAfterAll {
 
   test("DatabaseMetaData.getSchemas corpus query") {
     withClient { c =>
-      val r = oneShot(c, 
+      val r = oneShot(c,
         "SELECT nspname AS TABLE_SCHEM, NULL AS TABLE_CATALOG FROM pg_catalog.pg_namespace " +
           "WHERE nspname <> 'pg_toast' AND (nspname !~ '^pg_temp_' " +
           "OR nspname = (pg_catalog.current_schemas(true))[1]) AND (nspname !~ '^pg_toast_temp_' " +
@@ -279,7 +279,7 @@ class PgJdbcFlowSuite extends AnyFunSuite with BeforeAndAfterAll {
   test("DatabaseMetaData.getTables corpus query finds a catalog view") {
     TestSpark.spark.sql("CREATE OR REPLACE VIEW jdbcflow_v AS SELECT 1 AS a, 'x' AS b")
     try withClient { c =>
-      val r = oneShot(c, 
+      val r = oneShot(c,
         """SELECT NULL AS TABLE_CAT, n.nspname AS TABLE_SCHEM, c.relname AS TABLE_NAME,
           | CASE n.nspname ~ '^pg_' OR n.nspname = 'information_schema'
           | WHEN true THEN CASE
@@ -315,7 +315,7 @@ class PgJdbcFlowSuite extends AnyFunSuite with BeforeAndAfterAll {
   test("DatabaseMetaData.getColumns corpus query lists the view's columns") {
     TestSpark.spark.sql("CREATE OR REPLACE VIEW jdbcflow_c AS SELECT 1 AS id, 'x' AS txt")
     try withClient { c =>
-      val r = oneShot(c, 
+      val r = oneShot(c,
         """SELECT * FROM (SELECT n.nspname,c.relname,a.attname,a.atttypid,
           | a.attnotnull OR (t.typtype = 'd' AND t.typnotnull) AS attnotnull,
           | a.atttypmod,a.attlen,
@@ -344,7 +344,7 @@ class PgJdbcFlowSuite extends AnyFunSuite with BeforeAndAfterAll {
 
   test("DatabaseMetaData.getPrimaryKeys corpus query (expandarray) runs empty") {
     withClient { c =>
-      val r = oneShot(c, 
+      val r = oneShot(c,
         """SELECT NULL AS TABLE_CAT, n.nspname AS TABLE_SCHEM, ct.relname AS TABLE_NAME,
           | a.attname AS COLUMN_NAME, (i.keys).n AS KEY_SEQ, ci.relname AS PK_NAME
           | FROM pg_catalog.pg_class ct
@@ -375,7 +375,7 @@ class PgJdbcFlowSuite extends AnyFunSuite with BeforeAndAfterAll {
     // remaining rounds until Sync (pgjdbc surfaces BatchUpdateException).
     withClient { c =>
       c.simple("DROP TABLE IF EXISTS jdbc_batch_t")
-      val created = oneShot(c, 
+      val created = oneShot(c,
         "CREATE TABLE jdbc_batch_t (id INT, name STRING) USING parquet")
       assert(!created.exists(_._1 == 'E'),
         error(created))
