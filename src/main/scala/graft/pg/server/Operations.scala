@@ -5,8 +5,8 @@ import java.util.concurrent.atomic.AtomicReference
 
 /** Statement lifecycle: INITIALIZED -> RUNNING -> FINISHED / CANCELED /
   * ERROR, terminal CLOSED (reference OperationManager.scala:29-97,
-  * ExecutorImpl.scala:68-91). Cancellation propagates through the Spark
-  * job group carried by the owning session.
+  * ExecutorImpl.scala:68-91). Cancellation reaches the statement's Spark
+  * job group and the partition its handler thread computes.
   */
 object OpState extends Enumeration {
   val Initialized, Running, Finished, Canceled, Error, Closed = Value
@@ -53,6 +53,7 @@ final class Operation(val session: PgSession, val statement: String) {
   def currentState: OpState.Value = state.get()
 
   private val timedOut = new java.util.concurrent.atomic.AtomicBoolean(false)
+  private val interrupt = new org.apache.spark.sql.graft.Internals.TaskInterrupt
 
   /** Rows the current [[run]] sent to the client; published to
     * `rows_streamed` when the body completes.
@@ -71,7 +72,7 @@ final class Operation(val session: PgSession, val statement: String) {
     startedAt = System.currentTimeMillis()
     session.busy = true
     session.currentQuery = statement
-    session.activeJobGroup = jobGroup
+    session.activeOp = this
     val sc = session.spark.sparkContext
     sc.setJobGroup(jobGroup, statement.take(80), interruptOnCancel = true)
     // per-session fair-scheduler pool so one heavy statement cannot starve
@@ -91,7 +92,7 @@ final class Operation(val session: PgSession, val statement: String) {
       }, timeoutMs, TimeUnit.MILLISECONDS))
     } else None
     try {
-      val r = body
+      val r = org.apache.spark.sql.graft.Internals.interruptibleBy(interrupt)(body)
       ServerStats.rowsStreamed.addAndGet(rowsSent)
       state.compareAndSet(OpState.Running, OpState.Finished)
       r
@@ -117,9 +118,13 @@ final class Operation(val session: PgSession, val statement: String) {
     }
   }
 
+  /** Stops the running statement: its Spark jobs, and the partition its
+    * handler thread computes (`Internals.handlerThreadRows`).
+    */
   def cancel(): Unit = {
     if (state.compareAndSet(OpState.Running, OpState.Canceled)) {
       session.spark.sparkContext.cancelJobGroup(jobGroup)
+      interrupt.interrupt("canceling statement")
     }
   }
 

@@ -189,14 +189,20 @@ object PgCopy {
   }
 
   private def unquote(v: String): String =
-    if (v.length >= 2 && v.startsWith("'") && v.endsWith("'")) v.substring(1, v.length - 1)
+    if (v.length >= 2 && v.startsWith("'") && v.endsWith("'"))
+      v.substring(1, v.length - 1).replace("''", "'")
     else v
 
+  /** `s` split at each `sep` outside parentheses, single-quoted literals
+    * and double-quoted identifiers (a doubled quote inside either closes
+    * and reopens it, which splits the same).
+    */
   private def splitTopLevel(s: String, sep: Char): Seq[String] = {
     val parts = ArrayBuffer.empty[String]
     var depth = 0; var last = 0; var i = 0
     while (i < s.length) {
       s.charAt(i) match {
+        case q @ ('\'' | '"') => i += 1; while (i < s.length && s.charAt(i) != q) i += 1
         case '(' => depth += 1
         case ')' => depth -= 1
         case c if c == sep && depth == 0 => parts += s.substring(last, i); last = i + 1

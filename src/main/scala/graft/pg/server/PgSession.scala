@@ -114,11 +114,12 @@ final class PgSession(val pid: Int, val secret: Int, val spark: SparkSession,
     * (reference ExecutorImpl.scala:68-84).
     */
   def nextJobGroup(): String = s"pg-$pid-${stmtCounter.incrementAndGet()}"
-  @volatile var activeJobGroup: String = _
+  /** the statement this session runs or ran last; a cancel reaches it */
+  @volatile var activeOp: Operation = _
 
   def cancel(): Unit = {
-    val g = activeJobGroup
-    if (g != null) spark.sparkContext.cancelJobGroup(g)
+    val op = activeOp
+    if (op != null) op.cancel()
   }
 
   def close(): Unit = {

@@ -1384,14 +1384,16 @@ private class PgConnectionHandler(base: SparkSession, shared: Option[SparkSessio
   /** Incremental (partition-at-a-time) vs full-collect result iteration
     * (reference ExecutorImpl.scala:185-215). Incremental is the default:
     * at 100 TB a full driver collect is fatal; cursor clients stream.
-    * A result already in memory skips the Spark job either way.
+    * A result already in memory skips the Spark job either way, and an
+    * incremental scan with no exchange computes its partitions on this
+    * thread, with no job (`Internals.handlerThreadRows`).
     */
   private def resultIterator(df: DataFrame): Iterator[InternalRow] =
     Internals.localRows(df).getOrElse {
       val incremental =
         session.spark.conf.get("spark.graft.incrementalCollect", "true").toBoolean
-      if (incremental) Internals.executeToIterator(df)
-      else Internals.executeCollect(df).iterator
+      if (!incremental) Internals.executeCollect(df).iterator
+      else Internals.handlerThreadRows(df).getOrElse(Internals.executeToIterator(df))
     }
 
   /** Hand a full chunk to the socket and continue on a fresh buffer —

@@ -77,12 +77,183 @@ object Internals {
     extensions(spark).buildParser(spark, new SparkSqlParser())
 
   /** Incremental partition-at-a-time result iterator (the reference's
-    * incremental-collect mode, ExecutorImpl.scala:185-215): rows stream to
-    * the driver per partition instead of one full collect.
+    * incremental-collect mode, ExecutorImpl.scala:185-215): Spark's
+    * `SparkPlan.executeToIterator`, which runs one Spark job per partition
+    * as the rows are read, and holds each partition on the driver as
+    * compressed `UnsafeRow` bytes until its rows are read.
     */
   def executeToIterator(df: DataFrame): Iterator[org.apache.spark.sql.catalyst.InternalRow] =
     df.asInstanceOf[org.apache.spark.sql.classic.Dataset[org.apache.spark.sql.Row]]
       .queryExecution.executedPlan.executeToIterator()
+
+  /** [[executeToIterator]]'s rows, partition after partition, computed on
+    * the calling thread with no Spark job; None when the plan is not
+    * eligible. Eligible: a plan of only `WholeStageCodegenExec`,
+    * `InputAdapter`, `ColumnarToRowExec`, `ProjectExec`, `FilterExec`,
+    * `FileSourceScanExec`, `BatchScanExec` and `RangeExec` nodes, with no
+    * `PlanExpression` (subquery) and no `UserDefinedExpression` (so
+    * `pg_sleep` keeps its cancellable job) in any expression: a scan with
+    * no exchange, whose partitions need nothing from another task.
+    *
+    * Each partition is computed when the previous one's rows are used up,
+    * under a `TaskContext` built here, and kept as [[executeToIterator]]
+    * keeps it: size-prefixed `UnsafeRow` bytes in one compressed
+    * `ChunkedByteBuffer`, decoded as the rows are read. What that takes:
+    *  - the RDD is built (`plan.execute()`) before any context is set, and
+    *    the context is removed before a row is handed out: while a context
+    *    is set, `SQLConf.get` reads its local properties, not the session's
+    *    conf, and a handler thread serves several connections. The context
+    *    gets a copy of the thread's `SparkContext` local properties, as a
+    *    task of a job would;
+    *  - the block manager knows the attempt id while it computes: a parquet
+    *    scan reads its Hadoop-conf broadcast under the context's id;
+    *  - attempt ids count up from `Long.MinValue`, so they meet neither
+    *    Spark's task ids (>= 0) nor `BlockInfo.NON_TASK_WRITER` (-1024),
+    *    whose locks releasing a task's would drop;
+    *  - the context completes (closing the scan's readers) or fails, and
+    *    its execution memory and block locks are released, either way;
+    *  - a [[TaskInterrupt]] installed by [[interruptibleBy]] marks the
+    *    running context interrupted, and the scan stops with
+    *    `TaskKilledException` as a killed task does.
+    */
+  def handlerThreadRows(df: DataFrame): Option[Iterator[org.apache.spark.sql.catalyst.InternalRow]] = {
+    import org.apache.spark.sql.catalyst.expressions.{PlanExpression, UserDefinedExpression}
+    import org.apache.spark.sql.execution._
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    val plan = df.asInstanceOf[CDataset[org.apache.spark.sql.Row]].queryExecution.executedPlan
+    val eligible = !plan.exists { p =>
+      val node = p match {
+        case _: WholeStageCodegenExec | _: InputAdapter | _: ColumnarToRowExec | _: ProjectExec |
+            _: FilterExec | _: FileSourceScanExec | _: BatchScanExec | _: RangeExec => true
+        case _ => false
+      }
+      !node || p.expressions.exists(_.exists(e =>
+        e.isInstanceOf[PlanExpression[_]] || e.isInstanceOf[UserDefinedExpression]))
+    }
+    if (!eligible) None
+    else {
+      val rdd = plan.execute()
+      val nFields = plan.schema.length
+      Some(rdd.partitions.iterator.flatMap(p => decodeRows(computePartition(rdd, p), nFields)))
+    }
+  }
+
+  /** Cancels the partitions [[handlerThreadRows]] computes while it is
+    * installed on their thread by [[interruptibleBy]]: the running one
+    * stops, and a later one does not start.
+    */
+  final class TaskInterrupt {
+    @volatile private var reason: String = _
+    @volatile private var running: org.apache.spark.TaskContextImpl = _
+
+    def interrupt(why: String): Unit = {
+      reason = why
+      val c = running
+      if (c != null) c.markInterrupted(why)
+    }
+
+    // `enter` writes `running` before it reads `reason`, and `interrupt`
+    // writes `reason` before it reads `running`: one sees the other's write
+    private[Internals] def enter(c: org.apache.spark.TaskContextImpl): Unit = {
+      running = c
+      val r = reason
+      if (r != null) c.markInterrupted(r)
+    }
+
+    private[Internals] def exit(): Unit = running = null
+  }
+
+  private val taskInterrupt = new ThreadLocal[TaskInterrupt]
+
+  /** Run `body` with `i` interrupting the partitions it computes on this
+    * thread through [[handlerThreadRows]].
+    */
+  def interruptibleBy[T](i: TaskInterrupt)(body: => T): T = {
+    val prev = taskInterrupt.get()
+    taskInterrupt.set(i)
+    try body finally taskInterrupt.set(prev)
+  }
+
+  private val handlerAttemptIds = new java.util.concurrent.atomic.AtomicLong(Long.MinValue)
+
+  /** One partition of `rdd` as a task of its own would compute it, on this
+    * thread, into [[executeToIterator]]'s compressed form.
+    */
+  private def computePartition(rdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
+      part: org.apache.spark.Partition): org.apache.spark.util.io.ChunkedByteBuffer = {
+    import org.apache.spark.{SparkEnv, TaskContext, TaskContextImpl}
+    val env = SparkEnv.get
+    val id = handlerAttemptIds.incrementAndGet()
+    val memory = new org.apache.spark.memory.TaskMemoryManager(env.memoryManager, id)
+    val ctx = new TaskContextImpl(0, 0, part.index, id, 0, rdd.partitions.length, memory,
+      org.apache.spark.util.Utils.cloneProperties(rdd.sparkContext.getLocalProperties),
+      env.metricsSystem)
+    val interrupt = Option(taskInterrupt.get())
+    env.blockManager.registerTask(id)
+    TaskContext.setTaskContext(ctx)
+    interrupt.foreach(_.enter(ctx))
+    try {
+      val bytes = try {
+        ctx.killTaskIfInterrupted()
+        encodeRows(rdd.iterator(part, ctx))
+      } catch {
+        case e: Throwable =>
+          try ctx.markTaskFailed(e) catch { case t: Throwable => e.addSuppressed(t) }
+          try ctx.markTaskCompleted(Some(e)) catch { case t: Throwable => e.addSuppressed(t) }
+          throw e
+      }
+      ctx.markTaskCompleted(None)
+      bytes
+    } finally {
+      interrupt.foreach(_.exit())
+      TaskContext.unset()
+      org.apache.spark.rdd.InputFileBlockHolder.unset()
+      memory.cleanUpAllAllocatedMemory()
+      env.blockManager.releaseAllLocksForTask(id)
+    }
+  }
+
+  /** `SparkPlan.getByteArrayRdd`'s encoding: each row's size, then its
+    * bytes, then -1, through `spark.io.compression.codec`.
+    */
+  private def encodeRows(rows: Iterator[org.apache.spark.sql.catalyst.InternalRow])
+      : org.apache.spark.util.io.ChunkedByteBuffer = {
+    val bytes = new org.apache.spark.util.io.ChunkedByteBufferOutputStream(1 << 20,
+      java.nio.ByteBuffer.allocate)
+    val out = new java.io.DataOutputStream(org.apache.spark.io.CompressionCodec
+      .createCodec(org.apache.spark.SparkEnv.get.conf).compressedOutputStream(bytes))
+    val scratch = new Array[Byte](4 << 10)
+    rows.foreach { r =>
+      val row = r.asInstanceOf[org.apache.spark.sql.catalyst.expressions.UnsafeRow]
+      out.writeInt(row.getSizeInBytes)
+      row.writeToStream(out, scratch)
+    }
+    out.writeInt(-1)
+    out.close()
+    bytes.toChunkedByteBuffer
+  }
+
+  /** The rows [[encodeRows]] wrote, each `UnsafeRow` on bytes of its own. */
+  private def decodeRows(bytes: org.apache.spark.util.io.ChunkedByteBuffer, nFields: Int)
+      : Iterator[org.apache.spark.sql.catalyst.InternalRow] = {
+    val in = new java.io.DataInputStream(org.apache.spark.io.CompressionCodec
+      .createCodec(org.apache.spark.SparkEnv.get.conf).compressedInputStream(bytes.toInputStream()))
+    new Iterator[org.apache.spark.sql.catalyst.InternalRow] {
+      private var nextSize = in.readInt()
+      if (nextSize < 0) in.close()
+      def hasNext: Boolean = nextSize >= 0
+      def next(): org.apache.spark.sql.catalyst.InternalRow = {
+        if (nextSize < 0) throw new NoSuchElementException
+        val b = new Array[Byte](nextSize)
+        in.readFully(b)
+        val row = new org.apache.spark.sql.catalyst.expressions.UnsafeRow(nFields)
+        row.pointTo(b, nextSize)
+        nextSize = in.readInt()
+        if (nextSize < 0) in.close()
+        row
+      }
+    }
+  }
 
   /** The rows of a result that is already in memory, without launching
     * a Spark job: a Project/Filter chain over a local table scan (catalog

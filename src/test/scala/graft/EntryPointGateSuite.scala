@@ -8,8 +8,9 @@ import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Source gate on the local entry points: one session factory, a fixed
-  * set of mains, and no JVM system properties in `src/main/scala`, and one
-  * PG wire client for the server suites. A new builder, probe main,
+  * set of mains, no JVM system properties and one place that builds a
+  * task context in `src/main/scala`, and one PG wire client for the
+  * server suites. A new builder, probe main,
   * property hook or private client has to change this list in the open
   * rather than slip in beside the ones that were folded away.
   */
@@ -76,6 +77,13 @@ class EntryPointGateSuite extends AnyFunSuite {
     assert(parsers.isEmpty, s"parse with the session's own parser: $parsers")
     val perConnection = under("graft/pg/server", Seq("PgCatalog.register", "PgFunctions.register"))
     assert(perConnection.isEmpty, s"the server installs PgExtensions once: $perConnection")
+  }
+
+  test("a task context is built only in Internals") {
+    val hits = Seq("TaskContextImpl", "TaskMemoryManager", "registerTask").flatMap(n =>
+      (filesMatching(n) - "Internals.scala").map(f => s"$f: $n"))
+    assert(filesMatching("TaskContextImpl") === Set("Internals.scala"), "the scan is broken")
+    assert(hits.isEmpty, s"compute partitions through Internals.handlerThreadRows: $hits")
   }
 
   test("SPARK_GRAFT_CPUS is read only in LocalSpark") {

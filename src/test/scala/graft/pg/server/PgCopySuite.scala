@@ -92,6 +92,14 @@ class PgCopySuite extends AnyFunSuite with BeforeAndAfterAll {
     assert(parse("COPY t TO STDOUT (FORMAT csv, DELIMITER ';', NULL 'nil')") ===
       Some(CopyOut(Left("t"), Nil,
         CopyOptions(csv = true, delimiter = ';', nullStr = "nil"))))
+    // a comma inside a quoted value does not end the option (psql's
+    // `\copy ... with (format csv, delimiter ',')` sends the first)
+    assert(parse("COPY t FROM STDIN (FORMAT csv, DELIMITER ',')") ===
+      Some(CopyIn("t", Nil, CopyOptions(csv = true, delimiter = ',', nullStr = ""))))
+    assert(parse("COPY t FROM STDIN (FORMAT csv, NULL 'a,b')") ===
+      Some(CopyIn("t", Nil, CopyOptions(csv = true, delimiter = ',', nullStr = "a,b"))))
+    assert(parse("COPY t TO STDOUT (FORMAT csv, NULL 'it''s, null', DELIMITER ';')") ===
+      Some(CopyOut(Left("t"), Nil, CopyOptions(csv = true, delimiter = ';', nullStr = "it's, null"))))
     assert(parse("COPY (SELECT a FROM t WHERE x > 1) TO STDOUT") ===
       Some(CopyOut(Right("SELECT a FROM t WHERE x > 1"), Nil, CopyOptions())))
     intercept[IllegalArgumentException](parse("COPY t FROM 'file.csv'"))

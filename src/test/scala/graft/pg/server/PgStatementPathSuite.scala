@@ -13,28 +13,76 @@ import org.scalatest.funsuite.AnyFunSuite
   * `graft_stat` counters each flow moves (statements_run, statements_failed,
   * rows_streamed), the extended protocol answering SET and plain EXPLAIN
   * exactly as the simple protocol does, Bind's checks of its parameters,
-  * and results already in memory answering without a Spark job.
+  * and the Spark jobs a statement launches: none for a result already in
+  * memory or a scan with no exchange, which still stops on cancel.
   */
 class PgStatementPathSuite extends AnyFunSuite with BeforeAndAfterAll {
-  import PgStatementPathSuite.Delta
+  import PgStatementPathSuite.{DashboardJobs, Delta}
   import WireClient._
 
   private var server: PgWireServer = _
   private def port: Int = server.boundPort
 
+  private val tables = Seq("stat_copy", "path_one", "path_three", "path_nation", "path_region")
+
   override def beforeAll(): Unit = {
     server = new PgWireServer(TestSpark.spark, port = 0)
     server.start()
-    TestSpark.spark.sql("DROP TABLE IF EXISTS stat_copy")
-    TestSpark.spark.sql("CREATE TABLE stat_copy (k INT, v STRING) USING parquet")
+    val spark = TestSpark.spark
+    tables.foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+    spark.sql("CREATE TABLE stat_copy (k INT, v STRING) USING parquet")
+    def write(t: String, rows: Long, cols: String*): Unit =
+      spark.range(rows).selectExpr(cols: _*).coalesce(1).write.mode("append").saveAsTable(t)
+    write("path_one", 1000, "id AS k", "concat('v', id) AS v")
+    // three files of different sizes: each is a partition of its own
+    Seq(100L -> "a", 300L -> "b", 200L -> "c").foreach { case (n, v) =>
+      write("path_three", n, "id AS k", s"'$v' AS v")
+    }
+    write("path_nation", 25, "id AS n_nationkey", "concat('N', id) AS n_name",
+      "id % 5 AS n_regionkey")
+    write("path_region", 5, "id AS r_regionkey", "concat('R', id) AS r_name")
+    sc.addSparkListener(jobListener)
   }
 
   override def afterAll(): Unit = {
-    TestSpark.spark.sql("DROP TABLE IF EXISTS stat_copy")
+    sc.removeSparkListener(jobListener)
+    tables.foreach(t => TestSpark.spark.sql(s"DROP TABLE IF EXISTS $t"))
     if (server != null) server.stop()
   }
 
   private def withClient[A](f: WireClient => A): A = WireClient.withClient(port)(f)
+
+  private def sc = TestSpark.spark.sparkContext
+  private val jobsStarted = new java.util.concurrent.atomic.AtomicInteger
+  private val markers = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+  private val jobListener = new org.apache.spark.scheduler.SparkListener {
+    override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+      jobsStarted.incrementAndGet()
+      Option(e.properties).flatMap(p => Option(p.getProperty("graft.test.marker")))
+        .foreach(markers.add)
+    }
+  }
+
+  // listener events arrive in order but asynchronously: once a marker job
+  // started after `body` has been seen, so has every job `body` launched
+  // (and a marker before it keeps earlier jobs still queued out of the count)
+  private def marker(): Unit = {
+    val name = s"marker-${System.nanoTime}"
+    sc.setLocalProperty("graft.test.marker", name)
+    try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty("graft.test.marker", null)
+    val deadline = System.nanoTime + 30000000000L
+    while (!markers.contains(name) && System.nanoTime < deadline) Thread.sleep(10)
+    assert(markers.contains(name))
+  }
+
+  /** The Spark jobs `body` launches, on any thread. */
+  private def jobsOf(body: => Unit): Int = {
+    marker()
+    val before = jobsStarted.get
+    body
+    marker()
+    jobsStarted.get - before - 1
+  }
 
   /** The counter movement `body` causes, read through `graft_stat` on the
     * same connection. The probe is itself a one-row simple statement: the
@@ -253,36 +301,7 @@ class PgStatementPathSuite extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("results already in memory run no Spark job; a UDF keeps its job") {
-    val sc = TestSpark.spark.sparkContext
-    val started = new java.util.concurrent.atomic.AtomicInteger
-    val markers = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        started.incrementAndGet()
-        Option(e.properties).flatMap(p => Option(p.getProperty("graft.test.marker")))
-          .foreach(markers.add)
-      }
-    }
-    // listener events arrive in order but asynchronously: once a marker job
-    // started after `body` has been seen, so has every job `body` launched
-    // (and a marker before it keeps earlier jobs still queued out of the count)
-    def marker(): Unit = {
-      val name = s"marker-${System.nanoTime}"
-      sc.setLocalProperty("graft.test.marker", name)
-      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty("graft.test.marker", null)
-      val deadline = System.nanoTime + 30000000000L
-      while (!markers.contains(name) && System.nanoTime < deadline) Thread.sleep(10)
-      assert(markers.contains(name))
-    }
-    def jobsOf(body: => Unit): Int = {
-      marker()
-      val before = started.get
-      body
-      marker()
-      started.get - before - 1
-    }
-    sc.addSparkListener(listener)
-    try withClient { c =>
+    withClient { c =>
       var r: Msgs = Nil
       assert(jobsOf { r = c.simple("SELECT 1") } === 0)
       assert(col0(r) === Seq("1"))
@@ -290,10 +309,83 @@ class PgStatementPathSuite extends AnyFunSuite with BeforeAndAfterAll {
       assert(col0(r) === Seq("int4"))
       assert(jobsOf { r = c.simple("SELECT pg_sleep(0)") } >= 1)
       assert(commandTags(r) === Seq("SELECT 1"))
-    } finally sc.removeSparkListener(listener)
+    }
+  }
+
+  test("a $1 lookup on parquet runs no Spark job; a UDF and a dashboard keep theirs") {
+    withClient { c =>
+      var r: Msgs = Nil
+      val lookup = "SELECT k, v FROM path_one WHERE k = $1"
+      assert(jobsOf { r = c.extended(lookup, Seq("42"), Seq(PgTypes.INT8)) } === 0)
+      assert(rows(r) === Seq(Seq("42", "v42")))
+      // three partitions, in the order Spark's job per partition returns them
+      val three = "SELECT v FROM path_three WHERE k = $1"
+      assert(jobsOf { r = c.extended(three, Seq("1"), Seq(PgTypes.INT8)) } === 0)
+      assert(col0(r) === Seq("b", "c", "a"))
+      val viaJobs = org.apache.spark.sql.graft.Internals.executeToIterator(
+        TestSpark.spark.sql("SELECT v FROM path_three WHERE k = 1")).map(_.getUTF8String(0).toString)
+      assert(col0(r) === viaJobs.toSeq)
+      assert(jobsOf { r = c.simple("SELECT v FROM path_three WHERE pg_sleep(0) = ''") } >= 1)
+      assert(dataRows(r) === 600)
+      // exchanges: Spark's path, with the job count it had before
+      val dashboard = "SELECT r_name, count(*) AS nations, sum(n_nationkey) AS keysum " +
+        "FROM path_nation JOIN path_region ON n_regionkey = r_regionkey " +
+        "GROUP BY r_name ORDER BY r_name"
+      assert(jobsOf { r = c.extended(dashboard, Nil, Nil) } === DashboardJobs)
+      assert(rows(r) === Seq(Seq("R0", "5", "50"), Seq("R1", "5", "55"), Seq("R2", "5", "60"),
+        Seq("R3", "5", "65"), Seq("R4", "5", "70")))
+    }
+  }
+
+  test("statement_timeout and CancelRequest stop a scan on the handler thread with 57014") {
+    val scan = "SELECT id FROM range(0, 40000000000, 1, 1) WHERE id < 0"
+    withClient { c =>
+      c.simple("SET statement_timeout = 200")
+      var r: Msgs = Nil
+      val t0 = System.nanoTime
+      assert(jobsOf { r = c.simple(scan) } === 0)
+      assert(error(r).map(_._1) === Some("57014"), r.map(_._1))
+      assert((System.nanoTime - t0) / 1000000 < 30000)
+      c.simple("SET statement_timeout = 0")
+      assert(col0(c.simple("SELECT 1")) === Seq("1"))
+    }
+    withClient { c =>
+      var r: Msgs = Nil
+      assert(jobsOf {
+        c.send('Q', c.cstr(scan))
+        Thread.sleep(500)
+        c.cancel()
+        r = c.drain()
+      } === 0)
+      assert(error(r) === Some(("57014", "canceling statement due to user request")))
+      assert(col0(c.simple("SELECT 1")) === Seq("1"))
+    }
+  }
+
+  test("a handler-thread scan leaves no task context on the thread") {
+    val spark = TestSpark.spark
+    val rows = org.apache.spark.sql.graft.Internals.handlerThreadRows(spark.range(0, 10, 1, 3).toDF())
+    assert(rows.isDefined)
+    assert(rows.get.map { r =>
+      assert(org.apache.spark.TaskContext.get() == null)
+      r.getLong(0)
+    }.toSeq === (0L until 10L))
+    assert(org.apache.spark.TaskContext.get() == null)
+    // an exchange, a subquery or a UDF keeps Spark's path
+    Seq[org.apache.spark.sql.DataFrame](spark.range(10).groupBy("id").count(),
+      spark.sql("SELECT id FROM range(10) WHERE id > (SELECT max(k) FROM path_one) - 5"),
+      spark.range(10).toDF().filter(org.apache.spark.sql.functions.udf((x: Long) => x > 1)
+        .apply(org.apache.spark.sql.functions.col("id")))).foreach { df =>
+      assert(org.apache.spark.sql.graft.Internals.handlerThreadRows(df).isEmpty,
+        df.queryExecution.executedPlan)
+    }
   }
 }
 
 object PgStatementPathSuite {
+  /** The jobs of the nation ⋈ region dashboard, as counted before scans
+    * with no exchange left Spark's path: its exchanges keep that path.
+    */
+  val DashboardJobs = 5
   final case class Delta(run: Long, failed: Long, rows: Long)
 }
